@@ -32,8 +32,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BASE_EPOCH_US = 1_655_906_400_000_000  # 2022-06-22 14:00:00 UTC
-
 # ---------------------------------------------------------------------------
 # Template dimension (the reference's template_lib.csv shape: drain.py:763-764)
 # ---------------------------------------------------------------------------

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from collections.abc import Callable
 
@@ -78,29 +79,40 @@ class CheckpointedJob:
 SINK_CLASSES = ["c001", "c002", "c003", "normal"]
 
 
-def write_sinks_resumable(
-    routed: DataFrame, out_dir: str, classes: list[str] | None = None
-) -> dict[str, bool]:
-    """Fan-out routing with per-sink resume granularity.
+def write_sinks_resumable(routed: DataFrame, out_dir: str) -> dict[str, bool]:
+    """Fan-out routing (S11) with per-sink resume granularity.
 
-    Each sink class is an independent write with its own success
-    marker; a restart only re-writes incomplete sinks. The routed
-    DataFrame should be cached by the caller when several sinks are
-    written in one run.
+    Layout: <out_dir>/sink_class=<c>/  (parquet + _SUCCESS) for every
+    class in SINK_CLASSES. The sinks without a marker are cleared and
+    written in ONE ``partitionBy("sink_class")`` pass with dynamic
+    partition overwrite, so the routed plan (wash, mask, match) runs
+    once however many sinks are unfinished, and finished sinks are left
+    alone. An unfinished class with no rows gets an empty parquet with
+    the schema, so every sink reads back. Markers are written only
+    after the sink's files are in place: a crash before that leaves no
+    marker, and the next call rewrites the sink.
+
+    No repartition or salt: the writer tasks are the input partitions,
+    each writing its own rows of every class, so the dominant 'normal'
+    class never lands on one hot writer task, as it would behind a
+    ``repartition("sink_class")``.
 
     Returns {sink_class: was_skipped}.
     """
-    skipped: dict[str, bool] = {}
-    for cls in classes or SINK_CLASSES:
-        path = os.path.join(out_dir, f"sink_class={cls}")
-        if _done(path):
-            skipped[cls] = True
-            continue
+    paths = {c: os.path.join(out_dir, f"sink_class={c}") for c in SINK_CLASSES}
+    todo = [c for c, path in paths.items() if not _done(path)]
+    if todo:
+        for c in todo:
+            shutil.rmtree(paths[c], ignore_errors=True)
         (
-            routed.filter(F.col("sink_class") == cls)
-            .drop("sink_class")
+            routed.filter(F.col("sink_class").isin(todo))
             .write.mode("overwrite")
-            .parquet(path)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("sink_class")
+            .parquet(out_dir)
         )
-        skipped[cls] = False
-    return skipped
+        for c in todo:
+            if not os.path.isdir(paths[c]):
+                routed.drop("sink_class").limit(0).write.parquet(paths[c])
+            open(os.path.join(paths[c], MARKER), "w").close()
+    return {c: c not in todo for c in SINK_CLASSES}

@@ -37,27 +37,6 @@ def route(lines: DataFrame) -> DataFrame:
     return lines.withColumn("sink_class", F.expr(SINK_CASE))
 
 
-def write_sinks(
-    routed: DataFrame, out_dir: str, salt_buckets: int = 16
-) -> None:
-    """Fan-out to per-class sinks (S11) via a single partitionBy write.
-
-    Sink-class frequency is skewed (most rows are 'normal'); salting the
-    shuffle key spreads each sink's rows over ``salt_buckets`` writer
-    tasks instead of one hot task per class (SURVEY.md §4.1).
-    """
-    (
-        routed.repartition(
-            salt_buckets * 4,
-            "sink_class",
-            (F.rand(42) * salt_buckets).cast("int"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("sink_class")
-        .parquet(out_dir)
-    )
-
-
 # ---------------------------------------------------------------------------
 # J2: param-dependent KB rules + stateful context rule
 # ---------------------------------------------------------------------------

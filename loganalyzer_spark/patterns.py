@@ -58,20 +58,8 @@ PTN_HARD_PARA: list[tuple[re.Pattern, str]] = [
     (PTN_BARE_INT, " <*> "),
 ]
 
-# ftp/patterns.py:19-30 — standard leading timestamp + optional labels
-PTN_STD_TS = re.compile(
-    r"\d{4}-\d{2}-\d{2} (([01]\d|2[0-3]):([0-5]\d):([0-5]\d)|24:00:00) "
-    r"(abn: )?(segsign: )?(c[0-9]{3} )?"
-)
-
-# preprocess/patterns.py:35-38
-PTN_ABN_LABEL = re.compile(r"abn: ")
-# preprocess/patterns.py:15-18
-PTN_SEG_LABEL = re.compile(r"(segsign: )|(c[0-9]{3} )")
 # preprocess/patterns.py:40-43 — nested (continuation) line starts with blank
 PTN_NESTED_LINE = re.compile(r"^( +|\t+)")
-# preprocess/patterns.py:45-48
-PTN_EMPTY_LINE = re.compile(r"^[ \t]*$")
 
 # ftp/patterns.py:63-79 — token splitting (insert space after '='/'::'/'(' etc.)
 PTN_SPLIT_LEFT = [

@@ -23,13 +23,12 @@ def routed_lines(
     lines: DataFrame,
     templates: DataFrame | None = None,
     kb: DataFrame | None = None,
-    jvm_mask: bool = True,
 ) -> DataFrame:
     """raw lines → washed, masked, matched, enriched, routed."""
     templates = templates if templates is not None else datagen.templates_df(spark)
     kb = kb if kb is not None else datagen.kb_df(spark)
     df = parse_ops.wash(lines)
-    df = parse_ops.mask(df, jvm=jvm_mask)
+    df = parse_ops.mask(df)
     df = match_ops.match_templates(df, templates)
     df = enrich_ops.enrich_kb(df, kb)
     return enrich_ops.route(df)
@@ -48,8 +47,7 @@ def run(
     spark: SparkSession,
     sf_dir: str,
     bucket: str = "1 minute",
-    jvm_mask: bool = True,
 ) -> DataFrame:
     lines = datagen.raw_lines(spark, sf_dir)
-    routed = routed_lines(spark, lines, jvm_mask=jvm_mask)
+    routed = routed_lines(spark, lines)
     return sink_aggregates(routed, bucket)

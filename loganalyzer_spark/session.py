@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-SEED = 42
-
 
 def get_spark(
     app: str = "loganalyzer_spark",
@@ -36,6 +34,8 @@ def get_spark(
         master = f"local[{cores}]"
         n = cores
     sp = shuffle_partitions if shuffle_partitions is not None else max(8, n)
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    heap_mb = min(16 * 1024, phys_mb // 2)
 
     b = (
         SparkSession.builder.master(master)
@@ -48,24 +48,18 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # 16g is the measured sweet spot on this 32-core VM: 8g doubles
-        # GC time at 32 threads, 48g collapses throughput ~4x
-        # (ParallelGC scans of a huge cold heap); see BENCH/BASELINE.md.
-        .config("spark.driver.memory", (_mem := os.environ.get("SPARK_DRIVER_MEM", "16g")))
-        # Pre-touch the whole heap at JVM launch: this VM's virtio
-        # free-page-reporting discards freed guest pages, so LAZY heap
-        # growth faults fresh pages mid-run at host-paging speed —
-        # observed 5x wall inflation on unchanged plans (BENCH_r03) and
-        # 27k → 49k docs/s on the executor ladder when fixed
-        # (BENCH/EXECUTORS.md). -Xms=-Xmx + AlwaysPreTouch moves the
-        # fault cost to startup, outside every timed window. Only the
-        # FIRST getOrCreate in a process launches the JVM, so the
-        # startup cost is paid once.
+        # Half of physical RAM, capped at 16g: the other half stays free
+        # for the Python workers and for a second driver on the same host
+        # (a spark-submit child, a test subprocess). Larger heaps than 16g
+        # lost throughput to GC in BENCH/BASELINE.md's measurements.
+        # The heap grows lazily, so two drivers do not each claim theirs
+        # at launch. A timed run that wants it faulted in
+        # before its first window sets SPARK_DRIVER_JAVA_OPTS to
+        # "-Xms<heap> -XX:+AlwaysPreTouch", as perfbench does.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", f"{heap_mb}m"))
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_DRIVER_JAVA_OPTS", f"-Xms{_mem} -XX:+AlwaysPreTouch"
-            ),
+            os.environ.get("SPARK_DRIVER_JAVA_OPTS", ""),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -3,5 +3,4 @@ from loganalyzer_spark.sources.tables import (  # noqa: F401
     merge_template_lib_sql,
     read_web_pages,
     upsert_template_lib,
-    write_partitioned,
 )

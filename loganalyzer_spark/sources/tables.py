@@ -56,29 +56,6 @@ def read_web_pages(spark: SparkSession, ref: str) -> DataFrame:
     return spark.read.parquet(f"{ref}/documents.parquet")
 
 
-def write_partitioned(
-    df: DataFrame, ref: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Fan-out sink: Iceberg ``writeTo`` (dynamic overwrite of touched
-    partitions only) or parquet ``partitionBy``.
-
-    Callers pre-salt hot partitions (enrich.write_sinks) — this layer
-    only picks the physical sink.
-    """
-    if is_table_ref(ref):
-        w = df.writeTo(ref).using("iceberg")
-        if partition_cols:
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*[F.col(c) for c in partition_cols])
-        if mode == "overwrite":
-            w.createOrReplace()
-        else:
-            w.append()
-        return
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(ref)
-
-
 def merge_template_lib_sql(target: str, source_view: str = "new_templates") -> str:
     """The S8 template-library upsert as Iceberg MERGE INTO.
 

@@ -4,6 +4,7 @@ fan-out write equality, checkpoint/resume, streaming parity."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -50,16 +51,40 @@ def test_known_template_ids_match_reference_library(routed):
     assert "7c5ceaea" in ids  # Trace: Connecting to <*> port <*>
 
 
-def test_fanout_write_roundtrip(spark, routed, tmp_path):
-    from loganalyzer_spark.operators import enrich
+def test_fanout_sink_writer(spark, routed, tmp_path):
+    """The one fan-out writer: every routed row lands in its sink, a
+    class with no rows still gets a readable sink, a second call skips
+    every sink, and a sink without its marker is rewritten alone."""
+    from loganalyzer_spark.lineage import MARKER, SINK_CLASSES, write_sinks_resumable
 
     out = str(tmp_path / "sinks")
-    enrich.write_sinks(routed.select("doc_id", "line_no", "event_id", "sink_class"), out)
+    small = routed.select("doc_id", "line_no", "sink_class").filter("sink_class != 'c003'")
+    assert write_sinks_resumable(small, out) == dict.fromkeys(SINK_CLASSES, False)
     back = spark.read.parquet(out)
-    assert back.count() == routed.count()
-    # partition pruning works: reading one sink dir only returns that class
-    one = spark.read.parquet(out).filter(F.col("sink_class") == "c001")
-    assert one.count() == routed.filter("sink_class = 'c001'").count()
+    assert back.count() == small.count() > 0
+    assert back.exceptAll(small).count() == 0
+    empty = spark.read.parquet(os.path.join(out, "sink_class=c003"))
+    assert empty.columns == ["doc_id", "line_no"] and empty.count() == 0
+
+    assert write_sinks_resumable(small, out) == dict.fromkeys(SINK_CLASSES, True)
+
+    def listing(c):
+        d = os.path.join(out, f"sink_class={c}")
+        return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+    kept = {c: listing(c) for c in SINK_CLASSES if c != "c001"}
+    c001 = os.path.join(out, "sink_class=c001")
+    os.remove(os.path.join(c001, MARKER))
+    stale = os.path.join(c001, "part-99999-stale.snappy.parquet")
+    c002 = os.path.join(out, "sink_class=c002")
+    shutil.copy(os.path.join(c002, next(f for f in os.listdir(c002) if f.startswith("part-"))), stale)
+
+    again = write_sinks_resumable(small, out)
+    assert again == {c: c != "c001" for c in SINK_CLASSES}
+    assert not os.path.exists(stale)
+    assert os.path.exists(os.path.join(c001, MARKER))
+    assert {c: listing(c) for c in kept} == kept
+    assert spark.read.parquet(c001).count() == small.filter("sink_class = 'c001'").count()
 
 
 def test_checkpoint_resume(spark, tmp_path):
@@ -84,22 +109,6 @@ def test_checkpoint_resume(spark, tmp_path):
     b = job2.stage("parse", stage_fn)
     assert calls["n"] == 1  # fn not re-invoked
     assert b.count() == n1
-
-
-def test_resumable_sink_writes(spark, routed, tmp_path):
-    from loganalyzer_spark.lineage import write_sinks_resumable
-
-    out = str(tmp_path / "rsinks")
-    small = routed.select("doc_id", "line_no", "sink_class").cache()
-    first = write_sinks_resumable(small, out)
-    assert not any(first.values())
-    second = write_sinks_resumable(small, out)
-    assert all(second.values())  # every sink skipped on resume
-    total = sum(
-        spark.read.parquet(os.path.join(out, f"sink_class={c}")).count()
-        for c in first
-    )
-    assert total == small.count()
 
 
 def test_streaming_matches_batch(spark, routed, tmp_path):
