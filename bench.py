@@ -3,20 +3,28 @@
 Times (a) each headline query from the registry at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) and (b) the end-to-end
 parse→match→enrich→route→aggregate pipeline over a deterministically
-generated corpus (SPARK_GRAFT_BENCH_DOCS docs, default 200k ≈ 1.8M
+generated corpus (SPARK_GRAFT_BENCH_DOCS docs, default 500k ≈ 4.5M
 lines), reporting docs/sec.
+
+Every number goes through perfbench/harness.py's protocol: three runs of
+``timed(fingerprint(...))``, each building a fresh plan inside the
+window and hashing every output column, and the median wall is
+reported. Each run's host probe is recorded next to its wall time.
 
 Runs on local[$SPARK_GRAFT_CPUS] (default all cores).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.harness import fingerprint, first_touch_mb_s, timed  # noqa: E402
 
 HEADLINE = [
     "pipeline_routed",
@@ -32,175 +40,63 @@ HEADLINE = [
     "region_revenue",
     "topk_orders_per_priority",
 ]
+REPS = 3
 
 
-def _run_count(df) -> int:
-    # count() executes the plan but lets Catalyst PRUNE columns the
-    # count doesn't need — fine for the headline set (their expensive
-    # columns feed joins/aggregates the count still requires, and the
-    # round-over-round driver number must stay comparable), wrong for
-    # timing scan-shaped operators: see _run_materialize.
-    return df.count()
+def median_timed(spark, build) -> dict:
+    """``REPS`` runs of ``timed(fingerprint(build()))``: the plan is built
+    inside the window, so no run reuses another's cached or
+    AQE-materialized state. Returns the median wall, the row count and
+    every run's wall next to its host probe."""
+    runs = [timed(spark, lambda: fingerprint(build())) for _ in range(REPS)]
+    return {
+        "wall_s": round(statistics.median(w for w, _, _ in runs), 3),
+        "rows": runs[-1][1][0],
+        "walls_s": [round(w, 3) for w, _, _ in runs],
+        "probes_mb_s": [round(p, 1) for _, _, p in runs],
+    }
 
 
-def _run_materialize(df) -> int:
-    """Full-materialization action for operator timing. Under count()
-    Catalyst prunes every column the action doesn't need — for
-    sequence_packing the counted plan collapsed to Filter+Range (the
-    window, shard hash, and the only exchange all eliminated), and for
-    c4_clean it collapsed to a bare groupBy count (ADVICE r4). Hashing
-    every output column forces the full computation; returns the row
-    count."""
-    from pyspark.sql import functions as F
+def time_queries(spark, names: list[str], sf_dir: str) -> dict[str, dict]:
+    """The query-timing loop: ``median_timed`` over each registered query
+    in ``names``."""
+    from loganalyzer_spark.queries import queries
 
-    # bit_xor, not sum: summing 64-bit hashes overflows under ANSI mode.
-    row = (
-        df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h"))
-        .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(_h)").alias("h"))
-        .collect()[0]
-    )
-    return int(row["n"])
-
-
-def _host_mem_probe_mb_s() -> float:
-    """First-touch page-fault throughput of NEVER-touched guest pages.
-
-    This VM runs virtio free-page-reporting: freed guest pages are
-    discarded by the host, and re-faulting them goes through the
-    hypervisor at a rate that swings from >1 GB/s to <10 MB/s depending
-    on host load. JVM heap growth and Arrow buffers sit on that path,
-    so a degraded probe reading means wall-clock numbers measure the
-    host, not this code. Recorded in the output JSON so a slow round
-    is attributable.
-    """
-    import numpy as np
-
-    t0 = time.time()
-    a = np.zeros(200_000_000 // 8)  # 200 MB fresh mmap
-    a[:: 4096 // 8] = 1.0  # touch every page
-    dt = time.time() - t0
-    del a
-    return round(200.0 / dt, 1)
-
-
-def _warm_host(target_mb_s: float = 500.0, budget_s: float = 90.0) -> tuple[float, float]:
-    """Wait out a degraded first-touch phase before timing anything.
-
-    The 16g pre-touched driver heap faults ~16 GB at JVM startup; on
-    this free-page-reporting VM that reliably leaves the host's paging
-    path degraded for the next minute or two (observed start probes of
-    95-218 MB/s in three consecutive runs, healing to >2 GB/s by run
-    end — so early-timed queries eat the degraded phase while late ones
-    run clean). Each probe itself touches 200 MB of fresh pages, which
-    is what drives the recovery; loop until the probe reads healthy or
-    the budget runs out. This automates the CLAUDE.md protocol ("if
-    below ~500 MB/s the numbers measure the host — wait and re-run")
-    instead of publishing a degraded round. Returns
-    (final_probe_mb_s, seconds_waited)."""
-    t0 = time.time()
-    p = _host_mem_probe_mb_s()
-    while p < target_mb_s and time.time() - t0 < budget_s:
-        time.sleep(2.0)
-        p = _host_mem_probe_mb_s()
-    return p, round(time.time() - t0, 1)
-
-
-def _gated_runs(
-    fn, reps: int = 3, action=_run_count
-) -> tuple[float, int, list[float], list[float], bool]:
-    """Probe-gated fresh-plan timing (the BENCH_r03 fix: endpoint probes
-    don't certify the middle of a run, so every timed run gets its own
-    probe). Policy mirrors tools/executor_bench.py: the paging hazard is
-    ONE-SIDED (it can only slow a run), so when all per-run probes read
-    healthy publish the median of ``reps`` walls; when any run is
-    poisoned publish the best (min) wall — the max throughput estimates
-    the plan's own speed. If EVERY probe of the first round is degraded,
-    one more round is taken before settling for best-of.
-
-    The plan is BUILT inside the timed window and the cache cleared
-    before each rep: an operator that persists internally and runs
-    driver-side jobs at build time (dsir's selection pass) would
-    otherwise do its dominant work before t0 and hand the timed action
-    an InMemoryRelation — the CLAUDE.md warm-pass-cache gotcha, which
-    jobs/llmops_scale.py fixed but this shared helper still had. For
-    plain plan-composition queries the build adds only analysis
-    milliseconds.
-    Returns (wall, rowcount, walls, probes, healthy)."""
-    from pyspark.sql import SparkSession
-
-    walls: list[float] = []
-    probes: list[float] = []
-    n = 0
-    for attempt in range(2):
-        if attempt > 0:
-            # the retry round exists to catch a CLEAN window — touching
-            # pages is what heals the host, so warm instead of hoping
-            _warm_host(budget_s=30.0)
-        for _ in range(reps):
-            s = SparkSession.getActiveSession()
-            if s is not None:
-                s.catalog.clearCache()
-            t0 = time.time()
-            df = fn()
-            n = action(df)
-            walls.append(time.time() - t0)
-            probes.append(_host_mem_probe_mb_s())
-        # retry unless the round ran CLEAN end-to-end: a single healthy
-        # probe does not certify its neighbours (the hazard strikes
-        # mid-run), and the retry round is cheap next to publishing a
-        # host-degraded wall
-        if all(p >= 500.0 for p in probes[-reps:]):
-            break
-    healthy = all(p >= 500.0 for p in probes)
-    wall = sorted(walls)[len(walls) // 2] if healthy else min(walls)
-    return wall, n, walls, probes, healthy
+    registry = queries()
+    return {
+        name: median_timed(spark, lambda: registry[name](spark, sf_dir))
+        for name in names
+        if name in registry
+    }
 
 
 def main() -> None:
+    # Taken before any Spark work, so a degraded start is on record.
+    probe_start = first_touch_mb_s()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # 500k docs ≈ 4.5M lines: big enough that the measured pass (~7 s)
+    # 500k docs ≈ 4.5M lines: big enough that the measured pass
     # dominates fixed per-job overheads, small enough to stay quick.
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "500000"))
 
     from loganalyzer_spark import datagen, pipeline
-    from loganalyzer_spark import queries as qmod
+    from loganalyzer_spark.queries import queries
     from loganalyzer_spark.session import get_spark
 
     spark = get_spark(app="loganalyzer_spark_bench")
-    probe_start, warm_wait_s = _warm_host()
 
-    registry = qmod.queries()
-    timings: dict[str, float] = {}
-    q_probe_min: dict[str, float] = {}
-    q_policy: dict[str, str] = {}
     # ONE shared warm for the whole bench: the flagship DAG touches
     # every dim table, the fact scans, and the session's first-job
-    # costs (hadoop conf broadcast, scan codegen, JIT ramp). Per-plan
-    # cold-compile of the OTHER queries lands in each query's first
-    # timed rep, which the settle policy already discards (median of 3
-    # when healthy, min under one-sided noise) — so no per-query warm
-    # pass is needed; dropping them saves ~30 s per driver round.
-    _run_count(registry[HEADLINE[0]](spark, sf_dir))
-    for name in HEADLINE:
-        if name not in registry:
-            continue
-        # probe-gated timing over FRESH plan instances — re-counting
-        # the same DataFrame would reuse AQE's materialized stages and
-        # measure nothing.
-        wall, _, _, probes, healthy = _gated_runs(
-            lambda: registry[name](spark, sf_dir)
-        )
-        timings[name] = round(wall, 3)
-        q_probe_min[name] = min(probes)
-        q_policy[name] = "median" if healthy else "best_of_one_sided_noise"
+    # costs (hadoop conf broadcast, scan codegen, JIT ramp). Each other
+    # query's cold compile lands in its first run, which the median
+    # of three discards.
+    fingerprint(queries()[HEADLINE[0]](spark, sf_dir))
+    runs = time_queries(spark, HEADLINE, sf_dir)
 
     # End-to-end throughput over the input_hint-shaped pages corpus
     # (url, warc_ts, html, text, lang — mirrors the north rule's
     # Iceberg table; synthesis cost is excluded from the measured DAG).
     # Corpus is generated once and reused; the cache key includes a
     # hash of the generator SQL so a datagen change invalidates it.
-    import hashlib
-
     gen_v = hashlib.md5(
         datagen.raw_lines_sql("spark", "x").encode()
     ).hexdigest()[:8]
@@ -210,80 +106,24 @@ def main() -> None:
             "overwrite"
         ).parquet(corpus)
     pages = spark.read.parquet(corpus)
-
-    def build_agg():
-        routed = pipeline.routed_from_pages(spark, pages)
-        return pipeline.sink_aggregates(routed, "1 minute")
-
-    # No separate warm: the first timed rep is the cold one and the
-    # settle policy below (median when healthy, min under noise)
-    # discards it; the full per-run spread is published regardless.
-    # The e2e section is the bench's biggest memory churner and the
-    # most exposed to the virtio free-page-reporting hazard, which is
-    # ONE-SIDED (it can only slow a run). Probe after every timed run;
-    # publish the median when all runs are healthy, else best-of the
-    # runs we have (same policy as tools/executor_bench.py), retrying
-    # once after a cooldown if every run was poisoned.
-    e2e_walls: list[float] = []
-    e2e_probes: list[float] = []
-    n_groups = 0
-    for attempt in range(2):
-        for _ in range(3):
-            df = build_agg()
-            t0 = time.time()
-            n_groups = _run_count(df)
-            e2e_walls.append(time.time() - t0)
-            e2e_probes.append(_host_mem_probe_mb_s())
-        if max(e2e_probes) >= 500.0:
-            break
-        _warm_host(budget_s=60.0)  # hazard swings within minutes; one retry round
-    healthy = all(p >= 500.0 for p in e2e_probes[-3:])
-    e2e = sorted(e2e_walls)[len(e2e_walls) // 2] if healthy else min(e2e_walls)
-    timings["pipeline_e2e"] = round(e2e, 3)
-
-    # Additional fully-materialized e2e passes (hash every output
-    # column): count() on the final aggregate prunes the aggregate
-    # VALUE expressions (group keys suffice for counting), so the
-    # count-based number above — kept as the round-over-round headline
-    # — slightly understates the full-output cost. Published alongside,
-    # not in the headline total, under the SAME probe-gated
-    # median-or-best policy as everything else (a single unprobed run
-    # would publish a hazard-degraded wall with nothing to attribute
-    # it to).
-    e2e_mat, _, mat_walls, mat_probes, mat_healthy = _gated_runs(
-        build_agg, action=_run_materialize
+    runs["pipeline_e2e"] = e2e = median_timed(
+        spark,
+        lambda: pipeline.sink_aggregates(pipeline.routed_from_pages(spark, pages)),
     )
 
-    total = sum(timings.values())
+    timings = {name: r["wall_s"] for name, r in runs.items()}
     out = {
         "metric": "headline_queries_plus_e2e_pipeline_seconds",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf_dir.rstrip("/").rsplit("sf", 1)[-1],
         "e2e_docs": n_docs,
-        "e2e_docs_per_sec": round(n_docs / e2e, 1),
-        "e2e_docs_per_sec_materialized": round(n_docs / e2e_mat, 1),
-        "e2e_wall_materialized_sec": round(e2e_mat, 3),
-        "e2e_mat_run_walls_sec": [round(w, 3) for w in mat_walls],
-        "e2e_mat_run_probes_mb_s": mat_probes,
-        "e2e_mat_policy": "median3" if mat_healthy else "best_of_runs_one_sided_noise",
-        "e2e_agg_groups": n_groups,
+        "e2e_docs_per_sec": round(n_docs / e2e["wall_s"], 1),
+        "e2e_agg_groups": e2e["rows"],
         "cores": os.environ.get("SPARK_GRAFT_CPUS", "all"),
-        # Probe sampled before AND after: the hazard can strike mid-run
-        # (observed: 2114 MB/s at launch, 26 MB/s at the end), so the
-        # headline health field is the conservative min of the two.
-        "host_first_touch_mb_s": min(probe_start, probe_end := _host_mem_probe_mb_s()),
-        "host_first_touch_mb_s_start": probe_start,
-        "host_warm_wait_s": warm_wait_s,
-        "host_first_touch_mb_s_end": probe_end,
-        "e2e_run_walls_sec": [round(w, 3) for w in e2e_walls],
-        "e2e_run_probes_mb_s": e2e_probes,
-        "e2e_policy": "median3" if healthy else "best_of_runs_one_sided_noise",
-        # Per-headline-query health: min per-run probe + settle policy,
-        # so a slow reading is attributable to host paging vs the plan.
-        "query_probe_min_mb_s": q_probe_min,
-        "query_policy": q_policy,
+        "host_first_touch_mb_s_start": round(probe_start, 1),
+        "runs": runs,
     }
     spark.stop()
     print(json.dumps(out))

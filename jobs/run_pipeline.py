@@ -1,12 +1,13 @@
 """spark-submit entry point: parse→match→enrich→route→aggregate over a
-parquet corpus of raw lines.
+parquet pages corpus (url, warc_ts, html, text, lang).
 
     spark-submit --master local[N] --py-files dist/loganalyzer_spark.zip \
-        jobs/run_pipeline.py <corpus_parquet_dir> [out_json]
+        jobs/run_pipeline.py <pages_parquet_dir>
 
-Prints a JSON line with rows, docs, wall seconds and docs/sec. The
-package is resolved from --py-files (cluster mode) or the repo root
-(direct invocation).
+Prints ``RESULT {json}`` with rows, docs, wall seconds, docs/sec and the
+host probe taken after the timed window. The timed pass is perfbench's
+``timed(fingerprint(...))``. The package is resolved from --py-files
+(cluster mode) or the repo root (direct invocation).
 """
 
 from __future__ import annotations
@@ -14,17 +15,16 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
+
+from perfbench.harness import fingerprint, timed  # noqa: E402
 
 
 def main() -> None:
     corpus = sys.argv[1]
-    out_json = sys.argv[2] if len(sys.argv) > 2 else None
 
     spark = SparkSession.builder.appName("loganalyzer_pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -32,39 +32,27 @@ def main() -> None:
     from loganalyzer_spark import pipeline
     from loganalyzer_spark.operators import parse
 
-    src = spark.read.parquet(corpus)
-    pages_shaped = "text" in src.columns
+    pages = spark.read.parquet(corpus)
 
-    def build():
-        # fresh plan instance per run: re-counting the same DataFrame
+    def run():
+        # fresh plan instance per run: re-running the same DataFrame
         # would reuse AQE's materialized stages and measure nothing.
-        lines = parse.pages_to_lines(src) if pages_shaped else src
-        routed = pipeline.routed_lines(spark, lines)
-        return lines, pipeline.sink_aggregates(routed, "1 minute")
+        return fingerprint(
+            pipeline.sink_aggregates(pipeline.routed_from_pages(spark, pages))
+        )
 
     # Warm pass: JIT + whole-stage-codegen compilation is a fixed
-    # ~8 s serial cost per JVM (measured via Amdahl fit across the
-    # ladder); steady-state throughput is what scales with executors,
-    # so the measured pass runs against a warmed code cache.
-    build()[1].count()
-    # Build the timed plan instance AFTER warming: a plan built before
-    # the warm pass could (in principle) reuse AQE state across
-    # instances and under-measure.
-    lines, agg = build()
+    # serial cost per JVM; steady-state throughput is what scales with
+    # executors, so the measured pass runs against a warmed code cache.
+    run()
     # actual executor count entering the timed pass: local-cluster
-    # executors register asynchronously (and pre-touched heaps start
-    # slowly on a degraded host), so a run can silently execute on
-    # fewer executors than configured — record it so every rep is
-    # attributable (the bench also sets minRegisteredResourcesRatio=1).
+    # executors register asynchronously, so a run can execute on fewer
+    # executors than configured — record it so every run is attributable.
     infos = spark.sparkContext._jsc.sc().statusTracker().getExecutorInfos()
     n_exec = max(0, len(infos) - 1)
-    t0 = time.time()
-    groups = agg.count()
-    wall = time.time() - t0
-    n_docs = src.count() if pages_shaped else (
-        src.agg(F.countDistinct("doc_id")).collect()[0][0]
-    )
-    n_rows = lines.count()
+    wall, (groups, _), probe = timed(spark, run)
+    n_docs = pages.count()
+    n_rows = parse.pages_to_lines(pages).count()
     result = {
         "rows": n_rows,
         "docs": n_docs,
@@ -72,13 +60,11 @@ def main() -> None:
         "wall_s": round(wall, 3),
         "docs_per_sec": round(n_docs / wall, 1),
         "rows_per_sec": round(n_rows / wall, 1),
+        "probe_mb_s": round(probe, 1),
         "parallelism": spark.sparkContext.defaultParallelism,
         "executors_at_run": n_exec,
     }
     print("RESULT " + json.dumps(result))
-    if out_json:
-        with open(out_json, "w") as f:
-            json.dump(result, f)
     spark.stop()
 
 

@@ -236,10 +236,14 @@ def simhash_near_pairs(
     so an uncapped self-join emits m²·(d+1)/2 pairs. Blocks with ≤ cap
     members run the exact all-pairs join; oversized blocks emit only
     the O(m) star to the block's smallest member. Star pairs still pass
-    the exact bit_count verify, so precision stays 1.0; recall inside
-    an oversized block degrades from all-pairs to cluster-connectivity
-    (the downstream survivors/connected-components pass still resolves
-    the whole cluster).
+    the exact bit_count verify, so precision stays 1.0. Recall inside
+    an oversized block degrades from all-pairs to the star: when the
+    block's members share one fingerprint (the mass-duplicate case) the
+    star keeps the cluster connected and the downstream
+    survivors/connected-components pass still resolves it whole, but in
+    a mixed oversized block a true pair (u, v) whose only shared block
+    it is is lost outright when both star edges (rep, u) and (rep, v)
+    exceed ``max_hamming``.
     """
     nblocks = max_hamming + 1
     blocked = fps.select(

@@ -3420,7 +3420,8 @@ def bucketed_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM dim CROSS JOIN tot),
     scored AS (
       SELECT g.doc_id, count(*) AS n_grams,
-             sum(cast(round(r.log_ratio * 10000) AS BIGINT)) * 100 AS logw_micro
+             CAST(sum(cast(round(r.log_ratio * 10000) AS BIGINT)) * 100
+                  AS BIGINT) AS logw_micro
       FROM grams g JOIN ratio r USING (bucket) GROUP BY g.doc_id),
     ranked AS (
       SELECT *, row_number() OVER (ORDER BY logw_micro, doc_id) AS rk,

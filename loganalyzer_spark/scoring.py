@@ -595,6 +595,13 @@ def train_zoo_and_score(
     # reference would raise inside GaussianNB the same way
     if p1 in (0.0, 1.0):
         raise ValueError("train_zoo_and_score needs both classes present")
+    # all-constant features leave no variance to smooth with, so every
+    # class variance is 0 and gnb_coefficients would divide by it
+    if float(np.var(X, axis=0).max()) == 0.0:
+        raise ValueError(
+            "train_zoo_and_score needs a training slice with at least one "
+            "non-constant feature"
+        )
     a, bq, c0 = gnb_coefficients(mu0, var0, mu1, var1, p1)
     w_p, b_p = train_perceptron(X, y)
     w_s, b_s = train_linear_svm(X, y)

@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def heap_mb(jvms: int = 1) -> int:
+    """Heap for each of ``jvms`` JVMs sharing this host: half of physical
+    RAM, capped at 16g, split evenly between them.
+
+    The other half stays free for the Python workers and for a second
+    driver on the same host (a spark-submit child, a test subprocess).
+    Larger heaps than 16g lost throughput to GC in BENCH/BASELINE.md's
+    measurements."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return min(16 * 1024, phys_mb // 2) // jvms
+
+
 def get_spark(
     app: str = "loganalyzer_spark",
     cores: int | None = None,
@@ -34,8 +46,6 @@ def get_spark(
         master = f"local[{cores}]"
         n = cores
     sp = shuffle_partitions if shuffle_partitions is not None else max(8, n)
-    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
-    heap_mb = min(16 * 1024, phys_mb // 2)
 
     b = (
         SparkSession.builder.master(master)
@@ -48,15 +58,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Half of physical RAM, capped at 16g: the other half stays free
-        # for the Python workers and for a second driver on the same host
-        # (a spark-submit child, a test subprocess). Larger heaps than 16g
-        # lost throughput to GC in BENCH/BASELINE.md's measurements.
-        # The heap grows lazily, so two drivers do not each claim theirs
-        # at launch. A timed run that wants it faulted in
-        # before its first window sets SPARK_DRIVER_JAVA_OPTS to
-        # "-Xms<heap> -XX:+AlwaysPreTouch", as perfbench does.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", f"{heap_mb}m"))
+        # heap_mb(): half of physical RAM, capped at 16g. The heap grows
+        # lazily, so two drivers do not each claim theirs at launch. A
+        # timed run that wants it faulted in before its first window sets
+        # SPARK_DRIVER_JAVA_OPTS to "-Xms<heap> -XX:+AlwaysPreTouch", as
+        # perfbench does.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", f"{heap_mb()}m"))
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", ""),

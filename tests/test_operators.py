@@ -1976,6 +1976,22 @@ def test_train_gnb_hand_stats_and_expr_parity(spark):
         assert (r["lo"] > 0) == bool(y[r["i"]])
 
 
+def test_train_zoo_rejects_all_constant_slice(spark):
+    """An all-constant training slice has zero variance everywhere, so
+    GNB has no signal: train_zoo_and_score raises a clear ValueError
+    instead of dividing by zero in gnb_coefficients."""
+    import pytest
+
+    from loganalyzer_spark.scoring import train_zoo_and_score
+
+    vectors = spark.createDataFrame(
+        [(i, [2.0, 0.0, 1.0], i % 2) for i in range(6)],
+        "doc_id int, vec array<double>, label int",
+    )
+    with pytest.raises(ValueError, match="non-constant feature"):
+        train_zoo_and_score(spark, vectors)
+
+
 def test_margin_sgd_perceptron_and_svm(spark):
     """The deterministic margin-SGD core: the perceptron (margin 0)
     separates a linearly-separable set and stops once converged; the
@@ -2058,10 +2074,10 @@ def test_margin_sgd_properties_hypothesis():
         # this domain (R <= ~8.7, gamma >= 0.05/|w*|): 1e5 updates
         # covers it; convergence early-stops long before on typical
         # draws, so the test stays fast
-        w, b = train_perceptron(X, y, iters=4000)
+        w, b = train_perceptron(X, y, iters=100_000)
         t = 2 * y - 1
         assert ((t * (X @ w + b)) > 0).all()
-        w2, b2 = train_perceptron(X, y, iters=4000)
+        w2, b2 = train_perceptron(X, y, iters=100_000)
         assert (w2 == w).all() and b2 == b
         if 0.0 < y.mean() < 1.0:
             mu0, var0, mu1, var1, p1 = train_gnb(X, y)

@@ -6,227 +6,97 @@ and Python workers, so per-executor resources stay constant while
 executor count scales: the closest single-host model of the north
 rule's "N and 4N executors".
 
-Critical tuning (measured): each executor JVM sizes ParallelGC and JIT
-compiler thread pools to the MACHINE's 32 cores by default — 8
-executors spawn ~256 GC threads and thrash; pinning
-`-XX:ParallelGCThreads=<cores> -XX:CICompilerCount=2` per executor is
-worth +25% at 4 executors.
+Rungs double from 1 executor up to the host's CPU count, one core each.
+Every JVM (the driver and each executor of the largest rung) gets an
+equal share of ``session.heap_mb``'s budget, so per-executor heap is
+the same on every rung. Each executor pins its GC and JIT thread pools
+to its own core count; by default they size to the whole machine and
+thrash as executors are added.
 
 Usage: python tools/executor_bench.py [n_docs] [reps]
-Writes BENCH/EXECUTORS.md.
+Each rung runs ``reps`` (default 3) spark-submits and reports the
+median docs/sec. Writes BENCH/EXECUTORS.md.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
-import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-EXECUTORS = [1, 2, 4, 8]
-CORES_PER_EXEC = 2
-MEM_MB = 3072
+sys.path[:0] = [REPO, os.path.join(REPO, "tools")]
 
-# Below this first-touch rate the run measures host paging, not the
-# code (see bench._host_mem_probe_mb_s and CLAUDE.md).
-MIN_PROBE_MB_S = 500.0
+from scaling_bench import (  # noqa: E402
+    ensure_corpus,
+    ladder,
+    make_zip,
+    run_cells,
+    run_once,
+    summarize,
+)
 
+from loganalyzer_spark.session import heap_mb  # noqa: E402
 
-def wait_healthy(max_wait_s: int = 900) -> float:
-    """Block until the host first-touch probe clears MIN_PROBE_MB_S.
-
-    The virtio free-page-reporting hazard is transient (minutes); a run
-    started while it is active is guaranteed-poisoned, so waiting is
-    strictly cheaper than measuring and discarding. Gives up after
-    max_wait_s and returns the (degraded) rate so the caller records it.
-    """
-    sys.path.insert(0, REPO)
-    from bench import _host_mem_probe_mb_s
-
-    waited = 0
-    while True:
-        rate = _host_mem_probe_mb_s()
-        if rate >= MIN_PROBE_MB_S or waited >= max_wait_s:
-            return rate
-        print(f"host probe {rate} MB/s < {MIN_PROBE_MB_S} — waiting", flush=True)
-        time.sleep(60)
-        waited += 60
-
-
-def run_once(corpus: str, n_exec: int, zpath: str) -> dict:
-    cmd = [
-        "spark-submit",
-        "--master", f"local-cluster[{n_exec},{CORES_PER_EXEC},{MEM_MB}]",
-        "--py-files", zpath,
-        "--conf", "spark.sql.shuffle.partitions=32",
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.sql.session.timeZone=UTC",
-        "--conf", "spark.driver.memory=4g",
-        "--conf", f"spark.executor.memory={MEM_MB // 1024}g",
-        # -Xms=-Xmx + AlwaysPreTouch: commit AND fault the whole heap at
-        # JVM startup. Without it the heap grows lazily and every
-        # expansion faults fresh pages MID-RUN at host-paging speed when
-        # the virtio free-page-reporting hazard is active — the dominant
-        # noise source on the high rungs (8 executors = 24g of fresh
-        # heap per rep). Pre-touching moves that cost outside the timed
-        # window (startup + warm pass), so the measured pass sees
-        # resident memory; ParallelGC with Xms=Xmx never uncommits.
-        "--conf",
-        "spark.executor.extraJavaOptions=-XX:+UseParallelGC "
-        f"-XX:ParallelGCThreads={CORES_PER_EXEC} -XX:CICompilerCount=2 "
-        f"-Xms{MEM_MB}M -XX:+AlwaysPreTouch",
-        "--conf",
-        "spark.driver.extraJavaOptions=-Xms4g -XX:+AlwaysPreTouch",
-        # standalone mode defaults minRegisteredResourcesRatio to 0.0:
-        # the job starts as soon as ANY executor registers, so a rung
-        # can silently run on 2 of its 8 executors (pre-touch slows
-        # startup; diag observed parallelism=4 on local-cluster[8,..]).
-        # Wait for the full roster before scheduling anything. NB the
-        # ratio is computed against spark.cores.max — without cores.max
-        # the gate is a silent no-op in standalone mode.
-        "--conf", f"spark.cores.max={n_exec * CORES_PER_EXEC}",
-        "--conf", "spark.scheduler.minRegisteredResourcesRatio=1.0",
-        "--conf", "spark.scheduler.maxRegisteredResourcesWaitingTime=600s",
-        "--conf", "spark.sql.files.maxPartitionBytes=4194304",
-        "--conf", "spark.sql.files.openCostInBytes=524288",
-        # tasks have no real locality on a local FS: the 3s default
-        # locality wait idles executor cores between waves (measured
-        # +35% at 4 executors with wait=0).
-        "--conf", "spark.locality.wait=0",
-        "--conf", "spark.ui.enabled=false",
-        os.path.join(REPO, "jobs", "run_pipeline.py"),
-        corpus,
-    ]
-    out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=1800)
-    m = re.search(r"RESULT (\{.*\})", out.stdout)
-    if not m:
-        sys.stderr.write(out.stdout[-2000:] + "\n" + out.stderr[-2000:])
-        raise RuntimeError(f"no RESULT for {n_exec} executors")
-    return json.loads(m.group(1))
+CORES_PER_EXEC = 1
 
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    # reps: one int for all rungs, or comma list per rung — the hazard
-    # exposure grows with executor count (more fresh JVM heap to fault
-    # mid-run), so the high rungs need more repeats for a clean best-of.
-    raw_reps = sys.argv[2] if len(sys.argv) > 2 else "3"
-    if "," in raw_reps:
-        per_rung = [int(x) for x in raw_reps.split(",")]
-        assert len(per_rung) == len(EXECUTORS)
-        reps_for = dict(zip(EXECUTORS, per_rung))
-    else:
-        reps_for = {n: int(raw_reps) for n in EXECUTORS}
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from scaling_bench import ensure_corpus, make_zip
-
+    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     corpus = ensure_corpus(n_docs)
     zpath = make_zip()
+    rungs = ladder()
+    mem = heap_mb(rungs[-1] + 1)
 
-    best: dict[int, float] = {}
-    spread: dict[int, list[float]] = {}
-    probes: dict[int, list[float]] = {}
-    under_registered: dict[int, int] = {}
-    for n in EXECUTORS:
-        rates = []
-        rejected = []
-        probes[n] = []
-        for _ in range(reps_for[n]):
-            probe = wait_healthy()
-            r = run_once(corpus, n, zpath)
-            got_exec = r.get("executors_at_run", n)
-            if got_exec < n:
-                # under-registered cluster: the rep measured a smaller
-                # cluster than the rung claims — record nothing, rerun.
-                print(
-                    f"{n} executors: REJECTED rep ran on {got_exec} "
-                    f"executors ({r['docs_per_sec']} docs/s)",
-                    flush=True,
+    runs: dict[int, list[dict]] = {}
+    for n in rungs:
+        conf = {
+            "spark.sql.shuffle.partitions": "32",
+            "spark.driver.memory": f"{mem}m",
+            "spark.executor.memory": f"{mem}m",
+            "spark.executor.extraJavaOptions": "-XX:+UseParallelGC "
+            f"-XX:ParallelGCThreads={CORES_PER_EXEC} -XX:CICompilerCount=2",
+            # local-cluster schedules as soon as ANY executor registers;
+            # wait for the full roster. The ratio is computed against
+            # spark.cores.max, so without it the gate is a no-op.
+            "spark.cores.max": str(n * CORES_PER_EXEC),
+            "spark.scheduler.minRegisteredResourcesRatio": "1.0",
+            "spark.scheduler.maxRegisteredResourcesWaitingTime": "600s",
+            # tasks have no real locality on a local FS: the 3s default
+            # locality wait idles executor cores between waves.
+            "spark.locality.wait": "0",
+        }
+        runs[n] = []
+        for _ in range(reps):
+            r = run_once(f"local-cluster[{n},{CORES_PER_EXEC},{mem}]", corpus, zpath, conf)
+            if r["executors_at_run"] < n:
+                raise RuntimeError(
+                    f"{n}-executor run ran on {r['executors_at_run']} executors"
                 )
-                rejected.append(r["docs_per_sec"])
-                continue
-            rates.append(r["docs_per_sec"])
-            probes[n].append(probe)
-            print(
-                f"{n} executors: {r['docs_per_sec']} docs/s "
-                f"(probe {probe} MB/s, execs {got_exec})",
-                flush=True,
-            )
-        under_registered[n] = len(rejected)
-        if not rates:
-            # every rep under-registered (should not happen with
-            # minRegisteredResourcesRatio=1.0) — publish the rejected
-            # rates rather than crash, but mark the rung loudly: the
-            # row understates the rung (fewer executors than claimed)
-            # and must NOT read like a roster-verified measurement.
-            rates = rejected
-            probes[n] = []
-        # best-of, not median: virtio free-page-reporting degradation is
-        # one-sided (only ever slows a run), so max docs/s estimates the
-        # plan's own speed; the spread is published alongside.
-        best[n] = max(rates)
-        spread[n] = sorted(rates)
+            runs[n].append(r)
+            print(f"{n} executors: {r}", flush=True)
+    med, eff = summarize(runs)
+    print(json.dumps({"n_docs": n_docs, "docs_per_sec": med, "efficiency": eff}))
 
-    def eff(lo: int, hi: int) -> float:
-        return round((best[hi] / best[lo]) / (hi / lo), 3)
-
-    pairs = [(n, n * 4) for n in EXECUTORS if n * 4 in best]
-    summary = {
-        "n_docs": n_docs,
-        **{f"docs_per_sec_{n}x{CORES_PER_EXEC}": best[n] for n in EXECUTORS},
-        **{f"eff_{lo}_to_{hi}_executors": eff(lo, hi) for lo, hi in pairs},
-        "min_probe_mb_s": min(
-            (p for ps in probes.values() for p in ps), default=0.0
-        ),
-        # rungs whose published best came ONLY from under-registered
-        # reps (roster smaller than claimed) — their rows understate.
-        "under_registered_rungs": [
-            n for n in EXECUTORS if under_registered[n] and not probes[n]
-        ],
-        "rejected_reps": {n: c for n, c in under_registered.items() if c},
-    }
-    print(json.dumps(summary))
-
-    def row(n: int) -> str:
-        if not probes[n]:  # fallback: all reps were under-registered
-            return (
-                f"| {n} × {CORES_PER_EXEC} cores | {best[n]} "
-                f"(**UNDER-REGISTERED** — all {under_registered[n]} reps ran "
-                f"on fewer executors; understates the rung) | {spread[n]} | — |"
-            )
-        return (
-            f"| {n} × {CORES_PER_EXEC} cores | {best[n]} | {spread[n]} |"
-            f" {sorted(probes[n])} |"
-        )
-
-    rows = "\n".join(row(n) for n in EXECUTORS)
-    effs = "\n".join(f"| {lo} → {hi} executors | {eff(lo, hi)} |" for lo, hi in pairs)
+    rows = "\n".join(
+        f"| {n} × {CORES_PER_EXEC} core | {med[n]} | {run_cells(rs)} |"
+        for n, rs in runs.items()
+    )
+    effs = "\n".join(f"| {pair} executors | {e} |" for pair, e in eff.items())
     with open(os.path.join(REPO, "BENCH", "EXECUTORS.md"), "w") as f:
         f.write(
             f"""# Multi-executor (separate-JVM) scaling — local-cluster mode
 
-`local-cluster[n,{CORES_PER_EXEC},{MEM_MB}]`: n separate executor JVMs,
-each with its own {MEM_MB // 1024}g heap, pinned GC/JIT threads
-(ParallelGCThreads={CORES_PER_EXEC}, CICompilerCount=2 — executor JVMs
-otherwise size those pools to the machine's 32 cores and thrash at high
-executor counts). Same corpus, same steady-state in-process-warm
-protocol as BENCH/BASELINE.md; best of N runs per rung (see below).
+`local-cluster[n,{CORES_PER_EXEC},{mem}]`: n separate executor JVMs, each
+with a {mem} MB heap and GC/JIT threads pinned to its core count. Same
+corpus and job as BENCH/BASELINE.md: each run warms the DAG once
+in-process, then times a fresh plan with perfbench's
+`timed(fingerprint(...))`.
 
-Each run is gated on a host first-touch probe ≥ {MIN_PROBE_MB_S:.0f}
-MB/s (the free-page-reporting hazard floor); the per-run probe readings
-are published alongside so every number is attributable.
-
-| executors | docs/sec (best of runs) | all runs | probes (MB/s) |
-|---|---|---|---|
+| executors | docs/sec (median of {reps}) | runs (wall @ probe) |
+|---|---|---|
 {rows}
-
-Best-of-N, not median: host free-page-reporting degradation is
-one-sided (it can only slow a run), so the max is the closest estimate
-of the plan's own speed; the spread column shows the noise.
 
 ## N→4N executor scaling efficiency
 
@@ -234,13 +104,7 @@ of the plan's own speed; the spread column shows the noise.
 |---|---|
 {effs}
 
-This is the closest single-host model of the north rule's N→4N
-*executor* criterion: per-executor heap, GC and thread profile stay
-constant as executor count scales — only shared memory bandwidth is
-un-cluster-like, which is what caps the 16-core (8-executor)
-configuration on this VM (see host calibration in BENCH/BASELINE.md).
-
-Regenerate: `python tools/executor_bench.py 2000000 3`.
+Regenerate: `python tools/executor_bench.py {n_docs} {reps}`.
 """
         )
     print("wrote BENCH/EXECUTORS.md")

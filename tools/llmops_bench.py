@@ -2,10 +2,10 @@
 
 Times the registered dedup / quality / web-prep / packing queries at a
 given SF dir (default sf0.1 — 10x the correctness-gate corpus) with
-bench.py's probe-gated fresh-plan policy, and rewrites
-BENCH/LLMOPS.md. These queries are NOT in bench.py's headline set (the
-driver's round-over-round number must stay comparable), so this file
-is their published scale evidence.
+bench.py's query-timing loop and rewrites BENCH/LLMOPS.md. These
+queries are NOT in bench.py's headline set (its round-over-round
+number must stay comparable), so this file is their published scale
+evidence.
 
 Usage: python tools/llmops_bench.py [sf_dir]
 """
@@ -16,7 +16,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 QUERIES = [
     "dedup_exact",
@@ -43,115 +44,34 @@ QUERIES = [
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from bench import _gated_runs, _host_mem_probe_mb_s, _run_materialize
-
-    from loganalyzer_spark import queries as qmod
+    from bench import time_queries
     from loganalyzer_spark.session import get_spark
 
     spark = get_spark(app="llmops_bench")
-    probe_start = _host_mem_probe_mb_s()
-    registry = qmod.queries()
-
-    # shared warm: touch the two fact tables the tier reads
-    spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-
-    # Pre-warm spin: the host's first-touch rate is routinely degraded
-    # for the first minute of a session (virtio free-page reporting —
-    # CLAUDE.md), which poisoned the FIRST few rows of every published
-    # table. Wait for two consecutive healthy probes before timing;
-    # the per-run probes still gate each rep after this.
-    import time as _time
-
-    streak = 0
-    for _ in range(60):
-        if _host_mem_probe_mb_s() >= 1000.0:
-            streak += 1
-            if streak >= 2:
-                break
-        else:
-            streak = 0
-            _time.sleep(2)
-
-    def measure(name):
-        # _run_materialize, not count(): count() lets Catalyst prune the
-        # operator under test (ADVICE r4 — the counted sequence_packing
-        # plan was just Filter+Range). Hashing every output column times
-        # the real plan.
-        wall, n, walls, probes, healthy = _gated_runs(
-            lambda: registry[name](spark, sf_dir), action=_run_materialize
-        )
-        return {
-            "query": name,
-            "wall_s": round(wall, 3),
-            "rows": n,
-            "policy": "median3" if healthy else "best_of_one_sided_noise",
-            "probe_min_mb_s": min(probes),
-            "all_walls_s": [round(w, 3) for w in walls],
-        }
-
-    rows = []
-    for name in QUERIES:
-        r = measure(name)
-        rows.append(r)
-        print(f"{name}: {r['wall_s']:.3f}s rows={r['rows']} ({r['policy']})",
-              flush=True)
-
-    # Retry pass: the paging hazard strikes mid-run (CLAUDE.md), so a
-    # degraded row may just have been unlucky — re-measure ONLY the
-    # noisy rows (twice at most) and keep whichever result has the
-    # healthier probe floor (one-sided hazard: healthier probe = the
-    # measurement closer to the plan's own speed).
-    for _ in range(2):
-        noisy = [i for i, r in enumerate(rows) if r["probe_min_mb_s"] < 500.0]
-        if not noisy:
-            break
-        for i in noisy:
-            r2 = measure(rows[i]["query"])
-            if r2["probe_min_mb_s"] > rows[i]["probe_min_mb_s"]:
-                rows[i] = r2
-            print(f"retry {r2['query']}: {r2['wall_s']:.3f}s "
-                  f"probe_min={r2['probe_min_mb_s']}", flush=True)
-
-    out = {
-        "sf_dir": sf_dir,
-        "host_probe_start_mb_s": probe_start,
-        "host_probe_end_mb_s": _host_mem_probe_mb_s(),
-        "results": rows,
-    }
+    runs = time_queries(spark, QUERIES, sf_dir)
     spark.stop()
 
     md = [
         "# BENCH/LLMOPS — training-data operator tier at "
         + sf_dir.rstrip("/").rsplit("/", 1)[-1],
         "",
-        "Probe-gated fresh-plan timings (bench.py policy: median of 3 on",
-        "healthy per-run probes, best-of under the one-sided host paging",
-        "hazard; every rep's wall published). Timed action hashes every",
-        "output column (bench._run_materialize) so Catalyst cannot prune",
-        "the operator under test — plain count() timings lied for the",
-        "scan-shaped ops (ADVICE r4). These operators are the",
-        "dedup / quality / web-prep / packing tier the headline bench",
-        "doesn't cover; correctness for each is the exact-hash oracle",
-        "gate (COVERAGE.md).",
+        "bench.py's query-timing loop: three fresh-plan runs of",
+        "`timed(fingerprint(...))` per query (perfbench/harness.py), median",
+        "reported. The action hashes every output column, so Catalyst cannot",
+        "prune the operator under test. Correctness for each query is the",
+        "exact-hash oracle gate (COVERAGE.md).",
         "",
-        "| query | wall (s) | rows | policy | probe min (MB/s) | all walls (s) |",
-        "|---|---|---|---|---|---|",
+        "| query | wall (s) | rows | runs (s) | probes (MB/s) |",
+        "|---|---|---|---|---|",
     ]
-    for r in rows:
-        md.append(
-            f"| {r['query']} | {r['wall_s']} | {r['rows']} | {r['policy']} "
-            f"| {r['probe_min_mb_s']} | {r['all_walls_s']} |"
-        )
-    md += ["", "```json", json.dumps(out), "```", ""]
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH",
-        "LLMOPS.md",
-    )
+    md += [
+        f"| {name} | {r['wall_s']} | {r['rows']} | {r['walls_s']} | {r['probes_mb_s']} |"
+        for name, r in runs.items()
+    ]
+    path = os.path.join(REPO, "BENCH", "LLMOPS.md")
     with open(path, "w") as f:
-        f.write("\n".join(md))
-    print("wrote", path)
+        f.write("\n".join(md + [""]))
+    print(json.dumps({"sf_dir": sf_dir, "runs": runs}))
 
 
 if __name__ == "__main__":

@@ -10,6 +10,10 @@ Synthetic library: the real datagen templates plus N generated ones
 with realistic shape (2-10 tokens, Zipfian first-token reuse so
 candidate buckets actually grow).
 
+Each library size is timed with bench.py's median_timed: three
+fresh-plan runs of perfbench's ``timed(fingerprint(...))`` over the
+columns the match adds, median reported.
+
 Usage: python tools/match_scale_bench.py [n_docs] [lib_sizes...]
 """
 
@@ -18,7 +22,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -49,8 +52,7 @@ def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     sizes = [int(x) for x in sys.argv[2:]] or [13, 200, 1000, 2000]
 
-    from pyspark.sql import functions as F
-
+    from bench import median_timed
     from loganalyzer_spark import datagen
     from loganalyzer_spark.operators import match, parse
     from loganalyzer_spark.session import get_spark
@@ -68,6 +70,7 @@ def main() -> None:
     n_rows = masked.count()
 
     results = {}
+    probes = {}
     for size in sizes:
         extra = synth_templates(max(0, size - 13))
         rows = datagen.template_rows() + [
@@ -84,15 +87,15 @@ def main() -> None:
         ]
         tmpl = spark.createDataFrame(rows, datagen.TEMPLATE_SCHEMA)
 
-        def build():
-            return match.match_templates(masked, tmpl).select(
-                F.sum(F.length("event_id")), F.sum("is_new")
-            )
-
-        build().collect()  # warm
-        t0 = time.time()
-        build().collect()
-        results[size] = round(time.time() - t0, 3)
+        # hash only what the match layer adds, keyed by line
+        r = median_timed(
+            spark,
+            lambda: match.match_templates(masked, tmpl).select(
+                "doc_id", "line_no", "event_id", "is_new"
+            ),
+        )
+        results[size] = r["wall_s"]
+        probes[size] = r["probes_mb_s"]
         print(f"lib={size}: {results[size]}s")
 
     print(
@@ -101,6 +104,7 @@ def main() -> None:
                 "n_docs": n_docs,
                 "rows": n_rows,
                 "walls_by_lib_size": results,
+                "probes_by_lib_size": probes,
                 "cost_ratio_2000_vs_13": round(
                     results[max(sizes)] / results[min(sizes)], 2
                 ),

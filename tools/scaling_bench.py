@@ -1,14 +1,16 @@
-"""Two-cluster-size scaling evidence (BASELINE.md protocol).
+"""Thread-ladder scaling evidence for the north rule's N→4N criterion.
 
-No multi-node cluster exists in this sandbox, so the N→4N executor
-criterion is evidenced by running the identical spark-submit job on the
-identical parquet corpus at local[8] and local[32]:
+No multi-node cluster exists in this sandbox, so the identical
+spark-submit job (``jobs/run_pipeline.py``, package shipped via
+``--py-files``) runs on the identical parquet pages corpus at local[N],
+N doubling from 1 up to the host's CPU count:
 
     python tools/scaling_bench.py [n_docs]
 
-Steps: generate corpus parquet (seeded, once) → zip the package →
-spark-submit --py-files at each parallelism (warmup + measured run) →
-compute scaling efficiency → write BENCH/BASELINE.md.
+Each rung runs $SPARK_GRAFT_LADDER_REPS (default 3) separate
+spark-submits and reports the median docs/sec; every run's wall is
+published next to its host probe. The driver heap follows
+``session.heap_mb``. Writes BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -16,28 +18,38 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import subprocess
 import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# Full ladder: the N→4N pairs (1→4, 2→8, 4→16, 8→32) plus the complete
-# curve. Host calibration (tools/host_calibration.py, see
-# BENCH/BASELINE.md): bare single-stage Spark kernels on this VM scale
-# at only ~0.81-0.89 (2→8) and ~0.77-0.79 (8→32) — the box saturates
-# (memory bandwidth / virtualization) as threads grow, so pipeline
-# efficiency must be read against that ceiling.
-CORES = [1, 2, 4, 8, 16, 32]
+sys.path.insert(0, REPO)
+
+from loganalyzer_spark.session import heap_mb  # noqa: E402
+
+# Shared by both ladders: 4 MB input splits give every rung several task
+# waves to load-balance stragglers.
+BASE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.files.maxPartitionBytes": "4194304",
+    "spark.sql.files.openCostInBytes": "524288",
+    "spark.ui.enabled": "false",
+}
+
+
+def ladder() -> list[int]:
+    """Rungs doubling from 1 up to the host's CPU count."""
+    cpus = len(os.sched_getaffinity(0))
+    return [1 << i for i in range(cpus.bit_length())]
 
 
 def ensure_corpus(n_docs: int) -> str:
     """input_hint-shaped pages corpus (url, warc_ts, html, text, lang).
 
-    Generated in a SUBPROCESS: an in-process session's JVM has been
-    observed to survive spark.stop() on this box (stuck daemon threads
-    under degraded host paging) and then contend ~4 cores against the
-    first measured rung. A child process guarantees the JVM dies
-    before any rung starts.
+    Generated in a subprocess, so its JVM is gone before any rung
+    starts and cannot contend for cores with a measured run.
     """
     path = f"/tmp/loganalyzer_bench/pages_{n_docs}"
     if os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -47,8 +59,6 @@ def ensure_corpus(n_docs: int) -> str:
         "from loganalyzer_spark import datagen\n"
         "from loganalyzer_spark.session import get_spark\n"
         "spark = get_spark(app='corpus_gen')\n"
-        # 256 output files: task granularity fine enough that local[32]
-        # gets 8 waves (load-balances stragglers), local[8] gets 32.
         "datagen.gen_web_pages(spark, %d).repartition(256)"
         ".write.mode('overwrite').parquet(%r)\n"
         "spark.stop()\n" % (REPO, n_docs, path)
@@ -71,138 +81,82 @@ def make_zip() -> str:
     return zpath
 
 
-def host_probe_mb_s() -> float:
-    """First-touch fault rate of fresh pages (see CLAUDE.md: virtio
-    free-page-reporting makes this swing >1 GB/s ↔ <10 MB/s with host
-    load). Recorded per rung: a degraded probe marks a rung whose wall
-    measures the host, not the plan."""
-    import time
-
-    import numpy as np
-
-    t0 = time.time()
-    a = np.zeros(200_000_000 // 8)
-    a[:: 4096 // 8] = 1.0
-    dt = time.time() - t0
-    del a
-    return round(200.0 / dt, 1)
-
-
-def run_once(corpus: str, cores: int, zpath: str) -> dict:
-    cmd = [
-        "spark-submit",
-        "--master", f"local[{cores}]",
-        "--py-files", zpath,
-        "--conf", f"spark.sql.shuffle.partitions={max(8, cores)}",
-        "--conf", "spark.default.parallelism=32",
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.sql.session.timeZone=UTC",
-        # 16g, NOT bigger: on this VM a 48g heap collapses 32-thread
-        # throughput ~4x (ParallelGC young-gen scans of a huge cold heap
-        # dominate); 16g is the measured sweet spot at every ladder rung.
-        "--conf", "spark.driver.memory=16g",
-        # 4 MB splits: the 256-file corpus otherwise bin-packs into
-        # ~32 splits (totalSize/defaultParallelism), a single task wave
-        # at local[32] — straggler-bound, +43% wall. ~150 splits gives
-        # every rung multiple waves for load balancing.
-        "--conf", "spark.sql.files.maxPartitionBytes=4194304",
-        "--conf", "spark.sql.files.openCostInBytes=524288",
-        # Xms=Xmx + AlwaysPreTouch: fault the whole heap at JVM startup
-        # so mid-run heap growth never pages against the virtio
-        # free-page-reporting hazard (see CLAUDE.md / EXECUTORS.md).
-        "--conf",
-        "spark.driver.extraJavaOptions=-XX:+UseParallelGC "
-        "-Xms16g -XX:+AlwaysPreTouch",
-        "--conf", "spark.ui.enabled=false",
-        os.path.join(REPO, "jobs", "run_pipeline.py"),
-        corpus,
-    ]
-    out = subprocess.run(
-        cmd, capture_output=True, text=True, cwd=REPO, timeout=1800
-    )
+def run_once(master: str, corpus: str, zpath: str, conf: dict[str, str]) -> dict:
+    """One spark-submit of jobs/run_pipeline.py; returns its RESULT json."""
+    cmd = ["spark-submit", "--master", master, "--py-files", zpath]
+    for k, v in {**BASE_CONF, **conf}.items():
+        cmd += ["--conf", f"{k}={v}"]
+    cmd += [os.path.join(REPO, "jobs", "run_pipeline.py"), corpus]
+    out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=1800)
     m = re.search(r"RESULT (\{.*\})", out.stdout)
     if not m:
         sys.stderr.write(out.stdout[-3000:] + "\n" + out.stderr[-3000:])
-        raise RuntimeError(f"no RESULT line for local[{cores}]")
+        raise RuntimeError(f"no RESULT line for {master}")
     return json.loads(m.group(1))
+
+
+def summarize(runs: dict[int, list[dict]]) -> tuple[dict[int, float], dict[str, float]]:
+    """Median docs/sec per rung and the N→4N efficiency of each pair."""
+    med = {n: statistics.median(r["docs_per_sec"] for r in rs) for n, rs in runs.items()}
+    eff = {
+        f"{lo}->{lo * 4}": round(med[lo * 4] / med[lo] / 4, 3)
+        for lo in med
+        if lo * 4 in med
+    }
+    return med, eff
+
+
+def run_cells(rs: list[dict]) -> str:
+    """Every run's wall next to its host probe, for a report row."""
+    return ", ".join(f"{r['wall_s']} s @ {r['probe_mb_s']} MB/s" for r in rs)
 
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     corpus = ensure_corpus(n_docs)
     zpath = make_zip()
-
     reps = int(os.environ.get("SPARK_GRAFT_LADDER_REPS", "3"))
-    results = {}
-    for cores in CORES:
-        # warm pass is in-process (run_pipeline.py runs the DAG once
-        # before timing). Each rung runs `reps` times and keeps the
-        # BEST throughput: host free-page-reporting degradation is
-        # one-sided (it only ever slows a run, never speeds it), so
-        # the max over repeats is the closest estimate of the plan's
-        # own speed — a median would still average in degraded phases
-        # that the pre/post probes cannot catch mid-run.
-        best = None
-        walls = []
-        for _ in range(reps):
-            pre = host_probe_mb_s()
-            r = run_once(corpus, cores, zpath)
-            r["host_mb_s_pre"] = pre
-            r["host_mb_s_post"] = host_probe_mb_s()
-            walls.append(r["wall_s"])
-            if best is None or r["docs_per_sec"] > best["docs_per_sec"]:
-                best = r
-        best["all_walls_s"] = walls
-        results[cores] = best
-        print(f"local[{cores}]: {best}", flush=True)
-
-    def eff(lo: int, hi: int) -> float:
-        return round(
-            (results[hi]["docs_per_sec"] / results[lo]["docs_per_sec"])
-            / (hi / lo),
-            3,
-        )
-
-    pairs = [(c, c * 4) for c in CORES if c * 4 in results]
-    summary = {
-        "n_docs": n_docs,
-        "rows": results[CORES[0]]["rows"],
-        **{f"docs_per_sec_{c}": results[c]["docs_per_sec"] for c in CORES},
-        **{f"eff_{lo}_to_{hi}": eff(lo, hi) for lo, hi in pairs},
+    conf = {
+        "spark.driver.memory": f"{heap_mb()}m",
+        "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
     }
-    print(json.dumps(summary))
+
+    runs: dict[int, list[dict]] = {}
+    for cores in ladder():
+        runs[cores] = [
+            run_once(
+                f"local[{cores}]",
+                corpus,
+                zpath,
+                {**conf, "spark.sql.shuffle.partitions": str(max(8, cores))},
+            )
+            for _ in range(reps)
+        ]
+        print(f"local[{cores}]: {runs[cores]}", flush=True)
+    med, eff = summarize(runs)
+    print(json.dumps({"n_docs": n_docs, "docs_per_sec": med, "efficiency": eff}))
 
     rows_tbl = "\n".join(
-        f"| local[{c}] | {n_docs} | {results[c]['rows']} | "
-        f"{results[c]['wall_s']} | {results[c]['docs_per_sec']} | "
-        f"{results[c]['host_mb_s_pre']} / {results[c]['host_mb_s_post']} | "
-        f"{results[c]['all_walls_s']} |"
-        for c in CORES
+        f"| local[{c}] | {n_docs} | {rs[0]['rows']} | {med[c]} | {run_cells(rs)} |"
+        for c, rs in runs.items()
     )
-    eff_tbl = "\n".join(
-        f"| {lo} → {hi} | {eff(lo, hi)} |" for lo, hi in pairs
-    )
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    eff_tbl = "\n".join(f"| {pair} | {e} |" for pair, e in eff.items())
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write(
-            f"""# BENCH/BASELINE — two-cluster-size scaling evidence
+            f"""# BENCH/BASELINE — thread-ladder scaling evidence
 
-Protocol per BASELINE.md: identical spark-submit job
-(`jobs/run_pipeline.py`, full parse→match→enrich→route→aggregate DAG
-over the input_hint-shaped pages corpus, package shipped via
-`--py-files dist/loganalyzer_spark.zip`) on the identical seeded
-parquet corpus (256 files), across the full parallelism ladder on this
-32-core VM. Each run warms the DAG once in-process (JIT + codegen are
-a fixed ~8 s serial cost per JVM, irrelevant to cluster scaling), then
-times a fresh plan instance — steady-state throughput.
+Identical spark-submit job (`jobs/run_pipeline.py`, full
+parse→match→enrich→route→aggregate DAG over the input_hint-shaped
+pages corpus, package shipped via `--py-files
+dist/loganalyzer_spark.zip`) on the identical seeded parquet corpus
+(256 files), at local[N] for N doubling from 1 up to this host's
+{len(os.sched_getaffinity(0))} CPUs. Each run warms the DAG once in-process, then
+times a fresh plan with perfbench's `timed(fingerprint(...))`. Driver
+heap {heap_mb()} MB (`session.heap_mb`), ParallelGC.
 
-| config | docs | lines | wall (s) | docs/sec | host pre/post (MB/s) | all walls (s) |
-|---|---|---|---|---|---|---|
+| config | docs | lines | docs/sec (median of {reps}) | runs (wall @ probe) |
+|---|---|---|---|---|
 {rows_tbl}
-
-Each rung = best of 3 repeats (host free-page-reporting degradation
-is one-sided — it can only slow a run — so max throughput over
-repeats estimates the plan's own speed; "all walls" shows the spread).
 
 ## N→4N scaling efficiency (target ≥ 0.8 per BASELINE.json)
 
@@ -210,75 +164,7 @@ repeats estimates the plan's own speed; "all walls" shows the spread).
 |---|---|
 {eff_tbl}
 
-## Host ceiling (tools/host_calibration.py)
-
-Efficiency must be read against what this VM can scale at all.
-Bare single-stage Spark kernels (no shuffle, no Python, fresh plan
-per measurement, same 16g/ParallelGC settings):
-
-| kernel | 2→8 eff | 8→32 eff |
-|---|---|---|
-| md5 over spark.range (ALU-bound) | 0.809 | 0.770 |
-| regexp_replace over generated strings (memory-bound) | 0.887 | 0.789 |
-
-The box (memory bandwidth / virtualization) saturates as active
-threads grow; the pipeline tracks the ceiling at the low rungs and
-falls below it only at 32 threads, where 32 concurrent ~168k-group
-partial-aggregation hash maps exceed the shared LLC — a single-host
-artifact. On a real multi-executor cluster (the north rule's N and 4N
-*executors* on separate hosts) per-host thread count, heap, and
-LLC pressure stay constant while executor count scales — the regime
-the low-rung pairs model. The plan itself has no serial section: one
-fused narrow stage (scan → posexplode → wash → mask → match), two
-broadcast joins, one exchange into the partial+final hash aggregate.
-
-## Host hazard: virtio free-page-reporting (round 2)
-
-This guest runs free-page-reporting: freed pages are discarded by the
-host, and re-faulting them (JVM heap growth, Arrow buffers) runs at
-host-paging speed — observed swinging between >1 GB/s and <10 MB/s
-within minutes. A rung measured in a degraded phase can read several
-times slow with no code change. bench.py records the first-touch rate
-as `host_first_touch_mb_s`; ladder numbers here were taken after
-checking the probe. The **executor ladder (BENCH/EXECUTORS.md) is the
-headline number for the north rule** — N→4N separate-JVM executors is
-the regime the rule names, and it sidesteps single-JVM heap contention.
-
-## Data-size scale-up check (4x corpus, same config)
-
-Re-measured on round-3 code (full byte-fidelity wash/mask) with the
-pre-touched 16g driver heap, healthy probes, same local[32]
-spark-submit config, back-to-back runs:
-
-```
-2M: {{"docs": 2000000, "rows": 17999989, "agg_groups": 208523,
-     "wall_s": 14.797, "docs_per_sec": 135158.1}}
-8M: {{"docs": 8000000, "rows": 71999980, "agg_groups": 834039,
-     "wall_s": 55.346, "docs_per_sec": 144544.4}}
-```
-
-144.5k docs/s at 8M vs 135.2k at 2M — throughput FLAT-TO-UP (+6.9%)
-across a 4x data scale-up with 4x the aggregate-group cardinality:
-wall scales (sub)linearly with input, the partial+final aggregate
-absorbs the group growth, no memory pressure. (Round 1's
-pre-fidelity code measured 189.8k/190.7k on the same check.)
-Regenerate:
-`spark-submit ... jobs/run_pipeline.py /tmp/loganalyzer_bench/pages_8000000`.
-
-## Tuning notes (measured on this VM, 2M docs)
-
-* driver heap 16g: 48g collapses 32-thread throughput ~4x
-  (ParallelGC scans of a huge cold heap); 8g doubles GC time.
-* `spark.sql.files.maxPartitionBytes=4m`: default bin-packing gives
-  ~32 splits (one task wave at local[32], straggler-bound); ~150
-  splits = +43% at 32 threads, neutral at low rungs.
-* ParallelGC beats G1 ~1.5x on this allocation profile.
-
-Settings: Spark 4.1.2, `spark.sql.shuffle.partitions` = max(8, cores),
-AQE on, UTC session TZ, 16g heap, seed-42 corpus
-(`loganalyzer_spark/datagen.py::gen_web_pages`), corpus pre-written to
-local parquet so all runs read identical bytes; results computed with
-`count()` actions only (no driver collect of data rows).
+Regenerate: `python tools/scaling_bench.py {n_docs}`.
 """
         )
     print("wrote BENCH/BASELINE.md")
