@@ -58,15 +58,18 @@ def median_timed(spark, build) -> dict:
 
 
 def time_queries(spark, names: list[str], sf_dir: str) -> dict[str, dict]:
-    """The query-timing loop: ``median_timed`` over each registered query
-    in ``names``."""
+    """The query-timing loop: ``median_timed`` over each query in
+    ``names``. A name that is not registered raises, so a deleted query
+    cannot silently drop out of a summed metric."""
     from loganalyzer_spark.queries import queries
 
     registry = queries()
+    missing = [name for name in names if name not in registry]
+    if missing:
+        raise KeyError(f"not registered: {missing}")
     return {
         name: median_timed(spark, lambda: registry[name](spark, sf_dir))
         for name in names
-        if name in registry
     }
 
 

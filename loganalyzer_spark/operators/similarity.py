@@ -1,14 +1,14 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Brute-force cosine top-k as the correctness baseline; LSH
-(random-hyperplane) bucketing as the scale path. Dot products run as
-JVM-side higher-order functions (``zip_with`` + ``aggregate``) —
-no Python in the hot path.
+Brute-force cosine top-k as the correctness baseline; IVF (k-means
+cells, nprobe search) as the scale path. Dot products run as JVM-side
+higher-order functions (``zip_with`` + ``aggregate``) — no Python in
+the hot path.
 
 At cluster scale the query side is broadcast (top-k against a bounded
-query set); the corpus side streams. For all-pairs workloads use the
-LSH variant: candidate generation is a bucket equi-join instead of a
-cross join.
+query set); the corpus side streams. The random-hyperplane signature
+helpers (``lsh_planes``, ``hyperplane_sign_bits``) feed the banded
+embedding near-dup join in ``dedup``.
 """
 
 from __future__ import annotations
@@ -104,51 +104,6 @@ def lsh_planes(dim: int, nbits: int = 8) -> list[list[float]]:
             row.append((s % 2001 - 1000) / 1000.0)
         planes.append(row)
     return planes
-
-
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    nbits: int = 8,
-    dim: int = 64,
-) -> DataFrame:
-    """IVF/LSH-bucketed ANN: exact search within matching sign buckets.
-
-    Recall < 1 by construction (approximate); candidates are restricted
-    to the query's bucket, turning the cross join into an equi-join.
-    """
-    planes = lsh_planes(dim, nbits)
-    c = corpus.select(
-        F.col(key).alias("neighbor_id"),
-        F.col(vec).alias("cvec"),
-        hyperplane_sign_bits(vec, planes).alias("bucket"),
-    ).withColumn("cn", _norm("cvec"))
-    q = queries.select(
-        F.col(key).alias("query_id"),
-        F.col(vec).alias("qvec"),
-        hyperplane_sign_bits(vec, planes).alias("bucket"),
-    ).withColumn("qn", _norm("qvec"))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot("qvec", "cvec") / (F.col("qn") * F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -61,7 +61,6 @@ _DEMOTED = [
     "ngram_jaccard_twins",          # jaccard verify exercised by LSH query
     "embedding_near_dups",          # brute baseline; LSH query is the scale path
     "embedding_cosine_topk",        # brute baseline; IVF query same oracle
-    "logreg_score_jvm",             # same oracle as logreg_score_arrow
     "quality_scores",               # signals re-certified inside quality_filter
     "repetition_stats",             # signals re-certified inside quality_filter
     "stratified_sample_counts",     # same hash16 machinery as corpus_sample_rows
@@ -1636,24 +1635,59 @@ FROM _dot
     )
 
 
-@register("logreg_score_jvm", _score_oracle())
-def logreg_score_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LR kernel as pure JVM column expressions (zip_with + aggregate)."""
-    w, b = SC.fixed_weights(datagen.VOCAB_SIZE)
-    vec = _doc_vectors(spark, sf_dir)
-    score = SC.logreg_score_expr("vec", w, b)
-    return vec.select(
-        "doc_id",
-        F.round(score, 6).alias("score"),
-        (score > 0.5).cast("int").alias("pred"),
+def _sparse_ecm_prefix() -> str:
+    """Pipe CTEs ending at _didx: the sparse (doc_id, idx, c) ECM used
+    by every fixed-weight scoring oracle."""
+    return _score_oracle().rsplit(",\n_dot AS", 1)[0]
+
+
+# Identity feature map: a tree over global ECM slots in forest form.
+_ALL_SLOTS = list(range(datagen.VOCAB_SIZE))
+
+
+def _tree_sql(node: tuple, feats: list[int]) -> str:
+    """A train_cart tuple tree as a DuckDB CASE over the pivoted slot
+    columns (x[feats[f]] <= thr goes left, as in cart_to_expr)."""
+    if node[0] == "leaf":
+        return f"{round(node[1], 6)!r}::DOUBLE"
+    _, f, thr, lo, hi = node
+    return (
+        f"CASE WHEN c{feats[f]} <= {thr!r} THEN {_tree_sql(lo, feats)} "
+        f"ELSE {_tree_sql(hi, feats)} END"
+    )
+
+
+def _tree_oracle(forest: list) -> str:
+    """forest_to_expr in DuckDB: round(mean of per-tree leaves, 6) over
+    the sparse ECM pivoted to one column per slot. A one-tree forest is
+    cart_to_expr, whose leaves are already rounded to 6 places."""
+    pivots = ",\n         ".join(
+        f"coalesce(sum(CASE WHEN idx = {s} THEN c END), 0) AS c{s}"
+        for s in _ALL_SLOTS
+    )
+    total = "\n       + ".join(_tree_sql(tree, feats) for feats, tree in forest)
+    return (
+        _sparse_ecm_prefix()
+        + f""",
+_piv AS (
+  SELECT g.doc_id,
+         {pivots}
+  FROM (SELECT DISTINCT doc_id FROM _didx) g
+  LEFT JOIN _didx USING (doc_id)
+  GROUP BY 1
+)
+SELECT doc_id,
+       round(({total}) / {len(forest)}, 6) AS score
+FROM _piv
+"""
     )
 
 
 @register("logreg_score_arrow", _score_oracle())
 def logreg_score_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same LR kernel through the scalar-iterator pandas UDF (Arrow
-    batches + broadcast weights — the north-star inference path).
-    Must equal both the JVM expression and the DuckDB oracle."""
+    """LR scoring through make_logreg_scorer (Arrow batches + broadcast
+    weights — the north-star inference path, and the scorer
+    train_and_score uses). Must equal the DuckDB oracle."""
     import numpy as np
 
     w, b = SC.fixed_weights(datagen.VOCAB_SIZE)
@@ -1667,29 +1701,12 @@ def logreg_score_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dt_score",
-    _score_oracle().rsplit(",\n_dot AS", 1)[0]
-    + """
-SELECT doc_id,
-       CASE WHEN c6 > 0 THEN 0.95
-            WHEN c8 > 2 THEN 0.8
-            WHEN c0 > 10 THEN 0.2
-            ELSE 0.05 END AS score
-FROM (
-  SELECT g.doc_id,
-         coalesce(sum(CASE WHEN idx = 6 THEN c END), 0) AS c6,
-         coalesce(sum(CASE WHEN idx = 8 THEN c END), 0) AS c8,
-         coalesce(sum(CASE WHEN idx = 0 THEN c END), 0) AS c0
-  FROM (SELECT DISTINCT doc_id FROM _didx) g
-  LEFT JOIN _didx USING (doc_id)
-  GROUP BY 1)
-""",
-)
+@register("dt_score", _tree_oracle([(_ALL_SLOTS, SC.DT_TREE)]))
 def dt_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decision-tree scoring compiled to CASE WHEN column expressions."""
+    """Decision-tree scoring: the fixed DT_TREE through cart_to_expr,
+    the compiler dt_rfc_train_score's trained tree uses."""
     vec = _doc_vectors(spark, sf_dir)
-    return vec.select("doc_id", SC.dt_score_expr("vec").alias("score"))
+    return vec.select("doc_id", SC.cart_to_expr(SC.DT_TREE, "vec").alias("score"))
 
 
 @register("deeplog_train_score", None)  # driver-side LSTM training → rows-only
@@ -1739,11 +1756,12 @@ def dt_rfc_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     sklearn absent from the image, so the gini estimator core is
     scoring.train_cart / train_random_forest), then the corpus is
     scored through the learned trees COMPILED to nested CASE WHEN
-    column expressions — zero Python in the scoring path, the
-    dt_score_expr / rfc_score_expr pattern with learned splits.
-    Rows-only like logreg_train_score (driver-side training has no SQL
-    oracle); numpy-vs-compiled-expression score parity and the gini
-    split math are pinned by tests/test_operators.py::test_cart_*."""
+    column expressions — zero Python in the scoring path, and the same
+    cart_to_expr / forest_to_expr kernels the exact-hash dt_score and
+    rfc_score fixtures check. Rows-only like logreg_train_score
+    (driver-side training has no SQL oracle); numpy-vs-compiled-
+    expression score parity and the gini split math are pinned by
+    tests/test_operators.py::test_cart_*."""
     routed = _routed(spark, sf_dir)
     labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
     vec = _doc_vectors(spark, sf_dir).join(labels, "doc_id")
@@ -3029,12 +3047,6 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return W.lm_perplexity(corpus, ref).orderBy("doc_id")
 
 
-def _sparse_ecm_prefix() -> str:
-    """Pipe CTEs ending at _didx: the sparse (doc_id, idx, c) ECM used
-    by every fixed-weight scoring oracle."""
-    return _score_oracle().rsplit(",\n_dot AS", 1)[0]
-
-
 def _gnb_oracle() -> str:
     mu0, var0, mu1, var1, p1 = SC.fixed_gnb_params(datagen.VOCAB_SIZE)
     a, b, c0 = SC.gnb_coefficients(mu0, var0, mu1, var1, p1)
@@ -3051,7 +3063,7 @@ _q AS (
     ) AS w(idx, a, b) ON w.idx = i.idx
   GROUP BY 1
 )
-SELECT doc_id, round(s + ({c0!r}), 6) AS log_odds,
+SELECT doc_id, round(s + ({c0!r}), 6)::DOUBLE AS log_odds,
        CASE WHEN s + ({c0!r}) > 0 THEN 1 ELSE 0 END AS pred
 FROM _q
 """
@@ -3089,7 +3101,7 @@ _dot AS (
     ) AS w(idx, wt) ON w.idx = i.idx
   GROUP BY 1
 )
-SELECT doc_id, round(dot + ({b!r}), 6) AS margin,
+SELECT doc_id, round(dot + ({b!r}), 6)::DOUBLE AS margin,
        CASE WHEN dot + ({b!r}) > 0 THEN 1 ELSE 0 END AS pred
 FROM _dot
 """
@@ -3112,51 +3124,14 @@ def svm_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rfc_oracle() -> str:
-    slots = sorted({s for t in SC.RFC_TREES for s in (t[0], t[2])})
-    pivots = ",\n         ".join(
-        f"coalesce(sum(CASE WHEN idx = {s} THEN c END), 0) AS c{s}"
-        for s in slots
-    )
-    trees = ",\n       ".join(
-        f"CASE WHEN c{sa} > {ta!r} THEN "
-        f"(CASE WHEN c{sb} > {tb!r} THEN {laa!r} ELSE {lab!r} END) "
-        f"ELSE {lb!r} END AS t{k}"
-        for k, (sa, ta, sb, tb, laa, lab, lb) in enumerate(SC.RFC_TREES)
-    )
-    mean = " + ".join(f"t{k}" for k in range(len(SC.RFC_TREES)))
-    return (
-        _sparse_ecm_prefix()
-        + f""",
-_piv AS (
-  SELECT g.doc_id,
-         {pivots}
-  FROM (SELECT DISTINCT doc_id FROM _didx) g
-  LEFT JOIN _didx USING (doc_id)
-  GROUP BY 1
-),
-_trees AS (
-  SELECT doc_id,
-       {trees}
-  FROM _piv
-)
-SELECT doc_id,
-       round(({mean}) / {len(SC.RFC_TREES)}, 6) AS score
-FROM _trees
-"""
-    )
-
-
-@register("rfc_score", _rfc_oracle())
+@register("rfc_score", _tree_oracle(SC.RFC_TREES))
 def rfc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-forest inference (loglizer.py:460-461): mean leaf
-    probability of five fixed depth-2 trees, each compiled to CASE WHEN
-    — the dt_score pattern lifted to an ensemble, zero Python.
-    Output: (doc_id, score)."""
+    probability of the five fixed depth-2 RFC_TREES through
+    forest_to_expr, the compiler dt_rfc_train_score's trained forest
+    uses — zero Python. Output: (doc_id, score)."""
     vec = _doc_vectors(spark, sf_dir)
-    return vec.select(
-        "doc_id", F.round(SC.rfc_score_expr("vec"), 6).alias("score")
-    )
+    return vec.select("doc_id", SC.forest_to_expr(SC.RFC_TREES, "vec").alias("score"))
 
 
 # ---------------------------------------------------------------------------

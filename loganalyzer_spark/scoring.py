@@ -10,8 +10,12 @@ inside Arrow batches via a scalar-iterator pandas UDF (the load-once-
 per-executor pattern the reference approximates with ONNX sessions,
 loglab.py:722-727).
 
-``dt_score_expr`` is the decision-tree path compiled to JVM-side
-``CASE WHEN`` column expressions — zero Python in that variant.
+The tree models (``cart_to_expr`` / ``forest_to_expr``) and the
+linear and Gaussian-NB members compile to JVM-side column expressions
+instead — zero Python in those paths. Each model has one scorer: the
+fixed-parameter fixtures at the bottom of this module score through
+the same kernels as the trained models, so the DuckDB oracle checks
+the production code.
 """
 
 from __future__ import annotations
@@ -263,8 +267,8 @@ def kfold_validate(
 # n_estimators=100); oldschool inference consumes the DT). sklearn is
 # absent from this image, so the estimator core is implemented
 # directly, like IncrementalLogReg above. The learned tree compiles to
-# a nested CASE WHEN column expression (the dt_score_expr pattern with
-# learned splits), so SCORING stays JVM-side with zero Python.
+# a nested CASE WHEN column expression, so SCORING stays JVM-side with
+# zero Python.
 # ---------------------------------------------------------------------------
 
 def train_cart(
@@ -365,8 +369,8 @@ def cart_predict(tree: tuple, X: np.ndarray) -> np.ndarray:
 
 
 def cart_to_expr(tree: tuple, vec_col: str) -> F.Column:
-    """Compile a trained CART to a nested CASE WHEN over the ECM array
-    — learned-split dt_score_expr; zero Python in the scoring path."""
+    """Compile a CART (trained, or the fixed ``DT_TREE``) to a nested
+    CASE WHEN over the ECM array; zero Python in the scoring path."""
     if tree[0] == "leaf":
         return F.lit(round(tree[1], 6))
     _, f, thr, lo, hi = tree
@@ -437,8 +441,8 @@ def forest_predict(forest: list, X: np.ndarray) -> np.ndarray:
 
 
 def forest_to_expr(forest: list, vec_col: str) -> F.Column:
-    """Compile the forest to (Σ per-tree CASE trees) / n — the
-    rfc_score_expr ensemble pattern with learned splits."""
+    """Compile a forest (trained, or the fixed ``RFC_TREES``) to
+    round((Σ per-tree CASE trees) / n, 6)."""
 
     def remap(node: tuple, feats: list[int]) -> tuple:
         if node[0] == "leaf":
@@ -625,7 +629,8 @@ def train_zoo_and_score(
 
 
 # ---------------------------------------------------------------------------
-# Fixed-weight kernels (deterministic, DuckDB-oracle-checkable)
+# Fixed-parameter fixtures (deterministic, DuckDB-oracle-checkable): the
+# *_score queries feed these to the same kernels the trained models use.
 # ---------------------------------------------------------------------------
 
 def fixed_weights(size: int) -> tuple[list[float], float]:
@@ -634,36 +639,17 @@ def fixed_weights(size: int) -> tuple[list[float], float]:
     return w, -0.5
 
 
-def logreg_score_expr(vec_col: str, w: list[float], b: float) -> F.Column:
-    """JVM-side sigmoid(w·x + b) over an array column — the pure-SQL
-    expression of the same kernel (used for oracle parity and as the
-    no-Python fast path)."""
-    dot = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            F.array(*[F.lit(x) for x in w]),
-            lambda v, wi: v * wi,
-        ),
-        F.lit(float(b)),
-        lambda acc, v: acc + v,
-    )
-    return 1 / (1 + F.exp(-dot))
-
-
-def dt_score_expr(vec_col: str) -> F.Column:
-    """A small fixed decision tree over count-vector slots compiled to
-    CASE WHEN (the generated-predicate pattern used for the KB's
-    param-dependent rules, extensions/cm/knowledgebase.py:61-311).
-
-    node split order: x[6] (tls errors) → x[8] (file-missing) → x[0].
-    """
-    x = lambda i: F.element_at(F.col(vec_col), i + 1).cast("double")  # noqa: E731
-    return (
-        F.when(x(6) > 0, F.lit(0.95))
-        .when(x(8) > 2, F.lit(0.8))
-        .when(x(0) > 10, F.lit(0.2))
-        .otherwise(F.lit(0.05))
-    )
+# A fixed decision tree in train_cart's tuple form, scored by
+# cart_to_expr. Split order x[6] (tls errors) → x[8] (file-missing) →
+# x[0]; thresholds sit inside the sf0.01 ECM count range (slot 8 is 0-1,
+# slot 0 is 0-6) so every leaf fires on real data.
+DT_TREE: tuple = (
+    "split", 6, 0.0,
+    ("split", 8, 0.0,
+     ("split", 0, 1.0, ("leaf", 0.05), ("leaf", 0.2)),
+     ("leaf", 0.8)),
+    ("leaf", 0.95),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -752,33 +738,21 @@ def svm_margin_expr(vec_col: str, w: list[float], b: float) -> F.Column:
     )
 
 
-# Five fixed depth-2 trees over ECM slots: (slot_a, thr_a, slot_b,
-# thr_b, leaf_aa, leaf_ab, leaf_b) meaning
-#   if x[slot_a] > thr_a: (x[slot_b] > thr_b ? leaf_aa : leaf_ab)
-#   else leaf_b
-RFC_TREES: list[tuple[int, float, int, float, float, float, float]] = [
-    # thresholds sit inside the sf0.01 ECM count range (slot medians
-    # 0-3, max 6) so every branch of every tree fires on real data —
-    # a tree whose split never triggers certifies nothing.
-    (6, 0.0, 0, 2.0, 0.95, 0.7, 0.1),
-    (0, 2.0, 7, 0.0, 0.9, 0.6, 0.15),
-    (13, 0.0, 6, 1.0, 0.85, 0.35, 0.2),
-    (3, 0.0, 5, 0.0, 0.8, 0.55, 0.25),
-    (1, 0.0, 2, 0.0, 0.75, 0.5, 0.3),
+# Five fixed depth-2 trees in train_random_forest's [(feats, tree)]
+# form, scored by forest_to_expr: tree k splits on local feature 0 =
+# x[feats[0]] and then local feature 1 = x[feats[1]]. Thresholds sit
+# inside the sf0.01 ECM count range (slot medians 0-3, max 6) so every
+# branch of every tree fires on real data — a tree whose split never
+# triggers certifies nothing.
+RFC_TREES: list[tuple[list[int], tuple]] = [
+    ([6, 0], ("split", 0, 0.0, ("leaf", 0.1),
+              ("split", 1, 2.0, ("leaf", 0.7), ("leaf", 0.95)))),
+    ([0, 7], ("split", 0, 2.0, ("leaf", 0.15),
+              ("split", 1, 0.0, ("leaf", 0.6), ("leaf", 0.9)))),
+    ([13, 6], ("split", 0, 0.0, ("leaf", 0.2),
+               ("split", 1, 1.0, ("leaf", 0.35), ("leaf", 0.85)))),
+    ([3, 5], ("split", 0, 0.0, ("leaf", 0.25),
+              ("split", 1, 0.0, ("leaf", 0.55), ("leaf", 0.8)))),
+    ([1, 2], ("split", 0, 0.0, ("leaf", 0.3),
+              ("split", 1, 0.0, ("leaf", 0.5), ("leaf", 0.75)))),
 ]
-
-
-def rfc_score_expr(vec_col: str) -> F.Column:
-    """Random-forest inference (loglizer.py:460-461): the mean leaf
-    probability of RFC_TREES, each tree compiled to CASE WHEN — the
-    dt_score_expr pattern lifted to an ensemble. Zero Python."""
-    x = lambda i: F.element_at(F.col(vec_col), i + 1).cast("double")  # noqa: E731
-    votes = [
-        F.when(x(sa) > ta, F.when(x(sb) > tb, F.lit(laa)).otherwise(F.lit(lab)))
-        .otherwise(F.lit(lb))
-        for sa, ta, sb, tb, laa, lab, lb in RFC_TREES
-    ]
-    total = votes[0]
-    for v in votes[1:]:
-        total = total + v
-    return total / len(votes)

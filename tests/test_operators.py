@@ -1,5 +1,5 @@
 """Operator-level unit tests: match tie-breaks, wildcard templates,
-fold edge cases, dedup primitives, multimodal plumbing, scoring kernel.
+fold edge cases, dedup primitives, scoring kernels.
 """
 
 from __future__ import annotations
@@ -240,79 +240,6 @@ def test_cosine_topk_exact(spark):
     out = cosine_topk(vecs, vecs.filter("vec_id = 0"), k=2).collect()
     assert [r["neighbor_id"] for r in out] == [1, 2]
     assert out[0]["cosine"] > 0.99
-
-
-def test_lsh_ann_finds_identical(spark):
-    from loganalyzer_spark.operators.similarity import cosine_topk_lsh
-
-    rows = [(i, [float((i * 7 + j * 3) % 11) for j in range(8)]) for i in range(20)]
-    rows.append((100, rows[0][1]))  # exact twin of vec 0
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = cosine_topk_lsh(
-        vecs, vecs.filter("vec_id = 0"), k=3, nbits=4, dim=8
-    ).collect()
-    # the exact twin must land in the same LSH bucket and score 1.0
-    twins = [r for r in out if r["neighbor_id"] == 100]
-    assert twins and twins[0]["cosine"] > 0.999999
-
-
-def test_multimodal_decode_stub(spark):
-    from loganalyzer_spark.operators import multimodal as MM
-
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(b"abc"), (10, 20, 0, "stub")),
-         (2, "video", bytearray(b"defg"), (100, 50, 5000, "stub"))],
-        MM.MEDIA_SCHEMA,
-    )
-    feats = MM.decode_features(media).collect()
-    by_id = {r["media_id"]: r for r in feats}
-    assert len(by_id[1]["features"]) == MM.FEATURE_DIM
-    assert by_id[2]["n_bytes"] == 4
-    assert all(0.0 <= x <= 1.0 for r in feats for x in r["features"])
-    # payloads with no built-in decoder magic raise from the executor
-    with pytest.raises(Exception, match="NotImplementedError|no built-in decoder"):
-        MM.decode_features(media, fake=False).collect()
-
-    frames = MM.frame_sample(media, every_ms=1000).collect()
-    assert [r["frame_ms"] for r in frames] == [0, 1000, 2000, 3000, 4000]
-
-    rs = {r["media_id"]: r for r in MM.resize_meta(media, 64).collect()}
-    assert rs[2]["target_w"] == 64 and rs[2]["target_h"] == 32
-
-
-def test_multimodal_real_decode(spark):
-    """Pure-numpy PPM/BMP codecs: lossless round-trip, and the Spark
-    kernel's features equal the direct numpy computation."""
-    import numpy as np
-
-    from loganalyzer_spark.operators import multimodal as MM
-
-    # deterministic gradient test image, odd width to exercise BMP padding
-    h, w = 13, 17
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.stack(
-        [(xx * 15) % 256, (yy * 19) % 256, (xx * yy) % 256], axis=-1
-    ).astype(np.uint8)
-
-    assert np.array_equal(MM.decode_ppm(MM.encode_ppm(img)), img)
-    assert np.array_equal(MM.decode_bmp(MM.encode_bmp(img)), img)
-    # header comment/whitespace handling per the netpbm spec
-    with_comment = b"P6\n# a comment\n%d %d\n255\n" % (w, h) + img.tobytes()
-    assert np.array_equal(MM.decode_ppm(with_comment), img)
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(MM.encode_ppm(img)), (w, h, 0, "ppm")),
-            (2, "image", bytearray(MM.encode_bmp(img)), (w, h, 0, "bmp")),
-        ],
-        MM.MEDIA_SCHEMA,
-    )
-    rows = {r["media_id"]: r for r in MM.decode_features(media, fake=False).collect()}
-    expect = MM.image_features(img).tolist()
-    for mid in (1, 2):
-        got = rows[mid]["features"]
-        assert np.allclose(got, expect), (mid, got, expect)
-    assert rows[1]["n_bytes"] == len(MM.encode_ppm(img))
 
 
 def test_logreg_training_learns(spark):
@@ -1252,7 +1179,8 @@ def test_c4_clean(spark):
 
 
 def test_model_zoo_kernels(spark):
-    """GNB log-odds, SVM margin and RFC ensemble must equal the numpy
+    """GNB log-odds, SVM margin, and the fixed DT and RFC fixtures
+    through cart_to_expr / forest_to_expr must equal the numpy
     reference math on hand vectors (the loglizer zoo inference forms)."""
     import math
 
@@ -1261,10 +1189,13 @@ def test_model_zoo_kernels(spark):
     from loganalyzer_spark import datagen
 
     d = datagen.VOCAB_SIZE  # RFC_TREES indexes slots up to 13
+    only = lambda i, v: [v if j == i else 0.0 for j in range(d)]  # noqa: E731
     vecs = [
         (0, [0.0] * d),
         (1, [float((3 * i + 1) % 5) for i in range(d)]),
         (2, [float((7 * i) % 4) for i in range(d)]),
+        (3, only(8, 1.0)),
+        (4, only(0, 2.0)),
     ]
     df = spark.createDataFrame(vecs, ["doc_id", "vec"])
 
@@ -1280,22 +1211,30 @@ def test_model_zoo_kernels(spark):
             "doc_id",
             F.round(SC.gnb_score_expr("vec", a, b, c0), 6).alias("gnb"),
             F.round(SC.svm_margin_expr("vec", w, bias), 6).alias("svm"),
-            F.round(SC.rfc_score_expr("vec"), 6).alias("rfc"),
+            SC.cart_to_expr(SC.DT_TREE, "vec").alias("dt"),
+            SC.forest_to_expr(SC.RFC_TREES, "vec").alias("rfc"),
         ).collect()
     }
+
+    def leaf(node, feats, x):
+        while node[0] == "split":
+            _, f, thr, lo, hi = node
+            node = lo if x[feats[f]] <= thr else hi
+        return node[1]
 
     for doc_id, x in vecs:
         gnb = c0 + sum(ai * xi + bi * xi * xi for ai, bi, xi in zip(a, b, x))
         svm = bias + sum(wi * xi for wi, xi in zip(w, x))
-        leaves = [
-            (laa if x[sb] > tb else lab) if x[sa] > ta else lb
-            for sa, ta, sb, tb, laa, lab, lb in SC.RFC_TREES
-        ]
+        dt = leaf(SC.DT_TREE, range(d), x)
+        leaves = [leaf(tree, feats, x) for feats, tree in SC.RFC_TREES]
         rfc = sum(leaves) / len(leaves)
         assert math.isclose(out[doc_id]["gnb"], round(gnb, 6), abs_tol=1e-6)
         assert math.isclose(out[doc_id]["svm"], round(svm, 6), abs_tol=1e-6)
+        assert out[doc_id]["dt"] == dt
         assert math.isclose(out[doc_id]["rfc"], round(rfc, 6), abs_tol=1e-6)
 
+    # every DT leaf fires on these vectors
+    assert sorted({r["dt"] for r in out.values()}) == [0.05, 0.2, 0.8, 0.95]
     # the zero vector scores exactly c0 / bias: sparse-oracle parity
     assert out[0]["gnb"] == round(c0, 6)
     assert out[0]["svm"] == round(bias, 6)
