@@ -31,6 +31,56 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+# ---------------------------------------------------------------------------
+# Driver-side tables
+# ---------------------------------------------------------------------------
+
+
+def _sql_value(v, sql_type: str) -> str:
+    """A Python value as a typed, foldable Spark SQL literal. Ints and
+    bools print as SQL literals; strings go in as hex UTF-8 bytes, so
+    quotes and regex backslashes need no escaping under any parser
+    setting; floats go through repr, which round-trips (nan and inf
+    included)."""
+    if v is None:
+        lit = "NULL"
+    elif isinstance(v, int):
+        lit = str(v)
+    elif isinstance(v, float):
+        lit = f"'{v!r}'"
+    elif isinstance(v, str):
+        lit = f"X'{v.encode().hex()}'"
+    else:
+        raise TypeError(f"local_df: unsupported value {v!r} for {sql_type}")
+    return f"CAST({lit} AS {sql_type})"
+
+
+def local_df(spark: SparkSession, rows: list[tuple], ddl_schema: str) -> DataFrame:
+    """A small driver-built table as a JVM ``LocalRelation``.
+
+    ``createDataFrame`` over a Python list plans a ``LogicalRDD`` over a
+    Python RDD, so every query that reads it starts Python-worker jobs
+    just to scan a few rows. This builds one inline ``VALUES`` table
+    instead, with one SQL call. A trailing all-NULL row, dropped by the
+    ``WHERE``, keeps every column nullable as the DDL declares and makes
+    ``rows == []`` an empty frame of the same schema; the optimizer
+    folds the filter back into the ``LocalRelation``.
+    """
+    fields = DataType.fromDDL(ddl_schema).fields
+    types = [f.dataType.simpleString() for f in fields]
+    cols = ", ".join("`" + f.name.replace("`", "``") + "`" for f in fields)
+    values = [
+        ", ".join(["TRUE"] + [_sql_value(v, t) for v, t in zip(row, types)])
+        for row in rows
+    ]
+    values.append(", ".join(["FALSE"] + [_sql_value(None, t) for t in types]))
+    return spark.sql(
+        f"SELECT {cols} FROM VALUES ({'), ('.join(values)}) "
+        f"AS t(`_local_df_keep`, {cols}) WHERE `_local_df_keep`"
+    )
+
 
 # ---------------------------------------------------------------------------
 # Template dimension (the reference's template_lib.csv shape: drain.py:763-764)
@@ -84,22 +134,22 @@ def event_id_of(template: str) -> str:
     return hashlib.md5(template.encode()).hexdigest()[:8]
 
 
+def template_row(tmpl: str) -> tuple:
+    """One TEMPLATE_SCHEMA row; a one-token template's second_token is ''."""
+    toks = tmpl.split(" ")
+    return (
+        event_id_of(tmpl),
+        tmpl,
+        len(toks),
+        toks[0],
+        toks[1] if len(toks) > 1 else "",
+        sum(1 for t in toks if t == "<*>"),
+        template_regex(tmpl),
+    )
+
+
 def template_rows() -> list[tuple]:
-    rows = []
-    for tmpl, _sev, _desc in _TEMPLATES:
-        toks = tmpl.split(" ")
-        rows.append(
-            (
-                event_id_of(tmpl),
-                tmpl,
-                len(toks),
-                toks[0],
-                toks[1],
-                sum(1 for t in toks if t == "<*>"),
-                template_regex(tmpl),
-            )
-        )
-    return rows
+    return [template_row(tmpl) for tmpl, _sev, _desc in _TEMPLATES]
 
 
 TEMPLATE_SCHEMA = (
@@ -145,7 +195,7 @@ VOCAB_SIZE = len(_TEMPLATES) + 1
 
 
 def vocab_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(vocab_rows(), "event_id string, vocab_idx int")
+    return local_df(spark, vocab_rows(), "event_id string, vocab_idx int")
 
 
 def duckdb_vocab_values() -> str:
@@ -154,15 +204,15 @@ def duckdb_vocab_values() -> str:
 
 
 def templates_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(template_rows(), TEMPLATE_SCHEMA)
+    return local_df(spark, template_rows(), TEMPLATE_SCHEMA)
 
 
 def kb_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(kb_rows(), KB_SCHEMA)
+    return local_df(spark, kb_rows(), KB_SCHEMA)
 
 
 def classes_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CLASS_ROWS, "class_id string, descpt string")
+    return local_df(spark, CLASS_ROWS, "class_id string, descpt string")
 
 
 # ---------------------------------------------------------------------------
@@ -667,10 +717,6 @@ def cm_block_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _eid(template: str) -> str:
-    return hashlib.md5(template.encode("utf-8")).hexdigest()[:8]
-
-
 _M5_T_RETR = "Command: RETR <*>"
 _M5_T_DISC = "Status: Disconnected from server"
 _M5_T_SOCK = "Trace: CControlSocket:: SendNextCommand()"
@@ -679,14 +725,14 @@ _M5_T_SOCK = "Trace: CControlSocket:: SendNextCommand()"
 def _m5_script() -> list[tuple[str, str]]:
     """(event_id_old expr, event_template expr) per line_no."""
     rows: list[tuple[str, str]] = [
-        (f"'{_eid(_M5_T_RETR)}'", f"'{_M5_T_RETR}'"),
+        (f"'{event_id_of(_M5_T_RETR)}'", f"'{_M5_T_RETR}'"),
         # trigger: head 'Load module N ' glued onto a known template —
         # split search finds md5(tail) in the lib
         ("'0'",
          f"'Load module ' || cast(r2 % 9 as varchar) || ' ' || '{_M5_T_DISC}'"),
         # consumer: stitched with the trigger's head
         ("'0'", "'tail fragment ' || cast(r2 % 7 as varchar)"),
-        (f"'{_eid(_M5_T_RETR)}'", f"'{_M5_T_RETR}'"),
+        (f"'{event_id_of(_M5_T_RETR)}'", f"'{_M5_T_RETR}'"),
         # case 3: care head with NO valid split — dropped, whole line
         # becomes the head for the next unmatched line
         ("'0'", "'CM fragment head ' || cast(r2 % 5 as varchar)"),
@@ -698,10 +744,10 @@ def _m5_script() -> list[tuple[str, str]]:
         ("'0'",
          f"'Line head ' || cast(r2 % 3 as varchar) || ' ' || '{_M5_T_SOCK}'"),
     ]
-    rows += [(f"'{_eid(_M5_T_DISC)}'", f"'{_M5_T_DISC}'")] * 22
+    rows += [(f"'{event_id_of(_M5_T_DISC)}'", f"'{_M5_T_DISC}'")] * 22
     rows += [
         ("'0'", "'late tail ' || cast(r2 % 13 as varchar)"),
-        (f"'{_eid(_M5_T_RETR)}'", f"'{_M5_T_RETR}'"),
+        (f"'{event_id_of(_M5_T_RETR)}'", f"'{_M5_T_RETR}'"),
     ]
     return rows
 

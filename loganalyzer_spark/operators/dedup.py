@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from loganalyzer_spark.datagen import local_df
+
 # (a_k, b_k) parameters for the k-th universal hash h_k(x) = (a*x + b) % P.
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1 (Mersenne)
 
@@ -427,9 +429,7 @@ def embedding_near_dups_lsh(
     if dim is None:
         head = emb.select(F.size(vec).alias("d")).head()
         if head is None:
-            return emb.sparkSession.createDataFrame(
-                [], "a long, b long, cosine double"
-            )
+            return local_df(emb.sparkSession, [], "a long, b long, cosine double")
         dim = head["d"]
     planes = lsh_planes(dim, nbits)
     sig = emb.select(

@@ -78,11 +78,7 @@ def evolve_library(
     combine handles the Zipf head), frequency-capped collect, driver
     clustering. Output: the template dim schema of datagen.templates_df.
     """
-    from loganalyzer_spark.datagen import (
-        TEMPLATE_SCHEMA,
-        event_id_of,
-        template_regex,
-    )
+    from loganalyzer_spark.datagen import TEMPLATE_SCHEMA, local_df, template_row
 
     counts = (
         lines.groupBy(masked)
@@ -97,21 +93,7 @@ def evolve_library(
         else []
     )
     evolved = cluster_templates([(r[masked], r["n"]) for r in counts], base)
-    rows = []
-    for tmpl in evolved:
-        toks = tmpl.split(" ")
-        rows.append(
-            (
-                event_id_of(tmpl),
-                tmpl,
-                len(toks),
-                toks[0],
-                toks[1] if len(toks) > 1 else "",
-                sum(1 for t in toks if t == "<*>"),
-                template_regex(tmpl),
-            )
-        )
-    return spark.createDataFrame(rows, TEMPLATE_SCHEMA)
+    return local_df(spark, [template_row(t) for t in evolved], TEMPLATE_SCHEMA)
 
 
 def lcs(seq1: list[str], seq2: list[str]) -> list[str]:

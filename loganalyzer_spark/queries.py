@@ -417,8 +417,8 @@ def lcs_merged_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from loganalyzer_spark.operators import evolve as EV
 
     mapping = EV.lcs_merge_cells([r[1] for r in datagen.template_rows()], 0.7)
-    dim = spark.createDataFrame(
-        sorted(mapping.items()), "event_id string, cell_id string"
+    dim = datagen.local_df(
+        spark, sorted(mapping.items()), "event_id string, cell_id string"
     )
     return (
         _routed(spark, sf_dir)
@@ -2466,7 +2466,8 @@ def chan_table_reformat(spark: SparkSession, sf_dir: str) -> DataFrame:
     (independently derived in tests/test_chantable.py)."""
     from loganalyzer_spark.operators.chantable import reformat_ds_chan_table
 
-    df = spark.createDataFrame(
+    df = datagen.local_df(
+        spark,
         [(0, n, s) for n, s in _CHAN_ROWS],
         "doc_id: long, line_no: long, content: string",
     )

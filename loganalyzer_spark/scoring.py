@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from loganalyzer_spark.datagen import local_df
+
 
 def train_logreg(
     X: np.ndarray, y: np.ndarray, iters: int = 200, lr: float = 0.1
@@ -255,9 +257,7 @@ def kfold_validate(
         accs.append(acc)
         rows.append((f, int((~test).sum()), int(test.sum()), round(acc, 6)))
     rows.append((-1, len(y), len(y), round(float(np.mean(accs)), 6)))
-    return spark.createDataFrame(
-        rows, "fold int, n_train int, n_test int, accuracy double"
-    )
+    return local_df(spark, rows, "fold int, n_train int, n_test int, accuracy double")
 
 
 # ---------------------------------------------------------------------------

@@ -440,3 +440,79 @@ def test_streaming_template_evolution(spark, tmp_path):
     assert by_bucket[3] == {"Command: RETR <*>"}
     # 1/4 similarity < 0.6: the ERR line seeds a second 4-token cluster
     assert by_bucket[4] == {"Status: OK done now", "Status: ERR failed here"}
+
+
+# ---------------------------------------------------------------------------
+# Driver-side tables are JVM LocalRelations: no query scans a Python RDD
+# ---------------------------------------------------------------------------
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_local_df_empty_input_keeps_schema(spark):
+    from pyspark.sql.types import DataType
+
+    from loganalyzer_spark.datagen import local_df
+
+    ddl = "a long, b long, cosine double, vec array<double>"
+    df = local_df(spark, [], ddl)
+    assert df.schema == DataType.fromDDL(ddl)
+    assert df.count() == 0
+    assert "LogicalRDD" not in _analyzed(df)
+
+
+def test_local_df_round_trips_values(spark):
+    from loganalyzer_spark.datagen import local_df
+
+    rows = [
+        (1, "it's a \\d+ \\\\ 'quote'", 0.1, True),
+        (2**40, "é\n\t`x`", float("-inf"), False),
+        (None, None, None, None),
+    ]
+    out = local_df(spark, rows, "n long, s string, x double, b boolean").collect()
+    assert [tuple(r) for r in out] == rows
+    nan = local_df(spark, [(float("nan"),)], "x double").collect()[0]["x"]
+    assert nan != nan
+
+
+@pytest.mark.parametrize(
+    "dim, rows, ddl",
+    [
+        ("templates_df", "template_rows", "TEMPLATE_SCHEMA"),
+        ("kb_df", "kb_rows", "KB_SCHEMA"),
+        ("classes_df", "CLASS_ROWS", "class_id string, descpt string"),
+        ("vocab_df", "vocab_rows", "event_id string, vocab_idx int"),
+    ],
+)
+def test_datagen_dims_are_local_relations(spark, dim, rows, ddl):
+    from pyspark.sql.types import DataType
+
+    from loganalyzer_spark import datagen
+
+    df = getattr(datagen, dim)(spark)
+    plan = _analyzed(df)
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert df.schema == DataType.fromDDL(getattr(datagen, ddl, ddl))
+    want = getattr(datagen, rows)
+    want = want() if callable(want) else want
+    # exact values: match_regex keeps every backslash
+    assert [tuple(r) for r in df.collect()] == want
+
+
+def test_pipeline_plans_scan_no_python_rdd(spark, tmp_path):
+    """Neither the flagship nor the streaming aggregate plans a Python
+    RDD scan, so no query starts Python-worker jobs for its dims."""
+    from loganalyzer_spark import datagen, pipeline
+    from loganalyzer_spark.streaming.stream_ecm import streaming_sink_ecm
+
+    pages = datagen.web_pages(spark, SF_SMALL)
+    flagship = pipeline.sink_aggregates(pipeline.routed_from_pages(spark, pages))
+    assert "LogicalRDD" not in _analyzed(flagship)
+
+    src = str(tmp_path / "stream_src")
+    datagen.raw_lines(spark, SF_SMALL).limit(10).write.parquet(src)
+    stream = streaming_sink_ecm(spark, src, spark.read.parquet(src).schema)
+    assert stream.isStreaming
+    assert "LogicalRDD" not in _analyzed(stream)

@@ -73,19 +73,8 @@ def main() -> None:
     probes = {}
     for size in sizes:
         extra = synth_templates(max(0, size - 13))
-        rows = datagen.template_rows() + [
-            (
-                datagen.event_id_of(t),
-                t,
-                len(t.split(" ")),
-                t.split(" ")[0],
-                t.split(" ")[1],
-                sum(1 for x in t.split(" ") if x == "<*>"),
-                datagen.template_regex(t),
-            )
-            for t in extra
-        ]
-        tmpl = spark.createDataFrame(rows, datagen.TEMPLATE_SCHEMA)
+        rows = datagen.template_rows() + [datagen.template_row(t) for t in extra]
+        tmpl = datagen.local_df(spark, rows, datagen.TEMPLATE_SCHEMA)
 
         # hash only what the match layer adds, keyed by line
         r = median_timed(
