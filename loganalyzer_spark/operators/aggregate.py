@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from loganalyzer_spark.operators import sql_str
+
 
 def event_counts(lines: DataFrame) -> DataFrame:
     """A1: template occurrence counts (drain.py:731,755)."""
@@ -22,21 +24,16 @@ def sink_ecm(routed: DataFrame, bucket: str = "1 minute") -> DataFrame:
 
     Flat form (sink_class, bucket_start, event_id, cnt); use
     ``ecm_pivot`` for the wide matrix. Hash agg does partial combines
-    map-side, so Zipf-heavy event_ids do not hot-spot the shuffle.
+    map-side, so Zipf-heavy event_ids do not hot-spot the shuffle. A
+    watermarked streaming input gets the same plan plus the state store
+    (``streaming.stream_ecm``).
     """
     return (
         routed.groupBy(
-            "sink_class",
-            F.window("warc_ts", bucket).alias("w"),
-            "event_id",
+            "sink_class", F.expr(f"window(warc_ts, {sql_str(bucket)}) AS w"), "event_id"
         )
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            "sink_class",
-            F.col("w.start").alias("bucket_start"),
-            "event_id",
-            "cnt",
-        )
+        .agg(F.expr("count(*) AS cnt"))
+        .selectExpr("sink_class", "w.start AS bucket_start", "event_id", "cnt")
     )
 
 

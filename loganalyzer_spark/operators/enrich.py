@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from loganalyzer_spark.operators import with_sql
+
 SINK_CASE = (
     "CASE WHEN is_abn = 1 THEN 'c001' "
     "WHEN severity IN ('fatal', 'error') THEN 'c001' "
@@ -27,14 +29,15 @@ SINK_CASE = (
 
 
 def enrich_kb(lines: DataFrame, kb: DataFrame) -> DataFrame:
-    return lines.join(F.broadcast(kb), "event_id", "left").withColumn(
-        "severity", F.coalesce("severity", F.lit("info"))
+    return with_sql(
+        lines.join(F.broadcast(kb), "event_id", "left"),
+        {"severity": "coalesce(severity, 'info')"},
     )
 
 
 def route(lines: DataFrame) -> DataFrame:
     """Assign exactly one sink_class per row (routed-row equality gate)."""
-    return lines.withColumn("sink_class", F.expr(SINK_CASE))
+    return with_sql(lines, {"sink_class": SINK_CASE})
 
 
 # ---------------------------------------------------------------------------

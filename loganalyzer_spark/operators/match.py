@@ -32,40 +32,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from loganalyzer_spark.operators import with_sql
+
+# One candidate; field order is the preference order inside a sorted
+# candidate array (neg_para asc == para_count desc). all-wildcard
+# templates score sim 0.0 in the reference's seq_dist (const_num == 0),
+# not the 1.0 of every other full token-match — max-sim-first means
+# they sort LAST, before the para tie-break applies (module docstring).
+_CAND = (
+    "struct(CAST(para_count = token_count AS INT) AS all_wild,"
+    " -para_count AS neg_para, event_id,"
+    " split(event_template, ' ') AS toks, event_template)"
+)
+
+# The first candidate whose tokens all equal the line's, '<*>' matching
+# any token; NULL when none does.
+_HIT = (
+    "get(filter(concat(coalesce(cands, array()), coalesce(wcands, array())),"
+    " c -> forall(zip_with(c.toks, _toks, (t, a) -> t = '<*>' OR t = a), x -> x)), 0)"
+)
+
 
 def _cands_dim(templates: DataFrame, wildcard: bool) -> DataFrame:
     """Group the template dim by join key with a deterministic preference
-    order inside each candidate array (neg_para asc == para_count desc).
+    order inside each candidate array (``cands``; ``wcands`` for the
+    wildcard bucket).
 
     Candidates carry their token array: match confirmation is token-wise
     equality with '<*>' wildcards — plain string comparisons inside
     whole-stage codegen, ~10× cheaper than per-row regex compilation.
     """
-    t = (
-        templates.withColumn("neg_para", -F.col("para_count"))
-        .withColumn("toks", F.split("event_template", " "))
-        # all-wildcard templates score sim 0.0 in the reference's
-        # seq_dist (const_num == 0), not the 1.0 of every other full
-        # token-match — max-sim-first means they sort LAST, before the
-        # para tie-break applies (module docstring).
-        .withColumn(
-            "all_wild",
-            (F.col("para_count") == F.col("token_count")).cast("int"),
-        )
-    )
-    keys = ["token_count"] if wildcard else ["token_count", "first_token"]
     if wildcard:
-        t = t.filter(F.col("first_token") == "<*>")
+        keys, name, where = ["token_count"], "wcands", "first_token = '<*>'"
     else:
-        t = t.filter(F.col("first_token") != "<*>")
-    return t.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "all_wild", "neg_para", "event_id", "toks", "event_template"
-                )
-            )
-        ).alias("cands")
+        keys, name, where = ["token_count", "first_token"], "cands", "first_token != '<*>'"
+    return (
+        templates.where(where)
+        .groupBy(*keys)
+        .agg(F.expr(f"sort_array(collect_list({_CAND})) AS {name}"))
     )
 
 
@@ -78,47 +82,24 @@ def match_templates(
     The two dimension joins are broadcast; match resolution is an array
     filter per row — the whole stage is shuffle-free.
     """
-    exact = _cands_dim(templates, wildcard=False)
-    wild = _cands_dim(templates, wildcard=True)
-
-    out = (
-        lines.withColumn("_toks", F.split(masked, " "))
-        .withColumn("token_count", F.size("_toks"))
-        .withColumn("first_token", F.col("_toks")[0])
-        .join(F.broadcast(exact), ["token_count", "first_token"], "left")
-        .join(
-            F.broadcast(wild.withColumnRenamed("cands", "wcands")),
-            ["token_count"],
-            "left",
-        )
-        .withColumn(
-            "_all_cands",
-            F.concat(
-                F.coalesce("cands", F.array()), F.coalesce("wcands", F.array())
-            ),
-        )
-        .withColumn(
-            "_hit",
-            F.expr(
-                "get(filter(_all_cands, c -> forall("
-                "zip_with(c.toks, _toks, (t, a) -> t = '<*>' OR t = a),"
-                " x -> x)), 0)"
-            ),
-        )
-        .withColumn("is_new", F.col("_hit").isNull().cast("int"))
-        .withColumn(
-            "event_id",
-            F.coalesce(
-                F.col("_hit.event_id"), F.substring(F.md5(F.col(masked)), 1, 8)
-            ),
-        )
-        .withColumn(
-            "event_template",
-            F.coalesce(F.col("_hit.event_template"), F.col(masked)),
-        )
-        .drop("cands", "wcands", "_all_cands", "_hit", "_toks")
+    keyed = with_sql(
+        with_sql(lines, {"_toks": f"split({masked}, ' ')"}),
+        {"token_count": "size(_toks)", "first_token": "_toks[0]"},
     )
-    return out
+    joined = keyed.join(
+        F.broadcast(_cands_dim(templates, wildcard=False)),
+        ["token_count", "first_token"],
+        "left",
+    ).join(F.broadcast(_cands_dim(templates, wildcard=True)), ["token_count"], "left")
+    return with_sql(
+        with_sql(joined, {"_hit": _HIT}),
+        {
+            "is_new": "CAST(_hit IS NULL AS INT)",
+            "event_id": f"coalesce(_hit.event_id, substring(md5({masked}), 1, 8))",
+            "event_template": f"coalesce(_hit.event_template, {masked})",
+        },
+        drop=("cands", "wcands", "_hit", "_toks"),
+    )
 
 
 def extract_params(df: DataFrame, masked: str = "masked") -> DataFrame:

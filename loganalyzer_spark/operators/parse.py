@@ -28,54 +28,40 @@ label-handover machinery (preprocess_base.py:101-113) is unnecessary.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from loganalyzer_spark import patterns as P
+from loganalyzer_spark.operators import sql_str, with_sql
 
-# Anchored standard-timestamp pattern (Java-regex safe: no lookaround).
+# Every layer below is SQL text composed from the ``patterns`` constants
+# and handed to the JVM in a few selectExpr/where calls. The same layer
+# built from Column trees costs one py4j round trip per function,
+# literal and column reference.
+
+# P1 anchored standard-timestamp pattern (Java-regex safe: no lookaround).
 _TS_ANCHOR = "^" + P.SQL_STD_TS
-# pid/sid cleanup — Java regex supports lookahead; IGNORECASE flag as (?i)
-# to match the reference's re.IGNORECASE (ftp/patterns.py:33-40).
+# P2 pid/sid cleanup — Java regex supports lookahead; IGNORECASE flag as
+# (?i) to match the reference's re.IGNORECASE (ftp/patterns.py:33-40).
 _CLEAN_CHAR = r"(?i)\d+ \d (?=[A-Z][a-z]+: )"
-# P4 line removal: the reference uses ``.match`` (anchored at 0); the
-# Python-re alternation is Java-compatible verbatim, so share the text.
-_LINE_RM_ANCHOR = "^(?:" + P.PTN_LINE_RM.pattern + ")"
+_BLANKS = sql_str(" \t")
+_NEWLINE = sql_str("\n")
 
 
-def _split_tokens_expr(col) -> Column:
+def _split_sql(c: str) -> str:
     """P5 Java fast path: the reference's split_token_apart degenerates
     to a global sub because every pattern matches constant literal text
-    (see patterns.split_tokens); Java regexp_replace chain with the
-    same lookarounds, byte-identity proven in tests/test_wash_fidelity.
-    Order: left patterns in list order, then right (preprocess_base.py
-    :807-826)."""
-    e = F.regexp_replace(col, r"=(?=[^= \r\n])", "= ")
-    e = F.regexp_replace(e, r"\:\:(?=[a-zA-Z_]{3,})", ":: ")
-    e = F.regexp_replace(e, r"\((?=(\w|[-+]))", "( ")
-    e = F.regexp_replace(e, r"(?<=\w)\)", " )")
-    return e
-
-
-def _normalize_response_expr(col) -> Column:
-    """P6: first anchored match rewrites the whole line (ftp/preprocess
-    .py:30-37); when() chain preserves the reference's first-match-wins
-    break. Gated behind a cheap ``startswith('Response: ')`` so the 4
-    rlikes only run on response lines (~10-15 % of a corpus); the gate
-    is exact because every PTN_RSP_STAT pattern starts with that
-    literal."""
-    e = F.col(col) if isinstance(col, str) else col
-    out = None
-    for ptn, canonical in P.PTN_RSP_STAT:
-        assert ptn.pattern.startswith("Response: ")
-        cond = e.rlike("^" + ptn.pattern)
-        out = (
-            F.when(cond, F.lit(canonical))
-            if out is None
-            else out.when(cond, F.lit(canonical))
-        )
-    return F.when(e.startswith("Response: "), out.otherwise(e)).otherwise(e)
+    (see patterns.split_tokens), so ``$0`` re-emits the one possible
+    match. Java regexp_replace chain over the same pattern texts, with
+    the same lookarounds; byte-identity with the Python tier is tested
+    in tests/test_wash_fidelity. Order: left patterns in list order,
+    then right (preprocess_base.py:807-826)."""
+    for ptn in P.PTN_SPLIT_LEFT:
+        c = f"regexp_replace({c}, {sql_str(ptn.pattern)}, '$0 ')"
+    for ptn in P.PTN_SPLIT_RIGHT:
+        c = f"regexp_replace({c}, {sql_str(ptn.pattern)}, ' $0')"
+    return c
 
 
 # Each split pattern can only fire on a line containing its literal
@@ -87,42 +73,31 @@ def _normalize_response_expr(col) -> Column:
 _SPLIT_GATE_LITS = ("=", "::", "(", ")")
 
 
-def _split_gate_cond(e: Column) -> Column:
-    gate = None
-    for lit in _SPLIT_GATE_LITS:
-        c = e.contains(lit)
-        gate = c if gate is None else gate | c
-    return gate
-
-
-def _content_expr(col) -> Column:
+def _content_sql(c: str) -> str:
     """Fused P6→P5 content expression over a (cheap) column reference.
 
     Reference order is normalize-response THEN split (preprocess_base
-    .py:376 after ftp/preprocess.py:30-37). The canonical response
-    strings are proven fixed points of split_tokens at import time, so
-    a canonical hit folds the whole P5 chain away; every other line
-    runs P5 only when the split gate says a pattern can fire. The
-    split chain appears in two branches of the expression tree, but
-    each row evaluates exactly one branch, and the duplicated leaves
-    are plain attribute refs — no re-computation (CLAUDE.md's
-    no-cross-operator-CSE hazard applies to filters, not when()).
+    .py:376 after ftp/preprocess.py:30-37). P6 is first-match-wins over
+    PTN_RSP_STAT, anchored like the reference's ``.match``
+    (ftp/preprocess.py:30-37); each rlike sits behind a cheap
+    ``startswith('Response: ')``, which is exact because every pattern
+    starts with that literal. The canonical response strings are proven
+    fixed points of split_tokens here, so a canonical hit skips the P5
+    chain; every other line runs P5 only when the split gate says a
+    pattern can fire.
     """
-    e = F.col(col) if isinstance(col, str) else col
-    split_gated = F.when(_split_gate_cond(e), _split_tokens_expr(e)).otherwise(e)
-    rsp = None
+    whens = []
     for ptn, canonical in P.PTN_RSP_STAT:
-        folded = P.split_tokens(canonical)
-        assert folded == canonical, f"canonical not a P5 fixed point: {canonical!r}"
-        cond = e.rlike("^" + ptn.pattern)
-        rsp = (
-            F.when(cond, F.lit(folded))
-            if rsp is None
-            else rsp.when(cond, F.lit(folded))
+        assert ptn.pattern.startswith("Response: ")
+        assert P.split_tokens(canonical) == canonical, (
+            f"canonical not a P5 fixed point: {canonical!r}"
         )
-    return F.when(
-        e.startswith("Response: "), rsp.otherwise(split_gated)
-    ).otherwise(split_gated)
+        whens.append(
+            f"WHEN startswith({c}, 'Response: ') AND {c} RLIKE "
+            f"{sql_str('^' + ptn.pattern)} THEN {sql_str(canonical)}"
+        )
+    gate = " OR ".join(f"contains({c}, {sql_str(lit)})" for lit in _SPLIT_GATE_LITS)
+    return f"CASE {' '.join(whens)} WHEN {gate} THEN {_split_sql(c)} ELSE {c} END"
 
 
 # Cheap first-character gate for the PTN_LINE_RM filter: every branch of
@@ -137,9 +112,30 @@ def _content_expr(col) -> Column:
 _LINE_RM_FIRST = list("*BR+TDf mSeL<=(") + [str(d) for d in range(10)]
 
 
-def _line_rm_cond(col) -> Column:
-    e = F.col(col) if isinstance(col, str) else col
-    return F.substring(e, 1, 1).isin(_LINE_RM_FIRST) & e.rlike(_LINE_RM_ANCHOR)
+def _line_rm_sql(c: str) -> str:
+    """P4: the reference's anchored ``PTN_LINE_RM.match``; the
+    Python-re alternation is Java-compatible verbatim."""
+    firsts = ", ".join(sql_str(ch) for ch in _LINE_RM_FIRST)
+    anchored = sql_str("^(?:" + P.PTN_LINE_RM.pattern + ")")
+    return f"substring({c}, 1, 1) IN ({firsts}) AND {c} RLIKE {anchored}"
+
+
+_CONTENT = _content_sql("_cleaned")
+_LINE_RM = _line_rm_sql("_cleaned")
+
+
+def _one_row_generate(df: DataFrame, name: str, sql: str) -> DataFrame:
+    """Append ``sql AS name`` as the output of a one-row Generate.
+
+    A barrier for the optimizer: Catalyst pushes a filter below the
+    Projects that define the columns it reads and copies their
+    definitions into the condition, and Spark has no cross-operator
+    CSE, so a filter over a regex-derived column runs that regex again.
+    Neither predicate pushdown nor CollapseProject sees through a
+    Generate's output, so the expression runs once, in the Generate,
+    and filters read the column.
+    """
+    return df.selectExpr("*", f"inline(array(named_struct({sql_str(name)}, {sql})))")
 
 
 def pages_to_lines(pages: DataFrame) -> DataFrame:
@@ -150,51 +146,52 @@ def pages_to_lines(pages: DataFrame) -> DataFrame:
     order-sensitive op keys on (doc/url, line_no).
     """
     cols = [c for c in ("doc_id", "url", "warc_ts", "lang") if c in pages.columns]
-    return pages.select(
-        *cols, F.posexplode(F.split("text", "\n")).alias("line_no", "raw")
+    return pages.selectExpr(
+        *cols, f"posexplode(split(text, {_NEWLINE})) AS (line_no, raw)"
     )
 
 
 def wash(lines: DataFrame, raw: str = "raw") -> DataFrame:
-    """P1/P2/P3/P9/P10 as pure column expressions (one codegen stage).
+    """P1/P2/P3/P4/P5/P6/P9/P10 in one codegen stage; each regex runs
+    once per line.
 
-    The anchored timestamp regex is evaluated ONCE per line
-    (regexp_extract of the whole matched prefix); flags, class label and
-    the stripped content all derive from that prefix with cheap string
-    ops. The naive form (one rlike/replace per derived column) re-scans
-    every line with the anchor regex ~6x — measured at ~2x the wash
-    stage cost on the 18M-line corpus.
+    The anchored timestamp regex runs once (regexp_extract of the whole
+    matched prefix, ``_pfx``); flags, class label and the stripped
+    content all derive from that prefix with cheap string ops. The
+    pid/sid clean regex runs once (``_cleaned``). Both are outputs of a
+    one-row Generate (``_one_row_generate``), so the two filters read
+    them instead of re-running their regexes: with plain columns,
+    Catalyst copied the definitions into the pushed-down filters and
+    the anchor ran 4 times per line, the clean 3 times.
     """
     # prefix = "<ts> [abn: ][segsign: ][cNNN ]" or "" when no ts matches;
     # label markers can only occur inside the matched prefix, so
     # contains() on the prefix is exact.
-    return (
-        lines.withColumn("_pfx", F.regexp_extract(raw, _TS_ANCHOR, 0))
-        .withColumn("has_ts", (F.col("_pfx") != "").cast("int"))
-        .withColumn("is_abn", F.col("_pfx").contains("abn: ").cast("int"))
-        .withColumn("is_seg", F.col("_pfx").contains("segsign: ").cast("int"))
-        .withColumn("class_label", F.regexp_extract("_pfx", "(c[0-9]{3} )$", 1))
-        .withColumn("_stripped", F.expr(f"substring({raw}, length(_pfx) + 1)"))
-        # P3 empty purge FIRST, on _stripped: clean/rsp preserve
-        # emptiness both ways (clean needs a 'Word: ' lookahead, rsp
-        # needs 'Response: ...'), so testing before them is equivalent
-        # to the reference's post-domain-process check — and keeps this
-        # filter's pushed-down predicate a cheap btrim, not a copy of
-        # the whole wash chain. (Filter pushdown inlines each filter
-        # condition's full expression tree, and Spark has no cross-
-        # operator CSE: the naive filter-on-_normed form evaluated the
-        # clean+rsp chain 3x per row — measured 15.5 s vs 6 s e2e.)
-        .filter(F.length(F.expr("btrim(_stripped, ' \t')")) > 0)
-        .withColumn("_cleaned", F.regexp_replace("_stripped", _CLEAN_CHAR, ""))
-        # P4 line removal on _cleaned (reference order: after clean,
-        # where pid/sid stripping can expose a removable line). Testing
-        # before rsp is equivalent: no rsp source or canonical line
-        # matches any PTN_LINE_RM branch (they all start 'Response: ',
-        # which no branch accepts).
-        .filter(~_line_rm_cond("_cleaned"))
-        # P6 then P5 in one single-consumer chain — evaluated once.
-        .withColumn("content", _content_expr("_cleaned"))
-        .drop("_pfx", "_stripped", "_cleaned")
+    stripped = f"substring({raw}, length(_pfx) + 1)"
+    df = _one_row_generate(lines, "_pfx", f"regexp_extract({raw}, {sql_str(_TS_ANCHOR)}, 0)")
+    # P3 empty purge FIRST, on the stripped line: clean/rsp preserve
+    # emptiness both ways (clean needs a 'Word: ' lookahead, rsp needs
+    # 'Response: ...'), so testing before them is equivalent to the
+    # reference's post-domain-process check.
+    df = df.where(f"length(btrim({stripped}, {_BLANKS})) > 0")
+    df = _one_row_generate(df, "_cleaned", f"regexp_replace({stripped}, {sql_str(_CLEAN_CHAR)}, '')")
+    # P4 line removal on _cleaned (reference order: after clean, where
+    # pid/sid stripping can expose a removable line). Testing before rsp
+    # is equivalent: no rsp source or canonical line matches any
+    # PTN_LINE_RM branch (they all start 'Response: ', which no branch
+    # accepts).
+    df = df.where(f"NOT ({_LINE_RM})")
+    return with_sql(
+        df,
+        {
+            "has_ts": "CAST(_pfx != '' AS INT)",
+            "is_abn": "CAST(contains(_pfx, 'abn: ') AS INT)",
+            "is_seg": "CAST(contains(_pfx, 'segsign: ') AS INT)",
+            "class_label": f"regexp_extract(_pfx, {sql_str('(c[0-9]{3} )$')}, 1)",
+            # P6 then P5 in one single-consumer expression.
+            "content": _CONTENT,
+        },
+        drop=("_pfx", "_cleaned"),
     )
 
 
@@ -228,12 +225,12 @@ def mask_cm(lines: DataFrame, content: str = "content") -> DataFrame:
     return lines.withColumn("masked", mask_params_cm_udf(F.col(content)))
 
 
-def masked_sql_expr(col: str) -> Column:
-    """JVM-side masking (RE2/Java-safe rewrites) — the fast path.
+def _mask_sql(c: str) -> str:
+    """JVM-side P7 masking (Java-safe rewrites) — the fast path.
 
-    tests/test_mask_fidelity.py proves byte-equality with
-    ``mask_params_udf`` on the corpus; the pandas UDF remains the
-    reference-fidelity fallback for pattern sets where Java regex
+    tests/test_mask_fidelity.py proves byte-equality with the Python
+    ``patterns.mask_params`` chain on the corpus; the pandas UDF remains
+    the reference-fidelity fallback for pattern sets where Java regex
     semantics diverge.
     """
     # Sequential passes, deliberately NOT merged into one alternation:
@@ -241,17 +238,21 @@ def masked_sql_expr(col: str) -> Column:
     # (?:ctime)|(?:ipv4)|(?:mac) pattern ~10% SLOWER — single-pattern
     # passes keep Java regex's literal-prefix scan optimizations that a
     # top-level alternation defeats.
-    e = F.regexp_replace(col, P.SQL_CTIME, "<*>")
-    e = F.regexp_replace(e, P.SQL_IPV4, "<*>")
-    e = F.regexp_replace(e, P.SQL_MAC, "<*>")
-    e = F.regexp_replace(e, P.SQL_TIME_24H, " <*>$5")
-    e = F.regexp_replace(e, P.SQL_BARE_INT, " <*> ")
-    return e
+    for ptn, repl in (
+        (P.SQL_CTIME, "<*>"),
+        (P.SQL_IPV4, "<*>"),
+        (P.SQL_MAC, "<*>"),
+        (P.SQL_TIME_24H, " <*>$5"),
+        (P.SQL_BARE_INT, " <*> "),
+    ):
+        c = f"regexp_replace({c}, {sql_str(ptn)}, {sql_str(repl)})"
+    return c
 
 
 def mask(lines: DataFrame, content: str = "content", jvm: bool = True) -> DataFrame:
-    masked = masked_sql_expr(content) if jvm else mask_params_udf(F.col(content))
-    return lines.withColumn("masked", masked)
+    if jvm:
+        return with_sql(lines, {"masked": _mask_sql(content)})
+    return lines.withColumn("masked", mask_params_udf(F.col(content)))
 
 
 def sessionize(lines: DataFrame, part: str = "doc_id", order: str = "line_no") -> DataFrame:

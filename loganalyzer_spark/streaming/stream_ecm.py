@@ -2,17 +2,17 @@
 
 The reference is pure batch; its sliding time windows (loglizer.py:
 161-295) are the batch analogue of streaming windowed aggregation. The
-batch pipeline's groupBy(window(...)) code path is reused verbatim here
-— only the source/sink and the watermark differ, which is the point:
-the same DAG runs incrementally with late-data handling.
+batch aggregate, ``aggregate.sink_ecm``, runs here on the watermarked
+routed lines — only the source/sink and the watermark differ, which is
+the point: the same DAG runs incrementally with late-data handling.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from loganalyzer_spark import pipeline
+from loganalyzer_spark.operators import aggregate
 
 
 def streaming_sink_ecm(
@@ -31,21 +31,7 @@ def streaming_sink_ecm(
         spark.readStream.schema(schema).parquet(source_dir)
     )
     routed = pipeline.routed_lines(spark, lines, templates=templates, kb=kb)
-    return (
-        routed.withWatermark("warc_ts", watermark)
-        .groupBy(
-            "sink_class",
-            F.window("warc_ts", bucket).alias("w"),
-            "event_id",
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            "sink_class",
-            F.col("w.start").alias("bucket_start"),
-            "event_id",
-            "cnt",
-        )
-    )
+    return aggregate.sink_ecm(routed.withWatermark("warc_ts", watermark), bucket)
 
 
 def run_to_memory(agg: DataFrame, name: str = "stream_out"):

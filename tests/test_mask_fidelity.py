@@ -2,15 +2,20 @@
 text must be byte-identical, per url/line, to the *reference's own
 regex chain* run in plain Python.
 
-The oracle here is the reference source itself
-(/root/reference/analyzer/extensions/ftp/patterns.py PTN_HARD_PARA,
-applied in dict order exactly as drain.py:880-887 does) — loaded by
-file path, not copied.
+Two tiers. When the reference checkout (``REF``) is present, the
+package's Python tier (``patterns.PTN_HARD_PARA`` / ``mask_params``) is
+checked against the reference source itself
+(analyzer/extensions/ftp/patterns.py PTN_HARD_PARA, applied in dict
+order exactly as drain.py:880-887 does) — loaded by file path, not
+copied; those tests skip without it. Both engine paths (the JVM regexp
+chain and the pandas UDF) are checked against that Python tier on every
+host.
 """
 
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import types
 
@@ -31,6 +36,8 @@ def _load(name: str, path: str):
 
 @pytest.fixture(scope="module")
 def ref_patterns():
+    if not os.path.isdir(REF):
+        pytest.skip("reference checkout not present")
     sys.modules.setdefault("analyzer", types.ModuleType("analyzer"))
     utils_pkg = types.ModuleType("analyzer.utils")
     sys.modules.setdefault("analyzer.utils", utils_pkg)
@@ -58,9 +65,11 @@ def test_local_patterns_equal_reference(ref_patterns):
 
 
 @pytest.mark.parametrize("jvm", [True, False])
-def test_masked_text_byte_identical(spark, ref_patterns, jvm):
-    """Engine mask (JVM regexp chain and pandas-UDF path) == reference."""
+def test_masked_text_byte_identical(spark, jvm):
+    """Engine mask (JVM regexp chain and pandas-UDF path) == the Python
+    tier, patterns.mask_params, on the corpus."""
     from loganalyzer_spark import datagen
+    from loganalyzer_spark import patterns as P
     from loganalyzer_spark.operators import parse
 
     lines = datagen.raw_lines(spark, SF_SMALL)
@@ -70,23 +79,38 @@ def test_masked_text_byte_identical(spark, ref_patterns, jvm):
         .toPandas()
     )
     assert len(out) > 3000
-    expected = out["content"].map(lambda s: ref_mask(s, ref_patterns))
+    expected = out["content"].map(P.mask_params)
     diffs = out[out["masked"] != expected]
     assert diffs.empty, diffs.head(5).to_string()
 
 
+# The JVM rewrite diverges from Python re only outside the generated
+# corpus's guarantees (adjacent maskable time tokens, patterns.py Tier 2);
+# these lines stay inside them.
+MASK_CASES = [
+    "Trace: Connecting to 10.1.2.3 port 2121",
+    "Response: 230 Login successful",
+    "Trace: Session time 01:02:03 elapsed",
+    "Mon Jun 20 14:42:53 2022 boot",
+    "mac 0a:1b:2c:3d:4e:5f up",
+    "values 1 2 3 4 end",
+]
+
+
 def test_ref_mask_on_adversarial_lines(ref_patterns):
-    """The JVM rewrite diverges from Python re only outside the generated
-    corpus's guarantees; document the known divergence class here."""
+    """The Python tier equals the reference chain on adversarial lines."""
     from loganalyzer_spark import patterns as P
 
-    cases = [
-        "Trace: Connecting to 10.1.2.3 port 2121",
-        "Response: 230 Login successful",
-        "Trace: Session time 01:02:03 elapsed",
-        "Mon Jun 20 14:42:53 2022 boot",
-        "mac 0a:1b:2c:3d:4e:5f up",
-        "values 1 2 3 4 end",
-    ]
-    for c in cases:
+    for c in MASK_CASES:
         assert P.mask_params(c) == ref_mask(c, ref_patterns)
+
+
+def test_jvm_mask_on_adversarial_lines(spark):
+    """The JVM chain equals the Python tier on adversarial lines."""
+    from loganalyzer_spark import patterns as P
+    from loganalyzer_spark.operators import parse
+
+    df = spark.createDataFrame([(c,) for c in MASK_CASES], "content string")
+    got = {r["content"]: r["masked"] for r in parse.mask(df).collect()}
+    for c in MASK_CASES:
+        assert got[c] == P.mask_params(c), c

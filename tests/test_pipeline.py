@@ -516,3 +516,45 @@ def test_pipeline_plans_scan_no_python_rdd(spark, tmp_path):
     stream = streaming_sink_ecm(spark, src, spark.read.parquet(src).schema)
     assert stream.isStreaming
     assert "LogicalRDD" not in _analyzed(stream)
+
+
+def test_flagship_runs_each_wash_regex_once(spark):
+    """The timestamp-anchor regex and the pid/sid clean regex appear
+    once each in the flagship's physical plan: the wash filters read
+    their outputs instead of carrying a copy of their definitions."""
+    from loganalyzer_spark import datagen, pipeline
+    from loganalyzer_spark.operators import parse
+
+    pages = datagen.web_pages(spark, SF_SMALL)
+    flagship = pipeline.sink_aggregates(pipeline.routed_from_pages(spark, pages))
+    plan = flagship._jdf.queryExecution().sparkPlan().toString()
+    assert plan.count(parse._TS_ANCHOR) == 1, plan
+    assert plan.count(parse._CLEAN_CHAR) == 1, plan
+
+
+def test_flagship_build_jvm_round_trips(spark, monkeypatch):
+    """Building the flagship plan, without an action, takes at most 400
+    py4j round trips: each layer is a few SQL-text calls, not one call
+    per Column function, literal and column reference (about 1,450).
+    py4j's finalizer thread sends the deletes of freed JVM references
+    on its own schedule, so only this thread's commands count."""
+    import threading
+
+    from loganalyzer_spark import datagen, pipeline
+
+    pages = datagen.web_pages(spark, SF_SMALL)
+    pages.columns  # resolve the input's schema outside the count
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    main_thread = threading.get_ident()
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == main_thread:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    pipeline.sink_aggregates(pipeline.routed_from_pages(spark, pages))
+    monkeypatch.undo()
+    assert len(sent) <= 400, len(sent)

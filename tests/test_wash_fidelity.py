@@ -1,5 +1,4 @@
-"""Wash-stage fidelity (P4/P5/P6) against the reference's OWN pattern
-files and loop semantics, loaded read-only from /root/reference.
+"""Wash-stage fidelity (P4/P5/P6).
 
 Covers the round-1 VERDICT gaps:
   P5 token splitting  — split_token_apart (preprocess_base.py:807-826)
@@ -7,16 +6,21 @@ Covers the round-1 VERDICT gaps:
   P4 line removal     — PTN_LINE_RM (cm/patterns.py:79-103, applied at
                         cm/preprocess.py:76-82)
 
-Strategy: (1) assert our compiled pattern TEXTS equal the reference's
-(patterns are data, byte-identical by construction); (2) run the
-reference's Python loop semantics as the oracle over both the generated
-corpus and adversarial literals, and assert our JVM fast path produces
-byte-identical output.
+Two tiers:
+(1) Against the reference's OWN pattern files and loop semantics, loaded
+read-only from the reference checkout (``REF``): our compiled pattern
+TEXTS equal the reference's, and our Python tier
+(``patterns.split_tokens``, ``normalize_response``) equals the
+reference loops. These skip when the reference checkout is absent.
+(2) The JVM fast path (the SQL text ``operators.parse`` builds) is
+byte-identical to that Python tier on the checked-in adversarial line
+sets below and on the generated corpus. These always run.
 """
 
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import types
 
@@ -37,6 +41,8 @@ def _load(name: str, path: str):
 
 @pytest.fixture(scope="module")
 def ref_ftp():
+    if not os.path.isdir(REF):
+        pytest.skip("reference checkout not present")
     sys.modules.setdefault("analyzer", types.ModuleType("analyzer"))
     utils_pkg = types.ModuleType("analyzer.utils")
     sys.modules.setdefault("analyzer.utils", utils_pkg)
@@ -51,7 +57,8 @@ def ref_cm(ref_ftp):
 
 
 # ---------------------------------------------------------------------------
-# Reference-loop oracles (transcribed semantics, patterns from the ref)
+# Reference-loop oracles (transcribed semantics, patterns from the ref);
+# only the tier-(1) tests use them.
 # ---------------------------------------------------------------------------
 
 
@@ -166,38 +173,35 @@ def test_python_rsp_equals_reference_loop(ref_ftp):
         assert P.normalize_response(c) == ref_rsp(c, ref_ftp), c
 
 
-def test_jvm_split_and_rsp_byte_identical(spark, ref_ftp):
-    """JVM regexp_replace / when-chain == reference Python loops, on
-    adversarial literals (beyond what the corpus guarantees)."""
-    from pyspark.sql import functions as F
+def _jvm(spark, cases, **sql):
+    """Evaluate each SQL text over a one-column frame of ``cases``."""
+    df = spark.createDataFrame([(c,) for c in cases], "line string")
+    rows = df.selectExpr("line", *[f"{e} AS {k}" for k, e in sql.items()]).collect()
+    return {r["line"]: r for r in rows}
 
-    from loganalyzer_spark.operators.parse import (
-        _normalize_response_expr,
-        _split_tokens_expr,
-    )
+
+def test_jvm_split_and_rsp_byte_identical(spark):
+    """JVM P5 regexp_replace chain == patterns.split_tokens, and the
+    content expression's P6 branch == patterns.normalize_response, on
+    adversarial literals (beyond what the corpus guarantees)."""
+    from loganalyzer_spark import patterns as P
+    from loganalyzer_spark.operators.parse import _content_sql, _split_sql
 
     cases = SPLIT_CASES + RSP_CASES
-    df = spark.createDataFrame([(c,) for c in cases], "line string")
-    out = {
-        r["line"]: (r["split"], r["rsp"])
-        for r in df.select(
-            "line",
-            _split_tokens_expr(F.col("line")).alias("split"),
-            _normalize_response_expr("line").alias("rsp"),
-        ).collect()
-    }
+    got = _jvm(spark, cases, split=_split_sql("line"), content=_content_sql("line"))
     for c in cases:
-        assert out[c][0] == ref_split(c, ref_ftp), f"split: {c!r}"
-        assert out[c][1] == ref_rsp(c, ref_ftp), f"rsp: {c!r}"
+        assert got[c]["split"] == P.split_tokens(c), f"split: {c!r}"
+    for c in RSP_CASES:
+        assert got[c]["content"] == P.normalize_response(c), f"rsp: {c!r}"
 
 
-def test_jvm_fused_content_equals_reference_chain(spark, ref_ftp):
-    """The production fused/gated content expr (P6 canonical fold + P5
-    split gate) == the reference composition split(rsp(line)) byte-for-
-    byte — the gates and the constant fold must be transparent."""
-    from pyspark.sql import functions as F
-
-    from loganalyzer_spark.operators.parse import _content_expr
+def test_jvm_fused_content_equals_reference_chain(spark):
+    """The production fused/gated content expression (P6 canonical fold
+    + P5 split gate) == the composition split_tokens(normalize_response(
+    line)) byte-for-byte — the gates and the constant fold must be
+    transparent."""
+    from loganalyzer_spark import patterns as P
+    from loganalyzer_spark.operators.parse import _content_sql
 
     cases = SPLIT_CASES + RSP_CASES + [
         "",                       # empty survives the gate untouched
@@ -205,43 +209,34 @@ def test_jvm_fused_content_equals_reference_chain(spark, ref_ftp):
         "Response: 211-has (gate) chars=y",  # canonical fold wins over split
         "Response: 999 unknown (x) a=b",     # rsp miss -> gated split runs
     ]
-    df = spark.createDataFrame([(c,) for c in cases], "line string")
-    got = {
-        r["line"]: r["content"]
-        for r in df.select("line", _content_expr("line").alias("content")).collect()
-    }
+    got = _jvm(spark, cases, content=_content_sql("line"))
     for c in cases:
-        assert got[c] == ref_split(ref_rsp(c, ref_ftp), ref_ftp), f"content: {c!r}"
+        want = P.split_tokens(P.normalize_response(c))
+        assert got[c]["content"] == want, f"content: {c!r}"
 
 
-def test_jvm_line_rm_matches_python_match(spark, ref_cm):
+def test_jvm_line_rm_matches_python_match(spark):
     """The gated wash condition (first-char gate + anchored Java rlike)
     == Python .match for PTN_LINE_RM — the gate must be transparent."""
-    from pyspark.sql import functions as F
+    from loganalyzer_spark import patterns as P
+    from loganalyzer_spark.operators.parse import _line_rm_sql
 
-    from loganalyzer_spark.operators.parse import _line_rm_cond
-
-    df = spark.createDataFrame([(c,) for c in RM_CASES], "line string")
-    got = {
-        r["line"]: r["rm"]
-        for r in df.select(
-            "line", _line_rm_cond("line").alias("rm")
-        ).collect()
-    }
+    got = _jvm(spark, RM_CASES, rm=_line_rm_sql("line"))
     for c in RM_CASES:
-        expect = ref_cm.PTN_LINE_RM.match(c) is not None
-        assert got[c] == expect, f"line_rm: {c!r}"
+        expect = P.PTN_LINE_RM.match(c) is not None
+        assert got[c]["rm"] == expect, f"line_rm: {c!r}"
 
 
-def test_wash_equals_reference_order_on_adversarial_raw(spark, ref_ftp, ref_cm):
+def test_wash_equals_reference_order_on_adversarial_raw(spark):
     """Full wash() vs a transcription of the reference main-loop order
     (strip ts -> clean -> rsp -> line-rm -> empty -> split;
-    preprocess_base.py:217-407 + ftp/cm process_for_domain). Covers the
-    edges the production reordering must keep equivalent, e.g. pid/sid
-    stripping EXPOSING a removable line ('Len: ...'), and empty-after-
-    strip lines."""
+    preprocess_base.py:217-407 + ftp/cm process_for_domain) over the
+    Python tier. Covers the edges the production reordering must keep
+    equivalent, e.g. pid/sid stripping EXPOSING a removable line
+    ('Len: ...'), and empty-after-strip lines."""
     import re
 
+    from loganalyzer_spark import patterns as P
     from loganalyzer_spark.operators import parse
 
     TS = "2022-06-22 14:42:53 "
@@ -271,12 +266,12 @@ def test_wash_equals_reference_order_on_adversarial_raw(spark, ref_ftp, ref_cm):
             return None
         s = line[m.end():]
         s = clean.sub("", s)                       # P2
-        s = ref_rsp(s, ref_ftp)                    # P6
+        s = P.normalize_response(s)                # P6
         if re.match(r"^[ \t]*$", s):               # P3
             return None
-        if ref_cm.PTN_LINE_RM.match(s):            # P4
+        if P.PTN_LINE_RM.match(s):                 # P4
             return None
-        return ref_split(s, ref_ftp)               # P5
+        return P.split_tokens(s)                   # P5
 
     expected = {i: ref_order(r) for i, r in enumerate(raws)}
     df = spark.createDataFrame(

@@ -27,6 +27,23 @@ SPARK_TYPES = {
     "DOUBLE", "VARCHAR", "BLOB", "DATE", "TIMESTAMP",
 }
 
+# Numeric kind of a Spark simpleString or DuckDB type name. A column
+# whose kinds differ fails: an exact hash of a BIGINT oracle column never
+# equals that of a DOUBLE Spark column, even when the values compare
+# equal after rounding both to float.
+INTEGRAL = {"tinyint", "smallint", "int", "integer", "bigint"}
+FRACTIONAL = {"float", "double"}
+
+
+def numeric_kind(type_name: str) -> str | None:
+    t = type_name.lower()
+    if t in INTEGRAL:
+        return "integer"
+    if t in FRACTIONAL:
+        return "float"
+    return None
+
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -51,7 +68,16 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
-def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> bool:
+def compare(
+    name: str,
+    sdf: pd.DataFrame,
+    ddf: pd.DataFrame,
+    spark_types: dict[str, str],
+    duck_types: dict[str, str],
+) -> bool:
+    """Row count, column names, numeric kinds, then values.
+    ``spark_types``/``duck_types`` map each column to its declared type
+    name (Spark simpleString, DuckDB type)."""
     ok = True
     if len(sdf) != len(ddf):
         print(f"  [{name}] ROWCOUNT spark={len(sdf)} duckdb={len(ddf)}")
@@ -59,6 +85,11 @@ def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> bool:
     if sorted(sdf.columns) != sorted(ddf.columns):
         print(f"  [{name}] SCHEMA spark={sorted(sdf.columns)} duckdb={sorted(ddf.columns)}")
         return False
+    for c in sorted(sdf.columns):
+        ks, kd = numeric_kind(spark_types[c]), numeric_kind(duck_types[c])
+        if ks and kd and ks != kd:
+            print(f"  [{name}] TYPE column {c}: spark={spark_types[c]} duckdb={duck_types[c]}")
+            ok = False
     if not ok:
         return False
     a, b = normalize(sdf), normalize(ddf)
@@ -106,7 +137,9 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            sdf_spark = fn(spark, sf_dir)
+            spark_types = {f.name: f.dataType.simpleString() for f in sdf_spark.schema.fields}
+            sdf = sdf_spark.toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
@@ -130,7 +163,8 @@ def main() -> int:
             print(f"FAIL {name}: oracle column(s) {leaks} have a type outside SPARK_TYPES")
             n_fail += 1
             continue
-        if compare(name, sdf, ddf):
+        duck_types = {c: str(t) for c, t in zip(rel.columns, rel.types)}
+        if compare(name, sdf, ddf, spark_types, duck_types):
             print(f"PASS {name}: rows={len(sdf)} [{time.time()-t0:.1f}s]")
             n_pass += 1
         else:
