@@ -476,37 +476,10 @@ def raw_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def web_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """input_hint-shaped table: url, warc_ts, html, text, lang.
-
-    text = newline-joined raw lines (deterministic order by line_no);
-    html = utf-8 bytes of text.
-    """
-    lines = raw_lines(spark, sf_dir)
-    return (
-        lines.groupBy("doc_id", "url", "warc_ts", "lang")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("line_no", "raw"))
-                    ),
-                    lambda s: s["raw"],
-                ),
-                "\n",
-            ).alias("text")
-        )
-        .withColumn("html", F.encode("text", "utf-8"))
-        .select("url", "warc_ts", "html", "text", "lang", "doc_id")
-    )
-
-
-def gen_web_pages(
-    spark: SparkSession, n_docs: int, partitions: int | None = None
-) -> DataFrame:
-    """Standalone large-scale input_hint-shaped corpus
-    (url, warc_ts, html, text, lang) for benchmarks."""
-    lines = gen_raw_lines(spark, n_docs, partitions)
+def _pages(lines: DataFrame) -> DataFrame:
+    """Assemble lines into input_hint-shaped pages: url, warc_ts, html,
+    text, lang, doc_id. text = newline-joined raw lines (deterministic
+    order by line_no); html = utf-8 bytes of text."""
     return (
         lines.groupBy("doc_id", "url", "warc_ts", "lang")
         .agg(
@@ -521,6 +494,20 @@ def gen_web_pages(
         .withColumn("html", F.encode("text", "utf-8"))
         .select("url", "warc_ts", "html", "text", "lang", "doc_id")
     )
+
+
+def web_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """input_hint-shaped table (url, warc_ts, html, text, lang) over the
+    shared documents' raw lines."""
+    return _pages(raw_lines(spark, sf_dir))
+
+
+def gen_web_pages(
+    spark: SparkSession, n_docs: int, partitions: int | None = None
+) -> DataFrame:
+    """Standalone large-scale input_hint-shaped corpus
+    (url, warc_ts, html, text, lang) for benchmarks."""
+    return _pages(gen_raw_lines(spark, n_docs, partitions))
 
 
 def gen_raw_lines(spark: SparkSession, n_docs: int, partitions: int | None = None) -> DataFrame:
@@ -543,9 +530,9 @@ def gen_raw_lines(spark: SparkSession, n_docs: int, partitions: int | None = Non
 
 # (content expr template, constant masked truth). Every variable part is
 # swallowed by a mask class, so the truth is a literal — drift between
-# the generator and the reference chain is impossible to hide:
-# tests/test_mask_cm.py re-derives each truth by running the REFERENCE
-# cm patterns over the generated content.
+# the generator and the cm chain is impossible to hide:
+# tests/test_mask_cm.py re-derives each truth by running
+# ``patterns.mask_params_cm`` over the generated content.
 _CM_SHAPES: list[tuple[str, str]] = [
     ("'Mib: 1.3.6.1.2.1.69.1.5.8.' || cast(r2 % 20 as varchar) || "
      "'.2 status ' || cast(r2 % 5 as varchar)",

@@ -23,7 +23,7 @@ def sink_ecm(routed: DataFrame, bucket: str = "1 minute") -> DataFrame:
     """A12 flagship: per-sink event-count matrix over warc_ts buckets.
 
     Flat form (sink_class, bucket_start, event_id, cnt); use
-    ``ecm_pivot`` for the wide matrix. Hash agg does partial combines
+    ``ecm_vectors`` for dense per-bucket vectors. Hash agg does partial combines
     map-side, so Zipf-heavy event_ids do not hot-spot the shuffle. A
     watermarked streaming input gets the same plan plus the state store
     (``streaming.stream_ecm``).
@@ -48,22 +48,6 @@ def salted_event_counts(lines: DataFrame, salt: int = 16) -> DataFrame:
     salted = lines.withColumn("_salt", (F.rand(42) * salt).cast("int"))
     partial = salted.groupBy("event_id", "_salt").agg(F.count("*").alias("c"))
     return partial.groupBy("event_id").agg(F.sum("c").alias("occurrences"))
-
-
-def ecm_pivot(ecm_flat: DataFrame) -> DataFrame:
-    """Wide ECM: one row per (sink_class, bucket), counts as a map.
-
-    A map keyed by event_id (not a 2000-column pivot) keeps the plan
-    narrow at template-library scale (SURVEY.md §7 hard parts); the
-    dense vector form for model scoring is built by ``ecm_vectors``.
-    Entries are sorted by event_id (map_from_entries preserves the
-    sorted insertion order), so the map renders deterministically.
-    """
-    return ecm_flat.groupBy("sink_class", "bucket_start").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("event_id", "cnt")))
-        ).alias("counts")
-    )
 
 
 def ecm_vectors(

@@ -16,14 +16,12 @@ Scale notes:
     band_hash) are high-cardinality for DISTINCT content, but a crawl
     is full of mass-duplicate clusters (boilerplate, mirrored pages):
     m identical docs share every band, so an uncapped self-join emits
-    m²·bands/2 candidate pairs — a scale-killer at 100 TB skew. Both
-    band joins therefore cap the per-bucket blowup (``bucket_cap``):
-    buckets at or under the cap run the exact all-pairs join;
-    oversized buckets degrade to a bounded "star" (each member paired
-    with the bucket's smallest member, O(m) pairs) which still
-    connects the whole cluster for the downstream verify/connected-
-    components pass. Run ``exact_dedup`` first so byte-identical
-    copies never reach the LSH join at all.
+    m²·bands/2 candidate pairs — a scale-killer at 100 TB skew. All
+    three banded joins (MinHash, SimHash blocks, hyperplane bands) go
+    through one capped bucket-pair join, :func:`_capped_pairs`, whose
+    docstring states what the cap costs in recall. Run
+    ``exact_dedup`` first so byte-identical copies never reach the
+    LSH join at all.
   * Pair generation dedupes (a < b) to avoid mirrored pairs.
 """
 
@@ -120,53 +118,93 @@ def minhash_signatures(
     return df.select(key, "shingles", sig.alias("sig"))
 
 
+def _capped_pairs(
+    rows: DataFrame, bucket: list[str], bucket_cap: int,
+    payload: str | None = None,
+) -> DataFrame:
+    """All pairs (a, b), a < b, of keys ``k`` sharing a bucket, with the
+    per-bucket blowup capped. Output (a, b[, pa, pb]), one row per
+    (a, b); ``pa``/``pb`` are the ``payload`` column of a and b.
+
+    ``rows`` holds ``k``, the ``bucket`` columns and, when given,
+    ``payload``. A bucket with ≤ ``bucket_cap`` members runs the exact
+    all-pairs self-join. An oversized bucket (m members) emits only the
+    O(m) star from its smallest member ``_rep`` to every other member,
+    instead of m²/2 pairs; the rep's payload is re-attached through a
+    broadcast join against the (tiny) distinct-rep dim, so a verify step
+    still runs on every emitted pair. The cap costs one window pass
+    over ``rows``, partitioned like the self-join's key, so no extra
+    shuffle.
+
+    Recall inside an oversized bucket degrades from all-pairs to the
+    star: a pair (u, v) of two non-rep members is never emitted from
+    it, and survives only as the path u–rep–v when both star edges pass
+    the caller's verify. When the bucket's members are identical (the
+    mass-duplicate case the cap exists for) both edges always pass, so
+    a downstream survivors/connected-components pass still resolves the
+    cluster whole. In a mixed bucket, a true pair whose only shared
+    bucket is oversized is lost as a pair, and lost as a connection too
+    when either star edge fails the verify.
+    """
+    bw = Window.partitionBy(*bucket)
+    rows = rows.withColumn("_bn", F.count(F.lit(1)).over(bw)).withColumn(
+        "_rep", F.min("k").over(bw)
+    )
+    pay = [payload] if payload else []
+    out = ["a", "b"] + (["pa", "pb"] if payload else [])
+
+    def side(name: str, pay_name: str) -> list:
+        pays = [F.col(c).alias(pay_name) for c in pay]
+        return [F.col("k").alias(name), *pays, *bucket]
+
+    small = rows.filter(F.col("_bn") <= bucket_cap)
+    exact = (
+        small.select(*side("a", "pa"))
+        .join(small.select(*side("b", "pb")), bucket)
+        .filter(F.col("a") < F.col("b"))
+    )
+    big = rows.filter(F.col("_bn") > bucket_cap)
+    star = big.filter(F.col("k") > F.col("_rep")).select(
+        F.col("_rep").alias("a"), *side("b", "pb")
+    )
+    if payload:
+        reps = (
+            big.filter(F.col("k") == F.col("_rep"))
+            .select(*bucket, F.col(payload).alias("pa"))
+            .dropDuplicates(bucket)
+        )
+        star = star.join(F.broadcast(reps), bucket)
+    return exact.select(*out).unionByName(star.select(*out)).dropDuplicates(["a", "b"])
+
+
+def minhash_bands(sigs: DataFrame, key: str = "doc_id", bands: int = 4) -> DataFrame:
+    """Band a MinHash signature: (key, band_id, band_hash), one row per
+    band, band_hash = md5 of the band's ``size(sig) / bands`` values."""
+    width = f"int(size(sig) / {bands})"
+    return sigs.select(
+        key,
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(0, {bands} - 1),"
+                f" b -> md5(array_join(slice(sig, b * {width} + 1, {width}), '_')))"
+            )
+        ).alias("band_id", "band_hash"),
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame, key: str = "doc_id", bands: int = 4, bucket_cap: int = 256
 ) -> DataFrame:
     """Band the signature, bucket-join docs sharing any band hash.
 
-    Output: (a, b) candidate pairs with a < b, distinct.
-
-    ``bucket_cap`` bounds the quadratic blowup of mass-duplicate
-    clusters (m docs sharing every band → m²·bands/2 pairs uncapped):
-    buckets with ≤ cap members run the exact all-pairs join; larger
-    buckets emit only the O(m) star to the bucket's smallest member,
-    which still connects the cluster for the downstream Jaccard-verify
-    / connected-components pass (near_dup_survivors). Precondition for
-    full pair recall: run :func:`exact_dedup` first so byte-identical
-    copies collapse before banding. The cap costs ONE extra window
-    pass over the banded rows (same partitioning as the join key — no
-    extra shuffle: the window's hash partitioning is reused by the
-    self-join).
+    Output: (a, b) candidate pairs with a < b, distinct, for the
+    downstream Jaccard-verify / connected-components pass
+    (near_dup_survivors). ``bucket_cap`` bounds mass-duplicate clusters
+    as :func:`_capped_pairs` describes; run :func:`exact_dedup` first so
+    byte-identical copies collapse before banding.
     """
-    rows_per_band_expr = f"int(size(sig) / {bands})"
-    banded = sigs.select(
-        F.col(key).alias("k"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands} - 1),"
-                f" b -> md5(array_join(slice(sig, b * {rows_per_band_expr} + 1,"
-                f" {rows_per_band_expr}), '_')))"
-            )
-        ).alias("band_id", "band_hash"),
-    )
-    bw = Window.partitionBy("band_id", "band_hash")
-    banded = banded.withColumn("_bn", F.count(F.lit(1)).over(bw)).withColumn(
-        "_rep", F.min("k").over(bw)
-    )
-    small = banded.filter(F.col("_bn") <= bucket_cap)
-    left = small.select(F.col("k").alias("a"), "band_id", "band_hash")
-    right = small.select(F.col("k").alias("b"), "band_id", "band_hash")
-    exact = (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-    star = (
-        banded.filter((F.col("_bn") > bucket_cap) & (F.col("k") > F.col("_rep")))
-        .select(F.col("_rep").alias("a"), F.col("k").alias("b"))
-    )
-    return exact.unionByName(star).distinct()
+    banded = minhash_bands(sigs, key, bands).withColumnRenamed(key, "k")
+    return _capped_pairs(banded, ["band_id", "band_hash"], bucket_cap)
 
 
 def jaccard_pairs(
@@ -232,20 +270,10 @@ def simhash_near_pairs(
     Scale path: block on fingerprint quarters (a pair within distance d
     must agree on ≥1 of d+1 blocks) then verify with bit_count(xor).
 
-    ``bucket_cap`` bounds mass-duplicate quadratic blowup exactly as in
-    :func:`lsh_candidate_pairs` / :func:`embedding_near_dups_lsh`:
-    m identical documents share EVERY block (identical fingerprints),
-    so an uncapped self-join emits m²·(d+1)/2 pairs. Blocks with ≤ cap
-    members run the exact all-pairs join; oversized blocks emit only
-    the O(m) star to the block's smallest member. Star pairs still pass
-    the exact bit_count verify, so precision stays 1.0. Recall inside
-    an oversized block degrades from all-pairs to the star: when the
-    block's members share one fingerprint (the mass-duplicate case) the
-    star keeps the cluster connected and the downstream
-    survivors/connected-components pass still resolves it whole, but in
-    a mixed oversized block a true pair (u, v) whose only shared block
-    it is is lost outright when both star edges (rep, u) and (rep, v)
-    exceed ``max_hamming``.
+    ``bucket_cap`` bounds mass-duplicate blowup (m identical documents
+    share EVERY block, m²·(d+1)/2 pairs uncapped) as
+    :func:`_capped_pairs` describes. Star pairs still pass the exact
+    bit_count verify, so precision stays 1.0.
     """
     nblocks = max_hamming + 1
     blocked = fps.select(
@@ -262,41 +290,9 @@ def simhash_near_pairs(
             )
         ).alias("block_id", "block_val"),
     )
-    bw = Window.partitionBy("block_id", "block_val")
-    blocked = blocked.withColumn("_bn", F.count(F.lit(1)).over(bw)).withColumn(
-        "_rep", F.min("k").over(bw)
-    )
-    small = blocked.filter(F.col("_bn") <= bucket_cap)
-    left = small.select(F.col("k").alias("a"), F.col("fp"), "block_id", "block_val")
-    right = small.select(
-        F.col("k").alias("b"), F.col("fp").alias("fp2"), "block_id", "block_val"
-    )
-    exact = (
-        left.join(right, ["block_id", "block_val"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "fp", "b", "fp2")
-    )
-    # Oversized blocks: star to the block min; re-attach the rep's
-    # fingerprint via the (tiny) distinct-rep dim so the exact Hamming
-    # verify below still runs on every emitted pair.
-    big = blocked.filter((F.col("_bn") > bucket_cap) & (F.col("k") > F.col("_rep")))
-    reps = (
-        blocked.filter(F.col("_bn") > bucket_cap)
-        .filter(F.col("k") == F.col("_rep"))
-        .select("block_id", "block_val", F.col("fp"))
-        .dropDuplicates(["block_id", "block_val"])
-    )
-    star = big.join(F.broadcast(reps.withColumnRenamed("fp", "_repfp")),
-                    ["block_id", "block_val"]).select(
-        F.col("_rep").alias("a"),
-        F.col("_repfp").alias("fp"),
-        F.col("k").alias("b"),
-        F.col("fp").alias("fp2"),
-    )
     return (
-        exact.unionByName(star)
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("fp").bitwiseXOR(F.col("fp2"))))
+        _capped_pairs(blocked, ["block_id", "block_val"], bucket_cap, "fp")
+        .withColumn("hamming", F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
     )
@@ -414,13 +410,9 @@ def embedding_near_dups_lsh(
     driver action); a wrong hard-coded dim would silently null-pad
     ``zip_with`` and collapse every sign bit to 0 (one giant bucket).
 
-    ``bucket_cap`` bounds mass-duplicate quadratic blowup exactly as
-    in :func:`lsh_candidate_pairs`: ≤ cap buckets all-pairs, oversized
-    buckets a bounded star to the bucket's min member (the star pairs
-    still pass the exact cosine verify, so precision stays 1.0; recall
-    inside an oversized bucket degrades from all-pairs to
-    cluster-connectivity — the right trade for m-identical-embedding
-    clusters, which exact/near dedup should have collapsed upstream).
+    ``bucket_cap`` bounds mass-duplicate blowup as :func:`_capped_pairs`
+    describes; star pairs still pass the exact cosine verify, so
+    precision stays 1.0.
     """
     if nbands is None or nbits is None:
         plan_bands, plan_width = lsh_band_plan(threshold)
@@ -433,14 +425,14 @@ def embedding_near_dups_lsh(
         dim = head["d"]
     planes = lsh_planes(dim, nbits)
     sig = emb.select(
-        F.col(key).alias("vid"),
+        F.col(key).alias("k"),
         F.col(vec).alias("v"),
         hyperplane_sign_bits(vec, planes).alias("bits"),
     )
     band_width = nbits // nbands
     mask = (1 << band_width) - 1
     banded = sig.select(
-        "vid",
+        "k",
         "v",
         F.explode(
             F.array(
@@ -455,48 +447,12 @@ def embedding_near_dups_lsh(
                 ]
             )
         ).alias("band"),
-    ).select("vid", "v", "band.band_id", "band.band_bits")
-    bw = Window.partitionBy("band_id", "band_bits")
-    banded = banded.withColumn("_bn", F.count(F.lit(1)).over(bw)).withColumn(
-        "_rep", F.min("vid").over(bw)
-    )
-    small = banded.filter(F.col("_bn") <= bucket_cap)
-    a = small.select(
-        F.col("vid").alias("a"), F.col("v").alias("avec"), "band_id", "band_bits"
-    )
-    b = small.select(
-        F.col("vid").alias("b"), F.col("v").alias("bvec"), "band_id", "band_bits"
-    )
-    exact_cands = a.join(b, ["band_id", "band_bits"]).filter(F.col("a") < F.col("b"))
-    # Oversized buckets: star to the bucket min. Re-attach the rep's
-    # vector via a join against the (tiny) distinct-rep dim so the
-    # exact cosine verify below still runs on every emitted pair.
-    big = banded.filter((F.col("_bn") > bucket_cap) & (F.col("vid") > F.col("_rep")))
-    reps = (
-        banded.filter(F.col("_bn") > bucket_cap)
-        .filter(F.col("vid") == F.col("_rep"))
-        .select("band_id", "band_bits", F.col("v").alias("avec"))
-        .dropDuplicates(["band_id", "band_bits"])
-    )
-    star_cands = big.join(F.broadcast(reps), ["band_id", "band_bits"]).select(
-        F.col("_rep").alias("a"),
-        "avec",
-        F.col("vid").alias("b"),
-        F.col("v").alias("bvec"),
-        "band_id",
-        "band_bits",
-    )
-    cands = (
-        exact_cands.select("a", "avec", "b", "bvec")
-        .unionByName(star_cands.select("a", "avec", "b", "bvec"))
-        .dropDuplicates(["a", "b"])
-    )
+    ).select("k", "v", "band.band_id", "band.band_bits")
     return (
-        cands.withColumn(
+        _capped_pairs(banded, ["band_id", "band_bits"], bucket_cap, "v")
+        .withColumn(
             "cosine",
-            F.round(
-                _dot("avec", "bvec") / (_norm("avec") * _norm("bvec")), 6
-            ),
+            F.round(_dot("pa", "pb") / (_norm("pa") * _norm("pb")), 6),
         )
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")

@@ -7,14 +7,9 @@ line; continuations are appended with ``', '`` after ``rstrip`` of the
 accumulated line and ``lstrip`` of the continuation; the primary line's
 timestamp stays at the front.
 
-Two Spark expressions of the same operator:
-
-* ``fold_lines`` — general form over a line table: running-sum group id
-  (window partitioned by document — scales, no global order) + grouped
-  ordered concat.
-* ``fold_page_text`` — narrow form when the input is page-shaped
-  (input_hint ``text``): the fold runs *inside* the line array of each
-  page via ``aggregate``, so it costs zero shuffles — the scale path.
+``fold_lines`` expresses it over a line table: a running-sum group id
+(window partitioned by document — scales, no global order) + grouped
+ordered concat.
 """
 
 from __future__ import annotations
@@ -74,43 +69,3 @@ def fold_lines(
         .drop("_parts")
     )
 
-
-def fold_text_array(col) -> F.Column:
-    """Fold an array of physical lines into an array of folded lines —
-    pure higher-order functions, evaluated per row (no shuffle).
-
-    aggregate(): continuation lines merge into the last accumulator
-    element; primaries append a new element.
-    """
-    return F.aggregate(
-        col,
-        F.expr("cast(array() as array<string>)"),
-        lambda acc, x: F.when(
-            x.rlike(NESTED) & (F.size(acc) > 0),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(
-                    F.concat(
-                        _rstrip(F.element_at(acc, -1)),
-                        F.lit(", "),
-                        _lstrip(_rstrip(x)),
-                    )
-                ),
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def fold_page_text(pages: DataFrame, text: str = "text") -> DataFrame:
-    """Page-level fold: text → folded line array → posexplode.
-
-    The whole M2 operator is a narrow projection here; at 100 TB this
-    is the form to use (the window variant shuffles by doc_id).
-    """
-    keep = [c for c in pages.columns if c != text]
-    return pages.select(
-        *keep,
-        F.posexplode(fold_text_array(F.split(F.col(text), "\n"))).alias(
-            "fold_grp", "folded"
-        ),
-    )

@@ -35,12 +35,11 @@ def register(name: str, oracle: str | None):
 
 # The driver's CORRECTNESS snapshot covers the first 50 queries in the
 # order queries()/oracle_sql() emit them. Every *distinct* operator
-# should land inside that window; redundant formulations of an operator
-# already certified by another in-window query (salted vs plain agg,
-# narrow vs window fold, brute vs bucketed dedup/ANN, JVM vs Arrow
-# kernel) and the no-oracle model kernels are pushed past the window.
-# Each demoted entry stays fully registered — the local gate
-# (tools/check_oracle.py) still checks all of them.
+# should land inside that window; queries whose operator or shape is
+# already certified by an in-window query, and the no-oracle model
+# kernels, are pushed past the window. Each demoted entry stays fully
+# registered — the local gate (tools/check_oracle.py) still checks all
+# of them. A name here that is not registered raises KeyError.
 _DEMOTED = [
     "block_removal",                # generic machine; block_presets_cm runs it
                                     # with the real cm pattern data
@@ -48,123 +47,55 @@ _DEMOTED = [
     "tumbling_window_stats",        # ≡ sliding_window_counts with step = width
     "corpus_split_stats",           # same hash16 machinery certified row-level
                                     # by corpus_sample_rows
-    "template_occurrences_salted",  # ≡ template_occurrences (skew path)
-    "nested_fold_narrow",           # ≡ nested_fold (zero-shuffle form)
+    "template_occurrences_salted",  # salted skew path of template_occurrences
     "sessionize_events",            # ≡ session_window_stats (manual form)
     "minhash_signatures",           # certified inside minhash_lsh_near_dups
-    "simhash_near_pairs",           # blocked-Hamming join over the in-window
-                                    # simhash_fingerprints; exact-hash oracle
-                                    # (incl. the bucket-cap star rule) in the
-                                    # local gate — the banded-join SHAPE is
-                                    # certified in-window by
+    "simhash_near_pairs",           # banded-join shape certified in-window by
                                     # minhash_lsh_near_dups
-    "ngram_jaccard_twins",          # jaccard verify exercised by LSH query
     "embedding_near_dups",          # brute baseline; LSH query is the scale path
-    "embedding_cosine_topk",        # brute baseline; IVF query same oracle
     "quality_scores",               # signals re-certified inside quality_filter
     "repetition_stats",             # signals re-certified inside quality_filter
     "stratified_sample_counts",     # same hash16 machinery as corpus_sample_rows
     "deeplog_topk",                 # no_oracle; deeplog_predict is the superset
-    "deeplog_predict",              # no_oracle (LSTM kernel); certified by
-                                    # tests/test_deeplog.py parity vs the
-                                    # equations + local-gate rows check
-    "lcs_merged_occurrences",       # D5 LCS cell merge — exact-hash oracle
-                                    # in the local gate; demoted to keep the
-                                    # 50-row driver window stable vs r4 (the
-                                    # in-window A1 shape is template_
-                                    # occurrences; the merge kernel itself is
-                                    # reference-parity pytest-certified)
-    "deeplog_train_score",          # no_oracle (driver-side LSTM training,
-                                    # VERDICT r4 missing #1: torch-parity
-                                    # trainer; BPTT gradients pinned by
-                                    # tests/test_deeplog.py)
+    "deeplog_predict",              # no_oracle (LSTM kernel)
+    "lcs_merged_occurrences",       # A1 shape certified in-window by
+                                    # template_occurrences
+    "deeplog_train_score",          # no_oracle (driver-side LSTM training)
     "logreg_train_score",           # no_oracle (driver-side training)
-    "dt_rfc_train_score",           # no_oracle (driver-side CART/forest
-                                    # training; compiled-expression vs
-                                    # numpy parity is pytest-pinned)
-    "loglizer_incremental_train_score",  # no_oracle (driver-side
-                                    # partial_fit training, VERDICT r4
-                                    # item 6); convergence parity is
-                                    # pytest-pinned
-    "loglab_kfold_validate",        # no_oracle (driver-side k-fold CV,
-                                    # loglab.py:662-671 parity)
-    "gnb_svm_train_score",          # no_oracle (driver-side GNB/PTN/SVM
-                                    # training, loglizer.py:431-441,
-                                    # 456-459; estimator parity is
-                                    # pytest-pinned)
-    "dup_components",               # iterative Spark impl; now carries an
-                                    # exact recursive-CTE oracle (hash-checked
-                                    # by the local gate); window slots go to
-                                    # distinct in-window ops first
+    "dt_rfc_train_score",           # no_oracle (driver-side training)
+    "loglizer_incremental_train_score",  # no_oracle (driver-side training)
+    "loglab_kfold_validate",        # no_oracle (driver-side k-fold CV)
+    "gnb_svm_train_score",          # no_oracle (driver-side training)
+    "dup_components",               # iterative; in-window slots go to
+                                    # single-pass operators first
     "gnb_score",                    # model-zoo kernels: same broadcast-weights
     "svm_margin",                   # vectorized-scoring shape certified
     "rfc_score",                    # in-window by logreg_score_arrow
     "tpch_q3",                      # ≡ tpch_q5's join→agg→sort shape minus
-                                    # three dims; q5 is the superset evidence
+                                    # three dims
     "url_host_stats",               # canonicalization re-certified inside
-                                    # latest_crawl_per_url; exact-distinct
-                                    # two-phase agg certified by tfidf_buckets
-    "topk_counts_per_bucket",       # ≡ topk_orders_per_priority (same window
-                                    # row_number top-k shape), T1 evidence
-    "customers_without_orders",     # anti-join shape re-certified in-window by
-                                    # near_dup_survivors (operators/dedup.py
-                                    # survivors anti join); slot freed for the
-                                    # distinct exact-quantile surface
+                                    # latest_crawl_per_url
     "anomaly_windows",              # window-bounds join-back certified by
-                                    # sliding_window_counts + the tumbling
-                                    # shape; slot freed for ROLLUP grouping
-                                    # sets (distinct aggregate surface)
-    "doc_fingerprints",             # k-gram window hashing certified
-                                    # per-position by repeated_passages and
-                                    # the min-reduce of gram hashes inside
-                                    # in-window minhash_lsh_near_dups; slot
-                                    # freed for passage-level dedup
-    "token_stats",                  # token counting re-certified in-window
-                                    # by quality_filter (n_toks is the same
-                                    # _tokens size; only the trivial
-                                    # ceil(chars/4) subword projection is
-                                    # unique); slot freed for the DSIR
-                                    # importance-weight surface
-    "parse_mask",                   # P7 ftp-tier masking: the ordered-regex
-                                    # chain machinery (Arrow-UDF + JVM paths,
-                                    # byte-identity contract) is re-certified
-                                    # in-window by parse_mask_cm over the
-                                    # SUPERSET cm misc-regex library; the ftp
-                                    # tier keeps its byte-identity pytest and
-                                    # local-gate row. Slot freed for the
-                                    # sequence-packing surface
-    "dup_lines",                    # A10 duplicate-line grouping re-certified
-                                    # in-window by c4_clean_docs (same global
-                                    # groupBy-line machinery inside keep-first
-                                    # dedup, hashed down to the reassembled
-                                    # clean_text artifact); slot freed for the
-                                    # C4 cleaning surface
-    "dt_score",                     # broadcast-kernel scoring shape already
-                                    # certified in-window by logreg_score_arrow
-                                    # (same vec -> broadcast-weights -> column
-                                    # expression pattern; the rest of the model
-                                    # zoo is demoted on exactly that rationale
-                                    # above). Slot freed so domain_mix_sample —
-                                    # the one distinct r4 operator with zero
-                                    # driver corroboration (VERDICT r4 item 2)
-                                    # — lands inside the 50-row driver window.
-    "ecm_pivot_wide",               # A12 wide-map presentation of the SAME
-                                    # aggregate certified in-window by
-                                    # pipeline_sink_ecm; exact-hash oracle in
-                                    # the local gate covers the map column's
-                                    # content + entry order
-    "bucketed_fact_join",           # the claim under test is the layout (zero
-                                    # shuffle exchange), ASSERTED inside the
-                                    # callable on every local-gate run; the
-                                    # join->rows shape itself is certified
-                                    # in-window by tpch_q5. VERDICT r03 item 7
-                                    # asked for local-gate evidence here.
+                                    # sliding_window_counts
+    "doc_fingerprints",             # k-gram hashing certified by
+                                    # repeated_passages
+    "token_stats",                  # token counting re-certified inside
+                                    # quality_filter
+    "parse_mask",                   # ordered-regex chain certified in-window
+                                    # by parse_mask_cm
+    "dup_lines",                    # groupBy-line dedup certified inside
+                                    # c4_clean_docs
+    "dt_score",                     # broadcast-kernel scoring shape certified
+                                    # in-window by logreg_score_arrow
+    "bucketed_fact_join",           # join shape certified in-window by
+                                    # tpch_q5; the zero-exchange layout is
+                                    # asserted inside the callable
 ]
 
 
 def _ordered() -> dict[str, tuple[QueryFn, str | None]]:
     head = {k: v for k, v in _REGISTRY.items() if k not in _DEMOTED}
-    tail = {k: _REGISTRY[k] for k in _DEMOTED if k in _REGISTRY}
+    tail = {k: _REGISTRY[k] for k in _DEMOTED}
     return {**head, **tail}
 
 
@@ -311,39 +242,6 @@ def pipeline_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_sink_ecm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 flagship: exact per-sink (warc_ts bucket × event_id) counts."""
     return A.sink_ecm(_routed(spark, sf_dir), "1 minute")
-
-
-@register(
-    "ecm_pivot_wide",
-    _pipe_cte()
-    + """SELECT sink_class, bucket_start,
-               CAST(row_number() OVER (
-                   PARTITION BY sink_class, bucket_start ORDER BY event_id
-               ) - 1 AS BIGINT) AS pos,
-               event_id, cnt
-        FROM (SELECT sink_class,
-                     time_bucket(INTERVAL '1 minute', warc_ts) AS bucket_start,
-                     event_id, count(*) AS cnt
-              FROM _routed GROUP BY 1, 2, 3) _ecm""",
-)
-def ecm_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 wide form: ``ecm_pivot``'s per-(sink, bucket) event→count
-    MAP column, verified entry-by-entry — posexplode re-flattens the
-    map so the oracle checks both the contents and the sorted entry
-    order the map contract promises (map_from_entries over a
-    sort_array preserves insertion order)."""
-    wide = A.ecm_pivot(A.sink_ecm(_routed(spark, sf_dir), "1 minute"))
-    return wide.select(
-        "sink_class",
-        "bucket_start",
-        F.posexplode("counts"),
-    ).select(
-        "sink_class",
-        "bucket_start",
-        F.col("pos").cast("long").alias("pos"),
-        F.col("key").alias("event_id"),
-        F.col("value").alias("cnt"),
-    )
 
 
 @register(
@@ -708,40 +606,6 @@ def nested_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "nested_fold_narrow",
-    _lines_cte()
-    + ",\n"
-    + _NESTED_DERIVE
-    + """
-    SELECT doc_id, fold_grp,
-           string_agg(CASE WHEN prim = 1 THEN rtrim(raw2, ' ' || chr(9))
-                           ELSE ltrim(rtrim(raw2, ' ' || chr(9)), ' ' || chr(9)) END,
-                      ', ' ORDER BY line_no) AS folded
-    FROM _fg GROUP BY doc_id, fold_grp
-    """,
-)
-def nested_fold_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M2 narrow form: the fold runs inside each page's line array
-    (zero shuffles) — must equal the window formulation."""
-    from loganalyzer_spark.operators import fold as FO
-
-    l2 = _nested_lines(spark, sf_dir)
-    pages = l2.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("line_no", "raw2"))),
-                lambda s: s["raw2"],
-            ),
-            "\n",
-        ).alias("text")
-    )
-    out = FO.fold_page_text(pages)
-    return out.select(
-        "doc_id", (F.col("fold_grp") + 1).cast("long").alias("fold_grp"), "folded"
-    )
-
-
 def _ecm_cte() -> str:
     from loganalyzer_spark.datagen import duckdb_vocab_values
 
@@ -1042,28 +906,6 @@ def dup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10: duplicate-line checker (misc_tools.py:35-43)."""
     lines = datagen.raw_lines(spark, sf_dir)
     return A.dedup_lines(lines, "content")
-
-
-@register(
-    "customers_without_orders",
-    """
-    SELECT c_mktsegment, count(*) AS n_customers
-    FROM customer c
-    WHERE NOT EXISTS (SELECT 1 FROM orders o\n                      WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-    GROUP BY 1
-    """,
-)
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.9 set ops: left_anti join (the reference's set() membership
-    diffs, loglab.py:107-112)."""
-    c = spark.read.parquet(_t(sf_dir, "customer"))
-    o = spark.read.parquet(_t(sf_dir, "orders"))
-    return (
-        c.join(o.filter(F.col("o_totalprice") > 400000),
-               c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_customers"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1367,59 +1209,6 @@ def repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from loganalyzer_spark.operators.dedup import repeated_passages as RP
 
     return RP(planted, k=8, min_docs=2).orderBy("doc_id", "span_start")
-
-
-@register(
-    "ngram_jaccard_twins",
-    "WITH " + _DOCS2_SQL.strip() + f""",
-_tok AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w FROM _docs2),
-_sh AS (
-  SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS s
-  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i FROM _tok)
-  WHERE i IS NOT NULL
-),
-_shs AS (SELECT doc_id, list(DISTINCT s) AS ss FROM _sh GROUP BY doc_id)
-SELECT a.doc_id AS a, b.doc_id AS b,
-       round(len(list_intersect(a.ss, b.ss))::DOUBLE /
-             len(list_distinct(list_concat(a.ss, b.ss))), 6) AS jaccard
-FROM _shs a JOIN _shs b ON b.doc_id = a.doc_id + 10000
-""",
-)
-def ngram_jaccard_twins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Direct n-gram Jaccard between each doc and its mutated twin."""
-    docs2 = _docs2_spark(spark, sf_dir)
-    pairs = (
-        spark.read.parquet(_t(sf_dir, "documents"))
-        .select(
-            F.col("doc_id").alias("a"), (F.col("doc_id") + 10000).alias("b")
-        )
-    )
-    return DD.jaccard_pairs(docs2, pairs, n=3, threshold=0.0)
-
-
-@register(
-    "embedding_cosine_topk",
-    """
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             round(list_dot_product(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) /
-                   (sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[])) *
-                    sqrt(list_dot_product(c.embedding::DOUBLE[], c.embedding::DOUBLE[]))),
-                   6) AS cosine,
-             cast(row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                  list_dot_product(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) /
-                  (sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[])) *
-                   sqrt(list_dot_product(c.embedding::DOUBLE[], c.embedding::DOUBLE[]))) DESC,
-                  c.vec_id) AS INT) AS rank
-      FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-      WHERE q.vec_id < 5)
-    WHERE rank <= 10
-    """,
-)
-def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 for the first 5 query vectors."""
-    emb = spark.read.parquet(_t(sf_dir, "embeddings"))
-    return SIM.cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
 
 
 @register(
@@ -2069,41 +1858,6 @@ def anomaly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("bucket_start") + F.expr("INTERVAL 1 MINUTE")).alias("bucket_end"),
             "n_anomalies",
         )
-    )
-
-
-@register(
-    "topk_counts_per_bucket",
-    _ecm_cte()
-    + """
-    SELECT sink_class, bucket_start,
-           array_to_string(
-             (list(event_id || ':' || cast(cnt AS varchar)
-                   ORDER BY cnt DESC, event_id DESC))[1:3], '|') AS top3
-    FROM _ecm GROUP BY 1, 2
-    """,
-)
-def topk_counts_per_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1: per-row top-k via slice(sort_array desc) — no shuffle beyond
-    the grouping (loglab.py:741-744's top-k class probabilities)."""
-    ecm = A.sink_ecm(_routed(spark, sf_dir), "1 minute")
-    return ecm.groupBy("sink_class", "bucket_start").agg(
-        F.array_join(
-            F.slice(
-                F.reverse(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "cnt", "event_id",
-                                F.concat_ws(":", "event_id", "cnt").alias("s"),
-                            )
-                        )
-                    )
-                ),
-                1, 3,
-            ).getField("s"),
-            "|",
-        ).alias("top3")
     )
 
 

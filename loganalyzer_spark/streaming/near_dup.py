@@ -7,8 +7,8 @@ suppress near-duplicates AT INGEST, against everything already seen,
 without re-scanning the corpus per micro-batch.
 
 Shape: the signature/banding steps are the SAME stateless column
-expressions as batch (projection + explode work unchanged under
-Structured Streaming), then ``applyInPandasWithState`` keyed on
+expressions as batch (``minhash_signatures``, ``minhash_bands``;
+projection + explode work unchanged under Structured Streaming), then ``applyInPandasWithState`` keyed on
 ``(band_id, band_hash)`` holds one value per live band bucket — the
 first document that claimed it. Later documents landing in a claimed
 bucket emit ``(doc_id, dup_of, band_id)`` collision candidates, the
@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from loganalyzer_spark.operators.dedup import minhash_signatures
+from loganalyzer_spark.operators.dedup import minhash_bands, minhash_signatures
 
 STATE_SCHEMA = "first_doc BIGINT"
 OUTPUT_SCHEMA = T.StructType(
@@ -107,7 +107,6 @@ def streaming_near_dup(
 
     ``ttl_ms`` None keeps state forever (deterministic tests); set it in
     production to evict idle buckets (bounded state)."""
-    rows = num_hashes // bands
     sigs = minhash_signatures(
         docs_stream.select(F.col(key).alias("doc_id"), text),
         "doc_id",
@@ -115,15 +114,7 @@ def streaming_near_dup(
         n,
         num_hashes,
     )
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands} - 1),"
-                f" b -> md5(array_join(slice(sig, b * {rows} + 1, {rows}), '_')))"
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    banded = minhash_bands(sigs, "doc_id", bands)
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if ttl_ms is not None

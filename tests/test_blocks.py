@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_SMALL
 
 START = "^START$"
@@ -53,8 +55,10 @@ def test_block_removal_on_corpus(spark):
 
 
 def _ref_cm_patterns():
-    """Load the reference cm patterns module read-only (no copying)."""
+    """Load the reference cm patterns module read-only (no copying);
+    skip the calling test when the reference checkout is absent."""
     import importlib.util
+    import os
     import sys
     import types
 
@@ -62,6 +66,8 @@ def _ref_cm_patterns():
     utils_pkg = types.ModuleType("analyzer.utils")
     sys.modules.setdefault("analyzer.utils", utils_pkg)
     ref = "/root/reference/analyzer"
+    if not os.path.isdir(ref):
+        pytest.skip("reference checkout not present")
 
     def load(name, path):
         spec = importlib.util.spec_from_file_location(name, path)

@@ -68,25 +68,25 @@ def test_match_unmatched_gets_md5_id(spark):
     assert out["event_template"] == "Unknown: stuff"
 
 
+def _fold(spark, text):
+    from loganalyzer_spark.operators.fold import fold_lines
+
+    lines = spark.createDataFrame(
+        [(1, i, r) for i, r in enumerate(text.split("\n"))],
+        "doc_id long, line_no int, raw string",
+    )
+    return [r["folded"] for r in fold_lines(lines).orderBy("line_no").collect()]
+
+
 def test_fold_array_semantics(spark):
     """Fold mirrors preprocess_norm (preprocess_base.py:410-499):
     rstrip accumulated + ', ' + lstrip continuation."""
-    from loganalyzer_spark.operators.fold import fold_text_array
-
-    df = spark.createDataFrame(
-        [("a\n  b\n\tc\nd\n  e",)], "text string"
-    ).select(fold_text_array(F.split("text", "\n")).alias("r"))
-    assert df.collect()[0]["r"] == ["a, b, c", "d, e"]
+    assert _fold(spark, "a\n  b\n\tc\nd\n  e") == ["a, b, c", "d, e"]
 
 
 def test_fold_first_line_nested(spark):
     """A leading continuation with no primary keeps its own group."""
-    from loganalyzer_spark.operators.fold import fold_text_array
-
-    df = spark.createDataFrame([("  orphan\nx",)], "text string").select(
-        fold_text_array(F.split("text", "\n")).alias("r")
-    )
-    assert df.collect()[0]["r"] == ["  orphan", "x"]
+    assert _fold(spark, "  orphan\nx") == ["  orphan", "x"]
 
 
 def test_minhash_similarity_monotone(spark):
