@@ -16,7 +16,6 @@ Runs on local[$SPARK_GRAFT_CPUS] (default all cores).
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import statistics
@@ -98,12 +97,8 @@ def main() -> None:
     # End-to-end throughput over the input_hint-shaped pages corpus
     # (url, warc_ts, html, text, lang — mirrors the north rule's
     # Iceberg table; synthesis cost is excluded from the measured DAG).
-    # Corpus is generated once and reused; the cache key includes a
-    # hash of the generator SQL so a datagen change invalidates it.
-    gen_v = hashlib.md5(
-        datagen.raw_lines_sql("spark", "x").encode()
-    ).hexdigest()[:8]
-    corpus = f"/tmp/loganalyzer_bench/bench_pages_{n_docs}_{gen_v}"
+    # Corpus is generated once and reused, keyed on the generator.
+    corpus = f"/tmp/loganalyzer_bench/bench_pages_{n_docs}_{datagen.generator_key()}"
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
         datagen.gen_web_pages(spark, n_docs).repartition(64).write.mode(
             "overwrite"

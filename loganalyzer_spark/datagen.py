@@ -336,7 +336,7 @@ def _shape_case(dialect: str, which: str) -> str:
     return "CASE\n        " + "\n        ".join(arms) + "\n      END"
 
 
-def raw_lines_sql(dialect: str, docs_from: str, n_docs_cap: int | None = None) -> str:
+def raw_lines_sql(dialect: str, docs_from: str) -> str:
     """SELECT producing the synthetic corpus, one row per raw log line.
 
     Columns: doc_id, url, warc_ts, lang, line_no, raw, content, is_abn,
@@ -366,7 +366,6 @@ def raw_lines_sql(dialect: str, docs_from: str, n_docs_cap: int | None = None) -
         from_clause = (
             f"FROM {docs_from}, unnest(generate_series(0, {n_lines} - 1)) AS _t(line_no)"
         )
-    cap = f"WHERE doc_id < {n_docs_cap}" if n_docs_cap else ""
     # Spark only: break the stage between the tiny _base rows and the
     # giant shape projections. Fused into one Generate stage, the
     # 22-arm CASE trees blow janino's 64 KB method limit — Spark then
@@ -380,7 +379,7 @@ def raw_lines_sql(dialect: str, docs_from: str, n_docs_cap: int | None = None) -
       SELECT {hint}doc_id, lang, line_no,
              (doc_id * 48271 + line_no * 12923) % 100000 AS r1,
              (doc_id * 16807 + line_no * 69621) % 100000 AS r2
-      {from_clause} {cap}
+      {from_clause}
     ),
     _shaped AS (
       SELECT doc_id, lang, line_no, r1, r2,
@@ -412,6 +411,12 @@ def raw_lines_sql(dialect: str, docs_from: str, n_docs_cap: int | None = None) -
     """
     # 'varchar' is written throughout; Spark's parser wants 'string'.
     return sql.replace(" as varchar", " as string") if dialect == "spark" else sql
+
+
+def generator_key() -> str:
+    """Short hash of the generator SQL. Cached benchmark corpora are
+    keyed on it, so a generator change invalidates them."""
+    return hashlib.md5(raw_lines_sql("spark", "x").encode()).hexdigest()[:8]
 
 
 def _raw_lines_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,14 +461,8 @@ def raw_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     desired PushedFilters. This also mirrors production, where input is
     an Iceberg/parquet scan, never an expression generator.
     """
-    gen_v = hashlib.md5(
-        (
-            raw_lines_sql("spark", "x")
-            + os.path.abspath(sf_dir)
-            + _docs_stamp(sf_dir)
-        ).encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/loganalyzer_bench/raw_lines_{gen_v}"
+    src = hashlib.md5((os.path.abspath(sf_dir) + _docs_stamp(sf_dir)).encode()).hexdigest()[:8]
+    path = f"/tmp/loganalyzer_bench/raw_lines_{generator_key()}_{src}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         tmp = f"{path}.tmp-{os.getpid()}"
         _raw_lines_generate(spark, sf_dir).write.mode("overwrite").parquet(tmp)

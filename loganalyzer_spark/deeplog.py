@@ -87,6 +87,26 @@ def _sigmoid(x: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-x))
 
 
+def _cell_step(
+    x: np.ndarray,
+    h: np.ndarray,
+    c: np.ndarray,
+    W_ih: np.ndarray,
+    W_hh: np.ndarray,
+    b: np.ndarray,
+    hidden: int,
+) -> tuple[np.ndarray, ...]:
+    """One LSTM cell step over the batch (PyTorch gate order i, f, g, o).
+    Returns the gates and the new state: (i, f, g, o, c, h)."""
+    gates = x @ W_ih.T + h @ W_hh.T + b
+    i = _sigmoid(gates[:, :hidden])
+    f = _sigmoid(gates[:, hidden : 2 * hidden])
+    g = np.tanh(gates[:, 2 * hidden : 3 * hidden])
+    o = _sigmoid(gates[:, 3 * hidden :])
+    c = f * c + i * g
+    return i, f, g, o, c, o * np.tanh(c)
+
+
 def lstm_logits(X: np.ndarray, w: dict[str, np.ndarray]) -> np.ndarray:
     """Batched LSTM forward: X (B, T) of vocab indices → logits (B, C).
 
@@ -106,13 +126,7 @@ def lstm_logits(X: np.ndarray, w: dict[str, np.ndarray]) -> np.ndarray:
         c = np.zeros((B, hidden))
         outs = np.empty((B, T, hidden))
         for t in range(T):
-            gates = inputs[:, t, :] @ W_ih.T + h @ W_hh.T + b
-            i = _sigmoid(gates[:, :hidden])
-            f = _sigmoid(gates[:, hidden : 2 * hidden])
-            g = np.tanh(gates[:, 2 * hidden : 3 * hidden])
-            o = _sigmoid(gates[:, 3 * hidden :])
-            c = f * c + i * g
-            h = o * np.tanh(c)
+            *_, c, h = _cell_step(inputs[:, t, :], h, c, W_ih, W_hh, b, hidden)
             outs[:, t, :] = h
         inputs = outs
     return h @ w["W_out"].T + w["b_out"]
@@ -127,15 +141,24 @@ def target_rank(X: np.ndarray, targets: np.ndarray, w: dict[str, np.ndarray]) ->
     return (order == targets[:, None]).argmax(axis=1)
 
 
-def _vocab_map_expr(vocab_rows: list[tuple[str, int]], unknown_idx: int):
-    """JVM map literal event_id → vocab_idx (bounded dim, F5) with the
-    reserved unknown slot (deeplog.py:170)."""
+def _with_vocab_idx(
+    seq_df: DataFrame, vocab_rows: list[tuple[str, int]], seq_col: str, target_col: str
+) -> tuple[DataFrame, int]:
+    """Map each window's event ids and its target to vocab indices
+    JVM-side, through a map literal event_id → vocab_idx (bounded dim,
+    F5) with the reserved unknown slot (deeplog.py:170). Adds
+    ``seq_idx`` and ``target_idx``; returns (frame, num_classes)."""
+    num_classes = max(i for _, i in vocab_rows) + 1
+    unknown = F.lit(num_classes - 1)
     pairs: list = []
     for eid, idx in vocab_rows:
         pairs.append(F.lit(eid))
         pairs.append(F.lit(idx))
-    m = F.create_map(*pairs)
-    return m, unknown_idx
+    vmap = F.create_map(*pairs)
+    df = seq_df.withColumn(
+        "seq_idx", F.transform(F.col(seq_col), lambda e: F.coalesce(vmap[e], unknown))
+    ).withColumn("target_idx", F.coalesce(vmap[F.col(target_col)], unknown))
+    return df, num_classes
 
 
 def score_sequences(
@@ -155,18 +178,9 @@ def score_sequences(
     a broadcast map literal; only the LSTM matmul is Python, Arrow-
     batched, weights broadcast once per executor.
     """
-    num_classes = max(i for _, i in vocab_rows) + 1
+    df, num_classes = _with_vocab_idx(seq_df, vocab_rows, seq_col, target_col)
     if weights is None:
         weights = make_weights(num_classes)
-    unknown = num_classes - 1
-    vmap, _ = _vocab_map_expr(vocab_rows, unknown)
-
-    df = seq_df.withColumn(
-        "seq_idx",
-        F.transform(F.col(seq_col), lambda e: F.coalesce(vmap[e], F.lit(unknown))),
-    ).withColumn(
-        "target_idx", F.coalesce(vmap[F.col(target_col)], F.lit(unknown))
-    )
 
     bc = spark.sparkContext.broadcast(weights)
 
@@ -209,22 +223,13 @@ def _forward_cache(X: np.ndarray, w: dict[str, np.ndarray]):
         b = w[f"b_ih_{layer}"] + w[f"b_hh_{layer}"]
         h = np.zeros((B, hidden))
         c = np.zeros((B, hidden))
-        st = {
-            "x": inputs,
-            "i": np.empty((B, T, hidden)), "f": np.empty((B, T, hidden)),
-            "g": np.empty((B, T, hidden)), "o": np.empty((B, T, hidden)),
-            "c": np.empty((B, T, hidden)), "h": np.empty((B, T, hidden)),
-        }
+        st = {k: np.empty((B, T, hidden)) for k in "ifgoch"}
+        st["x"] = inputs
         for t in range(T):
-            gates = inputs[:, t, :] @ W_ih.T + h @ W_hh.T + b
-            i = _sigmoid(gates[:, :hidden])
-            f = _sigmoid(gates[:, hidden : 2 * hidden])
-            g = np.tanh(gates[:, 2 * hidden : 3 * hidden])
-            o = _sigmoid(gates[:, 3 * hidden :])
-            c = f * c + i * g
-            h = o * np.tanh(c)
-            for k, v in (("i", i), ("f", f), ("g", g), ("o", o), ("c", c), ("h", h)):
+            step = _cell_step(inputs[:, t, :], h, c, W_ih, W_hh, b, hidden)
+            for k, v in zip("ifgoch", step):
                 st[k][:, t, :] = v
+            *_, c, h = step
         cache.append(st)
         inputs = st["h"]
     logits = inputs[:, -1, :] @ w["W_out"].T + w["b_out"]
@@ -374,16 +379,9 @@ def train_on_sequences(
     ``max_train`` windows chosen deterministically by (doc_id,
     session_id, line_no) order, so at 100 TB this is a bounded training
     sample while SCORING stays fully distributed (score_sequences)."""
-    num_classes = max(i for _, i in vocab_rows) + 1
-    unknown = num_classes - 1
-    vmap, _ = _vocab_map_expr(vocab_rows, unknown)
+    df, num_classes = _with_vocab_idx(seq_df, vocab_rows, seq_col, target_col)
     rows = (
-        seq_df.withColumn(
-            "seq_idx",
-            F.transform(F.col(seq_col), lambda e: F.coalesce(vmap[e], F.lit(unknown))),
-        )
-        .withColumn("target_idx", F.coalesce(vmap[F.col(target_col)], F.lit(unknown)))
-        .select("doc_id", "session_id", "line_no", "seq_idx", "target_idx")
+        df.select("doc_id", "session_id", "line_no", "seq_idx", "target_idx")
         .orderBy("doc_id", "session_id", "line_no")
         .limit(max_train)
         .collect()

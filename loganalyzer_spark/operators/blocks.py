@@ -27,6 +27,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _state_prev(marker: F.Column, doc: str, order: str) -> F.Column:
+    """The machine's state before this row: the last non-NULL ``marker``
+    over the earlier rows of the document, 0 before any marker."""
+    w = (
+        Window.partitionBy(doc)
+        .orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return F.coalesce(F.last(marker, ignorenulls=True).over(w), F.lit(0))
+
+
 def remove_blocks(
     lines: DataFrame,
     start_pat: str,
@@ -37,15 +48,8 @@ def remove_blocks(
 ) -> DataFrame:
     is_start = F.col(content).rlike(start_pat)
     is_end = F.col(content).rlike(end_pat)
-    marker = F.when(is_start, 1).when(is_end, 0)
-    w_prev = (
-        Window.partitionBy(doc)
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     df = lines.withColumn(
-        "_state_prev",
-        F.coalesce(F.last(marker, ignorenulls=True).over(w_prev), F.lit(0)),
+        "_state_prev", _state_prev(F.when(is_start, 1).when(is_end, 0), doc, order)
     ).withColumn(
         "_removed",
         (F.col("_state_prev") == 1) | ((F.col("_state_prev") == 0) & is_start),
@@ -96,15 +100,6 @@ def _anchored(pat: str) -> str:
     """The reference applies every block pattern with re.match (anchored
     at line start); rlike/regexp_matches are search, so wrap."""
     return f"^(?:{pat})"
-
-
-def _state_prev(marker: F.Column, doc: str, order: str) -> F.Column:
-    w = (
-        Window.partitionBy(doc)
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return F.coalesce(F.last(marker, ignorenulls=True).over(w), F.lit(0))
 
 
 def cm_block_presets(

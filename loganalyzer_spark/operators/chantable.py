@@ -19,15 +19,20 @@ Pure column expressions over the M3 block flags — no UDF:
     unrecoverable and dropped) and ``format_string`` emits the cooked
     line (ds_chan_log, preprocess.py:277-296).
 
-The DS layout is implemented fully; the US layout differs only in the
-token map (us_chan_log_scqam, preprocess.py:385-402) and shares the
-same machinery.
+The DS and US layouts share the segmentation and keep/drop rule
+(``_reformat_table``); each keeps only its own token map and cooked
+line (ds_chan_log and us_chan_log_scqam, preprocess.py:277-296,
+385-402).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from loganalyzer_spark.operators.blocks import _state_prev
 
 DS_MODS = ("Qam64", "Qam256", "OFDM PLC", "Unknown")
 
@@ -45,6 +50,54 @@ def _ds_repair_mod(tok: Column) -> Column:
     )
 
 
+def _reformat_table(
+    lines: DataFrame,
+    start_pat: str,
+    title_pat: str,
+    end_pat: str,
+    content: str,
+    doc: str,
+    order: str,
+    cook: Callable[[Column], Column],
+) -> DataFrame:
+    """The segmentation and keep/drop rule both table layouts share.
+
+    ``cook(content)`` turns a data row into its cooked line, NULL when
+    the row is broken beyond repair. Every non-table row is kept
+    untouched; table rows are dropped (start/header/title/broken) or
+    replaced by the cooked line.
+    """
+    c = F.col(content)
+    is_start = c.rlike(start_pat)
+    is_end = c.rlike(end_pat)
+    nested = c.rlike("^[ \t]")
+    empty = c.rlike("^[ \t]*$")
+
+    df = lines.withColumn(
+        "_in_tbl", _state_prev(F.when(is_start, 1).when(is_end, 0), doc, order) == 1
+    ).withColumn(
+        # the header is done once the common title line has passed
+        # inside the current table; a new start resets it
+        "_hdr_done",
+        _state_prev(F.when(is_start, 0).when(c.rlike(title_pat), 1), doc, order) == 1,
+    )
+
+    in_tbl = F.col("_in_tbl") & ~is_end
+    keep_other_thread = in_tbl & ~nested & ~empty & ~is_start
+    is_data = in_tbl & F.col("_hdr_done") & nested & ~empty
+    return (
+        df.withColumn(
+            "_out",
+            F.when(~in_tbl & ~is_start, c)  # outside (incl. end line)
+            .when(keep_other_thread, c)  # messed by other thread: keep
+            .when(is_data, cook(c)),  # start/header/title/broken: NULL
+        )
+        .filter(F.col("_out").isNotNull())
+        .withColumn(content, F.col("_out"))
+        .drop("_out", "_in_tbl", "_hdr_done")
+    )
+
+
 def reformat_ds_chan_table(
     lines: DataFrame,
     start_pat: str,
@@ -54,75 +107,29 @@ def reformat_ds_chan_table(
     doc: str = "doc_id",
     order: str = "line_no",
 ) -> DataFrame:
-    """DS channel table → 'DS channel status rxid … mod …' lines.
+    """DS channel table → 'DS channel status rxid … mod …' lines."""
 
-    Output keeps every non-table row untouched; table rows are dropped
-    (start/header/title/broken) or replaced by the cooked line.
-    """
-    c = F.col(content)
-    is_start = c.rlike(start_pat)
-    is_end = c.rlike(end_pat)
-    is_title = c.rlike(title_pat)
-    nested = c.rlike("^[ \t]")
-    empty = c.rlike("^[ \t]*$")
-
-    w_prev = (
-        Window.partitionBy(doc)
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marker = F.when(is_start, 1).when(is_end, 0)
-    df = lines.withColumn(
-        "_in_tbl",
-        F.coalesce(F.last(marker, ignorenulls=True).over(w_prev), F.lit(0))
-        == 1,
-    )
-    # header is done once the common title line has passed inside the
-    # current table; a new start resets it (marker=2 on title rows,
-    # read back with the same last() trick on a second marker lane)
-    hdr_marker = F.when(is_start, 0).when(is_title, 1)
-    df = df.withColumn(
-        "_hdr_done",
-        F.coalesce(
-            F.last(hdr_marker, ignorenulls=True).over(w_prev), F.lit(0)
+    def cook(c: Column) -> Column:
+        toks = F.split(F.trim(c), "\\s+", 8)
+        mod = _ds_repair_mod(F.element_at(toks, 8))
+        cooked = F.format_string(
+            "DS channel status rxid %s dcid %s freq %s qam %s fec %s snr %s"
+            " power %s mod %s",
+            F.element_at(toks, 1),
+            F.element_at(toks, 2),
+            F.element_at(toks, 3),
+            F.element_at(toks, 4),
+            F.element_at(toks, 5),
+            F.element_at(toks, 6),
+            F.element_at(toks, 7),
+            # OFDM PLC keeps QAM template arity (preprocess.py:269-272)
+            F.regexp_replace(mod, " ", "_"),
         )
-        == 1,
-    )
+        return F.when((F.size(toks) >= 8) & mod.isNotNull(), cooked)
 
-    toks = F.split(F.trim(c), "\\s+", 8)
-    mod = _ds_repair_mod(F.element_at(toks, 8))
-    cooked = F.format_string(
-        "DS channel status rxid %s dcid %s freq %s qam %s fec %s snr %s"
-        " power %s mod %s",
-        F.element_at(toks, 1),
-        F.element_at(toks, 2),
-        F.element_at(toks, 3),
-        F.element_at(toks, 4),
-        F.element_at(toks, 5),
-        F.element_at(toks, 6),
-        F.element_at(toks, 7),
-        # OFDM PLC keeps QAM template arity (preprocess.py:269-272)
-        F.regexp_replace(mod, " ", "_"),
+    return _reformat_table(
+        lines, start_pat, title_pat, end_pat, content, doc, order, cook
     )
-
-    in_tbl = F.col("_in_tbl") & ~is_end
-    keep_other_thread = in_tbl & ~nested & ~empty & ~is_start
-    is_data = in_tbl & F.col("_hdr_done") & nested & ~empty
-    valid = is_data & (F.size(toks) >= 8) & mod.isNotNull()
-
-    out = (
-        df.withColumn(
-            "_out",
-            F.when(~in_tbl & ~is_start, c)  # outside (incl. end line)
-            .when(keep_other_thread, c)  # messed by other thread: keep
-            .when(valid, cooked)
-            .otherwise(F.lit(None)),  # start/header/title/broken: drop
-        )
-        .filter(F.col("_out").isNotNull())
-        .withColumn(content, F.col("_out"))
-        .drop("_out", "_in_tbl", "_hdr_done")
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -160,73 +167,38 @@ def reformat_us_chan_table(
     the 9-token layout with freq_end = freq_start
     (us_chan_log_scqam, preprocess.py:385-402).
     """
-    c = F.col(content)
-    is_start = c.rlike(start_pat)
-    is_end = c.rlike(end_pat)
-    is_title = c.rlike(title_pat)
-    nested = c.rlike("^[ \t]")
-    empty = c.rlike("^[ \t]*$")
 
-    w_prev = (
-        Window.partitionBy(doc)
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marker = F.when(is_start, 1).when(is_end, 0)
-    hdr_marker = F.when(is_start, 0).when(is_title, 1)
-    df = lines.withColumn(
-        "_in_tbl",
-        F.coalesce(F.last(marker, ignorenulls=True).over(w_prev), F.lit(0))
-        == 1,
-    ).withColumn(
-        "_hdr_done",
-        F.coalesce(
-            F.last(hdr_marker, ignorenulls=True).over(w_prev), F.lit(0)
+    def cook(c: Column) -> Column:
+        t9 = F.split(F.trim(c), "\\s+", 9)
+        t11 = F.split(F.trim(c), "\\s+", 11)
+        is_ofdma = F.element_at(t9, 7) == "-"
+
+        scqam_tx = _legacy_repair(F.element_at(t9, 9))
+        ofdma_tx = _legacy_repair(F.element_at(t11, 11))
+        fmt = (
+            "US channel status txid %s ucid %s dcid %s rngsid %s power %s"
+            " freqstart %s freqend %s symrate %s phytype %s txdata %s"
         )
-        == 1,
-    )
-
-    t9 = F.split(F.trim(c), "\\s+", 9)
-    t11 = F.split(F.trim(c), "\\s+", 11)
-    is_ofdma = F.element_at(t9, 7) == "-"
-
-    scqam_tx = _legacy_repair(F.element_at(t9, 9))
-    ofdma_tx = _legacy_repair(F.element_at(t11, 11))
-    fmt = (
-        "US channel status txid %s ucid %s dcid %s rngsid %s power %s"
-        " freqstart %s freqend %s symrate %s phytype %s txdata %s"
-    )
-    cooked_scqam = F.format_string(
-        fmt,
-        F.element_at(t9, 1), F.element_at(t9, 2), F.element_at(t9, 3),
-        F.element_at(t9, 4), F.element_at(t9, 5), F.element_at(t9, 6),
-        F.element_at(t9, 6),  # freq_end = freq_start for SC-QAM
-        F.element_at(t9, 7), F.element_at(t9, 8), scqam_tx,
-    )
-    cooked_ofdma = F.format_string(
-        fmt,
-        F.element_at(t11, 1), F.element_at(t11, 2), F.element_at(t11, 3),
-        F.element_at(t11, 4), F.element_at(t11, 5), F.element_at(t11, 6),
-        F.element_at(t11, 8),  # range end after the '-' separator
-        F.element_at(t11, 9), F.element_at(t11, 10), ofdma_tx,
-    )
-
-    in_tbl = F.col("_in_tbl") & ~is_end
-    keep_other_thread = in_tbl & ~nested & ~empty & ~is_start
-    is_data = in_tbl & F.col("_hdr_done") & nested & ~empty
-    valid_scqam = is_data & ~is_ofdma & (F.size(t9) >= 9) & scqam_tx.isNotNull()
-    valid_ofdma = is_data & is_ofdma & (F.size(t11) >= 11) & ofdma_tx.isNotNull()
-
-    return (
-        df.withColumn(
-            "_out",
-            F.when(~in_tbl & ~is_start, c)
-            .when(keep_other_thread, c)
-            .when(valid_ofdma, cooked_ofdma)
-            .when(valid_scqam, cooked_scqam)
-            .otherwise(F.lit(None)),
+        cooked_scqam = F.format_string(
+            fmt,
+            F.element_at(t9, 1), F.element_at(t9, 2), F.element_at(t9, 3),
+            F.element_at(t9, 4), F.element_at(t9, 5), F.element_at(t9, 6),
+            F.element_at(t9, 6),  # freq_end = freq_start for SC-QAM
+            F.element_at(t9, 7), F.element_at(t9, 8), scqam_tx,
         )
-        .filter(F.col("_out").isNotNull())
-        .withColumn(content, F.col("_out"))
-        .drop("_out", "_in_tbl", "_hdr_done")
+        cooked_ofdma = F.format_string(
+            fmt,
+            F.element_at(t11, 1), F.element_at(t11, 2), F.element_at(t11, 3),
+            F.element_at(t11, 4), F.element_at(t11, 5), F.element_at(t11, 6),
+            F.element_at(t11, 8),  # range end after the '-' separator
+            F.element_at(t11, 9), F.element_at(t11, 10), ofdma_tx,
+        )
+        return F.when(
+            is_ofdma & (F.size(t11) >= 11) & ofdma_tx.isNotNull(), cooked_ofdma
+        ).when(
+            ~is_ofdma & (F.size(t9) >= 9) & scqam_tx.isNotNull(), cooked_scqam
+        )
+
+    return _reformat_table(
+        lines, start_pat, title_pat, end_pat, content, doc, order, cook
     )

@@ -212,10 +212,14 @@ def det_timestamp(
     lines (limit — T5), mask them *without* stripping the unknown-width
     timestamp, evolve full-line templates against the library, learn the
     content offset (the reference's EP2 step 2, scripts/loglab.py:151-162).
+
+    "First" is by the ``(doc_id, line_no)`` keys, both for the sample
+    and for the order ``learn_timestamp`` walks it, so the offset does
+    not depend on how ``raw_lines`` is partitioned.
     """
     from loganalyzer_spark.operators.parse import mask
 
-    head = mask(raw_lines.limit(max_line), content=raw)
+    head = mask(raw_lines.orderBy("doc_id", "line_no").limit(max_line), content=raw)
     evolved = evolve_library(spark, head, base_templates=templates)
     eids = {r["event_id"] for r in templates.select("event_id").collect()}
 
@@ -224,6 +228,7 @@ def det_timestamp(
 
     assigned = (
         match_similarity(head, evolved)
+        .orderBy("doc_id", "line_no")
         .select(raw, "event_template")
         .collect()
     )

@@ -12,10 +12,10 @@ Catalyst whole-stage-codegen fuses back into one pass:
   P5  token splitting              (preprocess_base.py:376, :807-826)
   P9  'abn: ' label extraction     (preprocess_base.py:508-552)
   P10 'segsign: ' segmentation     (preprocess_base.py:684-731)
-  P7  hard-parameter masking       (drain.py:880-887) — pandas UDF running
-      the reference's own Python ``re`` patterns, because Java regex and
-      Python re disagree on corner cases; this is the byte-identical
-      per-url invariant surface.
+  P7  hard-parameter masking       (drain.py:880-887) — a JVM regexp
+      chain byte-identical to the Python tier ``patterns.mask_params``
+      (the per-url invariant surface); the cm tier stays a pandas UDF
+      because Java regex cannot run its patterns.
 
 Stage order matches the reference main loop (preprocess_base.py:217-407):
 strip ts → domain line process (clean chars, response normalize, line
@@ -196,19 +196,6 @@ def wash(lines: DataFrame, raw: str = "raw") -> DataFrame:
 
 
 @F.pandas_udf(T.StringType())
-def mask_params_udf(content: pd.Series) -> pd.Series:
-    """P7: ordered Python-re masking, vectorized over Arrow batches.
-
-    Exactly the reference's chain (drain.py:880-887 applying
-    PTN_HARD_PARA from extensions/ftp/patterns.py:118-124).
-    """
-    s = content
-    for ptn, repl in P.PTN_HARD_PARA:
-        s = s.str.replace(ptn, repl, regex=True)
-    return s
-
-
-@F.pandas_udf(T.StringType())
 def mask_params_cm_udf(content: pd.Series) -> pd.Series:
     """P7/P12 cm tier: the cable-modem extension's ordered chain
     (extensions/cm/patterns.py:341-352 applied like drain.py:880-887),
@@ -226,12 +213,11 @@ def mask_cm(lines: DataFrame, content: str = "content") -> DataFrame:
 
 
 def _mask_sql(c: str) -> str:
-    """JVM-side P7 masking (Java-safe rewrites) — the fast path.
+    """JVM-side P7 masking (Java-safe rewrites of the reference chain).
 
     tests/test_mask_fidelity.py proves byte-equality with the Python
-    ``patterns.mask_params`` chain on the corpus; the pandas UDF remains
-    the reference-fidelity fallback for pattern sets where Java regex
-    semantics diverge.
+    ``patterns.mask_params`` chain on the corpus and on adversarial
+    lines.
     """
     # Sequential passes, deliberately NOT merged into one alternation:
     # A/B measurement (3 reps, local[8], 18M lines) shows the merged
@@ -249,10 +235,8 @@ def _mask_sql(c: str) -> str:
     return c
 
 
-def mask(lines: DataFrame, content: str = "content", jvm: bool = True) -> DataFrame:
-    if jvm:
-        return with_sql(lines, {"masked": _mask_sql(content)})
-    return lines.withColumn("masked", mask_params_udf(F.col(content)))
+def mask(lines: DataFrame, content: str = "content") -> DataFrame:
+    return with_sql(lines, {"masked": _mask_sql(content)})
 
 
 def sessionize(lines: DataFrame, part: str = "doc_id", order: str = "line_no") -> DataFrame:

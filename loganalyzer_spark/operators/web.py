@@ -203,22 +203,18 @@ def lm_perplexity(
     corpus: DataFrame,
     reference: DataFrame,
     text: str = "text",
-    head_cut: float | None = None,
-    tail_cut: float | None = None,
 ) -> DataFrame:
     """CCNet-style LM quality scoring (Wenzek et al. 2020): score every
     corpus doc by bigram-LM perplexity under a model trained on a
     trusted reference slice, then bucket into head/middle/tail.
 
-    Cutoffs follow the actual CCNet recipe by default: Wenzek et al.
-    derive per-language head/tail boundaries as terciles of the LM's
-    own perplexity distribution, computed once offline. Here, when
-    ``head_cut``/``tail_cut`` are None, the reference slice is scored
-    under its own LM and the cutoffs are the exact interpolated 1/3 and
-    2/3 percentiles of its per-doc ppl (rounded to 4 dp) — a 1-row
-    broadcast dim, so deriving them adds no shuffle to the corpus side.
-    Pass explicit floats to pin the boundaries instead (the pre-round-4
-    behavior).
+    Cutoffs follow the actual CCNet recipe: Wenzek et al. derive
+    per-language head/tail boundaries as terciles of the LM's own
+    perplexity distribution, computed once offline. Here the reference
+    slice is scored under its own LM and the cutoffs are the exact
+    interpolated 1/3 and 2/3 percentiles of its per-doc ppl (rounded to
+    4 dp) — a 1-row broadcast dim, so deriving them adds no shuffle to
+    the corpus side.
 
     Model: add-one-smoothed bigram LM.
       logp(w2 | w1) = ln((c(w1,w2) + 1) / (c(w1) + V))
@@ -286,24 +282,17 @@ def lm_perplexity(
         )
         return per.withColumn("ppl", F.round(F.exp(-F.col("avg_logp")), 2))
 
-    per_doc = _scored(corpus)
-    if head_cut is None or tail_cut is None:
-        # CCNet recipe: cutoffs = terciles of the LM's own ppl
-        # distribution over the (bounded) reference slice. Exact
-        # interpolated `percentile` — the same estimator the
-        # doc_length_quantiles surface certifies — as a 1-row broadcast
-        # dim; the corpus side gains zero exchanges.
-        cuts = _scored(reference).agg(
-            F.round(F.expr("percentile(ppl, 1.0/3.0)"), 4).alias("_hc"),
-            F.round(F.expr("percentile(ppl, 2.0/3.0)"), 4).alias("_tc"),
-        )
-        per_doc = per_doc.crossJoin(F.broadcast(cuts))
-        hc, tc = F.col("_hc"), F.col("_tc")
-    else:
-        hc, tc = F.lit(float(head_cut)), F.lit(float(tail_cut))
+    # Exact interpolated `percentile` — the same estimator the
+    # doc_length_quantiles surface certifies — over the (bounded)
+    # reference slice, as a 1-row broadcast dim.
+    cuts = _scored(reference).agg(
+        F.round(F.expr("percentile(ppl, 1.0/3.0)"), 4).alias("_hc"),
+        F.round(F.expr("percentile(ppl, 2.0/3.0)"), 4).alias("_tc"),
+    )
+    per_doc = _scored(corpus).crossJoin(F.broadcast(cuts))
     bucket = (
-        F.when(F.col("ppl") < hc, F.lit("head"))
-        .when(F.col("ppl") < tc, F.lit("middle"))
+        F.when(F.col("ppl") < F.col("_hc"), F.lit("head"))
+        .when(F.col("ppl") < F.col("_tc"), F.lit("middle"))
         .otherwise(F.lit("tail"))
     )
     return per_doc.withColumn("lm_bucket", bucket).drop("_hc", "_tc")

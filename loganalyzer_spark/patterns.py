@@ -4,9 +4,11 @@ Two tiers:
 
 1. ``PTN_*`` — Python ``re`` objects that reproduce the reference's
    parameter-masking and label semantics exactly (the per-row invariant is
-   byte-identical masked text). These run inside vectorized pandas UDFs
-   (``Series.str.replace``), never per-row Python, because Python ``re``
-   and Java regex disagree on corner cases (SURVEY.md §4.4).
+   byte-identical masked text). The ftp chain (``mask_params``) is the
+   reference the JVM masking is tested against; the cm chain runs inside
+   a vectorized pandas UDF (``parse.mask_cm``), never per-row Python,
+   because Python ``re`` and Java regex disagree on its corner cases
+   (SURVEY.md §4.4).
 
    Sources in /root/reference:
      - analyzer/utils/misc_regex.py:15-34   (ctime, MAC, IPv4)
@@ -24,7 +26,7 @@ from __future__ import annotations
 import re
 
 # ---------------------------------------------------------------------------
-# Tier 1 — reference-faithful Python re (masking stage, pandas UDF side)
+# Tier 1 — reference-faithful Python re (the masking reference)
 # ---------------------------------------------------------------------------
 
 # misc_regex.py:15-21 — libc ctime timestamps, e.g. "Mon Jun 20 14:42:53 2022"

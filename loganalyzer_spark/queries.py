@@ -1396,6 +1396,23 @@ def _doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _labeled_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_doc_vectors`` plus ``label`` (the doc has an 'abn: ' line)
+    from one read of the routed lines: one aggregate takes the
+    per-(doc, event) count and max(is_abn), and the doc label is the
+    max of the latter over the doc."""
+    doc = Window.partitionBy("doc_id")
+    ecm = (
+        _routed(spark, sf_dir)
+        .groupBy("doc_id", "event_id")
+        .agg(F.count("*").alias("cnt"), F.max("is_abn").alias("abn"))
+        .withColumn("label", F.max("abn").over(doc))
+    )
+    return A.ecm_vectors(
+        ecm, datagen.vocab_df(spark), datagen.VOCAB_SIZE, keys=("doc_id", "label")
+    )
+
+
 def _score_oracle() -> str:
     from loganalyzer_spark.datagen import duckdb_vocab_values
 
@@ -1529,9 +1546,7 @@ def logreg_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP1/EP2 end-to-end: train LR on the driver from the collected
     per-doc ECM (label = doc contains an 'abn: ' line), then score the
     corpus with the broadcast-weights Arrow kernel."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = _doc_vectors(spark, sf_dir).join(labels, "doc_id")
+    vec = _labeled_doc_vectors(spark, sf_dir)
     out = SC.train_and_score(spark, vec)
     return out.select("doc_id", "label", F.round("score", 6).alias("score"), "pred")
 
@@ -1551,9 +1566,7 @@ def dt_rfc_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver-side training has no SQL oracle); numpy-vs-compiled-
     expression score parity and the gini split math are pinned by
     tests/test_operators.py::test_cart_*."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = _doc_vectors(spark, sf_dir).join(labels, "doc_id")
+    vec = _labeled_doc_vectors(spark, sf_dir)
     out = SC.train_dt_and_score(spark, vec)
     return out.select(
         "doc_id", "label", "dt_score", "dt_pred", "rfc_score", "rfc_pred"
@@ -1574,9 +1587,7 @@ def gnb_svm_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver-side training has no SQL oracle); estimator parity is
     pinned by tests/test_operators.py::test_train_gnb_* and
     test_margin_sgd_*."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = _doc_vectors(spark, sf_dir).join(labels, "doc_id")
+    vec = _labeled_doc_vectors(spark, sf_dir)
     out = SC.train_zoo_and_score(spark, vec)
     return out.select(
         "doc_id", "label",
@@ -1595,9 +1606,7 @@ def loglab_kfold_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean row. Rows-only (driver-side training, like
     logreg_train_score); ONNX export is gated out — the image has no
     sklearn-onnx (see scoring.kfold_validate docstring)."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = _doc_vectors(spark, sf_dir).join(labels, "doc_id")
+    vec = _labeled_doc_vectors(spark, sf_dir)
     return SC.kfold_validate(spark, vec).orderBy("fold")
 
 
@@ -1614,12 +1623,8 @@ def loglizer_incremental_train_score(spark: SparkSession, sf_dir: str) -> DataFr
     training has no SQL oracle); batch-order-vs-single-shot
     convergence parity is pinned by
     tests/test_operators.py::test_incremental_partial_fit_convergence."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = (
-        _doc_vectors(spark, sf_dir)
-        .join(labels, "doc_id")
-        .withColumn("batch", F.col("doc_id") % 4)
+    vec = _labeled_doc_vectors(spark, sf_dir).withColumn(
+        "batch", F.col("doc_id") % 4
     )
     out = SC.incremental_train_and_score(spark, vec)
     return out.select("doc_id", "label", F.round("score", 6).alias("score"), "pred")

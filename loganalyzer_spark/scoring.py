@@ -86,6 +86,28 @@ def make_logreg_scorer(spark: SparkSession, w: np.ndarray, b: float):
     return apply
 
 
+def _training_slice(
+    vectors: DataFrame,
+    label_col: str,
+    vec_col: str,
+    max_rows: int | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Collect the training slice to the driver: (X, y, doc_id).
+
+    Ordered on ``doc_id`` before ``limit`` — an unordered limit over a
+    join output picks partition-order rows, which vary with AQE/shuffle
+    layout, and the hash-gated outputs cannot tolerate a run-dependent
+    training set."""
+    df = vectors.select("doc_id", vec_col, label_col).orderBy("doc_id")
+    if max_rows is not None:
+        df = df.limit(max_rows)
+    pdf = df.toPandas()
+    if pdf.empty:
+        raise ValueError("the training slice is empty: no documents to train on")
+    X = np.vstack(pdf[vec_col].to_numpy())
+    return X, pdf[label_col].to_numpy(), pdf["doc_id"].to_numpy()
+
+
 def train_and_score(
     spark: SparkSession,
     vectors: DataFrame,
@@ -94,20 +116,8 @@ def train_and_score(
     max_train_rows: int = 100_000,
 ) -> DataFrame:
     """Collect the (small) ECM, train LR on the driver, score the full
-    DataFrame distributed. Adds ``score`` and ``pred`` columns.
-
-    The training slice is ordered on ``doc_id`` before ``limit`` —
-    an unordered limit over a join output picks partition-order rows,
-    which vary with AQE/shuffle layout, and the hash-gated outputs
-    cannot tolerate a run-dependent training set."""
-    train = (
-        vectors.select("doc_id", vec_col, label_col)
-        .orderBy("doc_id")
-        .limit(max_train_rows)
-        .toPandas()
-    )
-    X = np.vstack(train[vec_col].to_numpy())
-    y = train[label_col].to_numpy()
+    DataFrame distributed. Adds ``score`` and ``pred`` columns."""
+    X, y, _ = _training_slice(vectors, label_col, vec_col, max_train_rows)
     w, b = train_logreg(X, y)
     scorer = make_logreg_scorer(spark, w, b)
     out = scorer(vectors, vec_col, "score")
@@ -195,15 +205,10 @@ def incremental_train_and_score(
     m = model or IncrementalLogReg(n_features, lr)
     collected = []
     for bval in batches:
-        pdf = (
-            vectors.filter(F.col(batch_col) == bval)
-            .select("doc_id", vec_col, label_col)
-            .orderBy("doc_id")
-            .toPandas()
+        X, y, _ = _training_slice(
+            vectors.filter(F.col(batch_col) == bval), label_col, vec_col
         )
-        collected.append(
-            (np.vstack(pdf[vec_col].to_numpy()), pdf[label_col].to_numpy())
-        )
+        collected.append((X, y))
     for _ in range(epochs):
         for X, y in collected:
             m.partial_fit(X, y)
@@ -239,12 +244,8 @@ def kfold_validate(
     a summary row fold = -1 with the mean accuracy (the reference's
     ``scores.mean()`` print).
     """
-    pdf = (
-        vectors.select("doc_id", vec_col, label_col).orderBy("doc_id").toPandas()
-    )
-    X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-    y = pdf[label_col].to_numpy().astype(np.float64)
-    folds = pdf["doc_id"].to_numpy() % k
+    X, y, doc_id = _training_slice(vectors, label_col, vec_col)
+    folds = doc_id % k
     rows = []
     accs = []
     for f in range(k):
@@ -473,19 +474,10 @@ def train_dt_and_score(
     Tie rule: predict_proba argmax takes class 0 at exactly 0.5, so
     pred = score > 0.5.
 
-    The training slice is ordered on ``doc_id`` before ``limit``: the
-    forest's LCG bootstrap indexes rows by collected POSITION, so an
-    unordered collect (partition-order, AQE-dependent) would train a
-    different forest per run — a shuffled split would flap the
-    rows-only driver gate."""
-    train = (
-        vectors.select("doc_id", vec_col, label_col)
-        .orderBy("doc_id")
-        .limit(max_train_rows)
-        .toPandas()
-    )
-    X = np.vstack(train[vec_col].to_numpy())
-    y = train[label_col].to_numpy()
+    The ordered training slice matters doubly here: the forest's LCG
+    bootstrap indexes rows by collected POSITION, so an unordered
+    collect would train a different forest per run."""
+    X, y, _ = _training_slice(vectors, label_col, vec_col, max_train_rows)
     tree = train_cart(X, y, max_depth=max_depth)
     forest = train_random_forest(X, y, n_trees=n_trees)
     dt = cart_to_expr(tree, vec_col)
@@ -583,17 +575,8 @@ def train_zoo_and_score(
     and score the corpus through the existing JVM kernels — zero Python
     in the scoring path (gnb log-odds via gnb_score_expr, both margins
     via svm_margin_expr). Adds gnb_logodds/gnb_pred, ptn_margin/
-    ptn_pred, svm_margin/svm_pred. The training slice is ordered on
-    doc_id before limit (the same determinism rule as
-    train_and_score/train_dt_and_score)."""
-    train = (
-        vectors.select("doc_id", vec_col, label_col)
-        .orderBy("doc_id")
-        .limit(max_train_rows)
-        .toPandas()
-    )
-    X = np.vstack(train[vec_col].to_numpy())
-    y = train[label_col].to_numpy()
+    ptn_pred, svm_margin/svm_pred."""
+    X, y, _ = _training_slice(vectors, label_col, vec_col, max_train_rows)
     mu0, var0, mu1, var1, p1 = train_gnb(X, y)
     # degenerate priors (single-class slice) have no log-odds; the
     # reference would raise inside GaussianNB the same way

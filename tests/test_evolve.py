@@ -67,6 +67,24 @@ def test_learn_timestamp_offset(spark):
     assert off == 28
 
 
+def test_det_timestamp_sample_is_first_lines_by_key(spark):
+    """The sample is the first ``max_line`` lines by (doc_id, line_no),
+    whatever the partitioning: only the first line has a 6-byte prefix,
+    every later line an 11-byte one, so an unordered ``limit`` learns 11
+    under some repartition counts."""
+    from loganalyzer_spark import datagen
+    from loganalyzer_spark.operators.evolve import det_timestamp
+
+    tmpl = "Status: Disconnected from server"
+    lib = datagen.local_df(spark, [datagen.template_row(tmpl)], datagen.TEMPLATE_SCHEMA)
+    rows = [(0, 0, "first " + tmpl)] + [
+        (d, n, "later line " + tmpl) for d in range(6) for n in range(4) if (d, n) != (0, 0)
+    ]
+    lines = spark.createDataFrame(rows, "doc_id long, line_no int, raw string")
+    for parts in (1, 2, 5):
+        assert det_timestamp(spark, lines.repartition(parts), lib, max_line=1) == 6, parts
+
+
 # ---------------------------------------------------------------------------
 # D5: LCS output-cell merge (drain.py:662-719) — faithful scalar mirror
 # of the reference's Logcluster/Ouputcell object loop as the oracle.

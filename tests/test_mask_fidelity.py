@@ -7,9 +7,8 @@ package's Python tier (``patterns.PTN_HARD_PARA`` / ``mask_params``) is
 checked against the reference source itself
 (analyzer/extensions/ftp/patterns.py PTN_HARD_PARA, applied in dict
 order exactly as drain.py:880-887 does) — loaded by file path, not
-copied; those tests skip without it. Both engine paths (the JVM regexp
-chain and the pandas UDF) are checked against that Python tier on every
-host.
+copied; those tests skip without it. The engine's JVM regexp chain is
+checked against that Python tier on every host.
 """
 
 from __future__ import annotations
@@ -64,17 +63,16 @@ def test_local_patterns_equal_reference(ref_patterns):
         assert rr == lr
 
 
-@pytest.mark.parametrize("jvm", [True, False])
-def test_masked_text_byte_identical(spark, jvm):
-    """Engine mask (JVM regexp chain and pandas-UDF path) == the Python
-    tier, patterns.mask_params, on the corpus."""
+def test_masked_text_byte_identical(spark):
+    """Engine mask (the JVM regexp chain) == the Python tier,
+    patterns.mask_params, on the corpus."""
     from loganalyzer_spark import datagen
     from loganalyzer_spark import patterns as P
     from loganalyzer_spark.operators import parse
 
     lines = datagen.raw_lines(spark, SF_SMALL)
     out = (
-        parse.mask(parse.wash(lines.drop("content", "is_abn", "is_seg")), jvm=jvm)
+        parse.mask(parse.wash(lines.drop("content", "is_abn", "is_seg")))
         .select("doc_id", "line_no", "content", "masked")
         .toPandas()
     )

@@ -911,10 +911,7 @@ def test_lm_perplexity_smoothed_bigram(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {
-        r["doc_id"]: r
-        for r in W.lm_perplexity(corpus, ref, head_cut=33.0, tail_cut=35.0).collect()
-    }
+    out = {r["doc_id"]: r for r in W.lm_perplexity(corpus, ref).collect()}
     assert set(out) == {0, 1}
 
     lp0 = round(log(3 / 5), 6)
@@ -925,19 +922,13 @@ def test_lm_perplexity_smoothed_bigram(spark):
     # c(c,a)=0 and c1(c)=0: add-one smoothing floors at ln(1/V)
     lp1 = round(log(1 / 3), 6)
     assert out[1]["avg_logp"] == round(lp1, 4)
-    # explicit cutoffs: both ppl values are tiny -> head
-    assert out[0]["lm_bucket"] == "head" and out[1]["lm_bucket"] == "head"
 
-    # Derived-cutoff mode (the CCNet default): the single ref doc's own
+    # Derived cutoffs (the CCNet recipe): the single ref doc's own
     # ppl is both terciles. ref "a b a b c" -> 4 bigrams with lps
     # ln(3/5), ln(2/5), ln(3/5), ln(2/5); avg rounds to -0.7136,
     # ppl = round(exp(0.7136), 2) = 2.04. doc0 ppl 1.67 < 2.04 -> head;
     # doc1 ppl 3.0 >= 2.04 -> tail.
-    derived = {
-        r["doc_id"]: r["lm_bucket"]
-        for r in W.lm_perplexity(corpus, ref).collect()
-    }
-    assert derived == {0: "head", 1: "tail"}
+    assert {d: r["lm_bucket"] for d, r in out.items()} == {0: "head", 1: "tail"}
 
 
 def test_dsir_importance_weights(spark):
@@ -1929,6 +1920,38 @@ def test_train_zoo_rejects_all_constant_slice(spark):
     )
     with pytest.raises(ValueError, match="non-constant feature"):
         train_zoo_and_score(spark, vectors)
+
+
+@pytest.mark.parametrize(
+    "trainer",
+    ["train_and_score", "train_dt_and_score", "train_zoo_and_score", "kfold_validate"],
+)
+def test_training_slice_rejects_empty_input(spark, trainer):
+    """An empty corpus leaves nothing to train on: every trainer that
+    collects the ordered training slice raises a clear ValueError
+    instead of numpy's 'need at least one array to concatenate'."""
+    from loganalyzer_spark import scoring
+
+    empty = spark.createDataFrame([], "doc_id int, vec array<double>, label int")
+    with pytest.raises(ValueError, match="training slice is empty"):
+        getattr(scoring, trainer)(spark, empty)
+
+
+def test_labeled_vectors_read_raw_lines_once(spark):
+    """logreg_train_score takes the doc label and the event counts from
+    one aggregate, so its executed plan scans the raw-lines parquet
+    once (it used to join a second routed scan for the label)."""
+    from loganalyzer_spark.queries import queries
+    from tests.conftest import SF_SMALL
+
+    df = queries()["logreg_train_score"](spark, SF_SMALL)
+    df.collect()
+    # the adaptive plan's final physical plan, without its initial plan
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    scans = [
+        ln for ln in plan.splitlines() if "FileScan parquet" in ln and "raw_lines_" in ln
+    ]
+    assert len(scans) == 1, plan
 
 
 def test_margin_sgd_perceptron_and_svm(spark):

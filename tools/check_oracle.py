@@ -122,7 +122,10 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from loganalyzer_spark.session import get_spark
 
-    spark = get_spark(cores=8)
+    # size the gate to the host, as the Tier-1 command does
+    spark = get_spark(
+        cores=int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

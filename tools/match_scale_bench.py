@@ -58,7 +58,7 @@ def main() -> None:
     from loganalyzer_spark.session import get_spark
 
     spark = get_spark(app="match_scale")
-    corpus = f"/tmp/loganalyzer_bench/corpus_{n_docs}"
+    corpus = f"/tmp/loganalyzer_bench/corpus_{n_docs}_{datagen.generator_key()}"
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
         datagen.gen_raw_lines(spark, n_docs).write.mode("overwrite").parquet(
             corpus

@@ -26,6 +26,7 @@ import zipfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from loganalyzer_spark import datagen  # noqa: E402
 from loganalyzer_spark.session import heap_mb  # noqa: E402
 
 # Shared by both ladders: 4 MB input splits give every rung several task
@@ -51,7 +52,7 @@ def ensure_corpus(n_docs: int) -> str:
     Generated in a subprocess, so its JVM is gone before any rung
     starts and cannot contend for cores with a measured run.
     """
-    path = f"/tmp/loganalyzer_bench/pages_{n_docs}"
+    path = f"/tmp/loganalyzer_bench/pages_{n_docs}_{datagen.generator_key()}"
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
     code = (
