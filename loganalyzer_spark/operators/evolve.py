@@ -219,7 +219,11 @@ def det_timestamp(
     """
     from loganalyzer_spark.operators.parse import mask
 
-    head = mask(raw_lines.orderBy("doc_id", "line_no").limit(max_line), content=raw)
+    # checkpointed: the ordered limit reads all of raw_lines, and the
+    # sample feeds two actions below
+    head = mask(
+        raw_lines.orderBy("doc_id", "line_no").limit(max_line), content=raw
+    ).localCheckpoint()
     evolved = evolve_library(spark, head, base_templates=templates)
     eids = {r["event_id"] for r in templates.select("event_id").collect()}
 
