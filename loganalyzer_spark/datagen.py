@@ -199,8 +199,7 @@ def vocab_df(spark: SparkSession) -> DataFrame:
 
 
 def duckdb_vocab_values() -> str:
-    rows = ",\n      ".join(f"('{e}', {i})" for e, i in vocab_rows())
-    return f"(VALUES\n      {rows}\n    ) AS v(event_id, vocab_idx)"
+    return duckdb_values(vocab_rows(), "v(event_id, vocab_idx)")
 
 
 def templates_df(spark: SparkSession) -> DataFrame:
@@ -336,6 +335,32 @@ def _shape_case(dialect: str, which: str) -> str:
     return "CASE\n        " + "\n        ".join(arms) + "\n      END"
 
 
+def _line_source(dialect: str, docs_from: str, last: str) -> str:
+    """FROM clause: each ``docs_from`` row exploded into line_no 0..last."""
+    if dialect == "spark":
+        return (
+            f"FROM {docs_from} LATERAL VIEW "
+            f"explode(sequence(0, {last})) _t AS line_no"
+        )
+    return f"FROM {docs_from}, unnest(generate_series(0, {last})) AS _t(line_no)"
+
+
+def _for_dialect(dialect: str, sql: str) -> str:
+    # 'varchar' is written throughout; Spark's parser wants 'string'.
+    return sql.replace(" as varchar", " as string") if dialect == "spark" else sql
+
+
+def _docs_sql(
+    spark: SparkSession, sf_dir: str, view: str, sql_fn, *cols: str
+) -> DataFrame:
+    """Run a generator's Spark SQL over the documents table's ``cols``,
+    registered as the temp view ``view``."""
+    spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        *cols
+    ).createOrReplaceTempView(view)
+    return spark.sql(sql_fn("spark", view))
+
+
 def raw_lines_sql(dialect: str, docs_from: str) -> str:
     """SELECT producing the synthetic corpus, one row per raw log line.
 
@@ -354,18 +379,11 @@ def raw_lines_sql(dialect: str, docs_from: str) -> str:
     """
     secs = "(50400 + (doc_id % 3600) * 7 + line_no * 3) % 86400"
     ts_str = f"'2022-06-22 ' || {_hms(dialect, f'({secs})')}"
-    n_lines = "(3 + doc_id % 13)"
+    from_clause = _line_source(dialect, docs_from, "(3 + doc_id % 13) - 1")
     if dialect == "spark":
-        lateral = (
-            f"LATERAL VIEW explode(sequence(0, {n_lines} - 1)) _t AS line_no"
-        )
         warc_ts = "timestamp_micros(1655906400000000 + doc_id * 100000)"
-        from_clause = f"FROM {docs_from} {lateral}"
     else:
         warc_ts = "make_timestamp(1655906400000000 + doc_id * 100000)"
-        from_clause = (
-            f"FROM {docs_from}, unnest(generate_series(0, {n_lines} - 1)) AS _t(line_no)"
-        )
     # Spark only: break the stage between the tiny _base rows and the
     # giant shape projections. Fused into one Generate stage, the
     # 22-arm CASE trees blow janino's 64 KB method limit — Spark then
@@ -409,8 +427,7 @@ def raw_lines_sql(dialect: str, docs_from: str) -> str:
            content, is_abn, is_seg, is_rm
     FROM _lines
     """
-    # 'varchar' is written throughout; Spark's parser wants 'string'.
-    return sql.replace(" as varchar", " as string") if dialect == "spark" else sql
+    return _for_dialect(dialect, sql)
 
 
 def generator_key() -> str:
@@ -421,10 +438,7 @@ def generator_key() -> str:
 
 def _raw_lines_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw generator plan (Generate → exchange → shape projections)."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang"
-    ).createOrReplaceTempView("__docs")
-    return spark.sql(raw_lines_sql("spark", "__docs"))
+    return _docs_sql(spark, sf_dir, "__docs", raw_lines_sql, "doc_id", "lang")
 
 
 def _docs_stamp(sf_dir: str) -> str:
@@ -501,19 +515,18 @@ def web_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pages(raw_lines(spark, sf_dir))
 
 
-def gen_web_pages(
-    spark: SparkSession, n_docs: int, partitions: int | None = None
-) -> DataFrame:
+def gen_web_pages(spark: SparkSession, n_docs: int) -> DataFrame:
     """Standalone large-scale input_hint-shaped corpus
     (url, warc_ts, html, text, lang) for benchmarks."""
-    return _pages(gen_raw_lines(spark, n_docs, partitions))
+    return _pages(gen_raw_lines(spark, n_docs))
 
 
-def gen_raw_lines(spark: SparkSession, n_docs: int, partitions: int | None = None) -> DataFrame:
-    """Standalone large-scale corpus for benchmarks: spark.range-driven,
-    no parquet dependency. Identical line derivation; lang from doc_id.
+def gen_raw_lines(spark: SparkSession, n_docs: int) -> DataFrame:
+    """Standalone large-scale corpus for benchmarks: spark.range-driven
+    (one partition per default-parallelism slot), no parquet dependency.
+    Identical line derivation; lang from doc_id.
     """
-    rng = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
+    rng = spark.range(0, n_docs, 1, spark.sparkContext.defaultParallelism)
     rng.selectExpr(
         "id as doc_id",
         "CASE id % 10 WHEN 0 THEN 'de' WHEN 1 THEN 'fr' WHEN 2 THEN 'zh' "
@@ -566,17 +579,7 @@ def cm_lines_sql(dialect: str, docs_from: str) -> str:
     Same dual-dialect LCG scheme as raw_lines_sql; content carries the
     cm masking classes, masked_truth is the reference-chain result.
     """
-    n_lines = "(2 + doc_id % 3)"
-    if dialect == "spark":
-        from_clause = (
-            f"FROM {docs_from} LATERAL VIEW "
-            f"explode(sequence(0, {n_lines} - 1)) _t AS line_no"
-        )
-    else:
-        from_clause = (
-            f"FROM {docs_from}, "
-            f"unnest(generate_series(0, {n_lines} - 1)) AS _t(line_no)"
-        )
+    from_clause = _line_source(dialect, docs_from, "(2 + doc_id % 3) - 1")
     content_arms = "\n        ".join(
         f"WHEN r1 % 8 = {i} THEN {expr}"
         for i, (expr, _t) in enumerate(_CM_SHAPES[:-1])
@@ -604,14 +607,11 @@ def cm_lines_sql(dialect: str, docs_from: str) -> str:
       END AS masked_truth
     FROM _cmbase
     """
-    return sql.replace(" as varchar", " as string") if dialect == "spark" else sql
+    return _for_dialect(dialect, sql)
 
 
 def cm_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id"
-    ).createOrReplaceTempView("__cm_docs")
-    return spark.sql(cm_lines_sql("spark", "__cm_docs"))
+    return _docs_sql(spark, sf_dir, "__cm_docs", cm_lines_sql, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -654,17 +654,7 @@ _CM_BLOCK_SCRIPT: list[str] = [
 
 def cm_block_lines_sql(dialect: str, docs_from: str) -> str:
     """cm block corpus: (doc_id, line_no, content), dual-dialect."""
-    n = len(_CM_BLOCK_SCRIPT)
-    if dialect == "spark":
-        from_clause = (
-            f"FROM {docs_from} LATERAL VIEW "
-            f"explode(sequence(0, {n - 1})) _t AS line_no"
-        )
-    else:
-        from_clause = (
-            f"FROM {docs_from}, "
-            f"unnest(generate_series(0, {n - 1})) AS _t(line_no)"
-        )
+    from_clause = _line_source(dialect, docs_from, str(len(_CM_BLOCK_SCRIPT) - 1))
     arms = "\n        ".join(
         f"WHEN line_no = {i} THEN {expr}"
         for i, expr in enumerate(_CM_BLOCK_SCRIPT[:-1])
@@ -682,14 +672,11 @@ def cm_block_lines_sql(dialect: str, docs_from: str) -> str:
       END AS content
     FROM _blkbase
     """
-    return sql.replace(" as varchar", " as string") if dialect == "spark" else sql
+    return _for_dialect(dialect, sql)
 
 
 def cm_block_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id"
-    ).createOrReplaceTempView("__cm_blk_docs")
-    return spark.sql(cm_block_lines_sql("spark", "__cm_blk_docs"))
+    return _docs_sql(spark, sf_dir, "__cm_blk_docs", cm_block_lines_sql, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -741,17 +728,7 @@ def _m5_script() -> list[tuple[str, str]]:
 def messed_lines_sql(dialect: str, docs_from: str) -> str:
     """M5 staged corpus, dual-dialect."""
     script = _m5_script()
-    n = len(script)
-    if dialect == "spark":
-        from_clause = (
-            f"FROM {docs_from} LATERAL VIEW "
-            f"explode(sequence(0, {n - 1})) _t AS line_no"
-        )
-    else:
-        from_clause = (
-            f"FROM {docs_from}, "
-            f"unnest(generate_series(0, {n - 1})) AS _t(line_no)"
-        )
+    from_clause = _line_source(dialect, docs_from, str(len(script) - 1))
     eido_arms = "\n        ".join(
         f"WHEN line_no = {i} THEN {e}" for i, (e, _t) in enumerate(script[:-1])
     )
@@ -776,14 +753,11 @@ def messed_lines_sql(dialect: str, docs_from: str) -> str:
       END AS event_template
     FROM _m5base
     """
-    return sql.replace(" as varchar", " as string") if dialect == "spark" else sql
+    return _for_dialect(dialect, sql)
 
 
 def messed_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id"
-    ).createOrReplaceTempView("__m5_docs")
-    return spark.sql(messed_lines_sql("spark", "__m5_docs"))
+    return _docs_sql(spark, sf_dir, "__m5_docs", messed_lines_sql, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -810,17 +784,7 @@ def c4_lines_sql(dialect: str, docs_from: str) -> str:
     Page-ban plants: doc_id%37==0 gets a 'Lorem ipsum…' line 0;
     doc_id%41==0 gets a '{'-bearing line 1.
     """
-    n_lines = "(6 + doc_id % 7)"
-    if dialect == "spark":
-        from_clause = (
-            f"FROM {docs_from} LATERAL VIEW "
-            f"explode(sequence(0, {n_lines} - 1)) _t AS line_no"
-        )
-    else:
-        from_clause = (
-            f"FROM {docs_from}, "
-            f"unnest(generate_series(0, {n_lines} - 1)) AS _t(line_no)"
-        )
+    from_clause = _line_source(dialect, docs_from, "(6 + doc_id % 7) - 1")
     sql = f"""
     WITH _c4base AS (
       SELECT doc_id, line_no,
@@ -853,14 +817,11 @@ def c4_lines_sql(dialect: str, docs_from: str) -> str:
       END AS line
     FROM _c4base
     """
-    return sql.replace(" as varchar", " as string") if dialect == "spark" else sql
+    return _for_dialect(dialect, sql)
 
 
 def c4_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id"
-    ).createOrReplaceTempView("__c4_docs")
-    return spark.sql(c4_lines_sql("spark", "__c4_docs"))
+    return _docs_sql(spark, sf_dir, "__c4_docs", c4_lines_sql, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -868,31 +829,27 @@ def c4_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sqlq(s: str) -> str:
-    return s.replace("'", "''")
+def duckdb_values(rows: list[tuple], alias: str) -> str:
+    """An inline DuckDB ``(VALUES ...) AS alias`` table, one row per
+    line: ints as written, strings as quoted SQL literals."""
+    def lit(v) -> str:
+        return str(v) if isinstance(v, int) else "'" + v.replace("'", "''") + "'"
+
+    body = ",\n      ".join("(" + ", ".join(map(lit, r)) + ")" for r in rows)
+    return f"(VALUES\n      {body}\n    ) AS {alias}"
 
 
 def duckdb_templates_values() -> str:
-    rows = ",\n      ".join(
-        f"('{r[0]}', '{_sqlq(r[1])}', {r[2]}, '{_sqlq(r[3])}', '{_sqlq(r[4])}', "
-        f"{r[5]}, '{_sqlq(r[6])}')"
-        for r in template_rows()
-    )
-    return (
-        f"(VALUES\n      {rows}\n    ) AS t(event_id, event_template, "
-        "token_count, first_token, second_token, para_count, match_regex)"
+    return duckdb_values(
+        template_rows(),
+        "t(event_id, event_template, "
+        "token_count, first_token, second_token, para_count, match_regex)",
     )
 
 
 def duckdb_kb_values() -> str:
-    rows = ",\n      ".join(
-        f"('{r[0]}', '{r[1]}', '{_sqlq(r[2])}')" for r in kb_rows()
-    )
-    return f"(VALUES\n      {rows}\n    ) AS k(event_id, severity, descpt)"
+    return duckdb_values(kb_rows(), "k(event_id, severity, descpt)")
 
 
 def duckdb_classes_values() -> str:
-    rows = ",\n      ".join(
-        f"('{c}', '{_sqlq(d)}')" for c, d in CLASS_ROWS
-    )
-    return f"(VALUES\n      {rows}\n    ) AS c(class_id, class_descpt)"
+    return duckdb_values(CLASS_ROWS, "c(class_id, class_descpt)")

@@ -142,9 +142,9 @@ def target_rank(X: np.ndarray, targets: np.ndarray, w: dict[str, np.ndarray]) ->
 
 
 def _with_vocab_idx(
-    seq_df: DataFrame, vocab_rows: list[tuple[str, int]], seq_col: str, target_col: str
+    seq_df: DataFrame, vocab_rows: list[tuple[str, int]]
 ) -> tuple[DataFrame, int]:
-    """Map each window's event ids and its target to vocab indices
+    """Map each window's event ids (``seq``) and its ``target`` to vocab indices
     JVM-side, through a map literal event_id → vocab_idx (bounded dim,
     F5) with the reserved unknown slot (deeplog.py:170). Adds
     ``seq_idx`` and ``target_idx``; returns (frame, num_classes)."""
@@ -156,8 +156,8 @@ def _with_vocab_idx(
         pairs.append(F.lit(idx))
     vmap = F.create_map(*pairs)
     df = seq_df.withColumn(
-        "seq_idx", F.transform(F.col(seq_col), lambda e: F.coalesce(vmap[e], unknown))
-    ).withColumn("target_idx", F.coalesce(vmap[F.col(target_col)], unknown))
+        "seq_idx", F.transform(F.col("seq"), lambda e: F.coalesce(vmap[e], unknown))
+    ).withColumn("target_idx", F.coalesce(vmap[F.col("target")], unknown))
     return df, num_classes
 
 
@@ -167,8 +167,6 @@ def score_sequences(
     vocab_rows: list[tuple[str, int]],
     weights: dict[str, np.ndarray] | None = None,
     topk: int = 10,
-    seq_col: str = "seq",
-    target_col: str = "target",
 ) -> DataFrame:
     """DeepLog exec-path scoring over ``sequence_windows`` output.
 
@@ -178,7 +176,7 @@ def score_sequences(
     a broadcast map literal; only the LSTM matmul is Python, Arrow-
     batched, weights broadcast once per executor.
     """
-    df, num_classes = _with_vocab_idx(seq_df, vocab_rows, seq_col, target_col)
+    df, num_classes = _with_vocab_idx(seq_df, vocab_rows)
     if weights is None:
         weights = make_weights(num_classes)
 
@@ -364,8 +362,6 @@ def train_on_sequences(
     seq_df: DataFrame,
     vocab_rows: list[tuple[str, int]],
     max_train: int = 4096,
-    seq_col: str = "seq",
-    target_col: str = "target",
     **train_kw,
 ) -> tuple[dict[str, np.ndarray], list[float]]:
     """Distributed-input training front-end: map event ids → vocab
@@ -379,7 +375,7 @@ def train_on_sequences(
     ``max_train`` windows chosen deterministically by (doc_id,
     session_id, line_no) order, so at 100 TB this is a bounded training
     sample while SCORING stays fully distributed (score_sequences)."""
-    df, num_classes = _with_vocab_idx(seq_df, vocab_rows, seq_col, target_col)
+    df, num_classes = _with_vocab_idx(seq_df, vocab_rows)
     rows = (
         df.select("doc_id", "session_id", "line_no", "seq_idx", "target_idx")
         .orderBy("doc_id", "session_id", "line_no")

@@ -34,6 +34,11 @@ class CheckpointedJob:
 
     Layout: <root>/<stage>/  (parquet + _SUCCESS)
             <root>/_metrics/<stage>.json
+
+    A stage is done only when its metrics record exists: the committer
+    writes ``_SUCCESS`` before the record is counted and written, so a
+    kill in between leaves a marker without a record, and the stage
+    re-runs. The record is written whole (temp file + ``os.replace``).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -45,9 +50,13 @@ class CheckpointedJob:
     def stage_path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
+    def metrics_path(self, name: str) -> str:
+        return os.path.join(self.metrics_dir, f"{name}.json")
+
     def stage(self, name: str, fn: Callable[[], DataFrame]) -> DataFrame:
         out = self.stage_path(name)
-        if _done(out):
+        record = self.metrics_path(name)
+        if _done(out) and os.path.exists(record):
             return self.spark.read.parquet(out)
         t0 = time.time()
         fn().write.mode("overwrite").parquet(out)
@@ -65,14 +74,14 @@ class CheckpointedJob:
             "partitions": {
                 os.path.basename(r["file"]): int(r["count"]) for r in per_file
             },
-            "resumed": False,
         }
-        with open(os.path.join(self.metrics_dir, f"{name}.json"), "w") as f:
+        with open(record + ".tmp", "w") as f:
             json.dump(metrics, f, indent=1)
+        os.replace(record + ".tmp", record)
         return back
 
     def read_metrics(self, name: str) -> dict:
-        with open(os.path.join(self.metrics_dir, f"{name}.json")) as f:
+        with open(self.metrics_path(name)) as f:
             return json.load(f)
 
 

@@ -37,15 +37,15 @@ def sink_ecm(routed: DataFrame, bucket: str = "1 minute") -> DataFrame:
     )
 
 
-def salted_event_counts(lines: DataFrame, salt: int = 16) -> DataFrame:
+def salted_event_counts(lines: DataFrame) -> DataFrame:
     """A1 with explicit two-level salted aggregation (SURVEY.md §4.1).
 
     For count-like aggs partial aggregation already defuses skew; this
     operator exists for aggregations without map-side combine and as the
     explicit salted-repartition pattern the north rule requires:
-    partial agg on (key, salt) → final agg on key.
+    partial agg on (key, salt) → final agg on key, with 16 salts.
     """
-    salted = lines.withColumn("_salt", (F.rand(42) * salt).cast("int"))
+    salted = lines.withColumn("_salt", (F.rand(42) * 16).cast("int"))
     partial = salted.groupBy("event_id", "_salt").agg(F.count("*").alias("c"))
     return partial.groupBy("event_id").agg(F.sum("c").alias("occurrences"))
 
@@ -90,21 +90,19 @@ def ecm_vectors(
 
 def sliding_counts(
     events: DataFrame,
-    ts: str = "ts",
-    key: str = "event_type",
     size: str = "10 seconds",
     slide: str = "5 seconds",
 ) -> DataFrame:
     """A5: Loglizer's sliding time windows (loglizer.py:161-295) — an
     exact Spark built-in. Works unchanged under Structured Streaming
-    with a watermark."""
+    with a watermark. Counts ``event_type`` per window of ``ts``."""
     return (
-        events.groupBy(F.window(ts, size, slide).alias("w"), key)
+        events.groupBy(F.window("ts", size, slide).alias("w"), "event_type")
         .agg(F.count("*").alias("cnt"))
         .select(
             F.col("w.start").alias("win_start"),
             F.col("w.end").alias("win_end"),
-            key,
+            "event_type",
             "cnt",
         )
     )
@@ -161,11 +159,10 @@ def context_window_counts(
 def sequence_windows(
     lines: DataFrame,
     win: int = 5,
-    part: str = "session_id",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """A8: DeepLog sequence slicing (deeplog.py:200-277) — sliding
-    event-index windows + next-event target per session, via
+    event-index windows + next-event target per ``session_id``, via
     collect_list over a row frame + lead. Tail windows (< win items or
     no target) are dropped, matching the reference's bounds check.
 
@@ -173,7 +170,7 @@ def sequence_windows(
     ``target_<col>`` (same lead offset, same window — zero extra
     shuffle), so target-line attributes (e.g. the OSS param-anomaly
     flag for EP3 predict) ride along without a self-join."""
-    w = Window.partitionBy("doc_id", part).orderBy("line_no")
+    w = Window.partitionBy("doc_id", "session_id").orderBy("line_no")
     frame = w.rowsBetween(0, win - 1)
     out = (
         lines.withColumn("seq", F.collect_list("event_id").over(frame))

@@ -27,12 +27,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _state_prev(marker: F.Column, doc: str, order: str) -> F.Column:
+def _state_prev(marker: F.Column) -> F.Column:
     """The machine's state before this row: the last non-NULL ``marker``
-    over the earlier rows of the document, 0 before any marker."""
+    over the earlier rows of the document (``doc_id`` in ``line_no``
+    order), 0 before any marker."""
     w = (
-        Window.partitionBy(doc)
-        .orderBy(order)
+        Window.partitionBy("doc_id")
+        .orderBy("line_no")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return F.coalesce(F.last(marker, ignorenulls=True).over(w), F.lit(0))
@@ -42,14 +43,11 @@ def remove_blocks(
     lines: DataFrame,
     start_pat: str,
     end_pat: str,
-    content: str = "content",
-    doc: str = "doc_id",
-    order: str = "line_no",
 ) -> DataFrame:
-    is_start = F.col(content).rlike(start_pat)
-    is_end = F.col(content).rlike(end_pat)
+    is_start = F.col("content").rlike(start_pat)
+    is_end = F.col("content").rlike(end_pat)
     df = lines.withColumn(
-        "_state_prev", _state_prev(F.when(is_start, 1).when(is_end, 0), doc, order)
+        "_state_prev", _state_prev(F.when(is_start, 1).when(is_end, 0))
     ).withColumn(
         "_removed",
         (F.col("_state_prev") == 1) | ((F.col("_state_prev") == 0) & is_start),
@@ -61,9 +59,6 @@ def remove_blocks_pandas(
     lines: DataFrame,
     start_pat: str,
     end_pat: str,
-    content: str = "content",
-    doc: str = "doc_id",
-    order: str = "line_no",
 ) -> DataFrame:
     """Literal per-document state machine via applyInPandas."""
     import re
@@ -71,11 +66,11 @@ def remove_blocks_pandas(
     schema = lines.schema
 
     def machine(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order)
+        pdf = pdf.sort_values("line_no")
         sp, ep = re.compile(start_pat), re.compile(end_pat)
         keep = []
         in_block = False
-        for c in pdf[content]:
+        for c in pdf["content"]:
             if not in_block and sp.search(c):
                 in_block = True
                 keep.append(False)
@@ -86,7 +81,7 @@ def remove_blocks_pandas(
                 keep.append(not in_block)
         return pdf[pd.Series(keep, index=pdf.index)]
 
-    return lines.groupBy(doc).applyInPandas(machine, schema)
+    return lines.groupBy("doc_id").applyInPandas(machine, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -104,9 +99,6 @@ def _anchored(pat: str) -> str:
 
 def cm_block_presets(
     lines: DataFrame,
-    content: str = "content",
-    doc: str = "doc_id",
-    order: str = "line_no",
 ) -> DataFrame:
     """The cm extension's five block/table machines, composed in the
     reference's branch order (extensions/cm/preprocess.py:48-178):
@@ -139,60 +131,57 @@ def cm_block_presets(
     """
     from loganalyzer_spark import patterns as P
 
-    c = F.col(content)
+    c = F.col("content")
     empty = c == ""
     nested = c.rlike(_anchored(P.PTN_NESTED_LINE.pattern))
 
     # 1. block remove, end exclusive
     s1 = c.rlike(_anchored(P.PTN_BLOCK_RM_START.pattern))
     e1 = c.rlike(_anchored(P.PTN_BLOCK_RM_END.pattern))
-    prev1 = _state_prev(F.when(s1, 1).when(e1, 0), doc, order)
+    prev1 = _state_prev(F.when(s1, 1).when(e1, 0))
     df = lines.withColumn("_rm1", s1 | ((prev1 == 1) & ~e1))
     df = df.filter(~F.col("_rm1")).drop("_rm1")
 
     # 2. block remove until primary line, end exclusive
     s2 = c.rlike(_anchored(P.PTN_BLOCK_RM_PRI.pattern))
     prim = ~nested & ~empty
-    prev2 = _state_prev(F.when(s2, 1).when(prim, 0), doc, order)
+    prev2 = _state_prev(F.when(s2, 1).when(prim, 0))
     df = df.withColumn("_rm2", s2 | ((prev2 == 1) & (nested | empty)))
     df = df.filter(~F.col("_rm2")).drop("_rm2")
 
     # 3. indent block, empty line ends (start + empty untouched)
     s3 = c.rlike(_anchored(P.PTN_BLOCK_INDENT.pattern))
-    prev3 = _state_prev(F.when(s3, 1).when(empty, 0), doc, order)
+    prev3 = _state_prev(F.when(s3, 1).when(empty, 0))
     df = df.withColumn(
-        content,
+        "content",
         F.when((prev3 == 1) & ~s3 & ~empty, F.concat(F.lit(" "), c)).otherwise(c),
     )
 
     # 4. indent block, end pattern ends (end line indented too)
-    c = F.col(content)
+    c = F.col("content")
     s4 = c.rlike(_anchored(P.PTN_BLOCK_INDENT2.pattern))
     e4 = c.rlike(_anchored(P.PTN_BLOCK_INDENT2_END.pattern))
-    prev4 = _state_prev(F.when(s4, 1).when(e4, 0), doc, order)
+    prev4 = _state_prev(F.when(s4, 1).when(e4, 0))
     df = df.withColumn(
-        content,
+        "content",
         F.when((prev4 == 1) & ~s4, F.concat(F.lit(" "), c)).otherwise(c),
     )
 
     # 5a. common '----' table title: remove until empty line (kept)
-    c = F.col(content)
+    c = F.col("content")
     s5 = c.rlike(_anchored(P.PTN_TABLE_TITLE_COMMON.pattern))
-    prev5 = _state_prev(F.when(s5, 1).when(c == "", 0), doc, order)
+    prev5 = _state_prev(F.when(s5, 1).when(c == "", 0))
     df = df.withColumn("_rm5", s5 | ((prev5 == 1) & (c != "")))
     df = df.filter(~F.col("_rm5")).drop("_rm5")
 
     # 5b. specific table titles: stateless removal
     return df.filter(
-        ~F.col(content).rlike(_anchored(P.PTN_TABLE_TITLE.pattern))
+        ~F.col("content").rlike(_anchored(P.PTN_TABLE_TITLE.pattern))
     )
 
 
 def cm_block_presets_pandas(
     lines: DataFrame,
-    content: str = "content",
-    doc: str = "doc_id",
-    order: str = "line_no",
 ) -> DataFrame:
     """Literal SHARED-STATE machine (one ``in_log_blk`` variable like
     extensions/cm/preprocess.py:48-178) — the fidelity oracle the window
@@ -202,11 +191,11 @@ def cm_block_presets_pandas(
     schema = lines.schema
 
     def machine(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).copy()
+        pdf = pdf.sort_values("line_no").copy()
         RST, BLK, BLK2, IND, IND2, TITLE = range(6)
         state = RST
         keep, out = [], []
-        for line in pdf[content]:
+        for line in pdf["content"]:
             k = True
             if P.PTN_BLOCK_RM_START.match(line):
                 state, k = BLK, False
@@ -246,7 +235,7 @@ def cm_block_presets_pandas(
                 k = False
             keep.append(k)
             out.append(line)
-        pdf[content] = out
+        pdf["content"] = out
         return pdf[pd.Series(keep, index=pdf.index)]
 
-    return lines.groupBy(doc).applyInPandas(machine, schema)
+    return lines.groupBy("doc_id").applyInPandas(machine, schema)

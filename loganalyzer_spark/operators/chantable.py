@@ -55,9 +55,6 @@ def _reformat_table(
     start_pat: str,
     title_pat: str,
     end_pat: str,
-    content: str,
-    doc: str,
-    order: str,
     cook: Callable[[Column], Column],
 ) -> DataFrame:
     """The segmentation and keep/drop rule both table layouts share.
@@ -67,19 +64,19 @@ def _reformat_table(
     untouched; table rows are dropped (start/header/title/broken) or
     replaced by the cooked line.
     """
-    c = F.col(content)
+    c = F.col("content")
     is_start = c.rlike(start_pat)
     is_end = c.rlike(end_pat)
     nested = c.rlike("^[ \t]")
     empty = c.rlike("^[ \t]*$")
 
     df = lines.withColumn(
-        "_in_tbl", _state_prev(F.when(is_start, 1).when(is_end, 0), doc, order) == 1
+        "_in_tbl", _state_prev(F.when(is_start, 1).when(is_end, 0)) == 1
     ).withColumn(
         # the header is done once the common title line has passed
         # inside the current table; a new start resets it
         "_hdr_done",
-        _state_prev(F.when(is_start, 0).when(c.rlike(title_pat), 1), doc, order) == 1,
+        _state_prev(F.when(is_start, 0).when(c.rlike(title_pat), 1)) == 1,
     )
 
     in_tbl = F.col("_in_tbl") & ~is_end
@@ -93,7 +90,7 @@ def _reformat_table(
             .when(is_data, cook(c)),  # start/header/title/broken: NULL
         )
         .filter(F.col("_out").isNotNull())
-        .withColumn(content, F.col("_out"))
+        .withColumn("content", F.col("_out"))
         .drop("_out", "_in_tbl", "_hdr_done")
     )
 
@@ -103,9 +100,6 @@ def reformat_ds_chan_table(
     start_pat: str,
     title_pat: str,
     end_pat: str,
-    content: str = "content",
-    doc: str = "doc_id",
-    order: str = "line_no",
 ) -> DataFrame:
     """DS channel table → 'DS channel status rxid … mod …' lines."""
 
@@ -127,9 +121,7 @@ def reformat_ds_chan_table(
         )
         return F.when((F.size(toks) >= 8) & mod.isNotNull(), cooked)
 
-    return _reformat_table(
-        lines, start_pat, title_pat, end_pat, content, doc, order, cook
-    )
+    return _reformat_table(lines, start_pat, title_pat, end_pat, cook)
 
 
 # ---------------------------------------------------------------------------
@@ -156,9 +148,6 @@ def reformat_us_chan_table(
     start_pat: str,
     title_pat: str,
     end_pat: str,
-    content: str = "content",
-    doc: str = "doc_id",
-    order: str = "line_no",
 ) -> DataFrame:
     """US channel table → 'US channel status txid … txdata …' lines.
 
@@ -199,6 +188,4 @@ def reformat_us_chan_table(
             ~is_ofdma & (F.size(t9) >= 9) & scqam_tx.isNotNull(), cooked_scqam
         )
 
-    return _reformat_table(
-        lines, start_pat, title_pat, end_pat, content, doc, order, cook
-    )
+    return _reformat_table(lines, start_pat, title_pat, end_pat, cook)

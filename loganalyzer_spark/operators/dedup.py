@@ -90,16 +90,16 @@ def exact_dedup(docs: DataFrame, key: str = "doc_id", text: str = "text") -> Dat
 
 
 def minhash_signatures(
-    docs: DataFrame, key: str = "doc_id", text: str = "text",
-    n: int = 3, num_hashes: int = 16,
+    docs: DataFrame, n: int = 3, num_hashes: int = 16
 ) -> DataFrame:
-    """MinHash signature per doc: sig[k] = min over shingles of h_k(H(s)).
+    """MinHash signature per ``doc_id``: sig[k] = min over the shingles of
+    ``text`` of h_k(H(s)).
 
     Pure column expressions: shingle→hash60, then per-k transform+min.
     Empty shingle sets hash to the reserved max value.
     """
     params = minhash_params(num_hashes)
-    df = with_shingles(docs, text, n).withColumn(
+    df = with_shingles(docs, "text", n).withColumn(
         "sh_hashes", F.transform("shingles", lambda s: _hash60(s))
     )
 
@@ -115,7 +115,7 @@ def minhash_signatures(
             for a, b in params
         ]
     )
-    return df.select(key, "shingles", sig.alias("sig"))
+    return df.select("doc_id", "shingles", sig.alias("sig"))
 
 
 def _capped_pairs(
@@ -177,12 +177,12 @@ def _capped_pairs(
     return exact.select(*out).unionByName(star.select(*out)).dropDuplicates(["a", "b"])
 
 
-def minhash_bands(sigs: DataFrame, key: str = "doc_id", bands: int = 4) -> DataFrame:
-    """Band a MinHash signature: (key, band_id, band_hash), one row per
+def minhash_bands(sigs: DataFrame, bands: int = 4) -> DataFrame:
+    """Band a MinHash signature: (doc_id, band_id, band_hash), one row per
     band, band_hash = md5 of the band's ``size(sig) / bands`` values."""
     width = f"int(size(sig) / {bands})"
     return sigs.select(
-        key,
+        "doc_id",
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, {bands} - 1),"
@@ -193,7 +193,7 @@ def minhash_bands(sigs: DataFrame, key: str = "doc_id", bands: int = 4) -> DataF
 
 
 def lsh_candidate_pairs(
-    sigs: DataFrame, key: str = "doc_id", bands: int = 4, bucket_cap: int = 256
+    sigs: DataFrame, bands: int = 4, bucket_cap: int = 256
 ) -> DataFrame:
     """Band the signature, bucket-join docs sharing any band hash.
 
@@ -203,20 +203,19 @@ def lsh_candidate_pairs(
     as :func:`_capped_pairs` describes; run :func:`exact_dedup` first so
     byte-identical copies collapse before banding.
     """
-    banded = minhash_bands(sigs, key, bands).withColumnRenamed(key, "k")
+    banded = minhash_bands(sigs, bands).withColumnRenamed("doc_id", "k")
     return _capped_pairs(banded, ["band_id", "band_hash"], bucket_cap)
 
 
 def jaccard_pairs(
-    docs: DataFrame, pairs: DataFrame, key: str = "doc_id", n: int = 3,
-    threshold: float = 0.0,
+    docs: DataFrame, pairs: DataFrame, n: int = 3, threshold: float = 0.0
 ) -> DataFrame:
     """n-gram Jaccard similarity for candidate pairs (verification step).
 
     jaccard = |A ∩ B| / |A ∪ B| over distinct shingle sets.
     """
     sh = with_shingles(docs, "text", n).select(
-        F.col(key).alias("k"), F.col("shingles").alias("sh")
+        F.col("doc_id").alias("k"), F.col("shingles").alias("sh")
     )
     a = sh.select(F.col("k").alias("a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("k").alias("b"), F.col("sh").alias("sh_b"))
@@ -234,15 +233,14 @@ def jaccard_pairs(
     )
 
 
-def simhash(docs: DataFrame, key: str = "doc_id", text: str = "text",
-            bits: int = 32) -> DataFrame:
-    """SimHash fingerprint over word tokens.
+def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
+    """SimHash fingerprint over the word tokens of ``text``, per ``doc_id``.
 
     Bit b of the fingerprint is 1 iff Σ_tokens sign(bit b of H(token))
     > 0 (unweighted). Pure column expressions: per-bit aggregate over
     the token-hash array.
     """
-    toks = F.array_distinct(F.split(F.lower(F.col(text)), "\\s+"))
+    toks = F.array_distinct(F.split(F.lower(F.col("text")), "\\s+"))
     df = docs.withColumn("tok_hashes", F.transform(toks, lambda t: _hash60(t)))
 
     def bit_merge(b: int):
@@ -258,12 +256,11 @@ def simhash(docs: DataFrame, key: str = "doc_id", text: str = "text",
     for b, s in enumerate(bit_sum):
         term = F.when(s > 0, F.lit(2**b).cast("long")).otherwise(F.lit(0).cast("long"))
         fp = term if fp is None else fp + term
-    return df.select(key, fp.alias("simhash"))
+    return df.select("doc_id", fp.alias("simhash"))
 
 
 def simhash_near_pairs(
-    fps: DataFrame, key: str = "doc_id", max_hamming: int = 3,
-    bucket_cap: int = 256,
+    fps: DataFrame, max_hamming: int = 3, bucket_cap: int = 256
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance on SimHash fingerprints.
 
@@ -277,7 +274,7 @@ def simhash_near_pairs(
     """
     nblocks = max_hamming + 1
     blocked = fps.select(
-        F.col(key).alias("k"),
+        F.col("doc_id").alias("k"),
         F.col("simhash").alias("fp"),
         F.posexplode(
             F.array(
@@ -310,21 +307,17 @@ from loganalyzer_spark.operators.similarity import (  # noqa: E402
 )
 
 
-def embedding_near_dups(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Exact embedding-cosine near-dup pairs (a < b, cosine >= t).
+def embedding_near_dups(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
+    """Exact embedding-cosine near-dup pairs of ``vec_id``s (a < b,
+    cosine of ``embedding`` >= t).
 
     O(n^2) all-pairs — the correctness baseline used by the DuckDB
     oracle at small SF. At 100 TB use ``embedding_near_dups_lsh``:
     same verify predicate, but candidate generation is a bucket
     equi-join, not a cross join.
     """
-    a = emb.select(F.col(key).alias("a"), F.col(vec).alias("avec"))
-    b = emb.select(F.col(key).alias("b"), F.col(vec).alias("bvec"))
+    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("avec"))
+    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("bvec"))
     return (
         a.join(b, F.col("a") < F.col("b"))
         # filter on the ROUNDED cosine (like the oracle SQL), so the
@@ -340,19 +333,15 @@ def embedding_near_dups(
     )
 
 
-def lsh_band_plan(
-    threshold: float,
-    target_recall: float = 0.95,
-    max_bits: int = 60,
-) -> tuple[int, int]:
+def lsh_band_plan(threshold: float, target_recall: float = 0.95) -> tuple[int, int]:
     """Derive (nbands, band_width) so banded hyperplane LSH retrieves a
     pair at cosine == ``threshold`` with probability ≥ ``target_recall``.
 
     Per-bit collision probability for angle θ is p = 1 - θ/π; a pair
     survives banding with 1 - (1 - p^w)^b.  We take the WIDEST band w
     (widest = best pruning of sub-threshold pairs) whose required band
-    count b = ceil(ln(1-R)/ln(1-p^w)) still fits the single-long
-    signature (w·b ≤ max_bits ≤ 63).  Examples (R = 0.95):
+    count b = ceil(ln(1-R)/ln(1-p^w)) still fits the 60-bit
+    single-long signature (w·b ≤ 60).  Examples (R = 0.95):
     t=0.9 → 8 bands × 7 bits; t=0.99 → 4 × 12; t=0.35 → 12 × 3.
 
     A fixed plan has no safe operating point: 4×8 bands give ~93 %
@@ -365,6 +354,7 @@ def lsh_band_plan(
     """
     import math
 
+    max_bits = 60
     t = min(max(threshold, -1.0), 1.0)
     p = 1.0 - math.acos(t) / math.pi
     if p >= 1.0:  # threshold == 1: any single band retrieves exact dups
@@ -381,14 +371,7 @@ def lsh_band_plan(
 
 
 def embedding_near_dups_lsh(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    nbits: int | None = None,
-    dim: int | None = None,
-    nbands: int | None = None,
-    bucket_cap: int = 256,
+    emb: DataFrame, threshold: float = 0.9, bucket_cap: int = 256
 ) -> DataFrame:
     """Scale path: hyperplane-LSH blocked near-dup pairs.
 
@@ -399,37 +382,29 @@ def embedding_near_dups_lsh(
     so precision is 1.0 and only recall is approximate. The join key
     (band_id, band_bits) distributes; no cross join anywhere.
 
-    When ``nbands``/``nbits`` are not given, the banding is derived
-    from ``threshold`` by :func:`lsh_band_plan` so recall at the
-    operating point is ≥ 0.95 by construction (t=0.9 → 8×7 bits,
-    t=0.35 → 12×3).  Passing an explicit plan overrides — but a plan
-    chosen for one threshold silently collapses recall at another, so
-    prefer the derived default.
+    The banding is derived from ``threshold`` by :func:`lsh_band_plan`
+    so recall at the operating point is ≥ 0.95 by construction (t=0.9 →
+    8×7 bits, t=0.35 → 12×3); a plan chosen for one threshold would
+    silently collapse recall at another.
 
-    ``dim`` is derived from the first row when not given (one bounded
-    driver action); a wrong hard-coded dim would silently null-pad
-    ``zip_with`` and collapse every sign bit to 0 (one giant bucket).
+    ``dim`` is derived from the first row (one bounded driver action);
+    a wrong hard-coded dim would silently null-pad ``zip_with`` and
+    collapse every sign bit to 0 (one giant bucket).
 
     ``bucket_cap`` bounds mass-duplicate blowup as :func:`_capped_pairs`
     describes; star pairs still pass the exact cosine verify, so
     precision stays 1.0.
     """
-    if nbands is None or nbits is None:
-        plan_bands, plan_width = lsh_band_plan(threshold)
-        nbands = plan_bands if nbands is None else nbands
-        nbits = plan_bands * plan_width if nbits is None else nbits
-    if dim is None:
-        head = emb.select(F.size(vec).alias("d")).head()
-        if head is None:
-            return local_df(emb.sparkSession, [], "a long, b long, cosine double")
-        dim = head["d"]
-    planes = lsh_planes(dim, nbits)
+    nbands, band_width = lsh_band_plan(threshold)
+    head = emb.select(F.size("embedding").alias("d")).head()
+    if head is None:
+        return local_df(emb.sparkSession, [], "a long, b long, cosine double")
+    planes = lsh_planes(head["d"], nbands * band_width)
     sig = emb.select(
-        F.col(key).alias("k"),
-        F.col(vec).alias("v"),
-        hyperplane_sign_bits(vec, planes).alias("bits"),
+        F.col("vec_id").alias("k"),
+        F.col("embedding").alias("v"),
+        hyperplane_sign_bits("embedding", planes).alias("bits"),
     )
-    band_width = nbits // nbands
     mask = (1 << band_width) - 1
     banded = sig.select(
         "k",
@@ -464,16 +439,14 @@ def embedding_near_dups_lsh(
 # ---------------------------------------------------------------------------
 
 
-def near_dup_survivors(
-    docs: DataFrame, pairs: DataFrame, key: str = "doc_id"
-) -> DataFrame:
+def near_dup_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Keep-smallest-id survivor policy: any doc with a near-dup
     neighbor of smaller id is dropped (left_anti on the pair's right
     side). One anti join — no iteration; the standard web-dedup
     resolution when pairs come from MinHash/SimHash/embedding blocks.
     """
-    losers = pairs.select(F.col("b").alias(key)).distinct()
-    return docs.join(losers, key, "left_anti")
+    losers = pairs.select(F.col("b").alias("doc_id")).distinct()
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 def connected_components(
@@ -563,21 +536,15 @@ def connected_components(
 # ---------------------------------------------------------------------------
 
 
-def passage_grams(
-    docs: DataFrame,
-    key: str = "doc_id",
-    text: str = "text",
-    k: int = 8,
-    stride: int = 1,
-) -> DataFrame:
+def passage_grams(docs: DataFrame, k: int = 8) -> DataFrame:
     """Positional word k-gram fingerprints: one row per window.
 
-    Output: (key, pos, gh) where pos is the 1-based token index of the
+    Output: (doc_id, pos, gh) where pos is the 1-based token index of the
     window start and gh the 60-bit md5 hash of the k tokens joined by a
     single space (tokens = ``split(lower(text), '\\s+')`` — the same
     tokenizer as :func:`with_shingles`). Docs shorter than ``k`` tokens
-    emit nothing. ``stride`` subsamples start positions (1, 1+stride,
-    ...) — the scale knob: the exploded row count is |tokens|/stride.
+    emit nothing. Every start position is a window (stride 1), so the
+    exploded row count is |tokens|.
 
     Unlike :func:`minhash_signatures` (whole-doc similarity), positions
     are KEPT — this is the primitive for substring-level dedup (the
@@ -593,32 +560,25 @@ def passage_grams(
     # whole document once per window position (O(tokens²) per row —
     # the inlined-producer-in-lambda trap; see textstats.fingerprint).
     toked = docs.select(
-        F.col(key), F.split(F.lower(F.col(text)), "\\s+").alias("_w")
+        F.col("doc_id"), F.split(F.lower(F.col("text")), "\\s+").alias("_w")
     )
     expr = (
         f"CASE WHEN size(_w) < {k} THEN array() "
-        f"ELSE transform(sequence(1, size(_w) - {k} + 1, {stride}), "
+        f"ELSE transform(sequence(1, size(_w) - {k} + 1, 1), "
         f"i -> struct(i AS pos, conv(substring(md5("
         f"array_join(slice(_w, i, {k}), ' ')), 1, 15), 16, 10) AS ghs)) END"
     )
     return (
-        toked.select(F.col(key), F.explode(F.expr(expr)).alias("g"))
+        toked.select(F.col("doc_id"), F.explode(F.expr(expr)).alias("g"))
         .select(
-            key,
+            "doc_id",
             F.col("g.pos").cast("long").alias("pos"),
             F.col("g.ghs").cast("long").alias("gh"),
         )
     )
 
 
-def repeated_passages(
-    docs: DataFrame,
-    key: str = "doc_id",
-    text: str = "text",
-    k: int = 8,
-    min_docs: int = 2,
-    stride: int = 1,
-) -> DataFrame:
+def repeated_passages(docs: DataFrame, k: int = 8, min_docs: int = 2) -> DataFrame:
     """Cross-document repeated spans (boilerplate / license blocks):
     maximal runs of word k-gram windows whose grams each occur in at
     least ``min_docs`` DISTINCT documents.
@@ -626,12 +586,12 @@ def repeated_passages(
     Per doc, hit windows sorted by pos are merged while consecutive
     starts are <= k apart (overlapping or exactly adjacent windows =
     one contiguous repeated region). Output one row per span:
-    (key, span_start, span_end, span_len, n_windows, max_docs) with
+    (doc_id, span_start, span_end, span_len, n_windows, max_docs) with
     token-index bounds inclusive, span_len = span_end - span_start + 1,
     and max_docs = the widest cross-doc frequency among the span's
     grams.
 
-    Scale shape (100 TB): the gram explode is |tokens|/stride rows —
+    Scale shape (100 TB): the gram explode is |tokens| rows —
     inherent to substring dedup (the suffix-array equivalent sorts the
     same volume); doc-frequency is a two-phase count_distinct keyed on
     the (uniform) gram hash, so no skew; the gram->frequency join is an
@@ -643,27 +603,27 @@ def repeated_passages(
     all windows. No exchange carries more than the exploded gram
     volume; nothing is driver-side.
     """
-    grams = passage_grams(docs, key, text, k, stride)
+    grams = passage_grams(docs, k)
     freq = (
         grams.groupBy("gh")
-        .agg(F.count_distinct(key).alias("n_docs"))
+        .agg(F.count_distinct("doc_id").alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
     )
     hits = grams.join(freq, "gh")
-    w = Window.partitionBy(key).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     brk = F.when(
         F.lag("pos").over(w).isNull()
         | ((F.col("pos") - F.lag("pos").over(w)) > k),
         1,
     ).otherwise(0)
     island = F.sum("brk").over(
-        Window.partitionBy(key).orderBy("pos")
+        Window.partitionBy("doc_id").orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
         hits.withColumn("brk", brk)
         .withColumn("island", island)
-        .groupBy(key, "island")
+        .groupBy("doc_id", "island")
         .agg(
             F.min("pos").alias("span_start"),
             (F.max("pos") + k - 1).alias("span_end"),

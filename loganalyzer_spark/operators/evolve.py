@@ -70,21 +70,20 @@ def cluster_templates(
 def evolve_library(
     spark: SparkSession,
     lines: DataFrame,
-    masked: str = "masked",
     base_templates: DataFrame | None = None,
-    max_distinct: int = 100_000,
 ) -> DataFrame:
-    """Batch library evolution: distinct-masked aggregation (map-side
-    combine handles the Zipf head), frequency-capped collect, driver
-    clustering. Output: the template dim schema of datagen.templates_df.
+    """Batch library evolution: distinct-``masked`` aggregation (map-side
+    combine handles the Zipf head), collect capped at the 100,000 most
+    frequent, driver clustering. Output: the template dim schema of
+    datagen.templates_df.
     """
     from loganalyzer_spark.datagen import TEMPLATE_SCHEMA, local_df, template_row
 
     counts = (
-        lines.groupBy(masked)
+        lines.groupBy("masked")
         .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), masked)
-        .limit(max_distinct)
+        .orderBy(F.desc("n"), "masked")
+        .limit(100_000)
         .collect()
     )
     base = (
@@ -92,7 +91,7 @@ def evolve_library(
         if base_templates is not None
         else []
     )
-    evolved = cluster_templates([(r[masked], r["n"]) for r in counts], base)
+    evolved = cluster_templates([(r["masked"], r["n"]) for r in counts], base)
     return local_df(spark, [template_row(t) for t in evolved], TEMPLATE_SCHEMA)
 
 
@@ -205,10 +204,9 @@ def det_timestamp(
     spark: SparkSession,
     raw_lines: DataFrame,
     templates: DataFrame,
-    raw: str = "raw",
     max_line: int = 500,
 ) -> int:
-    """M6/P11 end to end: throwaway parse of the first ``max_line`` raw
+    """M6/P11 end to end: throwaway parse of the first ``max_line`` ``raw``
     lines (limit — T5), mask them *without* stripping the unknown-width
     timestamp, evolve full-line templates against the library, learn the
     content offset (the reference's EP2 step 2, scripts/loglab.py:151-162).
@@ -222,7 +220,7 @@ def det_timestamp(
     # checkpointed: the ordered limit reads all of raw_lines, and the
     # sample feeds two actions below
     head = mask(
-        raw_lines.orderBy("doc_id", "line_no").limit(max_line), content=raw
+        raw_lines.orderBy("doc_id", "line_no").limit(max_line), content="raw"
     ).localCheckpoint()
     evolved = evolve_library(spark, head, base_templates=templates)
     eids = {r["event_id"] for r in templates.select("event_id").collect()}
@@ -233,9 +231,9 @@ def det_timestamp(
     assigned = (
         match_similarity(head, evolved)
         .orderBy("doc_id", "line_no")
-        .select(raw, "event_template")
+        .select("raw", "event_template")
         .collect()
     )
-    sample = [(r[raw], r["event_template"]) for r in assigned]
+    sample = [(r["raw"], r["event_template"]) for r in assigned]
     offset, _ = learn_timestamp(sample, eids)
     return offset

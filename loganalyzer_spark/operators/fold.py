@@ -29,29 +29,24 @@ def _rstrip(c) -> F.Column:
     return F.regexp_replace(c, "[ \t\r\n]+$", "")
 
 
-def fold_lines(
-    lines: DataFrame,
-    raw: str = "raw",
-    doc: str = "doc_id",
-    order: str = "line_no",
-) -> DataFrame:
+def fold_lines(lines: DataFrame, raw: str = "raw") -> DataFrame:
     """Window + grouped ordered concat. Output: one row per primary line
-    (doc, fold_grp, line_no of primary, folded)."""
+    (doc_id, fold_grp, line_no of primary, folded)."""
     df = lines.withColumn(
         "_prim", (~F.col(raw).rlike(NESTED)).cast("int")
     )
     w = (
-        Window.partitionBy(doc)
-        .orderBy(order)
+        Window.partitionBy("doc_id")
+        .orderBy("line_no")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     df = df.withColumn("fold_grp", F.sum("_prim").over(w))
     return (
-        df.groupBy(doc, "fold_grp")
+        df.groupBy("doc_id", "fold_grp")
         .agg(
-            F.min(order).alias(order),
+            F.min("line_no").alias("line_no"),
             F.array_sort(
-                F.collect_list(F.struct(F.col(order).alias("o"), F.col(raw).alias("r")))
+                F.collect_list(F.struct(F.col("line_no").alias("o"), F.col(raw).alias("r")))
             ).alias("_parts"),
         )
         .withColumn(

@@ -73,17 +73,15 @@ def _cands_dim(templates: DataFrame, wildcard: bool) -> DataFrame:
     )
 
 
-def match_templates(
-    lines: DataFrame, templates: DataFrame, masked: str = "masked"
-) -> DataFrame:
-    """Assign event_id/event_template to every line.
+def match_templates(lines: DataFrame, templates: DataFrame) -> DataFrame:
+    """Assign event_id/event_template to every ``masked`` line.
 
     Adds: token_count, first_token, event_id, event_template, is_new.
     The two dimension joins are broadcast; match resolution is an array
     filter per row — the whole stage is shuffle-free.
     """
     keyed = with_sql(
-        with_sql(lines, {"_toks": f"split({masked}, ' ')"}),
+        with_sql(lines, {"_toks": "split(masked, ' ')"}),
         {"token_count": "size(_toks)", "first_token": "_toks[0]"},
     )
     joined = keyed.join(
@@ -95,25 +93,25 @@ def match_templates(
         with_sql(joined, {"_hit": _HIT}),
         {
             "is_new": "CAST(_hit IS NULL AS INT)",
-            "event_id": f"coalesce(_hit.event_id, substring(md5({masked}), 1, 8))",
-            "event_template": f"coalesce(_hit.event_template, {masked})",
+            "event_id": "coalesce(_hit.event_id, substring(md5(masked), 1, 8))",
+            "event_template": "coalesce(_hit.event_template, masked)",
         },
         drop=("cands", "wcands", "_hit", "_toks"),
     )
 
 
-def extract_params(df: DataFrame, masked: str = "masked") -> DataFrame:
+def extract_params(df: DataFrame) -> DataFrame:
     """D7: parameter extraction via zip_with — pure SQL, no UDF.
 
-    Reference: take content tokens at the template's '<*>' positions,
+    Reference: take ``masked`` tokens at the template's '<*>' positions,
     guarded by equal token counts (oldschool.py:100-108).
     """
     return df.withColumn(
         "params",
         F.when(
-            F.size(F.split("event_template", " ")) == F.size(F.split(masked, " ")),
+            F.size(F.split("event_template", " ")) == F.size(F.split("masked", " ")),
             F.expr(
-                f"filter(zip_with(split(event_template, ' '), split({masked}, ' '),"
+                "filter(zip_with(split(event_template, ' '), split(masked, ' '),"
                 " (t, c) -> struct(t as t, c as c)), x -> x.t = '<*>').c"
             ),
         ).otherwise(F.array().cast("array<string>")),
@@ -130,8 +128,7 @@ from pyspark.sql import types as T  # noqa: E402
 from loganalyzer_spark.patterns import PTN_SPEC_TOKEN  # noqa: E402
 
 
-def seq_dist(tmplt: list[str], log: list[str],
-             spec=PTN_SPEC_TOKEN) -> tuple[float, int]:
+def seq_dist(tmplt: list[str], log: list[str]) -> tuple[float, int]:
     """Token-wise similarity, faithful to drain.py:367-472:
 
     - first-token mismatch ⇒ reject;
@@ -175,7 +172,7 @@ def seq_dist(tmplt: list[str], log: list[str],
         else:
             stop = True
             break
-        for ptn in spec:
+        for ptn in PTN_SPEC_TOKEN:
             m1, m2 = ptn.fullmatch(t1), ptn.fullmatch(t2)
             if (m1 and m2 and t1 != t2) or (m1 and not m2) or (m2 and not m1):
                 stop = True
@@ -200,11 +197,10 @@ def _sim_threshold(tokens: list[str]) -> float:
     return 0.6 * (n - para) / n if n else 1.0
 
 
-def match_similarity(
-    lines: DataFrame, templates: DataFrame, masked: str = "masked"
-) -> DataFrame:
-    """Drain matching with full seq_dist semantics as a vectorized
-    pandas UDF over Arrow batches (SURVEY §2.12.2 ``best_template``).
+def match_similarity(lines: DataFrame, templates: DataFrame) -> DataFrame:
+    """Drain matching of the ``masked`` column with full seq_dist
+    semantics as a vectorized pandas UDF over Arrow batches (SURVEY
+    §2.12.2 ``best_template``).
 
     The template library is broadcast once as {token_count:
     [(tokens, sim_t, para, event_id, template)]}; each batch loops only
@@ -257,19 +253,19 @@ def match_similarity(
                 sims.append(0.0)
         return pd.DataFrame({"event_id": ids, "event_template": tms, "sim": sims})
 
-    hit = best(F.col(masked))
+    hit = best(F.col("masked"))
     return (
         lines.withColumn("_hit", hit)
         .withColumn("is_new", F.col("_hit.event_id").isNull().cast("int"))
         .withColumn(
             "event_id",
             F.coalesce(
-                F.col("_hit.event_id"), F.substring(F.md5(F.col(masked)), 1, 8)
+                F.col("_hit.event_id"), F.substring(F.md5(F.col("masked")), 1, 8)
             ),
         )
         .withColumn(
             "event_template",
-            F.coalesce(F.col("_hit.event_template"), F.col(masked)),
+            F.coalesce(F.col("_hit.event_template"), F.col("masked")),
         )
         .withColumn("match_sim", F.col("_hit.sim"))
         .drop("_hit")

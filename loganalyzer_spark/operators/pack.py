@@ -35,19 +35,15 @@ from loganalyzer_spark.operators.dedup import _hash60
 
 
 def pack_sequences(
-    docs: DataFrame,
-    key: str = "doc_id",
-    n_tok: str = "n_tok",
-    ctx_len: int = 2048,
-    shards: int = 64,
+    docs: DataFrame, ctx_len: int = 2048, shards: int = 64
 ) -> DataFrame:
     """Assign every doc its position in the packed token stream.
 
-    Input needs ``key`` (unique, orderable) and ``n_tok`` (>0 token
+    Input needs ``doc_id`` (unique, orderable) and ``n_tok`` (>0 token
     count; zero-token docs are filtered out — they occupy no stream
     positions). Output one row per doc:
 
-      (key, shard, n_tok, t_start, pack_first, pack_last, start_off)
+      (doc_id, shard, n_tok, t_start, pack_first, pack_last, start_off)
 
     where ``t_start`` is the doc's first token's offset in its shard's
     concatenated stream, ``pack_first``/``pack_last`` the contexts its
@@ -56,26 +52,26 @@ def pack_sequences(
     pack_first where the doc begins. Deterministic: shard is a pure
     hash of the key, order within a shard is the key's natural order.
     """
-    shard = F.pmod(_hash60(F.col(key).cast("string")), F.lit(shards))
+    shard = F.pmod(_hash60(F.col("doc_id").cast("string")), F.lit(shards))
     w = (
         Window.partitionBy("shard")
-        .orderBy(key)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = F.sum(n_tok).over(w)
-    t_start = (cum - F.col(n_tok)).alias("t_start")
+    cum = F.sum("n_tok").over(w)
+    t_start = (cum - F.col("n_tok")).alias("t_start")
     return (
-        docs.filter(F.col(n_tok) >= 1)
+        docs.filter(F.col("n_tok") >= 1)
         .withColumn("shard", shard)
         .select(
-            key,
+            "doc_id",
             "shard",
-            F.col(n_tok).cast("long").alias("n_tok"),
+            F.col("n_tok").cast("long").alias("n_tok"),
             t_start,
-            F.floor((cum - F.col(n_tok)) / ctx_len).cast("long").alias(
+            F.floor((cum - F.col("n_tok")) / ctx_len).cast("long").alias(
                 "pack_first"
             ),
             F.floor((cum - 1) / ctx_len).cast("long").alias("pack_last"),
-            ((cum - F.col(n_tok)) % ctx_len).cast("long").alias("start_off"),
+            ((cum - F.col("n_tok")) % ctx_len).cast("long").alias("start_off"),
         )
     )

@@ -151,9 +151,9 @@ def pages_to_lines(pages: DataFrame) -> DataFrame:
     )
 
 
-def wash(lines: DataFrame, raw: str = "raw") -> DataFrame:
-    """P1/P2/P3/P4/P5/P6/P9/P10 in one codegen stage; each regex runs
-    once per line.
+def wash(lines: DataFrame) -> DataFrame:
+    """P1/P2/P3/P4/P5/P6/P9/P10 in one codegen stage over ``raw``; each
+    regex runs once per line.
 
     The anchored timestamp regex runs once (regexp_extract of the whole
     matched prefix, ``_pfx``); flags, class label and the stripped
@@ -167,8 +167,8 @@ def wash(lines: DataFrame, raw: str = "raw") -> DataFrame:
     # prefix = "<ts> [abn: ][segsign: ][cNNN ]" or "" when no ts matches;
     # label markers can only occur inside the matched prefix, so
     # contains() on the prefix is exact.
-    stripped = f"substring({raw}, length(_pfx) + 1)"
-    df = _one_row_generate(lines, "_pfx", f"regexp_extract({raw}, {sql_str(_TS_ANCHOR)}, 0)")
+    stripped = "substring(raw, length(_pfx) + 1)"
+    df = _one_row_generate(lines, "_pfx", f"regexp_extract(raw, {sql_str(_TS_ANCHOR)}, 0)")
     # P3 empty purge FIRST, on the stripped line: clean/rsp preserve
     # emptiness both ways (clean needs a 'Word: ' lookahead, rsp needs
     # 'Response: ...'), so testing before them is equivalent to the
@@ -208,8 +208,8 @@ def mask_params_cm_udf(content: pd.Series) -> pd.Series:
     return s
 
 
-def mask_cm(lines: DataFrame, content: str = "content") -> DataFrame:
-    return lines.withColumn("masked", mask_params_cm_udf(F.col(content)))
+def mask_cm(lines: DataFrame) -> DataFrame:
+    return lines.withColumn("masked", mask_params_cm_udf(F.col("content")))
 
 
 def _mask_sql(c: str) -> str:
@@ -239,13 +239,13 @@ def mask(lines: DataFrame, content: str = "content") -> DataFrame:
     return with_sql(lines, {"masked": _mask_sql(content)})
 
 
-def sessionize(lines: DataFrame, part: str = "doc_id", order: str = "line_no") -> DataFrame:
-    """P10: running sum of boundary flags → session_id within a partition.
+def sessionize(lines: DataFrame) -> DataFrame:
+    """P10: running sum of boundary flags → session_id within a document.
 
     The reference derives session sizes with a sequential scan
     (preprocess_base.py:684-731); a window running-sum is the
     shuffle-minimal Spark equivalent (partitioned by document, so it
     scales — no global ordering).
     """
-    w = Window.partitionBy(part).orderBy(order).rowsBetween(Window.unboundedPreceding, 0)
+    w = Window.partitionBy("doc_id").orderBy("line_no").rowsBetween(Window.unboundedPreceding, 0)
     return lines.withColumn("session_id", F.sum("is_seg").over(w))

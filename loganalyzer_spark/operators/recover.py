@@ -34,13 +34,7 @@ HEADER_CARE = ("L", "C")  # extensions/cm/misc.py:35
 SPECIAL_ID = frozenset({"b9c1fdb1"})  # extensions/cm/misc.py:32
 
 
-def rcv_mess_pdf(
-    pdf: pd.DataFrame,
-    eid_lib: frozenset[str],
-    scan_range: int = SCAN_RANGE,
-    header_care: tuple[str, ...] = HEADER_CARE,
-    special_id: frozenset[str] = SPECIAL_ID,
-) -> pd.DataFrame:
+def rcv_mess_pdf(pdf: pd.DataFrame, eid_lib: frozenset[str]) -> pd.DataFrame:
     """The literal state machine over one ordered document partition.
 
     Faithful to parser.py:248-308; returns the surviving rows with the
@@ -57,14 +51,14 @@ def rcv_mess_pdf(
     recovered: list[str] = []
 
     for idx, (eido, temp) in enumerate(zip(eido_logs, temp_logs)):
-        care = bool(temp) and temp[0] in header_care
+        care = bool(temp) and temp[0] in HEADER_CARE
         if (eido != "0") or (not m1_found and not care):
             keep_idx.append(idx)
             recovered.append(temp)
             continue
 
         if m1_found:
-            if idx - m1_idx > scan_range:
+            if idx - m1_idx > SCAN_RANGE:
                 # m2 not found within range: abort stitching
                 keep_idx.append(idx)
                 recovered.append(temp)
@@ -85,7 +79,7 @@ def rcv_mess_pdf(
                 m1_idx = idx
                 keep_idx.append(idx)
                 recovered.append(temp_o2)
-                if eid_o2 in special_id:
+                if eid_o2 in SPECIAL_ID:
                     # case 2: drop one trailing space from the head
                     o1_head = o1_head[:-1]
                 break
@@ -102,13 +96,7 @@ def rcv_mess_pdf(
     return out
 
 
-def recover_messed_lines(
-    lines: DataFrame,
-    templates: DataFrame,
-    part: str = "doc_id",
-    scan_range: int = SCAN_RANGE,
-    header_care: tuple[str, ...] = HEADER_CARE,
-) -> DataFrame:
+def recover_messed_lines(lines: DataFrame, templates: DataFrame) -> DataFrame:
     """Distributed M5: applyInPandas per document, bounded lookahead.
 
     ``lines`` needs (doc_id, line_no, event_id_old, event_template);
@@ -125,10 +113,8 @@ def recover_messed_lines(
     )
 
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return rcv_mess_pdf(
-            pdf, bc.value, scan_range=scan_range, header_care=header_care
-        )
+        return rcv_mess_pdf(pdf, bc.value)
 
     # groupBy().applyInPandas shuffles on the key itself — no extra
     # repartition (that would be a second exchange of the same data).
-    return lines.groupBy(part).applyInPandas(_run, schema)
+    return lines.groupBy("doc_id").applyInPandas(_run, schema)

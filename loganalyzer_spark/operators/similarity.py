@@ -33,14 +33,9 @@ def _norm(a: str) -> F.Column:
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Brute-force cosine top-k: broadcast queries × corpus scan.
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Brute-force cosine top-k of ``embedding`` per ``vec_id``:
+    broadcast queries × corpus scan.
 
     Output: (query_id, neighbor_id, cosine, rank). Ties broken by
     neighbor id for determinism.
@@ -50,10 +45,10 @@ def cosine_topk(
     # N×Q times per side instead of once per row (the expensive-
     # producer-in-single-consumer-column rule applied across a join).
     q = queries.select(
-        F.col(key).alias("query_id"), F.col(vec).alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     ).withColumn("qn", _norm("qvec"))
     c = corpus.select(
-        F.col(key).alias("neighbor_id"), F.col(vec).alias("cvec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
     ).withColumn("cn", _norm("cvec"))
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -116,38 +111,34 @@ from collections.abc import Iterator  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
 
-def kmeans_centroids(
-    emb: DataFrame,
-    k: int = 16,
-    iters: int = 10,
-    sample_rows: int = 20_000,
-    vec: str = "embedding",
-    key: str = "vec_id",
-    seed: int = 42,
-) -> np.ndarray:
-    """Driver-side deterministic k-means on a bounded sample.
+def kmeans_centroids(emb: DataFrame, k: int = 16) -> np.ndarray:
+    """Driver-side deterministic k-means (10 iterations, seed 42) of the
+    ``embedding`` column on a bounded sample.
 
     The codebook is tiny (k × dim floats) and is broadcast for
-    assignment; training cost is bounded by ``sample_rows`` regardless
-    of corpus size — the standard IVF recipe (train on a sample,
-    assign everything). The sample is ``orderBy(key).limit(n)`` —
-    a bare ``limit`` is nondeterministic across partitionings, which
-    would make the codebook (and recall/cell skew) irreproducible.
-    At cluster scale prefer a key-range/hash-bucket predicate over the
-    global sort; at sample_rows ≤ 20k the TakeOrderedAndProject is
-    cheap (no full sort materializes).
+    assignment; training cost is bounded by the 20,000-row sample
+    regardless of corpus size — the standard IVF recipe (train on a
+    sample, assign everything). The sample is
+    ``orderBy("vec_id").limit(n)`` — a bare ``limit`` is
+    nondeterministic across partitionings, which would make the
+    codebook (and recall/cell skew) irreproducible. At cluster scale
+    prefer a key-range/hash-bucket predicate over the global sort; at
+    20k rows the TakeOrderedAndProject is cheap (no full sort
+    materializes).
     """
-    pdf = emb.select(key, vec).orderBy(key).limit(sample_rows).toPandas()
-    X = np.vstack(pdf[vec].to_numpy()).astype(np.float64)
+    pdf = (
+        emb.select("vec_id", "embedding").orderBy("vec_id").limit(20_000).toPandas()
+    )
+    X = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
     # Guard zero vectors like _cell_assign_udf does: one all-zero
     # embedding in the sample would otherwise turn its row NaN, poison
     # whichever centroid argmax sends it to, and freeze that cell.
     norms = np.linalg.norm(X, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     X = X / norms
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     cent = X[rng.choice(len(X), size=min(k, len(X)), replace=False)]
-    for _ in range(iters):
+    for _ in range(10):
         sims = X @ cent.T
         assign = sims.argmax(axis=1)
         for j in range(len(cent)):
@@ -181,13 +172,12 @@ def cosine_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    key: str = "vec_id",
-    vec: str = "embedding",
     n_cells: int = 16,
     nprobe: int = 2,
-    centroids: np.ndarray | None = None,
 ) -> DataFrame:
-    """IVF ANN: corpus vectors live in their nearest cell; each query
+    """IVF ANN over ``embedding`` per ``vec_id``: ``n_cells`` k-means
+    cells are trained on the corpus, corpus vectors live in their
+    nearest cell, and each query
     probes its ``nprobe`` nearest cells and exact-scores only those
     members. The cross join becomes an equi-join on cell id, cutting
     scored pairs by ~n_cells/nprobe; recall is tested (not assumed)
@@ -199,21 +189,20 @@ def cosine_topk_ivf(
     balance, with AQE skew-split as the backstop.
     """
     spark = corpus.sparkSession
-    if centroids is None:
-        centroids = kmeans_centroids(corpus, k=n_cells, vec=vec, key=key)
+    centroids = kmeans_centroids(corpus, k=n_cells)
     assign1 = _cell_assign_udf(spark, centroids, 1)
     assignp = _cell_assign_udf(spark, centroids, nprobe)
 
     c = corpus.select(
-        F.col(key).alias("neighbor_id"),
-        F.col(vec).alias("cvec"),
-        F.element_at(assign1(F.col(vec)), 1).alias("cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
+        F.element_at(assign1(F.col("embedding")), 1).alias("cell"),
     ).withColumn("cn", _norm("cvec"))
     q = (
         queries.select(
-            F.col(key).alias("query_id"),
-            F.col(vec).alias("qvec"),
-            assignp(F.col(vec)).alias("cells"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qvec"),
+            assignp(F.col("embedding")).alias("cells"),
         )
         .withColumn("qn", _norm("qvec"))  # before the explode: once per query
         .withColumn("cell", F.explode("cells"))

@@ -41,7 +41,6 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    right_on: str | None = None,
     left_ts: str = "ts",
     right_ts: str = "ts",
     payload: Sequence[str] = (),
@@ -71,7 +70,6 @@ def asof_join(
     degenerates into a nested-loop. Output columns: every left column,
     then ``prefix + right_ts`` and ``prefix + c`` for each payload c.
     """
-    right_on = right_on or on
     payload = list(payload)
     reserved = {"_k", "_ts", "_tag", "_tb", "_p", "_m"}
     clash = reserved & set(left.columns)
@@ -92,8 +90,8 @@ def asof_join(
     # NULL-key right rows can never be matched by SQL equality; drop
     # them BEFORE the union so the NULL window partition (partitionBy
     # groups NULLs together) carries no payload onto NULL-key left rows.
-    r = right.where(F.col(right_on).isNotNull()).select(
-        F.col(right_on).alias("_k"),
+    r = right.where(F.col(on).isNotNull()).select(
+        F.col(on).alias("_k"),
         F.col(right_ts).alias("_ts"),
         F.lit(0).alias("_tag"),
         F.col(tiebreak).alias("_tb"),

@@ -1,5 +1,6 @@
-"""Text-analysis operators for the documents corpus: token counting,
-quality scoring, language-ID heuristic, document fingerprinting.
+"""Text-analysis operators over the documents corpus's ``text`` column:
+token counting, quality scoring, language-ID heuristic, document
+fingerprinting.
 
 All pure column expressions (JVM-side, whole-stage codegen); the
 hashes are md5-derived so every operator has an exact DuckDB oracle.
@@ -20,26 +21,26 @@ STOPWORDS = {
 }
 
 
-def _tokens(text: str) -> F.Column:
-    return F.split(F.lower(F.col(text)), "\\s+")
+def _tokens() -> F.Column:
+    return F.split(F.lower(F.col("text")), "\\s+")
 
 
-def token_stats(docs: DataFrame, text: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Token counting: whitespace tokens plus a BPE-ish subword estimate
     (ceil(chars/4) is the common ~4-chars/token heuristic)."""
-    toks = _tokens(text)
+    toks = _tokens()
     return docs.withColumn("n_tokens", F.size(toks)).withColumn(
         "n_subwords",
-        F.ceil(F.length(F.col(text)).cast("double") / 4).cast("long"),
+        F.ceil(F.length(F.col("text")).cast("double") / 4).cast("long"),
     )
 
 
-def quality_score(docs: DataFrame, text: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Quality heuristics: length, punctuation ratio, stopword ratio,
     mean word length; score = weighted combination in [0, 1]-ish."""
-    toks = _tokens(text)
-    n_chars = F.length(F.col(text))
-    n_punct = n_chars - F.length(F.regexp_replace(text, "[\\.,;:!\\?]", ""))
+    toks = _tokens()
+    n_chars = F.length(F.col("text"))
+    n_punct = n_chars - F.length(F.regexp_replace("text", "[\\.,;:!\\?]", ""))
     sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     n_toks = F.size(toks)
@@ -71,11 +72,11 @@ def quality_score(docs: DataFrame, text: str = "text") -> DataFrame:
     return out.withColumn("quality", F.round(score, 6))
 
 
-def lang_id(docs: DataFrame, text: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-hit language heuristic: argmax over per-language hit
     counts, 'und' (undetermined) when all are zero. Ties break by
     language code order for determinism."""
-    toks = _tokens(text)
+    toks = _tokens()
     def contains(arr):
         return lambda t: F.array_contains(arr, t)
 
@@ -95,7 +96,7 @@ def lang_id(docs: DataFrame, text: str = "text") -> DataFrame:
     ).withColumn("lang_hits", best["hits"])
 
 
-def fingerprint(docs: DataFrame, text: str = "text", k: int = 4) -> DataFrame:
+def fingerprint(docs: DataFrame, k: int = 4) -> DataFrame:
     """Document fingerprint: min-hash of character k-gram window hashes
     over the normalized text (winnowing-lite / rolling-hash family).
 
@@ -114,7 +115,7 @@ def fingerprint(docs: DataFrame, text: str = "text", k: int = 4) -> DataFrame:
 
     nc = free_col(docs, "_norm")
     normed = docs.withColumn(
-        nc, F.regexp_replace(F.lower(F.col(text)), "[^a-z0-9]", "")
+        nc, F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", "")
     )
     grams = F.expr(
         f"CASE WHEN length(`{nc}`) < {k} THEN array(`{nc}`) "
@@ -133,7 +134,7 @@ def fingerprint(docs: DataFrame, text: str = "text", k: int = 4) -> DataFrame:
     )
 
 
-def repetition_stats(docs: DataFrame, text: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals, all per-doc column
     expressions (zero shuffle — no explode/groupBy per token):
 
@@ -158,7 +159,7 @@ def repetition_stats(docs: DataFrame, text: str = "text") -> DataFrame:
     from loganalyzer_spark.operators import free_col
 
     tc = free_col(docs, "_toks")
-    toked = docs.withColumn(tc, _tokens(text))
+    toked = docs.withColumn(tc, _tokens())
     toks = F.col(tc)
     n = F.size(toks)
     distinct_ratio = F.when(
@@ -211,21 +212,15 @@ def repetition_stats(docs: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def quality_filter(
-    docs: DataFrame,
-    text: str = "text",
-    min_toks: int = 10,
-    max_top_tok: float = 0.2,
-    max_dup_bigram: float = 0.1,
-    min_quality: float = 0.35,
-) -> DataFrame:
+def quality_filter(docs: DataFrame) -> DataFrame:
     """Gopher-style corpus filter: the composite keep/drop decision a
     training-data pipeline applies per document, with the FIRST failing
     rule as the drop reason (fixed rule order ⇒ deterministic).
 
-    Rules (in order): too_short (token floor) → repetitive (top-token
-    fraction) → dup_ngrams (duplicate-bigram fraction) → low_quality
-    (blended quality score). All predicates compare the ROUNDED signal
+    Rules (in order): too_short (fewer than 10 tokens) → repetitive
+    (top-token fraction above 0.2) → dup_ngrams (duplicate-bigram
+    fraction above 0.1) → low_quality (blended quality score below
+    0.35). All predicates compare the ROUNDED signal
     columns — the same values the output exposes — so the exact-hash
     oracle reproduces every boundary decision bit-for-bit.
 
@@ -233,12 +228,12 @@ def quality_filter(
     decision columns prune to nothing when only `keep` is consumed
     downstream (Catalyst column pruning).
     """
-    scored = repetition_stats(quality_score(docs, text), text)
+    scored = repetition_stats(quality_score(docs))
     reason = (
-        F.when(F.col("n_toks") < min_toks, F.lit("too_short"))
-        .when(F.col("top_tok_frac") > max_top_tok, F.lit("repetitive"))
-        .when(F.col("dup_bigram_frac") > max_dup_bigram, F.lit("dup_ngrams"))
-        .when(F.col("quality") < min_quality, F.lit("low_quality"))
+        F.when(F.col("n_toks") < 10, F.lit("too_short"))
+        .when(F.col("top_tok_frac") > 0.2, F.lit("repetitive"))
+        .when(F.col("dup_bigram_frac") > 0.1, F.lit("dup_ngrams"))
+        .when(F.col("quality") < 0.35, F.lit("low_quality"))
         .otherwise(F.lit("keep"))
     )
     return scored.withColumn("reason", reason).withColumn(

@@ -40,20 +40,20 @@ PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def redact_pii(df: DataFrame, text: str = "text", out: str = "redacted") -> DataFrame:
-    """Apply the PII chain; adds ``out`` (redacted text) and ``n_pii``.
+def redact_pii(df: DataFrame) -> DataFrame:
+    """Apply the PII chain to ``text``; adds ``redacted`` and ``n_pii``.
 
     ``n_pii`` counts matches of each pattern against the ORIGINAL text
     (not the partially-redacted intermediate) — overlapping categories
     may both count, which keeps the statistic a pure per-pattern scan
     and lets both engines compute it the same way.
     """
-    red = F.col(text)
+    red = F.col("text")
     n = F.lit(0).cast("long")
     for pat, rep in PII_PATTERNS:
         red = F.regexp_replace(red, pat, rep)
-        n = n + F.regexp_count(F.col(text), F.lit(pat))
-    return df.withColumn(out, red).withColumn("n_pii", n.cast("long"))
+        n = n + F.regexp_count(F.col("text"), F.lit(pat))
+    return df.withColumn("redacted", red).withColumn("n_pii", n.cast("long"))
 
 
 # URL canonicalization pieces (shared regexes; the oracle SQL in
@@ -63,8 +63,8 @@ _HOSTPORT_RE = "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)"
 _PATH_RE = "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)"
 
 
-def canonicalize_url(df: DataFrame, url: str = "url") -> DataFrame:
-    """Adds ``host`` and ``canon_url``.
+def canonicalize_url(df: DataFrame) -> DataFrame:
+    """Adds ``host`` and ``canon_url`` of ``url``.
 
     Canonical form: lowercase scheme and host, ``www.`` prefix and
     default ports (:80/:443) stripped, fragment dropped, trailing
@@ -72,7 +72,7 @@ def canonicalize_url(df: DataFrame, url: str = "url") -> DataFrame:
     (``utm_*``) removed and the rest sorted bytewise. Everything is a
     single projection — Catalyst keeps it inside one codegen stage.
     """
-    u1 = F.regexp_replace(F.col(url), "#.*$", "")
+    u1 = F.regexp_replace(F.col("url"), "#.*$", "")
     scheme = F.lower(F.regexp_extract(u1, _SCHEME_RE, 1))
     host = F.regexp_replace(
         F.regexp_replace(
@@ -84,7 +84,7 @@ def canonicalize_url(df: DataFrame, url: str = "url") -> DataFrame:
     path = F.regexp_replace(F.regexp_extract(u1, _PATH_RE, 1), "/+$", "")
     qcanon = F.expr(
         "array_join(array_sort(filter(split("
-        f"regexp_extract(regexp_replace({url}, '#.*$', ''), '\\\\?([^#]*)', 1),"
+        "regexp_extract(regexp_replace(url, '#.*$', ''), '\\\\?([^#]*)', 1),"
         " '&'), p -> p != '' AND p NOT RLIKE '^utm_')), '&')"
     )
     canon = F.concat(
@@ -97,7 +97,7 @@ def canonicalize_url(df: DataFrame, url: str = "url") -> DataFrame:
     return df.withColumn("host", host).withColumn("canon_url", canon)
 
 
-def host_stats(pages: DataFrame, text: str = "text") -> DataFrame:
+def host_stats(pages: DataFrame) -> DataFrame:
     """Per-host corpus rollup over canonicalized pages: page count,
     distinct canonical URLs, total text bytes. One partial-aggregable
     exchange; output cardinality = #hosts."""
@@ -107,15 +107,13 @@ def host_stats(pages: DataFrame, text: str = "text") -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_pages"),
             F.count_distinct(F.col("canon_url")).alias("n_urls"),
-            F.sum(F.length(F.col(text))).alias("total_chars"),
+            F.sum(F.length(F.col("text"))).alias("total_chars"),
         )
     )
 
 
-def word_ngrams(
-    df: DataFrame, n: int, text: str = "text", out: str = "grams"
-) -> DataFrame:
-    """Adds ``out``: the DISTINCT word n-grams of ``text`` as an array
+def word_ngrams(df: DataFrame, n: int) -> DataFrame:
+    """Adds ``grams``: the DISTINCT word n-grams of ``text`` as an array
     column. Pure transform/slice projection — no explode, no shuffle;
     the consumer decides whether to explode. Rows with fewer than ``n``
     words get an empty array.
@@ -126,7 +124,7 @@ def word_ngrams(
     from loganalyzer_spark.operators import free_col
 
     wc = free_col(df, "_w")
-    toked = df.withColumn(wc, F.split(F.col(text), " "))
+    toked = df.withColumn(wc, F.split(F.col("text"), " "))
     w = F.col(wc)
     grams = F.array_distinct(
         F.transform(
@@ -136,13 +134,11 @@ def word_ngrams(
     )
     empty = F.array().cast("array<string>")
     return toked.withColumn(
-        out, F.when(F.size(w) >= n, grams).otherwise(empty)
+        "grams", F.when(F.size(w) >= n, grams).otherwise(empty)
     ).drop(wc)
 
 
-def decontaminate(
-    corpus: DataFrame, benchmark: DataFrame, n: int = 13, text: str = "text"
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: int = 13) -> DataFrame:
     """Benchmark-overlap decontamination (the GPT-3/PaLM 13-gram rule):
     flag every corpus doc sharing at least one word n-gram with the
     benchmark/eval set. Returns (doc_id, n_grams, n_hits) for
@@ -157,11 +153,11 @@ def decontaminate(
     exchange carries one row per *contaminated* doc.
     """
     bench = (
-        word_ngrams(benchmark, n, text)
+        word_ngrams(benchmark, n)
         .select(F.explode("grams").alias("g"))
         .distinct()
     )
-    grams = word_ngrams(corpus, n, text).select(
+    grams = word_ngrams(corpus, n).select(
         "doc_id",
         F.size("grams").cast("long").alias("n_grams"),
         F.explode("grams").alias("g"),
@@ -199,11 +195,7 @@ def latest_snapshot(
     return agg.select(*cols)
 
 
-def lm_perplexity(
-    corpus: DataFrame,
-    reference: DataFrame,
-    text: str = "text",
-) -> DataFrame:
+def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
     """CCNet-style LM quality scoring (Wenzek et al. 2020): score every
     corpus doc by bigram-LM perplexity under a model trained on a
     trusted reference slice, then bucket into head/middle/tail.
@@ -238,7 +230,7 @@ def lm_perplexity(
     quality; the LM itself is the public CCNet recipe, not a reference
     port.
     """
-    w = F.split(F.col(text), " ")
+    w = F.split(F.col("text"), " ")
     bigrams = F.when(
         F.size(w) >= 2,
         F.transform(
@@ -305,8 +297,6 @@ _DSIR_CACHE: list = []
 
 def dsir_weights(
     docs: DataFrame,
-    is_target: str = "is_target",
-    text: str = "text",
     buckets: int = 1024,
     keep_quantile: float = 0.75,
 ) -> DataFrame:
@@ -314,11 +304,12 @@ def dsir_weights(
     (Xie et al. 2023, "Data Selection for Language Models via
     Importance Resampling").
 
-    Features are word unigrams + bigrams WITH multiplicity, hashed into
-    ``buckets`` buckets. The target distribution p is estimated from
-    rows where ``is_target`` is true, the raw distribution q from the
-    whole input (the target rows are part of the corpus); both are
-    add-one smoothed over the bucket space. Per document:
+    Features are the word unigrams + bigrams of ``text`` WITH
+    multiplicity, hashed into ``buckets`` buckets. The target
+    distribution p is estimated from rows where ``is_target`` is true,
+    the raw distribution q from the whole input (the target rows are
+    part of the corpus); both are add-one smoothed over the bucket
+    space. Per document:
 
         logw = sum over gram occurrences of
                ln((tgt_b + 1)/(TGT + B)) - ln((raw_b + 1)/(RAW + B))
@@ -390,8 +381,8 @@ def dsir_weights(
     # textstats.fingerprint).
     toked = docs.select(
         "doc_id",
-        F.col(is_target).alias("_tgt"),
-        F.split(F.col(text), " ").alias("_w"),
+        F.col("is_target").alias("_tgt"),
+        F.split(F.col("text"), " ").alias("_w"),
     )
     w = F.col("_w")
     bi = F.when(
@@ -566,29 +557,20 @@ def _nth_key(df, r: int, n_range: int):
         local.unpersist()
 
 
-def c4_clean(
-    lines: DataFrame,
-    doc: str = "doc_id",
-    line_no: str = "line_no",
-    line: str = "line",
-    min_words: int = 3,
-    min_kept_lines: int = 5,
-    line_ban: tuple = ("javascript",),
-    page_ban: tuple = ("lorem ipsum", "{"),
-) -> DataFrame:
+def c4_clean(lines: DataFrame, min_kept_lines: int = 5) -> DataFrame:
     """C4 cleaning + global keep-first line dedup (Raffel et al. 2020
     §2.2, "Exploring the Limits of Transfer Learning…" — the Colossal
     Clean Crawled Corpus recipe).
 
-    Input is one row per page line ``(doc, line_no, line)``. Applied in
-    C4's order:
+    Input is one row per page line ``(doc_id, line_no, line)``. Applied
+    in C4's order:
 
-    1. LINE filters — keep a line iff it is non-blank, has at least
-       ``min_words`` whitespace words, ends in terminal punctuation
-       (``.``, ``!``, ``?`` or a closing double quote) and contains no
-       ``line_ban`` word (C4: "javascript"), case-insensitive.
-    2. PAGE filters — drop a page if any ORIGINAL line contains a
-       ``page_ban`` string (C4: "lorem ipsum", "{"), or if fewer than
+    1. LINE filters — keep a line iff it is non-blank, has at least 3
+       whitespace words, ends in terminal punctuation (``.``, ``!``,
+       ``?`` or a closing double quote) and does not contain
+       "javascript", case-insensitive.
+    2. PAGE filters — drop a page if any ORIGINAL line contains
+       "lorem ipsum" or "{" (case-insensitive), or if fewer than
        ``min_kept_lines`` lines survived step 1 (C4's "fewer than 5
        sentences" rule; here each kept line ends in terminal
        punctuation, so kept lines ARE the sentence count).
@@ -596,11 +578,11 @@ def c4_clean(
        three-sentence spans; this engine's pages are line-granular, so
        the unit is one line — the same granularity the reference's
        duplicate-line checker uses, misc_tools.py:35-43). First
-       occurrence = lexicographic min of (doc, line_no). Lines from
+       occurrence = lexicographic min of (doc_id, line_no). Lines from
        dropped pages do NOT participate (C4 dedups the cleaned corpus).
 
     Output: one row per input page —
-    (doc, n_lines, n_kept, keep_page, n_unique, clean_text) where
+    (doc_id, n_lines, n_kept, keep_page, n_unique, clean_text) where
     n_unique / clean_text cover the dedup survivors (0 / '' for dropped
     pages) and clean_text is the newline-join in line order.
 
@@ -630,27 +612,24 @@ def c4_clean(
     """
     from loganalyzer_spark.operators.dedup import _hash60
 
-    l = F.col(line)
+    l = F.col("line")
     words = F.size(F.split(F.trim(l), r"\s+"))
     keep_line = (
         (F.length(F.trim(l)) > 0)
-        & (words >= min_words)
+        & (words >= 3)
         & l.rlike('[.!?"]$')
+        & (F.instr(F.lower(l), "javascript") == 0)
     )
-    for b in line_ban:
-        keep_line = keep_line & (F.instr(F.lower(l), b.lower()) == 0)
-    ban = F.lit(False)
-    for b in page_ban:
-        ban = ban | (F.instr(F.lower(l), b.lower()) > 0)
+    ban = (F.instr(F.lower(l), "lorem ipsum") > 0) | (F.instr(F.lower(l), "{") > 0)
 
     per_doc = (
-        lines.groupBy(doc)
+        lines.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(keep_line.cast("long")).alias("n_kept"),
             F.max(ban).alias("_ban"),
             F.collect_list(
-                F.when(keep_line, F.struct(line_no, line))
+                F.when(keep_line, F.struct("line_no", "line"))
             ).alias("_kept"),
         )
         .withColumn(
@@ -661,31 +640,27 @@ def c4_clean(
 
     kept = (
         per_doc.filter(F.col("keep_page"))
-        .select(doc, F.explode("_kept").alias("_kl"))
-        .select(
-            doc,
-            F.col(f"_kl.{line_no}").alias(line_no),
-            F.col(f"_kl.{line}").alias(line),
-        )
+        .select("doc_id", F.explode("_kept").alias("_kl"))
+        .select("doc_id", "_kl.line_no", "_kl.line")
         .withColumn("_lh", _hash60(l))
     )
     surv = (
         kept.groupBy("_lh")
-        .agg(F.min(F.struct(doc, line_no, line)).alias("_first"))
+        .agg(F.min(F.struct("doc_id", "line_no", "line")).alias("_first"))
         .select("_first.*")
     )
-    rollup = surv.groupBy(doc).agg(
+    rollup = surv.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_unique"),
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct(line_no, line))),
-                lambda s: s[line],
+                F.array_sort(F.collect_list(F.struct("line_no", "line"))),
+                lambda s: s["line"],
             ),
             "\n",
         ).alias("clean_text"),
     )
-    return per_doc.drop("_kept", "_ban").join(rollup, doc, "left").select(
-        doc,
+    return per_doc.drop("_kept", "_ban").join(rollup, "doc_id", "left").select(
+        "doc_id",
         "n_lines",
         "n_kept",
         "keep_page",

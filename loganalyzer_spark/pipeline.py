@@ -18,24 +18,17 @@ from loganalyzer_spark.operators import match as match_ops
 from loganalyzer_spark.operators import parse as parse_ops
 
 
-def routed_lines(
-    spark: SparkSession,
-    lines: DataFrame,
-    templates: DataFrame | None = None,
-    kb: DataFrame | None = None,
-) -> DataFrame:
+def routed_lines(spark: SparkSession, lines: DataFrame) -> DataFrame:
     """raw lines → washed, masked, matched, enriched, routed."""
-    templates = templates if templates is not None else datagen.templates_df(spark)
-    kb = kb if kb is not None else datagen.kb_df(spark)
     df = parse_ops.wash(lines)
     df = parse_ops.mask(df)
-    df = match_ops.match_templates(df, templates)
-    df = enrich_ops.enrich_kb(df, kb)
+    df = match_ops.match_templates(df, datagen.templates_df(spark))
+    df = enrich_ops.enrich_kb(df, datagen.kb_df(spark))
     return enrich_ops.route(df)
 
 
-def routed_from_pages(spark: SparkSession, pages: DataFrame, **kw) -> DataFrame:
-    return routed_lines(spark, parse_ops.pages_to_lines(pages), **kw)
+def routed_from_pages(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    return routed_lines(spark, parse_ops.pages_to_lines(pages))
 
 
 def sink_aggregates(routed: DataFrame, bucket: str = "1 minute") -> DataFrame:

@@ -277,7 +277,7 @@ def new_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duckdb_cellmap_values(sim_t_m: float = 0.7) -> str:
+def _duckdb_cellmap_values() -> str:
     """Inline (event_id, cell_id) VALUES dim from the D5 LCS-merge
     kernel over the static template library — same shared-dim
     convention as datagen.duckdb_templates_values (the kernel itself is
@@ -285,11 +285,8 @@ def _duckdb_cellmap_values(sim_t_m: float = 0.7) -> str:
     corpus-side remap + aggregate)."""
     from loganalyzer_spark.operators.evolve import lcs_merge_cells
 
-    mapping = lcs_merge_cells([r[1] for r in datagen.template_rows()], sim_t_m)
-    rows = ",\n      ".join(
-        f"('{k}', '{v}')" for k, v in sorted(mapping.items())
-    )
-    return f"(VALUES\n      {rows}\n    ) AS cm(event_id, cell_id)"
+    mapping = lcs_merge_cells([r[1] for r in datagen.template_rows()], 0.7)
+    return datagen.duckdb_values(sorted(mapping.items()), "cm(event_id, cell_id)")
 
 
 @register(
@@ -2287,21 +2284,22 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_near_dup_oracle(
-    dim: int = 64, threshold: float = 0.35, bucket_cap: int = 256
-) -> str:
+def _lsh_near_dup_oracle() -> str:
     """DuckDB rederivation of the banded hyperplane-LSH path itself —
     same deterministic planes (similarity.lsh_planes), same
     threshold-derived banding (dedup.lsh_band_plan), same per-bucket
     cap (≤ cap all-pairs, oversized buckets star-to-min — the
     mass-duplicate blowup guard), same rounded-cosine verify — so the
     oracle checks the SCALE path's output exactly at ANY sf, including
-    where the cap triggers, not merely a brute-force superset of it."""
+    where the cap triggers, not merely a brute-force superset of it.
+    Fixed to the registered query: 64-dim embeddings, threshold 0.35,
+    bucket cap 256."""
     from loganalyzer_spark.operators.dedup import lsh_band_plan
 
+    threshold, bucket_cap = 0.35, 256
     nbands, width = lsh_band_plan(threshold)
     nbits = nbands * width
-    planes = SIM.lsh_planes(dim, nbits)
+    planes = SIM.lsh_planes(64, nbits)
     terms = []
     for j, p in enumerate(planes):
         lit = "[" + ", ".join(repr(x) for x in p) + "]"

@@ -86,41 +86,37 @@ def make_logreg_scorer(spark: SparkSession, w: np.ndarray, b: float):
     return apply
 
 
+# Row cap of the collected training slice.
+MAX_TRAIN_ROWS = 100_000
+
+
 def _training_slice(
-    vectors: DataFrame,
-    label_col: str,
-    vec_col: str,
-    max_rows: int | None = None,
+    vectors: DataFrame, max_rows: int | None = None
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Collect the training slice to the driver: (X, y, doc_id).
+    """Collect the ``vec``/``label`` training slice to the driver:
+    (X, y, doc_id).
 
     Ordered on ``doc_id`` before ``limit`` — an unordered limit over a
     join output picks partition-order rows, which vary with AQE/shuffle
     layout, and the hash-gated outputs cannot tolerate a run-dependent
     training set."""
-    df = vectors.select("doc_id", vec_col, label_col).orderBy("doc_id")
+    df = vectors.select("doc_id", "vec", "label").orderBy("doc_id")
     if max_rows is not None:
         df = df.limit(max_rows)
     pdf = df.toPandas()
     if pdf.empty:
         raise ValueError("the training slice is empty: no documents to train on")
-    X = np.vstack(pdf[vec_col].to_numpy())
-    return X, pdf[label_col].to_numpy(), pdf["doc_id"].to_numpy()
+    X = np.vstack(pdf["vec"].to_numpy())
+    return X, pdf["label"].to_numpy(), pdf["doc_id"].to_numpy()
 
 
-def train_and_score(
-    spark: SparkSession,
-    vectors: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "vec",
-    max_train_rows: int = 100_000,
-) -> DataFrame:
+def train_and_score(spark: SparkSession, vectors: DataFrame) -> DataFrame:
     """Collect the (small) ECM, train LR on the driver, score the full
     DataFrame distributed. Adds ``score`` and ``pred`` columns."""
-    X, y, _ = _training_slice(vectors, label_col, vec_col, max_train_rows)
+    X, y, _ = _training_slice(vectors, MAX_TRAIN_ROWS)
     w, b = train_logreg(X, y)
     scorer = make_logreg_scorer(spark, w, b)
-    out = scorer(vectors, vec_col, "score")
+    out = scorer(vectors, "vec", "score")
     return out.withColumn("pred", (F.col("score") > 0.5).cast("int"))
 
 
@@ -178,54 +174,35 @@ class IncrementalLogReg:
         return m
 
 
-def incremental_train_and_score(
-    spark: SparkSession,
-    vectors: DataFrame,
-    batch_col: str = "batch",
-    label_col: str = "label",
-    vec_col: str = "vec",
-    epochs: int = 20,
-    lr: float = 0.05,
-    model: IncrementalLogReg | None = None,
-) -> DataFrame:
+def incremental_train_and_score(spark: SparkSession, vectors: DataFrame) -> DataFrame:
     """Loglizer incremental training over windowed ECM batches
     (loglizer.py:429-471), scored back distributed.
 
-    Batches are collected per distinct ``batch_col`` value in ascending
+    Batches are collected per distinct ``batch`` value in ascending
     order (each one the "new monitoring window" of an inc_updt
-    session), ``partial_fit`` runs once per batch per epoch —
-    deterministic, so the oracle-free rows-only gate still sees stable
-    values. Pass ``model`` to resume from persisted state.
+    session), ``partial_fit`` runs once per batch per epoch (20 epochs,
+    learning rate 0.05) — deterministic, so the oracle-free rows-only
+    gate still sees stable values.
     """
     batches = sorted(
-        r[0] for r in vectors.select(batch_col).distinct().collect()
+        r[0] for r in vectors.select("batch").distinct().collect()
     )
-    first = vectors.select(F.size(vec_col)).first()
+    first = vectors.select(F.size("vec")).first()
     n_features = int(first[0]) if first else 0
-    m = model or IncrementalLogReg(n_features, lr)
+    m = IncrementalLogReg(n_features)
     collected = []
     for bval in batches:
-        X, y, _ = _training_slice(
-            vectors.filter(F.col(batch_col) == bval), label_col, vec_col
-        )
+        X, y, _ = _training_slice(vectors.filter(F.col("batch") == bval))
         collected.append((X, y))
-    for _ in range(epochs):
+    for _ in range(20):
         for X, y in collected:
             m.partial_fit(X, y)
     scorer = make_logreg_scorer(spark, m.w, m.b)
-    out = scorer(vectors, vec_col, "score")
+    out = scorer(vectors, "vec", "score")
     return out.withColumn("pred", (F.col("score") > 0.5).cast("int"))
 
 
-def kfold_validate(
-    spark: SparkSession,
-    vectors: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "vec",
-    k: int = 5,
-    iters: int = 200,
-    lr: float = 0.1,
-) -> DataFrame:
+def kfold_validate(spark: SparkSession, vectors: DataFrame, k: int = 5) -> DataFrame:
     """K-fold cross-validation parity (loglab.py:662-671: KFold +
     ``cross_val_score(model, ..., scoring='accuracy')`` over the
     monolith ECM, then a full fit for deployment).
@@ -244,7 +221,7 @@ def kfold_validate(
     a summary row fold = -1 with the mean accuracy (the reference's
     ``scores.mean()`` print).
     """
-    X, y, doc_id = _training_slice(vectors, label_col, vec_col)
+    X, y, doc_id = _training_slice(vectors)
     folds = doc_id % k
     rows = []
     accs = []
@@ -252,7 +229,7 @@ def kfold_validate(
         test = folds == f
         if not test.any() or test.all():
             continue
-        w, b = train_logreg(X[~test], y[~test], iters=iters, lr=lr)
+        w, b = train_logreg(X[~test], y[~test])
         pred = (X[test] @ w + b) > 0
         acc = float((pred == (y[test] > 0.5)).mean())
         accs.append(acc)
@@ -276,7 +253,6 @@ def train_cart(
     X: np.ndarray,
     y: np.ndarray,
     max_depth: int = 8,
-    min_samples_split: int = 2,
 ) -> tuple:
     """CART decision tree, gini criterion (the deterministic subset of
     ``DecisionTreeClassifier(criterion='gini', splitter='best')``,
@@ -286,6 +262,9 @@ def train_cart(
     sample-weighted child gini wins, ties broken toward the lowest
     feature index then lowest threshold (a fixed scan order — sklearn
     breaks ties by RNG, which a hash-checked gate cannot tolerate).
+
+    A node with fewer than 2 samples is a leaf (sklearn's
+    ``min_samples_split=2``).
 
     ``max_depth`` defaults to 8 (vs the reference's None): the tree is
     compiled to nested CASE WHEN, and janino's 64 KB codegen method
@@ -320,7 +299,7 @@ def train_cart(
         p1 = float(ys.mean()) if len(ys) else 0.0
         if (
             depth >= max_depth
-            or len(idx) < min_samples_split
+            or len(idx) < 2
             or p1 in (0.0, 1.0)
         ):
             return ("leaf", p1)
@@ -398,7 +377,6 @@ def train_random_forest(
     y: np.ndarray,
     n_trees: int = 10,
     max_depth: int = 6,
-    seed: int = 88172645463325252,
 ) -> list[tuple[list[int], tuple]]:
     """Deterministic random forest (RandomForestClassifier's recipe,
     loglizer.py:461: bootstrap rows + sqrt-feature subspace per tree,
@@ -416,6 +394,7 @@ def train_random_forest(
     y = np.asarray(y, dtype=np.float64)
     n, d = X.shape
     m = max(1, int(np.sqrt(d)))
+    seed = 88172645463325252
     forest = []
     for t in range(n_trees):
         rows = np.sort(_lcg_indices(n, n, seed + 2 * t + 1))
@@ -458,15 +437,7 @@ def forest_to_expr(forest: list, vec_col: str) -> F.Column:
     return F.round(total / F.lit(float(len(forest))), 6)
 
 
-def train_dt_and_score(
-    spark: SparkSession,
-    vectors: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "vec",
-    max_train_rows: int = 100_000,
-    max_depth: int = 8,
-    n_trees: int = 10,
-) -> DataFrame:
+def train_dt_and_score(spark: SparkSession, vectors: DataFrame) -> DataFrame:
     """Collect the (small) ECM, train the CART and the forest on the
     driver (loglizer.py:450-461 DT/RFC rows), score the full DataFrame
     through compiled CASE WHEN expressions — zero Python scoring.
@@ -477,11 +448,11 @@ def train_dt_and_score(
     The ordered training slice matters doubly here: the forest's LCG
     bootstrap indexes rows by collected POSITION, so an unordered
     collect would train a different forest per run."""
-    X, y, _ = _training_slice(vectors, label_col, vec_col, max_train_rows)
-    tree = train_cart(X, y, max_depth=max_depth)
-    forest = train_random_forest(X, y, n_trees=n_trees)
-    dt = cart_to_expr(tree, vec_col)
-    rfc = forest_to_expr(forest, vec_col)
+    X, y, _ = _training_slice(vectors, MAX_TRAIN_ROWS)
+    tree = train_cart(X, y)
+    forest = train_random_forest(X, y)
+    dt = cart_to_expr(tree, "vec")
+    rfc = forest_to_expr(forest, "vec")
     return (
         vectors.withColumn("dt_score", dt)
         .withColumn("dt_pred", (F.col("dt_score") > 0.5).cast("int"))
@@ -501,16 +472,17 @@ def train_dt_and_score(
 # ---------------------------------------------------------------------------
 
 def train_gnb(
-    X: np.ndarray, y: np.ndarray, var_smoothing: float = 1e-9
+    X: np.ndarray, y: np.ndarray
 ) -> tuple[list[float], list[float], list[float], list[float], float]:
     """GaussianNB.fit parity (loglizer.py:431-432): per-class feature
     mean/variance + class-1 prior, variances smoothed by
-    ``var_smoothing * max feature variance`` (sklearn's exact rule).
+    ``var_smoothing * max feature variance`` with sklearn's default
+    ``var_smoothing=1e-9`` (sklearn's exact rule).
     Closed-form — deterministic by construction. Returns
     (mu0, var0, mu1, var1, p1) in gnb_coefficients' layout."""
     X = np.asarray(X, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    eps = var_smoothing * float(np.var(X, axis=0).max())
+    eps = 1e-9 * float(np.var(X, axis=0).max())
     stats = []
     for cls in (0.0, 1.0):
         Xi = X[y == cls]
@@ -525,10 +497,9 @@ def _sgd_margin_train(
     y: np.ndarray,
     margin: float,
     iters: int = 1000,
-    lr: float = 0.01,
 ) -> tuple[np.ndarray, float]:
     """Shared SGD core for the margin family: per-sample update
-    ``w += lr·t·x`` whenever ``t·(w·x+b) <= margin`` with t = ±1.
+    ``w += lr·t·x`` (lr = 0.01) whenever ``t·(w·x+b) <= margin`` with t = ±1.
     margin=0 is the perceptron rule (SGDClassifier(loss='perceptron'),
     loglizer.py:434-435); margin=1 is the hinge subgradient
     (loss='hinge' / LinearSVC's loss, loglizer.py:436-437,456-459 —
@@ -540,6 +511,7 @@ def _sgd_margin_train(
     t = 2.0 * y - 1.0
     w = np.zeros(X.shape[1], dtype=np.float64)
     b = 0.0
+    lr = 0.01
     for _ in range(iters):
         updated = False
         for xi, ti in zip(X, t):
@@ -553,30 +525,24 @@ def _sgd_margin_train(
 
 
 def train_perceptron(
-    X: np.ndarray, y: np.ndarray, iters: int = 1000, lr: float = 0.01
+    X: np.ndarray, y: np.ndarray, iters: int = 1000
 ) -> tuple[np.ndarray, float]:
-    return _sgd_margin_train(X, y, margin=0.0, iters=iters, lr=lr)
+    return _sgd_margin_train(X, y, margin=0.0, iters=iters)
 
 
 def train_linear_svm(
-    X: np.ndarray, y: np.ndarray, iters: int = 100, lr: float = 0.01
+    X: np.ndarray, y: np.ndarray, iters: int = 100
 ) -> tuple[np.ndarray, float]:
-    return _sgd_margin_train(X, y, margin=1.0, iters=iters, lr=lr)
+    return _sgd_margin_train(X, y, margin=1.0, iters=iters)
 
 
-def train_zoo_and_score(
-    spark: SparkSession,
-    vectors: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "vec",
-    max_train_rows: int = 100_000,
-) -> DataFrame:
+def train_zoo_and_score(spark: SparkSession, vectors: DataFrame) -> DataFrame:
     """Train the GNB / PTN / SVM rows of the zoo on the collected ECM
     and score the corpus through the existing JVM kernels — zero Python
     in the scoring path (gnb log-odds via gnb_score_expr, both margins
     via svm_margin_expr). Adds gnb_logodds/gnb_pred, ptn_margin/
     ptn_pred, svm_margin/svm_pred."""
-    X, y, _ = _training_slice(vectors, label_col, vec_col, max_train_rows)
+    X, y, _ = _training_slice(vectors, MAX_TRAIN_ROWS)
     mu0, var0, mu1, var1, p1 = train_gnb(X, y)
     # degenerate priors (single-class slice) have no log-odds; the
     # reference would raise inside GaussianNB the same way
@@ -594,17 +560,17 @@ def train_zoo_and_score(
     w_s, b_s = train_linear_svm(X, y)
     out = (
         vectors.withColumn(
-            "gnb_logodds", F.round(gnb_score_expr(vec_col, a, bq, c0), 6)
+            "gnb_logodds", F.round(gnb_score_expr("vec", a, bq, c0), 6)
         )
         .withColumn("gnb_pred", (F.col("gnb_logodds") > 0).cast("int"))
         .withColumn(
             "ptn_margin",
-            F.round(svm_margin_expr(vec_col, w_p.tolist(), b_p), 6),
+            F.round(svm_margin_expr("vec", w_p.tolist(), b_p), 6),
         )
         .withColumn("ptn_pred", (F.col("ptn_margin") > 0).cast("int"))
         .withColumn(
             "svm_margin",
-            F.round(svm_margin_expr(vec_col, w_s.tolist(), b_s), 6),
+            F.round(svm_margin_expr("vec", w_s.tolist(), b_s), 6),
         )
         .withColumn("svm_pred", (F.col("svm_margin") > 0).cast("int"))
     )

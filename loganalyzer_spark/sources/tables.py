@@ -125,10 +125,9 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Co-located fact layout: ``bucketBy`` the join/aggregate key (+
-    optional ``sortBy``) so repeated fact-fact joins and keyed
+    """Co-located fact layout, overwriting ``table``: ``bucketBy`` the
+    join/aggregate key (+ optional ``sortBy``) so repeated fact-fact joins and keyed
     aggregations on that key plan with ZERO exchange — each bucket pair
     joins map-side. At 100 TB this converts the biggest recurring
     shuffle (fact-fact joins on doc_id/url) into a scan-local merge; on
@@ -139,7 +138,7 @@ def write_bucketed(
     can't record bucket metadata. Evidence:
     tests/test_operators.py::test_bucketed_fact_fact_join_no_exchange.
     """
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
+    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.format("parquet").saveAsTable(table)

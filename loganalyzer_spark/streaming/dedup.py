@@ -28,10 +28,10 @@ def streaming_dedup(
     source_dir: str,
     schema,
     keys: Sequence[str] = ("doc_id", "line_no"),
-    event_time: str = "warc_ts",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """readStream(parquet) → watermark → dropDuplicatesWithinWatermark.
+    """readStream(parquet) → ``warc_ts`` watermark →
+    dropDuplicatesWithinWatermark.
 
     Emits each key's FIRST arrival (append mode); re-deliveries of the
     same key arriving within ``watermark`` of the stream's max event
@@ -41,7 +41,7 @@ def streaming_dedup(
     redelivery window of the upstream queue).
     """
     src = spark.readStream.schema(schema).parquet(source_dir)
-    return src.withWatermark(event_time, watermark).dropDuplicatesWithinWatermark(
+    return src.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
         list(keys)
     )
 

@@ -67,14 +67,12 @@ def _evolve_bucket(
     )
 
 
-def streaming_template_evolution(
-    masked_stream: DataFrame, masked: str = "masked"
-) -> DataFrame:
+def streaming_template_evolution(masked_stream: DataFrame) -> DataFrame:
     """streaming masked lines → per-token-count bucket state →
     the bucket's evolved template list each micro-batch (update mode).
     """
     return (
-        masked_stream.select(F.col(masked).alias("masked"))
+        masked_stream.select("masked")
         .withColumn("token_count", F.size(F.split("masked", " ")))
         .groupBy("token_count")
         .applyInPandasWithState(

@@ -17,10 +17,8 @@ verifier applies the Jaccard check; a doc colliding on several bands
 emits once per band, distinct() is the consumer's).
 
 State is ONE long per non-empty band bucket — the minimum any
-LSH index must remember — and can be bounded with a processing-time
-timeout (``ttl``): buckets idle longer than the TTL are evicted, so a
-re-arrival after the horizon re-claims the bucket instead of flagging
-(the same bounded-state trade-off as streaming_dedup's watermark).
+LSH index must remember — kept for the life of the query (no timeout),
+so a re-arrival is flagged however late it comes.
 
 Reference parity: the reference is batch-only (SURVEY §2.11); this
 extends its template-library "have I seen this before" semantics to the
@@ -33,7 +31,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -50,14 +47,8 @@ OUTPUT_SCHEMA = T.StructType(
 
 
 def _bucket_update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    if ttl_ms is not None and state.hasTimedOut:
-        state.remove()
-        return
     if state.exists:
         first = int(state.get[0])
     else:
@@ -80,9 +71,6 @@ def _bucket_update(
             docs.append(d)
             dups.append(first)
     state.update((first,))
-    if ttl_ms is not None:
-        # must follow update(): a timeout can only be set on live state
-        state.setTimeoutDuration(ttl_ms)
     if docs:
         yield pd.DataFrame(
             {
@@ -93,41 +81,16 @@ def _bucket_update(
         )
 
 
-def streaming_near_dup(
-    docs_stream: DataFrame,
-    key: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """streaming docs → banded MinHash → keyed band-bucket state →
-    (doc_id, dup_of, band_id) collision candidates.
-
-    ``ttl_ms`` None keeps state forever (deterministic tests); set it in
-    production to evict idle buckets (bounded state)."""
-    sigs = minhash_signatures(
-        docs_stream.select(F.col(key).alias("doc_id"), text),
-        "doc_id",
-        text,
-        n,
-        num_hashes,
-    )
-    banded = minhash_bands(sigs, "doc_id", bands)
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def update(key, pdfs, state):
-        return _bucket_update(key, pdfs, state, ttl_ms)
-
+def streaming_near_dup(docs_stream: DataFrame) -> DataFrame:
+    """streaming (doc_id, text) docs → banded MinHash (3-shingles, 16
+    hashes, 4 bands) → keyed band-bucket state → (doc_id, dup_of,
+    band_id) collision candidates."""
+    sigs = minhash_signatures(docs_stream.select("doc_id", "text"))
+    banded = minhash_bands(sigs)
     return banded.groupBy("band_id", "band_hash").applyInPandasWithState(
-        update,
+        _bucket_update,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

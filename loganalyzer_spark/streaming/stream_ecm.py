@@ -20,29 +20,27 @@ def streaming_sink_ecm(
     source_dir: str,
     schema,
     bucket: str = "1 minute",
-    watermark: str = "10 minutes",
-    templates: DataFrame | None = None,
-    kb: DataFrame | None = None,
 ) -> DataFrame:
     """readStream(parquet of raw lines) → parse/match/enrich/route →
-    watermarked windowed per-sink counts. Broadcast dimension joins are
-    stream-static joins (supported without state)."""
+    per-sink counts windowed under a 10-minute watermark. Broadcast
+    dimension joins are stream-static joins (supported without state)."""
     lines = (
         spark.readStream.schema(schema).parquet(source_dir)
     )
-    routed = pipeline.routed_lines(spark, lines, templates=templates, kb=kb)
-    return aggregate.sink_ecm(routed.withWatermark("warc_ts", watermark), bucket)
+    routed = pipeline.routed_lines(spark, lines)
+    return aggregate.sink_ecm(routed.withWatermark("warc_ts", "10 minutes"), bucket)
 
 
-def run_to_memory(agg: DataFrame, name: str = "stream_out"):
+def run_to_memory(agg: DataFrame):
     """Drive the streaming query to completion over the files present
-    (complete mode — exact parity with the batch aggregate)."""
+    (complete mode — exact parity with the batch aggregate) into the
+    in-memory table ``stream_out``; returns that table's name."""
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
-        .queryName(name)
+        .queryName("stream_out")
         .start()
     )
     q.processAllAvailable()
     q.stop()
-    return name
+    return "stream_out"

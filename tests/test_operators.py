@@ -1039,6 +1039,29 @@ def test_dsir_keep_cutoff_selection_adversarial(spark):
     assert [r["keep"] for r in out_none] == [False] * 5
 
 
+def test_dsir_selection_partition_and_aqe_invariant(spark):
+    """``web._nth_key`` reads partition ids and row positions from
+    ``monotonically_increasing_id``; the selected rows must not depend
+    on the shuffle partition count or on AQE. Three corners of the
+    1/8/37 partitions x AQE off/on matrix, all measured equal at sf0.001."""
+    from perfbench.harness import fingerprint
+    from tests.conftest import SF_SMALL
+
+    from loganalyzer_spark.queries import dsir_importance_weights
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for parts, aqe in ((1, "false"), (8, "true"), (37, "true")):
+            spark.conf.set(keys[0], str(parts))
+            spark.conf.set(keys[1], aqe)
+            got = fingerprint(dsir_importance_weights(spark, SF_SMALL))
+            assert got == (500, 3466322519750571501), (parts, aqe)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_incremental_partial_fit_convergence():
     """IncrementalLogReg (the loglizer inc_updt path, loglizer.py:
     429-471) must converge to the same decision function as the

@@ -111,6 +111,57 @@ def test_checkpoint_resume(spark, tmp_path):
     assert b.count() == n1
 
 
+def test_checkpoint_stage_without_metrics_reruns(spark, tmp_path):
+    """A kill after the committer wrote ``_SUCCESS`` but before the
+    metrics record leaves a stage that is not done: the next stage()
+    runs fn again and writes the record."""
+    from loganalyzer_spark.lineage import CheckpointedJob
+
+    root = str(tmp_path / "ckpt")
+    job = CheckpointedJob(spark, root)
+    calls = {"n": 0}
+
+    def stage_fn():
+        calls["n"] += 1
+        return spark.range(10)
+
+    job.stage("ids", stage_fn)
+    record = os.path.join(root, "_metrics", "ids.json")
+    os.remove(record)
+    assert job.stage("ids", stage_fn).count() == 10
+    assert calls["n"] == 2
+    assert os.path.exists(record)
+    assert job.read_metrics("ids")["rows"] == 10
+
+
+def test_empty_corpus(spark, tmp_path):
+    """An empty corpus gives empty results, not errors: the flagship and
+    the event counts have 0 rows, every sink is written empty with its
+    marker, and an empty micro-batch gives an empty streaming aggregate."""
+    from loganalyzer_spark import datagen, pipeline
+    from loganalyzer_spark.lineage import MARKER, SINK_CLASSES, write_sinks_resumable
+    from loganalyzer_spark.operators import aggregate
+    from loganalyzer_spark.streaming.stream_ecm import run_to_memory, streaming_sink_ecm
+
+    pages_dir = str(tmp_path / "pages")
+    datagen.web_pages(spark, SF_SMALL).limit(0).write.parquet(pages_dir)
+    routed = pipeline.routed_from_pages(spark, spark.read.parquet(pages_dir))
+    assert pipeline.sink_aggregates(routed, "1 minute").count() == 0
+    assert aggregate.event_counts(routed).count() == 0
+
+    out = str(tmp_path / "sinks")
+    assert write_sinks_resumable(routed, out) == dict.fromkeys(SINK_CLASSES, False)
+    for c in SINK_CLASSES:
+        sink = os.path.join(out, f"sink_class={c}")
+        assert os.path.exists(os.path.join(sink, MARKER))
+        assert spark.read.parquet(sink).count() == 0
+
+    src = str(tmp_path / "stream_src")
+    datagen.raw_lines(spark, SF_SMALL).limit(0).write.parquet(src)
+    agg = streaming_sink_ecm(spark, src, spark.read.parquet(src).schema)
+    assert spark.table(run_to_memory(agg)).count() == 0
+
+
 def test_streaming_matches_batch(spark, routed, tmp_path):
     from loganalyzer_spark import datagen, pipeline
     from loganalyzer_spark.streaming.stream_ecm import (
