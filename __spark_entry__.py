@@ -21,7 +21,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: per-sink event-count matrix over warc_ts buckets."""
     from loganalyzer_spark import pipeline
 
-    return pipeline.run(spark, "/root/testdata/sf0.001", bucket="1 minute")
+    return pipeline.run(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

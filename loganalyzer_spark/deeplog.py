@@ -10,10 +10,9 @@ event's rank >= topk).
 torch is not in this image, so the LSTM forward pass is a standalone
 numpy implementation of the identical math (torch gate order
 i,f,g,o; sigmoid/tanh activations; zero initial h/c — models.py:58-60).
-Weights are deterministic synthesized tensors (``make_weights``);
-loading a reference ``.pt`` checkpoint is gated behind a torch import
-(``load_torch_weights``) and raises cleanly when torch is absent.
-Parity with a scalar per-sequence Python loop is pytest-asserted
+Weights are deterministic synthesized tensors (``make_weights``); no
+reference ``.pt`` checkpoint is loaded. Parity with a scalar
+per-sequence Python loop is pytest-asserted
 (tests/test_operators.py::test_deeplog_kernel_parity), mirroring the
 M5 recover-loop oracle pattern.
 
@@ -61,26 +60,6 @@ def make_weights(
     w["W_out"] = rng.standard_normal((num_classes, hidden)) * 0.4
     w["b_out"] = rng.standard_normal(num_classes) * 0.1
     return w
-
-
-def load_torch_weights(path: str) -> dict[str, np.ndarray]:
-    """Load a reference DeepLog ``.pt`` checkpoint (e.g.
-    data/persist/ftp/deeplog_exec_model_0.pt) into the numpy layout.
-
-    Gated: torch is not installed in this image.
-    """
-    try:
-        import torch  # noqa: F401
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "torch not available in this image; use make_weights() — "
-            "the numpy kernel implements the identical forward math"
-        ) from exc
-    state = torch.load(path, map_location="cpu")  # pragma: no cover
-    out: dict[str, np.ndarray] = {}  # pragma: no cover
-    for k, v in state.items():  # pragma: no cover
-        out[k] = v.numpy().astype(np.float64)
-    return out  # pragma: no cover
 
 
 def _sigmoid(x: np.ndarray) -> np.ndarray:

@@ -88,16 +88,15 @@ def ecm_vectors(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    size: str = "10 seconds",
-    slide: str = "5 seconds",
-) -> DataFrame:
+def sliding_counts(events: DataFrame) -> DataFrame:
     """A5: Loglizer's sliding time windows (loglizer.py:161-295) — an
     exact Spark built-in. Works unchanged under Structured Streaming
-    with a watermark. Counts ``event_type`` per window of ``ts``."""
+    with a watermark. Counts ``event_type`` per 10-second window of
+    ``ts``, sliding by 5 seconds."""
     return (
-        events.groupBy(F.window("ts", size, slide).alias("w"), "event_type")
+        events.groupBy(
+            F.window("ts", "10 seconds", "5 seconds").alias("w"), "event_type"
+        )
         .agg(F.count("*").alias("cnt"))
         .select(
             F.col("w.start").alias("win_start"),
@@ -140,36 +139,27 @@ def tfidf(ecm_flat: DataFrame, doc_keys: list[str]) -> DataFrame:
     )
 
 
-def context_window_counts(
-    lines: DataFrame, window: int = 10
-) -> DataFrame:
+def context_window_counts(lines: DataFrame) -> DataFrame:
     """A2 core: Loglab's ±window_size log-context flag
     (loglab.py:341-417): a line is "in context" if any KB-typical line
-    (severity != 'info') lies within ±W positions in the same sample.
+    (severity != 'info') lies within ±10 positions in the same sample.
     """
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("line_no")
-        .rowsBetween(-window, window)
-    )
+    w = Window.partitionBy("doc_id").orderBy("line_no").rowsBetween(-10, 10)
     is_typical = (F.col("severity") != "info").cast("int")
     return lines.withColumn("in_context", F.max(is_typical).over(w))
 
 
-def sequence_windows(
-    lines: DataFrame,
-    win: int = 5,
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
+def sequence_windows(lines: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """A8: DeepLog sequence slicing (deeplog.py:200-277) — sliding
-    event-index windows + next-event target per ``session_id``, via
-    collect_list over a row frame + lead. Tail windows (< win items or
+    5-event windows + next-event target per ``session_id``, via
+    collect_list over a row frame + lead. Tail windows (< 5 items or
     no target) are dropped, matching the reference's bounds check.
 
     ``carry`` leads extra per-line columns to the target row as
     ``target_<col>`` (same lead offset, same window — zero extra
     shuffle), so target-line attributes (e.g. the OSS param-anomaly
     flag for EP3 predict) ride along without a self-join."""
+    win = 5
     w = Window.partitionBy("doc_id", "session_id").orderBy("line_no")
     frame = w.rowsBetween(0, win - 1)
     out = (
@@ -182,10 +172,11 @@ def sequence_windows(
     return out.filter((F.size("seq") == win) & F.col("target").isNotNull())
 
 
-def dedup_lines(lines: DataFrame, col: str = "raw") -> DataFrame:
-    """A10: duplicate-line checker (misc_tools.py:35-43)."""
+def dedup_lines(lines: DataFrame) -> DataFrame:
+    """A10: duplicate-line checker (misc_tools.py:35-43), keyed on
+    ``content``."""
     return (
-        lines.groupBy(col)
+        lines.groupBy("content")
         .agg(
             F.count("*").alias("n"),
             F.array_join(

@@ -54,8 +54,9 @@ def _hash60(col) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def with_shingles(docs: DataFrame, text: str = "text", n: int = 3) -> DataFrame:
-    """Word n-gram shingles as an array column (distinct per doc).
+def with_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
+    """Word n-gram shingles of ``text`` as an array column (distinct per
+    doc).
 
     Tokenization is materialized as its own column first: a ``split``
     inlined into the ``transform`` lambda re-tokenizes the WHOLE
@@ -67,7 +68,7 @@ def with_shingles(docs: DataFrame, text: str = "text", n: int = 3) -> DataFrame:
     from loganalyzer_spark.operators import free_col
 
     tc = free_col(docs, "_toks")
-    toked = docs.withColumn(tc, F.split(F.lower(F.col(text)), "\\s+"))
+    toked = docs.withColumn(tc, F.split(F.lower(F.col("text")), "\\s+"))
     expr = (
         f"CASE WHEN size(`{tc}`) < {n} THEN array() "
         f"ELSE transform(sequence(1, size(`{tc}`) - {n} + 1),"
@@ -76,30 +77,29 @@ def with_shingles(docs: DataFrame, text: str = "text", n: int = 3) -> DataFrame:
     return toked.withColumn("shingles", F.array_distinct(F.expr(expr))).drop(tc)
 
 
-def exact_dedup(docs: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
-    """Exact dedup groups: digest → (n, canonical=min key, members)."""
+def exact_dedup(docs: DataFrame) -> DataFrame:
+    """Exact dedup groups of ``text``: digest → (n, canonical=min
+    ``doc_id``, members)."""
     return (
-        docs.withColumn("digest", F.md5(F.col(text)))
+        docs.withColumn("digest", F.md5(F.col("text")))
         .groupBy("digest")
         .agg(
             F.count("*").alias("n"),
-            F.min(key).alias("canonical"),
-            F.sort_array(F.collect_list(key)).alias("members"),
+            F.min("doc_id").alias("canonical"),
+            F.sort_array(F.collect_list("doc_id")).alias("members"),
         )
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, n: int = 3, num_hashes: int = 16
-) -> DataFrame:
-    """MinHash signature per ``doc_id``: sig[k] = min over the shingles of
-    ``text`` of h_k(H(s)).
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """MinHash signature per ``doc_id``: 16 hashes, sig[k] = min over the
+    3-shingles of ``text`` of h_k(H(s)).
 
     Pure column expressions: shingle→hash60, then per-k transform+min.
     Empty shingle sets hash to the reserved max value.
     """
-    params = minhash_params(num_hashes)
-    df = with_shingles(docs, "text", n).withColumn(
+    params = minhash_params(16)
+    df = with_shingles(docs).withColumn(
         "sh_hashes", F.transform("shingles", lambda s: _hash60(s))
     )
 
@@ -177,44 +177,42 @@ def _capped_pairs(
     return exact.select(*out).unionByName(star.select(*out)).dropDuplicates(["a", "b"])
 
 
-def minhash_bands(sigs: DataFrame, bands: int = 4) -> DataFrame:
-    """Band a MinHash signature: (doc_id, band_id, band_hash), one row per
-    band, band_hash = md5 of the band's ``size(sig) / bands`` values."""
-    width = f"int(size(sig) / {bands})"
+def minhash_bands(sigs: DataFrame) -> DataFrame:
+    """Band a MinHash signature into 4 bands: (doc_id, band_id,
+    band_hash), one row per band, band_hash = md5 of the band's
+    ``size(sig) / 4`` values."""
+    width = "int(size(sig) / 4)"
     return sigs.select(
         "doc_id",
         F.posexplode(
             F.expr(
-                f"transform(sequence(0, {bands} - 1),"
+                "transform(sequence(0, 3),"
                 f" b -> md5(array_join(slice(sig, b * {width} + 1, {width}), '_')))"
             )
         ).alias("band_id", "band_hash"),
     )
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, bands: int = 4, bucket_cap: int = 256
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Band the signature, bucket-join docs sharing any band hash.
 
     Output: (a, b) candidate pairs with a < b, distinct, for the
     downstream Jaccard-verify / connected-components pass
-    (near_dup_survivors). ``bucket_cap`` bounds mass-duplicate clusters
-    as :func:`_capped_pairs` describes; run :func:`exact_dedup` first so
-    byte-identical copies collapse before banding.
+    (near_dup_survivors). A bucket cap of 256 bounds mass-duplicate
+    clusters as :func:`_capped_pairs` describes; run :func:`exact_dedup`
+    first so byte-identical copies collapse before banding.
     """
-    banded = minhash_bands(sigs, bands).withColumnRenamed("doc_id", "k")
-    return _capped_pairs(banded, ["band_id", "band_hash"], bucket_cap)
+    banded = minhash_bands(sigs).withColumnRenamed("doc_id", "k")
+    return _capped_pairs(banded, ["band_id", "band_hash"], 256)
 
 
-def jaccard_pairs(
-    docs: DataFrame, pairs: DataFrame, n: int = 3, threshold: float = 0.0
-) -> DataFrame:
-    """n-gram Jaccard similarity for candidate pairs (verification step).
+def jaccard_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """3-shingle Jaccard similarity for candidate pairs (verification
+    step), keeping pairs with jaccard >= 0.5.
 
     jaccard = |A ∩ B| / |A ∪ B| over distinct shingle sets.
     """
-    sh = with_shingles(docs, "text", n).select(
+    sh = with_shingles(docs).select(
         F.col("doc_id").alias("k"), F.col("shingles").alias("sh")
     )
     a = sh.select(F.col("k").alias("a"), F.col("sh").alias("sh_a"))
@@ -228,13 +226,14 @@ def jaccard_pairs(
             "jaccard",
             F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0)),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
         .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
-def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
-    """SimHash fingerprint over the word tokens of ``text``, per ``doc_id``.
+def simhash(docs: DataFrame) -> DataFrame:
+    """32-bit SimHash fingerprint over the word tokens of ``text``, per
+    ``doc_id``.
 
     Bit b of the fingerprint is 1 iff Σ_tokens sign(bit b of H(token))
     > 0 (unweighted). Pure column expressions: per-bit aggregate over
@@ -250,7 +249,7 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
 
     bit_sum = [
         F.aggregate("tok_hashes", F.lit(0).cast("long"), bit_merge(b))
-        for b in range(bits)
+        for b in range(32)
     ]
     fp = None
     for b, s in enumerate(bit_sum):
@@ -259,19 +258,18 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     return df.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_near_pairs(
-    fps: DataFrame, max_hamming: int = 3, bucket_cap: int = 256
-) -> DataFrame:
-    """Near-dup pairs by Hamming distance on SimHash fingerprints.
+def simhash_near_pairs(fps: DataFrame, bucket_cap: int = 256) -> DataFrame:
+    """Near-dup pairs within Hamming distance 3 on SimHash fingerprints.
 
-    Scale path: block on fingerprint quarters (a pair within distance d
-    must agree on ≥1 of d+1 blocks) then verify with bit_count(xor).
+    Scale path: block on fingerprint quarters (a pair within distance 3
+    must agree on ≥1 of 4 blocks) then verify with bit_count(xor).
 
     ``bucket_cap`` bounds mass-duplicate blowup (m identical documents
-    share EVERY block, m²·(d+1)/2 pairs uncapped) as
+    share EVERY block, m²·4/2 pairs uncapped) as
     :func:`_capped_pairs` describes. Star pairs still pass the exact
     bit_count verify, so precision stays 1.0.
     """
+    max_hamming = 3
     nblocks = max_hamming + 1
     blocked = fps.select(
         F.col("doc_id").alias("k"),
@@ -333,9 +331,9 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     )
 
 
-def lsh_band_plan(threshold: float, target_recall: float = 0.95) -> tuple[int, int]:
+def lsh_band_plan(threshold: float) -> tuple[int, int]:
     """Derive (nbands, band_width) so banded hyperplane LSH retrieves a
-    pair at cosine == ``threshold`` with probability ≥ ``target_recall``.
+    pair at cosine == ``threshold`` with probability R ≥ 0.95.
 
     Per-bit collision probability for angle θ is p = 1 - θ/π; a pair
     survives banding with 1 - (1 - p^w)^b.  We take the WIDEST band w
@@ -359,7 +357,7 @@ def lsh_band_plan(threshold: float, target_recall: float = 0.95) -> tuple[int, i
     p = 1.0 - math.acos(t) / math.pi
     if p >= 1.0:  # threshold == 1: any single band retrieves exact dups
         return 1, min(16, max_bits)
-    log_miss = math.log(1.0 - target_recall)
+    log_miss = math.log(1.0 - 0.95)
     for w in range(max_bits, 0, -1):
         pw = p**w
         if pw <= 0.0:
@@ -449,9 +447,7 @@ def near_dup_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     return docs.join(losers, "doc_id", "left_anti")
 
 
-def connected_components(
-    pairs: DataFrame, max_iter: int = 20
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Exact duplicate-cluster ids: min-label propagation accelerated
     with pointer doubling (each round also applies comp(v) ←
     comp(comp(v)), halving chain length), so convergence is
@@ -469,7 +465,7 @@ def connected_components(
         single limit(1) count per round on the already-materialized
         frontier.
       * Raises RuntimeError if the fixpoint is not reached within
-        ``max_iter`` rounds — silently returning non-converged labels
+        20 rounds — silently returning non-converged labels
         would mis-cluster long transitive near-dup chains (real in web
         dedup graphs). With doubling, 20 rounds covers diameters ~10⁶.
     """
@@ -485,6 +481,7 @@ def connected_components(
         .select(F.col("x").alias("node"), "comp")
         .localCheckpoint(eager=True)
     )
+    max_iter = 20
     converged = False
     for _ in range(max_iter):
         # neighbor-min: comp(v) = min(comp(v), min over neighbors u comp(u))
@@ -526,7 +523,7 @@ def connected_components(
     if not converged:
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} rounds — "
-            "raise max_iter (labels would be wrong for long chains)"
+            "labels would be wrong for long chains"
         )
     return labels
 
@@ -535,9 +532,12 @@ def connected_components(
 # Passage-level (substring) dedup — repeated spans ACROSS documents
 # ---------------------------------------------------------------------------
 
+PASSAGE_K = 8  # words per passage window
 
-def passage_grams(docs: DataFrame, k: int = 8) -> DataFrame:
-    """Positional word k-gram fingerprints: one row per window.
+
+def passage_grams(docs: DataFrame) -> DataFrame:
+    """Positional word k-gram fingerprints (k = ``PASSAGE_K``): one row
+    per window.
 
     Output: (doc_id, pos, gh) where pos is the 1-based token index of the
     window start and gh the 60-bit md5 hash of the k tokens joined by a
@@ -559,6 +559,7 @@ def passage_grams(docs: DataFrame, k: int = 8) -> DataFrame:
     # the split inlined inside the transform lambda re-tokenizes the
     # whole document once per window position (O(tokens²) per row —
     # the inlined-producer-in-lambda trap; see textstats.fingerprint).
+    k = PASSAGE_K
     toked = docs.select(
         F.col("doc_id"), F.split(F.lower(F.col("text")), "\\s+").alias("_w")
     )
@@ -578,10 +579,10 @@ def passage_grams(docs: DataFrame, k: int = 8) -> DataFrame:
     )
 
 
-def repeated_passages(docs: DataFrame, k: int = 8, min_docs: int = 2) -> DataFrame:
+def repeated_passages(docs: DataFrame) -> DataFrame:
     """Cross-document repeated spans (boilerplate / license blocks):
-    maximal runs of word k-gram windows whose grams each occur in at
-    least ``min_docs`` DISTINCT documents.
+    maximal runs of word k-gram windows (k = ``PASSAGE_K``) whose grams
+    each occur in at least 2 DISTINCT documents.
 
     Per doc, hit windows sorted by pos are merged while consecutive
     starts are <= k apart (overlapping or exactly adjacent windows =
@@ -603,11 +604,12 @@ def repeated_passages(docs: DataFrame, k: int = 8, min_docs: int = 2) -> DataFra
     all windows. No exchange carries more than the exploded gram
     volume; nothing is driver-side.
     """
-    grams = passage_grams(docs, k)
+    k = PASSAGE_K
+    grams = passage_grams(docs)
     freq = (
         grams.groupBy("gh")
         .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 2)
     )
     hits = grams.join(freq, "gh")
     w = Window.partitionBy("doc_id").orderBy("pos")

@@ -41,15 +41,13 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     payload: Sequence[str] = (),
     prefix: str = "r_",
     tiebreak: str | None = None,
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
     """For every left row, attach the right row with the greatest
-    ``right_ts`` <= ``left_ts`` within the same key (backward as-of,
+    ``ts`` <= the left row's ``ts`` within the same key (backward as-of,
     inclusive at equality); NULL payload when no right row precedes.
 
     Ties among right rows at the same timestamp are broken by the
@@ -68,31 +66,31 @@ def asof_join(
     one per-partition sort, and a linear running-carry window — no
     range predicate ever reaches a join operator, so Catalyst never
     degenerates into a nested-loop. Output columns: every left column,
-    then ``prefix + right_ts`` and ``prefix + c`` for each payload c.
+    then ``prefix + "ts"`` and ``prefix + c`` for each payload c.
     """
     payload = list(payload)
     reserved = {"_k", "_ts", "_tag", "_tb", "_p", "_m"}
     clash = reserved & set(left.columns)
     if clash:
         raise ValueError(f"left columns collide with internals: {clash}")
-    out_aliases = {prefix + right_ts, *(prefix + c for c in payload)}
+    out_aliases = {prefix + "ts", *(prefix + c for c in payload)}
     out_clash = out_aliases & set(left.columns)
     if out_clash:
         raise ValueError(
             f"left columns collide with output aliases {sorted(out_clash)}; "
             f"pick a different prefix= or rename the left columns"
         )
-    tiebreak = tiebreak or (payload[0] if payload else right_ts)
+    tiebreak = tiebreak or (payload[0] if payload else "ts")
 
     p_struct = F.struct(
-        F.col(right_ts).alias("_rts"), *[F.col(c) for c in payload]
+        F.col("ts").alias("_rts"), *[F.col(c) for c in payload]
     )
     # NULL-key right rows can never be matched by SQL equality; drop
     # them BEFORE the union so the NULL window partition (partitionBy
     # groups NULLs together) carries no payload onto NULL-key left rows.
     r = right.where(F.col(on).isNotNull()).select(
         F.col(on).alias("_k"),
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_tag"),
         F.col(tiebreak).alias("_tb"),
         p_struct.alias("_p"),
@@ -100,13 +98,13 @@ def asof_join(
     l_ = left.select(
         "*",
         F.col(on).alias("_k"),
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_tag"),
     )
     u = l_.unionByName(r, allowMissingColumns=True)
 
     # right rows (_tag=0) sort before left rows at the same instant →
-    # a right row at exactly left_ts is visible (inclusive as-of);
+    # a right row at exactly the left ts is visible (inclusive as-of);
     # among equal-ts right rows the highest _tb wins (last in frame).
     w = (
         Window.partitionBy("_k")
@@ -126,7 +124,7 @@ def asof_join(
     matched = u.withColumn("_m", m).where(F.col("_tag") == 1)
     mm = F.col("_m")
     out_cols = [F.col(c) for c in left.columns]
-    out_cols.append(mm["_rts"].alias(prefix + right_ts))
+    out_cols.append(mm["_rts"].alias(prefix + "ts"))
     out_cols += [mm[c].alias(prefix + c) for c in payload]
     return matched.select(*out_cols)
 
@@ -136,13 +134,11 @@ def interval_join(
     intervals: DataFrame,
     point_key: str,
     interval_key: str,
-    ts: str = "ts",
     start: str = "start_ts",
-    end: str = "end_ts",
     bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Join every point row to every interval row of the same key with
-    ``start <= ts < end`` (half-open), without a nested-loop join.
+    ``start <= ts < end_ts`` (half-open), without a nested-loop join.
 
     Each interval is exploded into the ``bucket_seconds``-wide time
     buckets it overlaps (a bounded, usually single-digit factor) and
@@ -171,15 +167,15 @@ def interval_join(
         F.explode(
             F.sequence(
                 F.floor(F.unix_timestamp(F.col(start)) / bs),
-                F.floor(F.unix_timestamp(F.col(end)) / bs),
+                F.floor(F.unix_timestamp(F.col("end_ts")) / bs),
             )
         ),
     )
-    pts = points.withColumn("_b", F.floor(F.unix_timestamp(F.col(ts)) / bs))
+    pts = points.withColumn("_b", F.floor(F.unix_timestamp(F.col("ts")) / bs))
     cond = (
         (pts[point_key] == iv[interval_key])
         & (pts["_b"] == iv["_b"])
-        & (pts[ts] >= iv[start])
-        & (pts[ts] < iv[end])
+        & (pts["ts"] >= iv[start])
+        & (pts["ts"] < iv["end_ts"])
     )
     return pts.join(iv, cond).drop("_b")

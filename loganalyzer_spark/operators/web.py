@@ -138,12 +138,13 @@ def word_ngrams(df: DataFrame, n: int) -> DataFrame:
     ).drop(wc)
 
 
-def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: int = 13) -> DataFrame:
-    """Benchmark-overlap decontamination (the GPT-3/PaLM 13-gram rule):
-    flag every corpus doc sharing at least one word n-gram with the
-    benchmark/eval set. Returns (doc_id, n_grams, n_hits) for
-    contaminated docs, where n_grams = the doc's distinct-gram count
-    and n_hits = how many of those grams appear in the benchmark.
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """Benchmark-overlap decontamination (the GPT-3/PaLM n-gram rule,
+    here with word 3-grams): flag every corpus doc sharing at least one
+    word 3-gram with the benchmark/eval set. Returns (doc_id, n_grams,
+    n_hits) for contaminated docs, where n_grams = the doc's
+    distinct-gram count and n_hits = how many of those grams appear in
+    the benchmark.
 
     Scale (100 TB corpus, MB-scale benchmark): the benchmark gram set
     is a small dim → broadcast hash join, so the corpus side never
@@ -153,11 +154,11 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: int = 13) -> DataF
     exchange carries one row per *contaminated* doc.
     """
     bench = (
-        word_ngrams(benchmark, n)
+        word_ngrams(benchmark, 3)
         .select(F.explode("grams").alias("g"))
         .distinct()
     )
-    grams = word_ngrams(corpus, n).select(
+    grams = word_ngrams(corpus, 3).select(
         "doc_id",
         F.size("grams").cast("long").alias("n_grams"),
         F.explode("grams").alias("g"),
@@ -169,9 +170,7 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: int = 13) -> DataF
     )
 
 
-def latest_snapshot(
-    pages: DataFrame, snap_id: str = "snap_id", keep: list[str] | None = None
-) -> DataFrame:
+def latest_snapshot(pages: DataFrame, keep: list[str] | None = None) -> DataFrame:
     """Keep the newest crawl snapshot per canonical URL (ties broken by
     highest ``snap_id``) — the CC-style "latest revision wins" dedup.
 
@@ -186,11 +185,11 @@ def latest_snapshot(
     keep = keep or ["text"]
     withc = canonicalize_url(pages)
     winner = F.max(
-        F.struct(F.col("warc_ts"), F.col(snap_id), *[F.col(c) for c in keep])
+        F.struct(F.col("warc_ts"), F.col("snap_id"), *[F.col(c) for c in keep])
     ).alias("w")
     agg = withc.groupBy("canon_url").agg(winner)
     cols = [F.col("canon_url"), F.col("w.warc_ts").alias("warc_ts"),
-            F.col(f"w.{snap_id}").alias(snap_id)]
+            F.col("w.snap_id").alias("snap_id")]
     cols += [F.col(f"w.{c}").alias(c) for c in keep]
     return agg.select(*cols)
 

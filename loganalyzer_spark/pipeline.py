@@ -36,11 +36,6 @@ def sink_aggregates(routed: DataFrame, bucket: str = "1 minute") -> DataFrame:
     return agg_ops.sink_ecm(routed, bucket)
 
 
-def run(
-    spark: SparkSession,
-    sf_dir: str,
-    bucket: str = "1 minute",
-) -> DataFrame:
-    lines = datagen.raw_lines(spark, sf_dir)
-    routed = routed_lines(spark, lines)
-    return sink_aggregates(routed, bucket)
+def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship over the generated raw lines of ``sf_dir``."""
+    return sink_aggregates(routed_lines(spark, datagen.raw_lines(spark, sf_dir)))

@@ -241,7 +241,7 @@ def pipeline_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipeline_sink_ecm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 flagship: exact per-sink (warc_ts bucket × event_id) counts."""
-    return A.sink_ecm(_routed(spark, sf_dir), "1 minute")
+    return pipeline.run(spark, sf_dir)
 
 
 @register(
@@ -382,7 +382,7 @@ def sessionize_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5: Loglizer's sliding time windows (loglizer.py:161-295)."""
     events = spark.read.parquet(_t(sf_dir, "events"))
-    return A.sliding_counts(events, size="10 seconds", slide="5 seconds")
+    return A.sliding_counts(events)
 
 
 @register(
@@ -684,7 +684,7 @@ def tfidf_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def context_window_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: Loglab ±window context flag (loglab.py:341-417)."""
-    out = A.context_window_counts(_routed(spark, sf_dir), 10)
+    out = A.context_window_counts(_routed(spark, sf_dir))
     return out.select("doc_id", "line_no", "in_context")
 
 
@@ -712,7 +712,7 @@ WHERE wn = 5 AND target IS NOT NULL
 def sequence_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: DeepLog sequence slicing (deeplog.py:200-277)."""
     routed = P.sessionize(_routed(spark, sf_dir))
-    seq = A.sequence_windows(routed, win=5)
+    seq = A.sequence_windows(routed)
     return seq.select(
         "doc_id", F.col("session_id").cast("long").alias("session_id"),
         "line_no", F.array_join("seq", "|").alias("seq_str"), "target", "label",
@@ -729,7 +729,7 @@ def deeplog_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from loganalyzer_spark import deeplog as DL
 
     routed = P.sessionize(_routed(spark, sf_dir))
-    seq = A.sequence_windows(routed, win=5)
+    seq = A.sequence_windows(routed)
     out = DL.score_sequences(spark, seq, datagen.vocab_rows(), topk=10)
     return out.select(
         "doc_id", F.col("session_id").cast("long").alias("session_id"),
@@ -761,7 +761,7 @@ def deeplog_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
         "para_anom",
         (lenmatch & (F.col("severity_kb") != "info")).cast("int"),
     )
-    seq = A.sequence_windows(routed, win=5, carry=("para_anom",))
+    seq = A.sequence_windows(routed, carry=("para_anom",))
     out = DL.score_sequences(spark, seq, datagen.vocab_rows(), topk=10)
     return out.select(
         "doc_id",
@@ -902,7 +902,7 @@ def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10: duplicate-line checker (misc_tools.py:35-43)."""
     lines = datagen.raw_lines(spark, sf_dir)
-    return A.dedup_lines(lines, "content")
+    return A.dedup_lines(lines)
 
 
 # ---------------------------------------------------------------------------
@@ -975,7 +975,7 @@ _sig AS (
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact (hash-groupBy) dedup groups over document text."""
     d = spark.read.parquet(_t(sf_dir, "documents"))
-    out = DD.exact_dedup(d.filter(F.lit(True)), "doc_id", "text")
+    out = DD.exact_dedup(d.filter(F.lit(True)))
     # emit all groups (n >= 1) so the digest+grouping math is exercised
     return out.select(
         "digest", "n", "canonical",
@@ -999,7 +999,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (16 md5-derived universal hashes, 3-shingles)."""
-    sigs = DD.minhash_signatures(_docs2_spark(spark, sf_dir), num_hashes=16, n=3)
+    sigs = DD.minhash_signatures(_docs2_spark(spark, sf_dir))
     return sigs.select(
         "doc_id",
         F.expr("array_join(transform(sig, s -> cast(s as string)), '|')").alias(
@@ -1056,9 +1056,9 @@ WHERE len(list_intersect(sa.ss, sb.ss))::DOUBLE /
 def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash → LSH banding → candidate join → exact Jaccard verify."""
     docs2 = _docs2_spark(spark, sf_dir)
-    sigs = DD.minhash_signatures(docs2, num_hashes=16, n=3)
-    pairs = DD.lsh_candidate_pairs(sigs, bands=4)
-    return DD.jaccard_pairs(docs2, pairs, n=3, threshold=0.5)
+    sigs = DD.minhash_signatures(docs2)
+    pairs = DD.lsh_candidate_pairs(sigs)
+    return DD.jaccard_pairs(docs2, pairs)
 
 
 @register(
@@ -1080,7 +1080,7 @@ FROM _bits GROUP BY doc_id
 )
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (distinct-token, unweighted)."""
-    return DD.simhash(_docs2_spark(spark, sf_dir), bits=32)
+    return DD.simhash(_docs2_spark(spark, sf_dir))
 
 
 @register(
@@ -1131,8 +1131,8 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarters, bit_count(xor) verify ≤ 3, bucket-capped star for
     mass-duplicate blocks — the oracle replicates the cap rule
     exactly, like the MinHash LSH oracle)."""
-    fps = DD.simhash(_docs2_spark(spark, sf_dir), bits=32)
-    return DD.simhash_near_pairs(fps, max_hamming=3, bucket_cap=256)
+    fps = DD.simhash(_docs2_spark(spark, sf_dir))
+    return DD.simhash_near_pairs(fps, bucket_cap=256)
 
 
 # 14 words, lowercase, single-spaced: the planted cross-document
@@ -1205,7 +1205,7 @@ def repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from loganalyzer_spark.operators.dedup import repeated_passages as RP
 
-    return RP(planted, k=8, min_docs=2).orderBy("doc_id", "span_start")
+    return RP(planted).orderBy("doc_id", "span_start")
 
 
 @register(
@@ -1528,7 +1528,7 @@ def deeplog_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from loganalyzer_spark import deeplog as DL
 
     routed = P.sessionize(_routed(spark, sf_dir))
-    seq = A.sequence_windows(routed, win=5)
+    seq = A.sequence_windows(routed)
     vr = datagen.vocab_rows()
     weights, _losses = DL.train_on_sequences(spark, seq, vr, epochs=3)
     out = DL.score_sequences(spark, seq, vr, weights=weights, topk=10)
@@ -2714,7 +2714,7 @@ def latest_crawl_per_url(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "url", "snap_id", "warc_ts", "text")
     )
-    out = W.latest_snapshot(snaps, snap_id="snap_id", keep=["text"])
+    out = W.latest_snapshot(snaps, keep=["text"])
     return out.select(
         "canon_url", "warc_ts", F.col("snap_id").cast("long").alias("snap_id"),
         "text",
@@ -2750,7 +2750,7 @@ def benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 29 == 7)
     corpus = docs.filter(F.col("doc_id") % 29 != 7)
-    return W.decontaminate(corpus, bench, n=3).orderBy("doc_id")
+    return W.decontaminate(corpus, bench).orderBy("doc_id")
 
 
 @register(
@@ -2935,8 +2935,6 @@ def events_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         errors,
         purchases,
         on="user_id",
-        left_ts="ts",
-        right_ts="ts",
         payload=["event_id", "value"],
         prefix="purchase_",
         tiebreak="event_id",
@@ -2979,9 +2977,7 @@ def purchase_followon_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         anchors,
         "user_id",
         "anchor_user",
-        ts="ts",
         start="start_ts",
-        end="end_ts",
         bucket_seconds=3600,
     )
     return j.groupBy("anchor_id").agg(

@@ -130,8 +130,8 @@ class IncrementalLogReg:
 
     sklearn is absent from this image, so the estimator core is
     implemented directly: one epoch of per-sample log-loss SGD per
-    ``partial_fit`` call, in batch row order, constant learning rate,
-    zero init — the deterministic subset of
+    ``partial_fit`` call, in batch row order, constant learning rate
+    0.05, zero init — the deterministic subset of
     ``SGDClassifier(loss='log', learning_rate='constant',
     shuffle=False)``. State round-trips through plain tuples (the
     ``joblib.dump`` analogue), so a lineage checkpoint can persist the
@@ -144,10 +144,9 @@ class IncrementalLogReg:
     through ``make_logreg_scorer`` (broadcast weights, Arrow batches).
     """
 
-    def __init__(self, n_features: int, lr: float = 0.05):
+    def __init__(self, n_features: int):
         self.w = np.zeros(int(n_features), dtype=np.float64)
         self.b = 0.0
-        self.lr = float(lr)
         self.n_seen = 0
 
     def partial_fit(self, X, y) -> "IncrementalLogReg":
@@ -155,19 +154,19 @@ class IncrementalLogReg:
         y = np.asarray(y, dtype=np.float64)
         for xi, yi in zip(X, y):
             p = 1.0 / (1.0 + np.exp(-(float(xi @ self.w) + self.b)))
-            g = self.lr * (p - yi)
+            g = 0.05 * (p - yi)
             self.w -= g * xi
             self.b -= g
         self.n_seen += len(y)
         return self
 
     def to_state(self) -> tuple:
-        return (self.w.tolist(), self.b, self.lr, self.n_seen)
+        return (self.w.tolist(), self.b, self.n_seen)
 
     @classmethod
     def from_state(cls, state: tuple) -> "IncrementalLogReg":
-        w, b, lr, n_seen = state
-        m = cls(len(w), lr)
+        w, b, n_seen = state
+        m = cls(len(w))
         m.w = np.asarray(w, dtype=np.float64)
         m.b = float(b)
         m.n_seen = int(n_seen)
@@ -202,8 +201,8 @@ def incremental_train_and_score(spark: SparkSession, vectors: DataFrame) -> Data
     return out.withColumn("pred", (F.col("score") > 0.5).cast("int"))
 
 
-def kfold_validate(spark: SparkSession, vectors: DataFrame, k: int = 5) -> DataFrame:
-    """K-fold cross-validation parity (loglab.py:662-671: KFold +
+def kfold_validate(spark: SparkSession, vectors: DataFrame) -> DataFrame:
+    """5-fold cross-validation parity (loglab.py:662-671: KFold +
     ``cross_val_score(model, ..., scoring='accuracy')`` over the
     monolith ECM, then a full fit for deployment).
 
@@ -211,7 +210,7 @@ def kfold_validate(spark: SparkSession, vectors: DataFrame, k: int = 5) -> DataF
     reference cross-validates in one process — so training runs
     driver-side on numpy (train_logreg per fold); nothing distributed
     is needed for the validation itself. Folds are DETERMINISTIC
-    (doc_id % k) instead of the reference's utils.shuffle: the rows-
+    (doc_id % 5) instead of the reference's utils.shuffle: the rows-
     only driver gate hashes values, so a shuffled split would flap.
     The reference's follow-up ONNX export (loglab.py:682-686) stays
     gated out — sklearn-onnx/onnxruntime are absent from this image;
@@ -221,6 +220,7 @@ def kfold_validate(spark: SparkSession, vectors: DataFrame, k: int = 5) -> DataF
     a summary row fold = -1 with the mean accuracy (the reference's
     ``scores.mean()`` print).
     """
+    k = 5
     X, y, doc_id = _training_slice(vectors)
     folds = doc_id % k
     rows = []

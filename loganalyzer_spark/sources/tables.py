@@ -84,8 +84,15 @@ def upsert_template_lib(
 ) -> None:
     """Run the MERGE against an Iceberg table, or emulate it on parquet
     (read-modify-write with the same first-writer-wins semantics) so
-    the sandbox exercises the identical logical behavior."""
+    the sandbox exercises the identical logical behavior.
+
+    A parquet library is absent only when its directory holds no
+    committed write (``lineage.MARKER``); a committed library that
+    fails to read raises and is left as it is, never replaced by the
+    new batch alone."""
     from pyspark.sql import functions as F
+
+    from loganalyzer_spark.lineage import _done
 
     agg = new_templates.groupBy("event_id", "event_template").agg(
         F.count("*").alias("occurrences")
@@ -94,13 +101,11 @@ def upsert_template_lib(
         agg.createOrReplaceTempView("_tmpl_updates")
         spark.sql(merge_template_lib_sql(target, "_tmpl_updates"))
         return
-    try:
-        existing = spark.read.parquet(target)
-    except Exception:
+    if not _done(target):
         agg.write.mode("overwrite").parquet(target)
         return
     merged = (
-        existing.alias("t")
+        spark.read.parquet(target).alias("t")
         .join(agg.alias("s"), "event_id", "full_outer")
         .select(
             "event_id",

@@ -18,45 +18,37 @@ the A12 aggregate.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession
 
 
-def streaming_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    keys: Sequence[str] = ("doc_id", "line_no"),
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """readStream(parquet) → ``warc_ts`` watermark →
-    dropDuplicatesWithinWatermark.
+def streaming_dedup(spark: SparkSession, source_dir: str, schema) -> DataFrame:
+    """readStream(parquet) → 1-hour ``warc_ts`` watermark →
+    dropDuplicatesWithinWatermark on ``(doc_id, line_no)``.
 
     Emits each key's FIRST arrival (append mode); re-deliveries of the
-    same key arriving within ``watermark`` of the stream's max event
+    same key arriving within the hour before the stream's max event
     time are dropped. Keys older than the watermark are evicted from
     state, so a re-delivery after the horizon would re-emit — the
     standard bounded-state trade-off (size the watermark to the
     redelivery window of the upstream queue).
     """
     src = spark.readStream.schema(schema).parquet(source_dir)
-    return src.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        list(keys)
+    return src.withWatermark("warc_ts", "1 hour").dropDuplicatesWithinWatermark(
+        ["doc_id", "line_no"]
     )
 
 
-def run_append_to_memory(df: DataFrame, name: str = "dedup_out"):
+def run_append_to_memory(df: DataFrame):
     """Drive the dedup stream over the files currently present (append
     mode — the only mode dedup supports); results land in the in-memory
-    table ``name``. Returns the STILL-ACTIVE query so the caller can
+    table ``dedup_out``. Returns the STILL-ACTIVE query so the caller can
     feed more batches and re-call processAllAvailable(); the caller owns
     shutdown and must ``q.stop()`` when done (as the tests do) — the
     state store and memory sink stay open until then."""
     q = (
         df.writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
+        .queryName("dedup_out")
         .start()
     )
     q.processAllAvailable()

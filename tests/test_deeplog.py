@@ -114,7 +114,7 @@ def test_train_on_sequences_roundtrip(spark):
     from loganalyzer_spark.queries import _routed
 
     routed = P.sessionize(_routed(spark, "/root/testdata/sf0.001"))
-    seq = A.sequence_windows(routed, win=5)
+    seq = A.sequence_windows(routed)
     vr = datagen.vocab_rows()
     w, losses = DL.train_on_sequences(
         spark, seq, vr, max_train=512, epochs=2, seed=3

@@ -1,7 +1,8 @@
-"""Every defaulted parameter of the package is set by some caller.
+"""Every defaulted parameter of the package takes two values at its callers.
 
-A parameter nobody passes is a configuration no test or benchmark
-covers; with one value in use it is a constant. Pure AST, no Spark.
+A parameter whose callers all pass one value is a configuration no test
+or benchmark varies; with one value in use it is a constant. Pure AST,
+no Spark.
 
 The rule:
 
@@ -13,9 +14,16 @@ The rule:
   ``tools/``, ``jobs/``, ``perfbench/``, ``bench.py`` and
   ``__spark_entry__.py`` whose callee name (a ``Name`` id or an
   ``Attribute`` attr) equals the definition's name.
-* A defaulted parameter *is set* when a call passes it by keyword,
-  passes more positional arguments than its index (``self``/``cls``
-  excluded), or uses ``*args``/``**kw``.
+* At each call a defaulted parameter's *value* is the
+  ``ast.literal_eval`` of the argument passed for it (by keyword, or
+  positionally past its index, ``self``/``cls`` excluded), or its
+  default when the call omits it.
+* An argument that is not a literal (a name, an expression,
+  ``*args``/``**kw``) is a value of its own that the AST cannot pin
+  down: it may differ from call to call, so it counts as a second value.
+  Names are not resolved.
+* A defaulted parameter whose calls give fewer than two distinct values
+  fails.
 """
 
 from __future__ import annotations
@@ -37,7 +45,8 @@ def _sources(roots):
 
 
 def _defaulted(fn: ast.FunctionDef, is_method: bool):
-    """``(name, positional index or None)`` of each defaulted parameter."""
+    """``(name, positional index or None, default)`` of each defaulted
+    parameter."""
     a = fn.args
     positional = a.posonlyargs + a.args
     static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
@@ -46,10 +55,10 @@ def _defaulted(fn: ast.FunctionDef, is_method: bool):
     first = len(positional) - len(a.defaults)
     for i, arg in enumerate(positional):
         if i >= first:
-            yield arg.arg, i - skip
+            yield arg.arg, i - skip, a.defaults[i - first]
     for arg, default in zip(a.kwonlyargs, a.kw_defaults):
         if default is not None:
-            yield arg.arg, None
+            yield arg.arg, None, default
 
 
 def _definitions():
@@ -78,28 +87,40 @@ def _calls():
     return calls
 
 
-def _is_set(call: ast.Call, param: str, index) -> bool:
-    if any(isinstance(a, ast.Starred) for a in call.args):
-        return True
-    if any(k.arg is None or k.arg == param for k in call.keywords):
-        return True
-    return index is not None and len(call.args) > index
+VARIES = object()  # a non-literal argument: any value
 
 
-def unset_options():
+def _value(call: ast.Call, param: str, index, default: ast.AST):
+    """The value ``param`` takes at ``call``: a literal's ``repr``, the
+    default's, or VARIES."""
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(
+        k.arg is None for k in call.keywords
+    ):
+        return VARIES
+    arg = next((k.value for k in call.keywords if k.arg == param), None)
+    if arg is None and index is not None and len(call.args) > index:
+        arg = call.args[index]
+    try:
+        return repr(ast.literal_eval(default if arg is None else arg))
+    except ValueError:
+        return ast.dump(default) if arg is None else VARIES
+
+
+def single_valued_options():
     calls = _calls()
     found = []
     for path, name, fn, is_method in _definitions():
-        for param, index in _defaulted(fn, is_method):
-            if not any(_is_set(c, param, index) for c in calls[name]):
+        for param, index, default in _defaulted(fn, is_method):
+            values = {_value(c, param, index, default) for c in calls[name]}
+            if VARIES not in values and len(values) < 2:
                 rel = path.relative_to(REPO).as_posix()
                 found.append(f"{rel}:{fn.lineno} {name}({param})")
     return found
 
 
-def test_every_defaulted_parameter_is_set_by_some_caller():
-    found = unset_options()
+def test_every_defaulted_parameter_takes_two_values():
+    found = single_valued_options()
     assert not found, (
-        f"{len(found)} defaulted parameters that no caller sets; make each "
-        "a constant with its current default:\n  " + "\n  ".join(found)
+        f"{len(found)} defaulted parameters whose callers use one value; "
+        "make each a constant with that value:\n  " + "\n  ".join(found)
     )

@@ -134,8 +134,8 @@ def test_lsh_bucket_cap_mass_duplicates(spark):
         "doc_id long, text string",
     )
     docs = boiler.unionByName(trio)
-    sigs = DD.minhash_signatures(docs, num_hashes=16, n=3)
-    pairs = DD.lsh_candidate_pairs(sigs, bands=4, bucket_cap=256)
+    sigs = DD.minhash_signatures(docs)
+    pairs = DD.lsh_candidate_pairs(sigs)
     got = {(r["a"], r["b"]) for r in pairs.collect()}
     # bounded: 9,999 star pairs for the big cluster + exact all-pairs
     # (3 choose 2) for the small one — not ~2·10^8
@@ -407,7 +407,7 @@ def test_lsh_band_plan_guarantees():
     from loganalyzer_spark.operators.dedup import lsh_band_plan
 
     for t in (0.35, 0.5, 0.7, 0.9, 0.95, 0.99, 1.0):
-        b, w = lsh_band_plan(t, target_recall=0.95)
+        b, w = lsh_band_plan(t)
         assert 1 <= b * w <= 60
         p = 1.0 - math.acos(min(t, 1.0)) / math.pi
         recall_at_t = 1.0 - (1.0 - p**w) ** b
@@ -496,6 +496,26 @@ def test_sources_table_abstraction(spark, tmp_path):
     assert got == {"e1": 3, "e2": 1, "e3": 1}
 
 
+def test_upsert_template_lib_keeps_a_corrupt_library(spark, tmp_path):
+    """A committed library that fails to read makes the upsert raise and
+    stay untouched; it is not replaced by the new batch alone."""
+    from loganalyzer_spark import sources as S
+
+    lib = tmp_path / "lib"
+    S.upsert_template_lib(spark, spark.createDataFrame(
+        [("e1", "T one"), ("e1", "T one"), ("e2", "T two")],
+        "event_id: string, event_template: string",
+    ), str(lib))
+    for part in lib.glob("part-*"):
+        part.write_bytes(b"not a parquet file")
+    before = {p.name: p.read_bytes() for p in lib.iterdir()}
+    with pytest.raises(Exception):
+        S.upsert_template_lib(spark, spark.createDataFrame(
+            [("e3", "T three")], "event_id: string, event_template: string",
+        ), str(lib))
+    assert {p.name: p.read_bytes() for p in lib.iterdir()} == before
+
+
 def test_ivf_ann_recall(spark):
     """IVF ANN: top-1 neighbor recall vs brute force on clustered data.
     Clustered vectors (what IVF assumes) -> the true nearest neighbor
@@ -573,7 +593,7 @@ def test_connected_components(spark):
 
 def test_connected_components_long_chain(spark):
     """A 120-node chain (diameter 119) must converge inside
-    max_iter=20 — only possible with pointer doubling (plain
+    20 rounds — only possible with pointer doubling (plain
     neighbor-min propagation needs ~119 rounds; ADVICE r01 flagged the
     silent non-convergence)."""
     from loganalyzer_spark.operators import dedup as DD
@@ -583,7 +603,7 @@ def test_connected_components_long_chain(spark):
     )
     got = {
         r["node"]: r["comp"]
-        for r in DD.connected_components(pairs, max_iter=20).collect()
+        for r in DD.connected_components(pairs).collect()
     }
     assert got == {i: 0 for i in range(121)}
 
@@ -677,7 +697,7 @@ def test_deeplog_score_sequences(spark):
     from loganalyzer_spark.queries import _routed
 
     routed = P.sessionize(_routed(spark, "/root/testdata/sf0.001"))
-    seq = A.sequence_windows(routed, win=5)
+    seq = A.sequence_windows(routed)
     vr = datagen.vocab_rows()
     out = DL.score_sequences(spark, seq, vr, topk=3)
     rows = out.select("seq_idx", "target_idx", "rank", "anomaly").collect()
@@ -885,7 +905,7 @@ def test_word_ngrams_and_decontaminate(spark):
 
     out = {
         r["doc_id"]: r
-        for r in W.decontaminate(docs, bench, n=3).collect()
+        for r in W.decontaminate(docs, bench).collect()
     }
     assert set(out) == {0, 3}
     # 9 words → 7 trigrams, "a b c" twice → 6 distinct
@@ -1084,7 +1104,7 @@ def test_incremental_partial_fit_convergence():
 
     batches = [(X[i::4], y[i::4]) for i in range(4)]
     for order in (batches, batches[::-1]):
-        m = IncrementalLogReg(d, lr=0.05)
+        m = IncrementalLogReg(d)
         for _ in range(30):
             for Xb, yb in order:
                 m.partial_fit(Xb, yb)
@@ -1094,7 +1114,7 @@ def test_incremental_partial_fit_convergence():
         assert (pred_inc == y.astype(bool)).mean() >= 0.95
 
     # persistence: resume from state continues bit-identically
-    m1 = IncrementalLogReg(d, lr=0.05)
+    m1 = IncrementalLogReg(d)
     m1.partial_fit(*batches[0])
     m2 = IncrementalLogReg.from_state(m1.to_state())
     m1.partial_fit(*batches[1])
@@ -1121,7 +1141,7 @@ def test_kfold_validate(spark):
     vec = spark.createDataFrame(
         rows, "doc_id long, vec array<double>, label int"
     )
-    out = {r["fold"]: r for r in kfold_validate(spark, vec, k=5).collect()}
+    out = {r["fold"]: r for r in kfold_validate(spark, vec).collect()}
     assert set(out) == {-1, 0, 1, 2, 3, 4}
     for f in range(5):
         assert out[f]["n_test"] == 20 and out[f]["n_train"] == 80
@@ -1130,7 +1150,7 @@ def test_kfold_validate(spark):
         sum(out[f]["accuracy"] for f in range(5)) / 5, 6
     )
     # determinism: second run bit-identical
-    again = {r["fold"]: r for r in kfold_validate(spark, vec, k=5).collect()}
+    again = {r["fold"]: r for r in kfold_validate(spark, vec).collect()}
     assert again == out
 
 
@@ -1279,7 +1299,7 @@ def test_asof_join_semantics(spark):
         "user_id BIGINT, ts TIMESTAMP, rid BIGINT",
     )
     out = asof_join(
-        left, right, on="user_id", left_ts="ts", right_ts="ts",
+        left, right, on="user_id",
         payload=["rid"], prefix="r_", tiebreak="rid",
     )
     got = {r["event_id"]: (r["r_rid"], r["r_ts"]) for r in out.collect()}
@@ -1293,7 +1313,7 @@ def test_asof_join_semantics(spark):
     # tolerance: user 100 event at ts(20) matched ts(10) → 600 s old;
     # a 300 s horizon must null it while keeping the ts(10)↔ts(10) hit
     tol = asof_join(
-        left, right, on="user_id", left_ts="ts", right_ts="ts",
+        left, right, on="user_id",
         payload=["rid"], prefix="r_", tiebreak="rid", tolerance_seconds=300,
     )
     got_t = {r["event_id"]: r["r_rid"] for r in tol.collect()}
@@ -1358,8 +1378,7 @@ def test_interval_join_equals_bruteforce(spark):
     got = {
         (r["pid"], r["iid"])
         for r in interval_join(
-            pts, iv, "k", "ik", ts="ts", start="start_ts", end="end_ts",
-            bucket_seconds=600,
+            pts, iv, "k", "ik", start="start_ts", bucket_seconds=600,
         ).collect()
     }
     want = {
@@ -1398,7 +1417,7 @@ def test_temporal_join_validation_and_null_keys(spark):
     assert out[1] is None
     assert out[2] == 92
 
-    # left already has an 'r_ts' column → collides with prefix+right_ts
+    # left already has an 'r_ts' column → collides with prefix + "ts"
     with pytest.raises(ValueError, match="output aliases"):
         asof_join(
             left.withColumn("r_ts", left["ts"]), right,
@@ -1410,7 +1429,7 @@ def test_temporal_join_validation_and_null_keys(spark):
         [(1, 3, t0, t0)], "iid BIGINT, ik BIGINT, ts TIMESTAMP, end_ts TIMESTAMP"
     )
     with pytest.raises(ValueError, match="disjoint"):
-        interval_join(pts, iv, "k", "ik", ts="ts", start="ts", end="end_ts")
+        interval_join(pts, iv, "k", "ik", start="ts")
 
 
 def test_bucketed_fact_fact_join_no_exchange(spark):
@@ -1472,7 +1491,7 @@ def test_repeated_passages_planted_boilerplate(spark):
         ],
         ["doc_id", "text"],
     )
-    out = repeated_passages(docs, k=8, min_docs=2).collect()
+    out = repeated_passages(docs).collect()
     spans = sorted(
         (r["doc_id"], r["span_start"], r["span_end"], r["n_windows"],
          r["max_docs"])

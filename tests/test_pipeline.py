@@ -331,11 +331,8 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     )
     spark.createDataFrame(b1, schema).write.parquet(src + "/b1")
 
-    stream = streaming_dedup(
-        spark, src + "/*", schema, keys=("doc_id", "line_no"),
-        watermark="1 hour",
-    )
-    q = run_append_to_memory(stream, "dedup_out")
+    stream = streaming_dedup(spark, src + "/*", schema)
+    q = run_append_to_memory(stream)
     try:
         spark.createDataFrame(b2, schema).write.parquet(src + "/b2")
         q.processAllAvailable()

@@ -7,10 +7,9 @@ N doubling from 1 up to the host's CPU count:
 
     python tools/scaling_bench.py [n_docs]
 
-Each rung runs $SPARK_GRAFT_LADDER_REPS (default 3) separate
-spark-submits and reports the median docs/sec; every run's wall is
-published next to its host probe. The driver heap follows
-``session.heap_mb``. Writes BENCH/BASELINE.md.
+Each rung runs 3 separate spark-submits and reports the median
+docs/sec; every run's wall is published next to its host probe. The
+driver heap follows ``session.heap_mb``. Writes BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -116,7 +115,7 @@ def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     corpus = ensure_corpus(n_docs)
     zpath = make_zip()
-    reps = int(os.environ.get("SPARK_GRAFT_LADDER_REPS", "3"))
+    reps = 3
     conf = {
         "spark.driver.memory": f"{heap_mb()}m",
         "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
