@@ -36,11 +36,12 @@ from loganalyzer_spark.datagen import local_df
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1 (Mersenne)
 
 
-def minhash_params(k: int) -> list[tuple[int, int]]:
-    # Deterministic LCG-derived coefficients; a must be non-zero.
+def minhash_params() -> list[tuple[int, int]]:
+    """The 16 MinHash (a, b) pairs: deterministic LCG-derived
+    coefficients; a must be non-zero."""
     out = []
     s = 88172645463325252
-    for _ in range(k):
+    for _ in range(16):
         s = (s * 6364136223846793005 + 1442695040888963407) % (2**63)
         a = (s % (MINHASH_PRIME - 1)) + 1
         s = (s * 6364136223846793005 + 1442695040888963407) % (2**63)
@@ -98,7 +99,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     Pure column expressions: shingle→hash60, then per-k transform+min.
     Empty shingle sets hash to the reserved max value.
     """
-    params = minhash_params(16)
+    params = minhash_params()
     df = with_shingles(docs).withColumn(
         "sh_hashes", F.transform("shingles", lambda s: _hash60(s))
     )

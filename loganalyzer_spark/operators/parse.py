@@ -14,8 +14,10 @@ Catalyst whole-stage-codegen fuses back into one pass:
   P10 'segsign: ' segmentation     (preprocess_base.py:684-731)
   P7  hard-parameter masking       (drain.py:880-887) — a JVM regexp
       chain byte-identical to the Python tier ``patterns.mask_params``
-      (the per-url invariant surface); the cm tier stays a pandas UDF
-      because Java regex cannot run its patterns.
+      (the per-url invariant surface), whose first four passes run only
+      on lines an exact colon/dot count says they can match; the cm
+      tier stays a pandas UDF because Java regex cannot run its
+      patterns.
 
 Stage order matches the reference main loop (preprocess_base.py:217-407):
 strip ts → domain line process (clean chars, response normalize, line
@@ -212,27 +214,60 @@ def mask_cm(lines: DataFrame) -> DataFrame:
     return lines.withColumn("masked", mask_params_cm_udf(F.col("content")))
 
 
+# P7's ordered chain. The first four passes are guarded in _mask_sql;
+# BARE_INT runs on every line.
+_MASK_GUARDED = (
+    (P.SQL_CTIME, "<*>"),
+    (P.SQL_IPV4, "<*>"),
+    (P.SQL_MAC, "<*>"),
+    (P.SQL_TIME_24H, " <*>$5"),
+)
+_MASK_BARE_INT = (P.SQL_BARE_INT, " <*> ")
+
+
+def _replace_sql(c: str, ptn: str, repl: str) -> str:
+    return f"regexp_replace({c}, {sql_str(ptn)}, {sql_str(repl)})"
+
+
+def _count_sql(c: str, ch: str) -> str:
+    """Occurrences of the single-byte ASCII ``ch`` in ``c``, without a
+    regex: an ASCII byte never occurs inside a multi-byte UTF-8
+    sequence, so the byte-length difference counts it exactly."""
+    return f"octet_length({c}) - octet_length(replace({c}, {sql_str(ch)}, ''))"
+
+
 def _mask_sql(c: str) -> str:
     """JVM-side P7 masking (Java-safe rewrites of the reference chain).
 
+    Most lines run only the BARE_INT pass, behind an exact guard on the
+    original column ``c``. Each earlier pass needs a minimum count in
+    the text it scans: CTIME and TIME_24H need 2 colons, IPv4 needs 3
+    dots, MAC needs 5 colons. No replacement in the chain (``<*>``,
+    `` <*>$5`` with ``$5`` a space or empty, `` <*> ``) adds a colon or
+    a dot, so a line with fewer than 2 colons and fewer than 3 dots has
+    no match for the first four passes, and its masked text is BARE_INT
+    applied to ``c``. Every other line runs the full chain unchanged.
+    One two-branch CASE keeps one copy of the chain; a guard per pass
+    would copy the previous pass's expression into both branches at
+    every level. A NULL ``c`` still gives NULL.
+
     tests/test_mask_fidelity.py proves byte-equality with the Python
-    ``patterns.mask_params`` chain on the corpus and on adversarial
-    lines.
+    ``patterns.mask_params`` chain on the corpus and on lines on each
+    side of every guard threshold.
     """
     # Sequential passes, deliberately NOT merged into one alternation:
     # A/B measurement (3 reps, local[8], 18M lines) shows the merged
     # (?:ctime)|(?:ipv4)|(?:mac) pattern ~10% SLOWER — single-pattern
     # passes keep Java regex's literal-prefix scan optimizations that a
     # top-level alternation defeats.
-    for ptn, repl in (
-        (P.SQL_CTIME, "<*>"),
-        (P.SQL_IPV4, "<*>"),
-        (P.SQL_MAC, "<*>"),
-        (P.SQL_TIME_24H, " <*>$5"),
-        (P.SQL_BARE_INT, " <*> "),
-    ):
-        c = f"regexp_replace({c}, {sql_str(ptn)}, {sql_str(repl)})"
-    return c
+    full = c
+    for ptn, repl in _MASK_GUARDED:
+        full = _replace_sql(full, ptn, repl)
+    guard = f"{_count_sql(c, ':')} >= 2 OR {_count_sql(c, '.')} >= 3"
+    return (
+        f"CASE WHEN {guard} THEN {_replace_sql(full, *_MASK_BARE_INT)} "
+        f"ELSE {_replace_sql(c, *_MASK_BARE_INT)} END"
+    )
 
 
 def mask(lines: DataFrame, content: str = "content") -> DataFrame:

@@ -170,11 +170,11 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     )
 
 
-def latest_snapshot(pages: DataFrame, keep: list[str] | None = None) -> DataFrame:
+def latest_snapshot(pages: DataFrame) -> DataFrame:
     """Keep the newest crawl snapshot per canonical URL (ties broken by
     highest ``snap_id``) — the CC-style "latest revision wins" dedup.
 
-    max(struct(warc_ts, snap_id, payload...)) is partial-aggregable:
+    max(struct(warc_ts, snap_id, text)) is partial-aggregable:
     each map task keeps one candidate per URL before the shuffle, so
     the exchange carries |distinct urls| rows regardless of how many
     snapshots history holds — a window row_number() would ship and
@@ -182,16 +182,10 @@ def latest_snapshot(pages: DataFrame, keep: list[str] | None = None) -> DataFram
     buffers aren't hash-aggregable); the per-partition sort happens
     before the exchange and never moves data.
     """
-    keep = keep or ["text"]
     withc = canonicalize_url(pages)
-    winner = F.max(
-        F.struct(F.col("warc_ts"), F.col("snap_id"), *[F.col(c) for c in keep])
-    ).alias("w")
+    winner = F.max(F.struct(F.col("warc_ts"), F.col("snap_id"), F.col("text"))).alias("w")
     agg = withc.groupBy("canon_url").agg(winner)
-    cols = [F.col("canon_url"), F.col("w.warc_ts").alias("warc_ts"),
-            F.col("w.snap_id").alias("snap_id")]
-    cols += [F.col(f"w.{c}").alias(c) for c in keep]
-    return agg.select(*cols)
+    return agg.select("canon_url", "w.warc_ts", "w.snap_id", "w.text")
 
 
 def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:

@@ -940,7 +940,7 @@ _docs2 AS (
 
 def _minhash_oracle_cols() -> str:
     cols = []
-    for j, (a, b) in enumerate(DD.minhash_params(16)):
+    for j, (a, b) in enumerate(DD.minhash_params()):
         cols.append(
             f"coalesce(min((h % {_P} * {a} + {b}) % {_P}), {_P}) AS s{j}"
         )
@@ -2714,7 +2714,7 @@ def latest_crawl_per_url(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "url", "snap_id", "warc_ts", "text")
     )
-    out = W.latest_snapshot(snaps, keep=["text"])
+    out = W.latest_snapshot(snaps)
     return out.select(
         "canon_url", "warc_ts", F.col("snap_id").cast("long").alias("snap_id"),
         "text",

@@ -84,14 +84,23 @@ def test_masked_text_byte_identical(spark):
 
 # The JVM rewrite diverges from Python re only outside the generated
 # corpus's guarantees (adjacent maskable time tokens, patterns.py Tier 2);
-# these lines stay inside them.
+# these lines stay inside them. The JVM chain runs its first four passes
+# only on lines with at least 2 colons or 3 dots (parse._mask_sql); the
+# lines after the first six sit on each side of those thresholds.
 MASK_CASES = [
     "Trace: Connecting to 10.1.2.3 port 2121",
     "Response: 230 Login successful",
     "Trace: Session time 01:02:03 elapsed",
-    "Mon Jun 20 14:42:53 2022 boot",
-    "mac 0a:1b:2c:3d:4e:5f up",
+    "Mon Jun 20 14:42:53 2022 boot",  # CTIME, exactly 2 colons
+    "mac 0a:1b:2c:3d:4e:5f up",  # MAC, 5 colons
     "values 1 2 3 4 end",
+    "Trace: sent 42 bytes",  # 1 colon: BARE_INT only
+    "uptime 12:34:56 now",  # exactly 2 colons: 24h time
+    "build v1.2.3 rev 7 ok",  # 2 dots: BARE_INT only
+    "peer 10.0.0.1 port 21 ok",  # 3 dots: IPv4
+    "key a:b:c:d:e 9 set",  # 4 colons, no MAC
+    "Größe 12:34:56 für 3 Dateien",  # multi-byte UTF-8 around a time
+    "",
 ]
 
 
@@ -108,7 +117,8 @@ def test_jvm_mask_on_adversarial_lines(spark):
     from loganalyzer_spark import patterns as P
     from loganalyzer_spark.operators import parse
 
-    df = spark.createDataFrame([(c,) for c in MASK_CASES], "content string")
+    df = spark.createDataFrame([(c,) for c in [*MASK_CASES, None]], "content string")
     got = {r["content"]: r["masked"] for r in parse.mask(df).collect()}
     for c in MASK_CASES:
         assert got[c] == P.mask_params(c), c
+    assert got[None] is None

@@ -580,6 +580,25 @@ def test_flagship_runs_each_wash_regex_once(spark):
     assert plan.count(parse._CLEAN_CHAR) == 1, plan
 
 
+def test_flagship_runs_each_mask_pass_once(spark):
+    """Each guarded mask pass appears once in the flagship's physical
+    plan, and so does ``content``'s response-normalize CASE: the mask
+    guard reads ``content`` several times, so CollapseProject keeps it
+    a column instead of copying its definition into the guard."""
+    from loganalyzer_spark import datagen, pipeline
+    from loganalyzer_spark import patterns as P
+    from loganalyzer_spark.operators import parse
+
+    pages = datagen.web_pages(spark, SF_SMALL)
+    flagship = pipeline.sink_aggregates(pipeline.routed_from_pages(spark, pages))
+    plan = flagship._jdf.queryExecution().sparkPlan().toString()
+    # The call's arguments as the plan prints them; a bare pattern can
+    # also occur inside another regex (BARE_INT's inside PTN_LINE_RM).
+    for ptn, repl in parse._MASK_GUARDED:
+        assert plan.count(f", {ptn}, {repl}, 1)") == 1, (ptn, plan)
+    assert plan.count("^" + P.PTN_RSP_STAT[0][0].pattern) == 1, plan
+
+
 def test_flagship_build_jvm_round_trips(spark, monkeypatch):
     """Building the flagship plan, without an action, takes at most 400
     py4j round trips: each layer is a few SQL-text calls, not one call
