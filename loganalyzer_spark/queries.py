@@ -2369,7 +2369,7 @@ def near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup.embedding_near_dups_lsh — a (band_id, band_bits) equi-join
     with exact rounded-cosine verify), NOT the O(n^2) brute form: at
     sf0.1 the brute pair build already cost 64 s vs ~10 s for LSH
-    (BENCH/LLMOPS.md), and at 100 TB it does not exist. The oracle
+    (on the retired 32-core VM), and at 100 TB it does not exist. The oracle
     re-derives the identical LSH candidates + verify in SQL, so the
     hash certifies the scale path's survivor set; the brute pair
     semantics stay certified by the demoted embedding_near_dups /

@@ -20,8 +20,8 @@ def heap_mb(jvms: int = 1) -> int:
 
     The other half stays free for the Python workers and for a second
     driver on the same host (a spark-submit child, a test subprocess).
-    Larger heaps than 16g lost throughput to GC in BENCH/BASELINE.md's
-    measurements."""
+    The 16g cap comes from the retired 32-core VM, where larger heaps
+    lost throughput to GC; it was not re-measured on smaller hosts."""
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     return min(16 * 1024, phys_mb // 2) // jvms
 
@@ -70,9 +70,9 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # measured on this VM (BENCH/BASELINE.md): small parquet files
-        # otherwise bin-pack into one task wave per core count —
-        # multiple waves load-balance stragglers (+43% at 32 threads)
+        # small parquet files otherwise bin-pack into one task wave per
+        # core count; multiple waves load-balance stragglers (+43% at 32
+        # threads on the retired 32-core VM, not re-measured since)
         .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
     )

@@ -1,4 +1,4 @@
-"""Template-match cost vs library size (13 → 2000 templates).
+"""Template-match cost vs library size (the 16 real templates → 2000).
 
 The reference caps its library at 2000 templates (config_default.yaml:23);
 ftp ships 199, cm 983. The D1/D2 match joins each line against
@@ -6,13 +6,14 @@ candidates sharing (token_count, first_token) — cost grows with the
 candidate-bucket size, not the library size, so a 150x bigger library
 should NOT cost 150x. This bench measures it.
 
-Synthetic library: the real datagen templates plus N generated ones
-with realistic shape (2-10 tokens, Zipfian first-token reuse so
+Synthetic library: the real datagen templates plus enough generated
+ones to reach each size (2-10 tokens, Zipfian first-token reuse so
 candidate buckets actually grow).
 
 Each library size is timed with bench.py's median_timed: three
 fresh-plan runs of perfbench's ``timed(fingerprint(...))`` over the
-columns the match adds, median reported.
+columns the match adds, median reported next to every run's wall and
+host probe.
 
 Usage: python tools/match_scale_bench.py [n_docs] [lib_sizes...]
 """
@@ -50,12 +51,14 @@ def synth_templates(n: int) -> list[str]:
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    sizes = [int(x) for x in sys.argv[2:]] or [13, 200, 1000, 2000]
 
     from bench import median_timed
     from loganalyzer_spark import datagen
     from loganalyzer_spark.operators import match, parse
     from loganalyzer_spark.session import get_spark
+
+    base = datagen.template_rows()
+    sizes = [int(x) for x in sys.argv[2:]] or [len(base), 200, 1000, 2000]
 
     spark = get_spark(app="match_scale")
     corpus = f"/tmp/loganalyzer_bench/corpus_{n_docs}_{datagen.generator_key()}"
@@ -70,10 +73,9 @@ def main() -> None:
     n_rows = masked.count()
 
     results = {}
-    probes = {}
     for size in sizes:
-        extra = synth_templates(max(0, size - 13))
-        rows = datagen.template_rows() + [datagen.template_row(t) for t in extra]
+        extra = synth_templates(max(0, size - len(base)))
+        rows = base + [datagen.template_row(t) for t in extra]
         tmpl = datagen.local_df(spark, rows, datagen.TEMPLATE_SCHEMA)
 
         # hash only what the match layer adds, keyed by line
@@ -83,19 +85,17 @@ def main() -> None:
                 "doc_id", "line_no", "event_id", "is_new"
             ),
         )
-        results[size] = r["wall_s"]
-        probes[size] = r["probes_mb_s"]
-        print(f"lib={size}: {results[size]}s")
+        results[size] = r
+        print(f"lib={size}: {r}")
 
     print(
         json.dumps(
             {
                 "n_docs": n_docs,
                 "rows": n_rows,
-                "walls_by_lib_size": results,
-                "probes_by_lib_size": probes,
-                "cost_ratio_2000_vs_13": round(
-                    results[max(sizes)] / results[min(sizes)], 2
+                "runs_by_lib_size": results,
+                "cost_ratio_max_vs_min": round(
+                    results[max(sizes)]["wall_s"] / results[min(sizes)]["wall_s"], 2
                 ),
             }
         )
