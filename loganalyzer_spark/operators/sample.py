@@ -30,8 +30,9 @@ from pyspark.sql import functions as F
 _SPACE = 1 << 16  # 4 hex chars
 
 
-def _threshold_hex(rate: float) -> str:
-    """rate in [0,1] → 4-char lowercase hex threshold (floor).
+def threshold_hex(rate: float) -> str:
+    """rate in [0,1] → 4-char lowercase hex threshold (floor). The
+    oracles embed the same literal, so the two engines cannot drift.
 
     rate >= 1 returns "g": lexicographically above every hex char, so
     ``hash16 < "g"`` keeps everything (format(65536) would be the
@@ -49,13 +50,13 @@ def hash16(key: Column | str) -> Column:
 
 def sample_hash(df: DataFrame, key: str, rate: float) -> DataFrame:
     """Keep rows whose md5(key) 16-bit prefix < rate (quantized k/65536)."""
-    return df.filter(hash16(key) < F.lit(_threshold_hex(rate)))
+    return df.filter(hash16(key) < F.lit(threshold_hex(rate)))
 
 
 def split_column(key: Column | str, train_rate: float = 0.9) -> Column:
     """'train' / 'val' assignment, deterministic in the key."""
     return F.when(
-        hash16(key) < F.lit(_threshold_hex(train_rate)), F.lit("train")
+        hash16(key) < F.lit(threshold_hex(train_rate)), F.lit("train")
     ).otherwise(F.lit("val"))
 
 
@@ -75,16 +76,10 @@ def stratified_sample(
     expr = None
     for val, rate in sorted(rates.items()):
         cond = F.col(stratum) == F.lit(val)
-        thr = F.lit(_threshold_hex(rate))
+        thr = F.lit(threshold_hex(rate))
         expr = F.when(cond, thr) if expr is None else expr.when(cond, thr)
     thr_col = expr.otherwise(F.lit("g"))  # missing stratum → keep all
     return df.filter(hash16(key) < thr_col)
-
-
-def oracle_threshold_sql(rate: float) -> str:
-    """The DuckDB-side threshold literal for a given rate (shared
-    constant so the oracle and the Spark plan cannot drift)."""
-    return _threshold_hex(rate)
 
 
 def hash16_int(key: Column | str) -> Column:

@@ -54,22 +54,32 @@ def quality_score(docs: DataFrame) -> DataFrame:
         F.lit(0.0)
     )
     # The blend consumes the ROUNDED ratio columns (the same values the
-    # output exposes), so the exact-hash oracle can reproduce the score
-    # bit-for-bit — blending unrounded intermediates diverges in the 6th
-    # decimal whenever rounding moves a ratio across a ulp boundary.
+    # output exposes) as exact integers — ratios in millionths, the
+    # blend N in 1e-10 units — and rounds N half up to 6 dp once, so
+    # the exact-hash oracle reproduces the score bit for bit. A float
+    # blend lands either side of a half-way score by the engines'
+    # last-bit differences: at sf0.1 a score of exactly 0.5774995 gave
+    # 0.577499 in Spark and 0.5775 in DuckDB. The oracle
+    # (queries._QUALITY_ORACLE) computes the same N.
     out = (
         docs.withColumn("n_toks", n_toks)
         .withColumn("punct_ratio", F.round(punct_ratio, 6))
         .withColumn("stop_ratio", F.round(stop_ratio, 6))
         .withColumn("mean_word_len", F.round(mean_len, 6))
     )
-    score = (
-        F.least(F.col("n_toks").cast("double") / 50, F.lit(1.0)) * 0.4
-        + F.least(F.col("stop_ratio") * 5, F.lit(1.0)) * 0.3
-        + (1 - F.least(F.col("punct_ratio") * 10, F.lit(1.0))) * 0.2
-        + F.least(F.col("mean_word_len") / 8, F.lit(1.0)) * 0.1
+
+    def micro(c: str):
+        return F.round(F.col(c) * 1e6).cast("long")
+
+    n = (
+        F.least(F.col("n_toks").cast("long") * 80_000_000, F.lit(4_000_000_000))
+        + F.least(micro("stop_ratio") * 15_000, F.lit(3_000_000_000))
+        + 2_000_000_000
+        - F.least(micro("punct_ratio") * 20_000, F.lit(2_000_000_000))
+        + F.least(micro("mean_word_len") * 125, F.lit(1_000_000_000))
     )
-    return out.withColumn("quality", F.round(score, 6))
+    q6 = F.call_function("div", n + 5000, F.lit(10000))
+    return out.withColumn("quality", q6 / 1e6)
 
 
 def lang_id(docs: DataFrame) -> DataFrame:

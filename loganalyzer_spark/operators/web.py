@@ -24,7 +24,9 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # Ordered (pattern, replacement) chain. Order is semantic: dotted
@@ -188,6 +190,26 @@ def latest_snapshot(pages: DataFrame) -> DataFrame:
     return agg.select("canon_url", "w.warc_ts", "w.snap_id", "w.text")
 
 
+def mean_logp(scored: DataFrame) -> DataFrame:
+    """(doc_id, lp) bigram rows -> (doc_id, n_bigrams, avg_logp): the
+    mean of the 6-dp logps, rounded half away from zero to 4 dp.
+
+    The mean is taken in integers: T = sum of round(-lp * 1e6) over a
+    doc's n bigrams, and avg_logp = -((T + 50n) div 100n) / 1e4. Every
+    lp ≤ 0 (add-one smoothing keeps each probability ≤ 1), so T ≥ 0 and
+    the integer division rounds the magnitude half up. A float
+    ``round(avg(lp), 4)`` flips on half-way means: at sf0.1 a doc whose
+    exact mean is -3.39975 gave -3.3998 in Spark and -3.3997 in DuckDB.
+    The oracle (queries._LM_MEAN_LOGP_ORACLE) runs the same formula.
+    """
+    t = F.sum(F.round(F.col("lp") * -1e6).cast("long"))
+    n = F.count(F.lit(1))
+    return scored.groupBy("doc_id").agg(
+        n.alias("n_bigrams"),
+        (-F.call_function("div", t + 50 * n, 100 * n) / 1e4).alias("avg_logp"),
+    )
+
+
 def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
     """CCNet-style LM quality scoring (Wenzek et al. 2020): score every
     corpus doc by bigram-LM perplexity under a model trained on a
@@ -205,8 +227,8 @@ def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
       logp(w2 | w1) = ln((c(w1,w2) + 1) / (c(w1) + V))
     with c(.) counted over the reference slice and V = reference
     vocabulary size. Per-bigram logp is rounded to 6 dp and the per-doc
-    mean to 4 dp so the DuckDB oracle reproduces the score exactly
-    (same rounded-intermediate contract as textstats.quality_score).
+    mean to 4 dp in integers (``mean_logp``) so the DuckDB oracle
+    reproduces the score exactly.
 
     Output: (doc_id, n_bigrams, avg_logp, ppl, lm_bucket) for every
     corpus doc with >= 2 tokens, ppl = exp(-avg_logp).
@@ -261,10 +283,7 @@ def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
             .crossJoin(F.broadcast(vocab))
             .select("doc_id", lp.alias("lp"))
         )
-        per = sc.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(F.avg("lp"), 4).alias("avg_logp"),
-        )
+        per = mean_logp(sc)
         return per.withColumn("ppl", F.round(F.exp(-F.col("avg_logp")), 2))
 
     # Exact interpolated `percentile` — the same estimator the
@@ -281,11 +300,6 @@ def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
         .otherwise(F.lit("tail"))
     )
     return per_doc.withColumn("lm_bucket", bucket).drop("_hc", "_tc")
-
-
-# Previous dsir_weights call's persisted projection (see the cache
-# lifecycle note inside the function) — at most one element.
-_DSIR_CACHE: list = []
 
 
 def dsir_weights(
@@ -324,36 +338,14 @@ def dsir_weights(
     aggregates — the dim pass shuffles ≤ ``buckets`` rows per map task,
     the scoring pass shuffles one row per document after a broadcast
     join against the ≤ ``buckets``-row log-ratio dim. No per-row
-    Python. The keep bit needs the key at integer rank
-    ``floor(q·n)`` — ranking every row for a single cutoff is wasted
-    motion, so the cutoff key is found by EXACT distributed selection
-    instead (no corpus-wide range shuffle, no global-ORDER-BY window,
-    which would ship every row to ONE reducer):
-
-    1. persist the skinny per-doc projection (3 columns, ~24 B/doc —
-       the gram pipeline runs exactly once; MEMORY_AND_DISK so
-       executors under pressure spill instead of recomputing);
-    2. one agg gives ``n``; one gives a Greenwald–Khanna bracket
-       ``[P_lo, P_hi]`` from ``percentile_approx`` at
-       ``q ± max(3/acc, 8/n)`` — GK's deterministic rank-error bound
-       (≤ n/acc) plus the ±1-rank definitional slack means the true
-       rank-k key ALWAYS lies inside the bracket (a count-based guard
-       falls back to selecting over the full set anyway, so
-       correctness never rests on the bound — only speed does);
-    3. one agg counts rows below/inside the bracket; the rows inside
-       (≤ ~6n/acc + cutoff-value ties, ~250k rows for a 25 G-doc
-       corpus at acc=1e5) are the only rows that ever shuffle —
-       ``_nth_key`` range-partitions JUST the bracket and fetches the
-       exact rank-``(k − n_below)`` key;
-    4. ``keep`` is then a broadcast integer comparison against the
-       cutoff key — zero additional exchanges on the corpus.
-
-    Worst case (every doc sharing one logw value, so the bracket IS
-    the corpus) degrades to exactly the old distributed-rank plan —
-    a range shuffle of the skinny projection — never to a single
-    reducer. Driver-side control flow collects O(1) scalar rows plus
-    ≤ ``spark.sql.shuffle.partitions`` partition sizes, documented
-    bounded.
+    Python. The keep bit is an exact distributed rank, never a
+    global-ORDER-BY window (which would ship every row to ONE reducer):
+    one job range-partitions the skinny per-doc projection and collects
+    the ≤ ``spark.sql.shuffle.partitions`` partition sizes and largest
+    keys; the returned plan cuts the rows at those keys into balanced
+    buckets and ranks each bucket by a window partitioned on it. Nothing
+    is persisted or checkpointed, so the plan is an ordinary lazy
+    DataFrame and the scoring pipeline runs once per job (twice in all).
 
     Rounding contract: per-bucket log_ratio rounds to 4 decimals, then
     scales to exact micro-longs (4-decimal value * 1e4 is an exact
@@ -423,131 +415,42 @@ def dsir_weights(
         )
     )
     # keep = integer rank over the UNIQUE key (logw_micro, doc_id)
-    # > floor(q·n)  ⟺  (logw_micro, doc_id) > cutoff key at rank
-    # floor(q·n). Selecting that one key exactly (docstring steps 1-4)
-    # costs three tiny aggs over the persisted skinny projection plus
-    # a shuffle of only the GK bracket — the corpus itself never
-    # range-shuffles, and the keep bit becomes a broadcast integer
-    # comparison.
-    import math
-
-    from pyspark.storagelevel import StorageLevel
-
-    # Cache lifecycle: the persisted skinny projection is read by the
-    # selection jobs below AND by the returned plan's final action, so
-    # it cannot be unpersisted here without re-running the gram
-    # pipeline per consumer. Instead the leak is bounded to ONE entry:
-    # each call releases the previous call's cache (recompute-safe —
-    # unpersist never breaks a still-held result, it only uncaches its
-    # input), and a caller that is fully done can
-    # ``spark.catalog.clearCache()``.
-    while _DSIR_CACHE:
-        _DSIR_CACHE.pop().unpersist(blocking=False)
-    scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-    _DSIR_CACHE.append(scored)
-
-    acc = 100_000
-    # pad ≥ 1/acc + 1/n makes the bracket provably contain the rank-k
-    # key under GK's deterministic error bound (see docstring); the
-    # count guard below keeps exactness even if it somehow didn't.
-    # n and the bracket come from ONE job (pad=3/acc is already valid
-    # for n ≥ 50k); only tiny inputs — where everything is cheap —
-    # pay a second percentile pass with the n-aware pad.
-    def _bracket(pad: float):
-        lo_q = max(0.0, keep_quantile - pad)
-        hi_q = min(1.0, keep_quantile + pad)
-        return F.percentile_approx("logw_micro", [lo_q, hi_q], acc).alias("p")
-
-    first = scored.agg(F.count(F.lit(1)).alias("n"), _bracket(3.0 / acc)).collect()[0]
-    n = int(first["n"])
-    k = int(math.floor(keep_quantile * n))
-    if k <= 0:
-        return scored.withColumn("keep", F.lit(True))
-    p = first["p"]
-    if n < 50_000:  # 3/acc < 1/acc + 1/n: re-bracket with the wide pad
-        pad = max(3.0 / acc, 8.0 / n)
-        p = scored.agg(_bracket(pad)).collect()[0]["p"]
-    p_lo, p_hi = int(p[0]), int(p[1])
-    cnt = scored.agg(
-        F.sum(F.when(F.col("logw_micro") < p_lo, 1).otherwise(0)).alias("lt"),
-        F.sum(
-            F.when(F.col("logw_micro").between(p_lo, p_hi), 1).otherwise(0)
-        ).alias("br"),
-    ).collect()[0]
-    n_lt, n_br = int(cnt["lt"] or 0), int(cnt["br"] or 0)
-    if n_lt < k <= n_lt + n_br:
-        bracket = scored.filter(F.col("logw_micro").between(p_lo, p_hi))
-    else:  # unreachable under GK bounds; exactness must not rest on them
-        n_lt, bracket = 0, scored
+    # > floor(q·n). Range partitions hold disjoint ascending key ranges,
+    # so their largest keys cut the rows into buckets of known size, and
+    # a row's rank is the rows in lower buckets plus its row number in
+    # its own. The returned plan re-derives the buckets from those
+    # literal keys: every job samples its own range boundaries, so the
+    # sizes job's partition ids would not match the plan's.
     n_range = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cut_w, cut_d = _nth_key(bracket, k - n_lt, n_range)
-    return scored.select(
+    parts = sorted(
+        (r["hi"]["logw_micro"], r["hi"]["doc_id"], r["n"])
+        for r in scored.repartitionByRange(n_range, "logw_micro", "doc_id")
+        .groupBy(F.spark_partition_id().alias("_p"))
+        .agg(
+            F.max(F.struct("logw_micro", "doc_id")).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .collect()
+    )
+    k = math.floor(keep_quantile * sum(n for _, _, n in parts))
+    whens, below = [], 0
+    for w, d, n in parts[:-1]:
+        below += n
+        whens.append(
+            f"WHEN logw_micro > {w} OR (logw_micro = {w} AND doc_id > {d}) "
+            f"THEN {below}"
+        )
+    # rows in lower buckets, tried from the top bucket down
+    below_col = (
+        F.expr(f"CASE {' '.join(reversed(whens))} ELSE 0 END") if whens else F.lit(0)
+    )
+    in_bucket = Window.partitionBy("_below").orderBy("logw_micro", "doc_id")
+    return scored.withColumn("_below", below_col).select(
         "doc_id",
         "n_grams",
         "logw_micro",
-        (
-            (F.col("logw_micro") > F.lit(cut_w))
-            | (
-                (F.col("logw_micro") == F.lit(cut_w))
-                & (F.col("doc_id") > F.lit(cut_d))
-            )
-        ).alias("keep"),
+        (F.col("_below") + F.row_number().over(in_bucket) > F.lit(k)).alias("keep"),
     )
-
-
-def _nth_key(df, r: int, n_range: int):
-    """Exact r-th smallest ``(logw_micro, doc_id)`` of ``df``, 1-based.
-
-    Distributed selection: range partitions hold ascending disjoint key
-    ranges in ascending partition id, each sorted locally, so
-    global rank = (rows in earlier partitions) + local index + 1. The
-    local index comes from ``monotonically_increasing_id``'s layout
-    contract (pid in the upper bits, within-partition row number in the
-    low 33); _pid and _loc are read from the SAME id value so they
-    cannot disagree. The projection is persisted so the sizes job and
-    the fetch job see the SAME materialized (pid, loc) assignment
-    (range-boundary sampling is not seed-stable across jobs); where
-    the boundaries fall never affects the answer — keys are unique,
-    rank is rank. Driver traffic: ≤ ``n_range`` partition sizes + the
-    one cutoff row.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    mid = F.monotonically_increasing_id()
-    local = (
-        df.repartitionByRange(n_range, "logw_micro", "doc_id")
-        .sortWithinPartitions("logw_micro", "doc_id")
-        .select("logw_micro", "doc_id", mid.alias("_mid"))
-        .select(
-            "logw_micro",
-            "doc_id",
-            F.shiftright("_mid", 33).alias("_pid"),
-            F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)).alias("_loc"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        sizes = sorted(
-            (
-                (row["_pid"], row["_cnt"])
-                for row in local.groupBy("_pid")
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .collect()
-            )
-        )
-        off = 0
-        pid = loc = None
-        for p, c in sizes:
-            if r <= off + c:
-                pid, loc = p, r - off - 1
-                break
-            off += c
-        row = local.filter(
-            (F.col("_pid") == pid) & (F.col("_loc") == loc)
-        ).collect()[0]
-        return row["logw_micro"], row["doc_id"]
-    finally:
-        local.unpersist()
 
 
 def c4_clean(lines: DataFrame, min_kept_lines: int = 5) -> DataFrame:

@@ -60,9 +60,6 @@ PTN_HARD_PARA: list[tuple[re.Pattern, str]] = [
     (PTN_BARE_INT, " <*> "),
 ]
 
-# preprocess/patterns.py:40-43 — nested (continuation) line starts with blank
-PTN_NESTED_LINE = re.compile(r"^( +|\t+)")
-
 # ftp/patterns.py:63-79 — token splitting (insert space after '='/'::'/'(' etc.)
 PTN_SPLIT_LEFT = [
     re.compile(r"=(?=[^= \r\n])"),

@@ -19,6 +19,7 @@ from loganalyzer_spark import datagen, pipeline
 from loganalyzer_spark.operators import aggregate as A
 from loganalyzer_spark.operators import match as M
 from loganalyzer_spark.operators import parse as P
+from loganalyzer_spark.operators import sample as SMP
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -803,23 +804,11 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _smp():
-    from loganalyzer_spark.operators import sample as SMP
-
-    return SMP
-
-
-def _split_sql(rate: float) -> str:
-    from loganalyzer_spark.operators.sample import oracle_threshold_sql
-
-    return oracle_threshold_sql(rate)
-
-
 @register(
     "corpus_sample_rows",
     f"""
     SELECT doc_id, lang FROM documents
-    WHERE substr(md5(cast(doc_id AS VARCHAR)), 1, 4) < '{_split_sql(0.1)}'
+    WHERE substr(md5(cast(doc_id AS VARCHAR)), 1, 4) < '{SMP.threshold_hex(0.1)}'
     """,
 )
 def corpus_sample_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -828,7 +817,7 @@ def corpus_sample_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Filter with no shuffle. Row-level exactness vs the oracle proves
     both engines select the identical document set."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = _smp().sample_hash(
+    out = SMP.sample_hash(
         docs.withColumn("k", F.col("doc_id").cast("string")), "k", 0.1
     )
     return out.select("doc_id", "lang")
@@ -840,7 +829,7 @@ def corpus_sample_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang, split, count(*) AS n, count(DISTINCT doc_id) AS n_docs FROM (
       SELECT lang, doc_id,
              CASE WHEN substr(md5(cast(doc_id AS VARCHAR)), 1, 4)
-                       < '{_split_sql(0.9)}'
+                       < '{SMP.threshold_hex(0.9)}'
                   THEN 'train' ELSE 'val' END AS split
       FROM documents)
     GROUP BY lang, split
@@ -852,7 +841,7 @@ def corpus_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents across splits; md5(key) thresholding cannot."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = docs.withColumn(
-        "split", _smp().split_column(F.col("doc_id").cast("string"), 0.9)
+        "split", SMP.split_column(F.col("doc_id").cast("string"), 0.9)
     )
     return out.groupBy("lang", "split").agg(
         F.count("*").alias("n"),
@@ -865,8 +854,8 @@ def corpus_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT lang, count(*) AS n FROM documents
     WHERE substr(md5(cast(doc_id AS VARCHAR)), 1, 4) <
-          CASE lang WHEN 'en' THEN '{_split_sql(0.25)}'
-                    WHEN 'zh' THEN '{_split_sql(0.5)}'
+          CASE lang WHEN 'en' THEN '{SMP.threshold_hex(0.25)}'
+                    WHEN 'zh' THEN '{SMP.threshold_hex(0.5)}'
                     ELSE 'g' END
     GROUP BY lang
     """,
@@ -877,7 +866,7 @@ def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     a literal CASE threshold (bounded stratum dim), no join, no
     shuffle."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = _smp().stratified_sample(
+    out = SMP.stratified_sample(
         docs.withColumn("k", F.col("doc_id").cast("string")),
         "k",
         "lang",
@@ -1222,12 +1211,15 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TS.token_stats(d).select("doc_id", "n_tokens", "n_subwords")
 
 
+# textstats.quality_score's integer blend (1e-10 units), half up to 6 dp.
 _QUALITY_ORACLE = """
     SELECT doc_id, n_toks, punct_ratio, stop_ratio, mean_word_len,
-           round(least(n_toks / 50.0, 1.0) * 0.4 +
-                 least(stop_ratio * 5, 1.0) * 0.3 +
-                 (1 - least(punct_ratio * 10, 1.0)) * 0.2 +
-                 least(mean_word_len / 8, 1.0) * 0.1, 6) AS quality
+           ((least(n_toks * 80000000, 4000000000)
+             + least(round(stop_ratio * 1e6)::BIGINT * 15000, 3000000000)
+             + 2000000000
+             - least(round(punct_ratio * 1e6)::BIGINT * 20000, 2000000000)
+             + least(round(mean_word_len * 1e6)::BIGINT * 125, 1000000000)
+             + 5000) // 10000) / 1e6 AS quality
     FROM (
       SELECT doc_id, n_toks,
              round(CASE WHEN n_chars > 0 THEN n_punct::DOUBLE / n_chars ELSE 0 END, 6) AS punct_ratio,
@@ -2753,9 +2745,17 @@ def benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     return W.decontaminate(corpus, bench).orderBy("doc_id")
 
 
+# web.mean_logp's integer mean: half away from zero on lp <= 0.
+_LM_MEAN_LOGP_ORACLE = """
+      SELECT doc_id, count(*) AS n_bigrams,
+             -((sum(round(-lp * 1e6)::BIGINT) + 50 * count(*))
+               // (100 * count(*))) / 1e4 AS avg_logp
+      FROM scored GROUP BY doc_id"""
+
+
 @register(
     "lm_perplexity",
-    """
+    f"""
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     big AS (
       SELECT doc_id, unnest(w[1:len(w)-1]) AS g1, unnest(w[2:len(w)]) AS g2
@@ -2771,9 +2771,7 @@ def benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
                       / (coalesce(c1.c1, 0) + v.v)), 6) AS lp
       FROM big b LEFT JOIN c12 USING (g1, g2) LEFT JOIN c1 USING (g1)
            CROSS JOIN v),
-    agg AS (
-      SELECT doc_id, count(*) AS n_bigrams, round(avg(lp), 4) AS avg_logp
-      FROM scored GROUP BY doc_id),
+    agg AS ({_LM_MEAN_LOGP_ORACLE}),
     fin AS (SELECT doc_id, n_bigrams, avg_logp,
                    round(exp(-avg_logp), 2) AS ppl FROM agg),
     cuts AS (
@@ -3170,8 +3168,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation anywhere (hardened after the r4 driver hash flip).
     Weights publish as exact integer micro-units (logw_micro) — see
     operators/web.py::dsir_weights for the scale contract (two
-    map-side-combined passes, broadcast log-ratio dim, one |docs|-row
-    exchange) and the rounding contract.
+    map-side-combined passes, broadcast log-ratio dim, |docs|-row
+    exchanges only for the per-doc aggregate and the bucketed rank) and
+    the rounding contract.
     Output: (doc_id, n_grams, logw_micro, keep)."""
     docs = spark.read.parquet(_t(sf_dir, "documents")).select(
         "doc_id", "text", (F.col("lang") == "en").alias("is_target")
@@ -3319,7 +3318,7 @@ def domain_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", "source")
         .withColumn("_kstr", F.col("doc_id").cast("string"))
     )
-    out = _smp().domain_mix(
+    out = SMP.domain_mix(
         docs, "lang", {"en": 5, "de": 1, "fr": 1, "es": 1, "zh": 2}, key="_kstr"
     )
     return out.select("doc_id", "lang", "source").orderBy("doc_id")

@@ -716,12 +716,12 @@ def test_deeplog_score_sequences(spark):
 def test_sample_threshold_hex():
     """Threshold quantization and the rate>=1 'g' sentinel (a 5-char
     '10000' would sort BELOW 'ffff' lexicographically)."""
-    from loganalyzer_spark.operators.sample import _threshold_hex
+    from loganalyzer_spark.operators.sample import threshold_hex
 
-    assert _threshold_hex(0.0) == "0000"
-    assert _threshold_hex(0.1) == "1999"   # floor(0.1 * 65536) = 6553
-    assert _threshold_hex(0.9) == "e666"
-    assert _threshold_hex(1.0) == "g"
+    assert threshold_hex(0.0) == "0000"
+    assert threshold_hex(0.1) == "1999"   # floor(0.1 * 65536) = 6553
+    assert threshold_hex(0.9) == "e666"
+    assert threshold_hex(1.0) == "g"
     assert "g" > "ffff"  # sentinel sorts above every 4-char hex
     assert not ("ffff" < "10000")  # why format(65536) can't express keep-all
 
@@ -951,6 +951,56 @@ def test_lm_perplexity_smoothed_bigram(spark):
     assert {d: r["lm_bucket"] for d, r in out.items()} == {0: "head", 1: "tail"}
 
 
+# The sf0.1 docs whose exact score sits on a rounding half-way point,
+# where float blends/means split the engines (Spark vs DuckDB).
+_HALFWAY_QUALITY = [
+    # 15 tokens, 2 stopwords, 69 letters: exact blend 0.5774995
+    (557, "the and " + " ".join(["bbbbb"] * 11 + ["cccc"] * 2), 0.5775),
+    # 30 tokens, 1 stopword, 135 letters: exact blend 0.5462495
+    (2095, "the " + " ".join(["bbbbb"] * 16 + ["cccc"] * 13), 0.54625),
+]
+# doc 1172's 25 per-bigram logps: exact mean -3.39975
+_HALFWAY_LPS = [
+    -3.475067, -3.341898, -2.963984, -3.245193, -3.592736, -3.84405,
+    -3.918668, -3.493135, -2.944439, -3.558518, -2.78192, -3.011236,
+    -3.859225, -3.32569, -3.871201, -3.951244, -3.047692, -3.289645,
+    -3.341898, -3.644144, -3.015535, -3.809832, -3.433987, -3.08191,
+    -3.150903,
+]
+
+
+def test_halfway_scores_round_the_same_in_both_engines(spark):
+    """quality_score's blend and lm_perplexity's per-doc mean logp are
+    taken in scaled integers on both sides, so the three sf0.1 half-way
+    inputs round to the exact half-up value (half away from zero for the
+    negative logp) in Spark and in the DuckDB oracle alike."""
+    import duckdb
+
+    from loganalyzer_spark.operators import textstats as TS
+    from loganalyzer_spark.operators import web as W
+    from loganalyzer_spark.queries import _LM_MEAN_LOGP_ORACLE, _QUALITY_ORACLE
+
+    rows = [(d, t) for d, t, _ in _HALFWAY_QUALITY]
+    want = {d: q for d, _, q in _HALFWAY_QUALITY}
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r["doc_id"]: r["quality"] for r in TS.quality_score(docs).collect()}
+    assert got == want
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * FROM "
+        "(VALUES " + ", ".join(f"({d}, '{t}')" for d, t in rows) + ") t(doc_id, text)"
+    )
+    assert dict(con.execute(f"SELECT doc_id, quality FROM ({_QUALITY_ORACLE})").fetchall()) == want
+
+    lps = spark.createDataFrame([(1172, lp) for lp in _HALFWAY_LPS], "doc_id long, lp double")
+    assert [tuple(r) for r in W.mean_logp(lps).collect()] == [(1172, 25, -3.3998)]
+    values = ", ".join(f"({lp})" for lp in _HALFWAY_LPS)
+    con.execute(
+        f"CREATE TABLE scored AS SELECT 1172 AS doc_id, lp::DOUBLE AS lp FROM (VALUES {values}) t(lp)"
+    )
+    assert con.execute(_LM_MEAN_LOGP_ORACLE).fetchall() == [(1172, 25, -3.3998)]
+
+
 def test_dsir_importance_weights(spark):
     """dsir_weights must equal the hand-computed hashed-n-gram
     importance weights (Xie et al. 2023 eq. 2 with add-one smoothing),
@@ -1017,9 +1067,9 @@ def _assert_dsir_keep_is_exact_rank(out_rows, keep_quantile):
 def test_dsir_keep_cutoff_selection_adversarial(spark):
     """The distributed cutoff selection must equal the brute integer
     rank rule on the distributions that stress it: a giant tie
-    straddling the cutoff (the GK bracket collapses to one value and
-    the tie-break by doc_id decides every keep bit), all-unique keys,
-    and n small enough that floor(q*n) = 0 (keep-all)."""
+    straddling the cutoff (the tie-break by doc_id decides every keep
+    bit), all-unique keys, n small enough that floor(q*n) = 0
+    (keep-all), and no docs at all."""
     from loganalyzer_spark.operators import web as W
 
     # 40 identical docs (one logw value, ranks 1..40 decided purely by
@@ -1058,11 +1108,15 @@ def test_dsir_keep_cutoff_selection_adversarial(spark):
     out_none = W.dsir_weights(few, buckets=8, keep_quantile=1.0).collect()
     assert [r["keep"] for r in out_none] == [False] * 5
 
+    # no docs at all: no partitions, no buckets, no rows
+    empty = spark.createDataFrame([], "doc_id long, text string, is_target boolean")
+    assert W.dsir_weights(empty, buckets=8).collect() == []
+
 
 def test_dsir_selection_partition_and_aqe_invariant(spark):
-    """``web._nth_key`` reads partition ids and row positions from
-    ``monotonically_increasing_id``; the selected rows must not depend
-    on the shuffle partition count or on AQE. Three corners of the
+    """``web.dsir_weights`` cuts its rank buckets at the largest keys of
+    the range partitions of its sizes job; the selected rows must not
+    depend on the shuffle partition count or on AQE. Three corners of the
     1/8/37 partitions x AQE off/on matrix, all measured equal at sf0.001."""
     from perfbench.harness import fingerprint
     from tests.conftest import SF_SMALL
@@ -1760,10 +1814,9 @@ def test_compact_parquet_rolls_back_mid_swap_crash(spark, tmp_path):
 
 
 def test_dsir_cache_bounded_to_one_entry(spark):
-    """dsir_weights persists its per-doc projection (load-bearing: the
-    selection jobs and the returned plan share it); repeated calls in
-    one session must RELEASE the previous call's cache, not accumulate
-    session-lifetime InMemoryRelations."""
+    """Repeated dsir_weights calls in one session must not accumulate
+    persisted RDDs: neither CacheManager entries nor local checkpoints,
+    which stay registered until the JVM collects their frames."""
     from loganalyzer_spark.operators.web import dsir_weights
 
     docs = spark.createDataFrame(
