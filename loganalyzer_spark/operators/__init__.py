@@ -54,3 +54,38 @@ def free_col(df: DataFrame, base: str) -> str:
     while name in df.columns:
         name += "_"
     return name
+
+
+# The two word tokenizers of ``text``, as SQL: runs of whitespace in the
+# lower-cased text (dedup, textstats) and single spaces in the raw text
+# (web's n-gram features; its tokens never contain a space).
+WORDS_LOWER = r"split(lower(text), '\\s+')"
+WORDS_SPACE = "split(text, ' ')"
+
+
+def ngrams_sql(tokens: str, n: int) -> str:
+    """SQL for the word ``n``-grams of the token array column named
+    ``tokens``, in order and with repeats: gram i (1-based) is tokens
+    i..i+n-1 joined by one space. Fewer than ``n`` tokens give an empty
+    array (``sequence(1, 0)`` would count down, not stay empty).
+
+    ``tokens`` is a column name, not an expression: a lambda body runs
+    once per element, so a tokenizer inlined into the window lambda
+    would re-split the whole document once per gram (O(tokens²) per
+    row). Materialize the tokens as a column first;
+    ``tests/test_operators.py::test_ngram_lambdas_split_nothing`` checks
+    every caller's optimized plan.
+    """
+    t = _ident(tokens)
+    return (
+        f"CASE WHEN size({t}) < {n} THEN array() "
+        f"ELSE transform(sequence(1, size({t}) - {n} + 1), "
+        f"i -> array_join(slice({t}, i, {n}), ' ')) END"
+    )
+
+
+def hash60_sql(x: str) -> str:
+    """SQL for the 60-bit integer hash of the string expression ``x``:
+    the first 15 hex digits of its md5, the same value in Spark and
+    DuckDB (no engine-internal ``hash()``)."""
+    return f"CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"

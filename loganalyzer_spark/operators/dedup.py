@@ -4,8 +4,8 @@ Beyond the reference's duplicate-line checker (misc_tools.py:35-43),
 these are the web-scale training-data-pipeline ops: exact hash dedup,
 MinHash+LSH near-dup, SimHash, and n-gram Jaccard verification.
 
-All hashing is md5-derived (``conv(substr(md5(x),1,15),16,10)`` — a
-60-bit unsigned int) so results are engine-independent and
+All hashing is the md5-derived 60-bit integer of
+``operators.hash60_sql``, so results are engine-independent and
 DuckDB-oracle-checkable; no reliance on Spark's internal ``hash()``.
 
 Scale notes:
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from loganalyzer_spark.datagen import local_df
+from loganalyzer_spark.operators import WORDS_LOWER, free_col, hash60_sql, ngrams_sql
 
 # (a_k, b_k) parameters for the k-th universal hash h_k(x) = (a*x + b) % P.
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1 (Mersenne)
@@ -50,32 +51,14 @@ def minhash_params() -> list[tuple[int, int]]:
     return out
 
 
-def _hash60(col) -> F.Column:
-    """60-bit integer hash of a string, identical across engines."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def with_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Word n-gram shingles of ``text`` as an array column (distinct per
-    doc).
-
-    Tokenization is materialized as its own column first: a ``split``
-    inlined into the ``transform`` lambda re-tokenizes the WHOLE
-    document once per shingle position (O(tokens²) per row — the
-    inlined-producer-in-lambda trap; see textstats.fingerprint).
-    """
-    # shingle i (1-based) = tokens[i..i+n-1] joined; guard the empty case —
-    # Spark's sequence(1, 0) would generate a *descending* range.
-    from loganalyzer_spark.operators import free_col
-
+    doc), over the ``WORDS_LOWER`` tokens."""
     tc = free_col(docs, "_toks")
-    toked = docs.withColumn(tc, F.split(F.lower(F.col("text")), "\\s+"))
-    expr = (
-        f"CASE WHEN size(`{tc}`) < {n} THEN array() "
-        f"ELSE transform(sequence(1, size(`{tc}`) - {n} + 1),"
-        f" i -> array_join(slice(`{tc}`, i, {n}), ' ')) END"
-    )
-    return toked.withColumn("shingles", F.array_distinct(F.expr(expr))).drop(tc)
+    toked = docs.withColumn(tc, F.expr(WORDS_LOWER))
+    return toked.withColumn(
+        "shingles", F.expr(f"array_distinct({ngrams_sql(tc, n)})")
+    ).drop(tc)
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -101,7 +84,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     """
     params = minhash_params()
     df = with_shingles(docs).withColumn(
-        "sh_hashes", F.transform("shingles", lambda s: _hash60(s))
+        "sh_hashes", F.expr(f"transform(shingles, s -> {hash60_sql('s')})")
     )
 
     def perm(a: int, b: int):
@@ -240,8 +223,10 @@ def simhash(docs: DataFrame) -> DataFrame:
     > 0 (unweighted). Pure column expressions: per-bit aggregate over
     the token-hash array.
     """
-    toks = F.array_distinct(F.split(F.lower(F.col("text")), "\\s+"))
-    df = docs.withColumn("tok_hashes", F.transform(toks, lambda t: _hash60(t)))
+    df = docs.withColumn(
+        "tok_hashes",
+        F.expr(f"transform(array_distinct({WORDS_LOWER}), t -> {hash60_sql('t')})"),
+    )
 
     def bit_merge(b: int):
         return lambda acc, h: acc + F.when(
@@ -299,7 +284,7 @@ def simhash_near_pairs(fps: DataFrame, bucket_cap: int = 256) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from loganalyzer_spark.operators.similarity import (  # noqa: E402
-    _dot,
+    _cosine,
     _norm,
     hyperplane_sign_bits,
     lsh_planes,
@@ -315,18 +300,19 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     same verify predicate, but candidate generation is a bucket
     equi-join, not a cross join.
     """
-    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("avec"))
-    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("bvec"))
+
+    def side(k: str) -> DataFrame:
+        return emb.select(
+            F.col("vec_id").alias(k),
+            F.col("embedding").alias(f"{k}vec"),
+            _norm("embedding").alias(f"{k}n"),
+        )
+
     return (
-        a.join(b, F.col("a") < F.col("b"))
+        side("a").join(side("b"), F.col("a") < F.col("b"))
         # filter on the ROUNDED cosine (like the oracle SQL), so the
         # threshold boundary is not data-dependent on the 7th decimal
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot("avec", "bvec") / (_norm("avec") * _norm("bvec")), 6
-            ),
-        )
+        .withColumn("cosine", F.round(_cosine("avec", "bvec", "an", "bn"), 6))
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
     )
@@ -401,13 +387,15 @@ def embedding_near_dups_lsh(
     planes = lsh_planes(head["d"], nbands * band_width)
     sig = emb.select(
         F.col("vec_id").alias("k"),
-        F.col("embedding").alias("v"),
+        F.struct(
+            F.col("embedding").alias("v"), _norm("embedding").alias("n")
+        ).alias("p"),
         hyperplane_sign_bits("embedding", planes).alias("bits"),
     )
     mask = (1 << band_width) - 1
     banded = sig.select(
         "k",
-        "v",
+        "p",
         F.explode(
             F.array(
                 *[
@@ -421,12 +409,11 @@ def embedding_near_dups_lsh(
                 ]
             )
         ).alias("band"),
-    ).select("k", "v", "band.band_id", "band.band_bits")
+    ).select("k", "p", "band.band_id", "band.band_bits")
     return (
-        _capped_pairs(banded, ["band_id", "band_bits"], bucket_cap, "v")
+        _capped_pairs(banded, ["band_id", "band_bits"], bucket_cap, "p")
         .withColumn(
-            "cosine",
-            F.round(_dot("pa", "pb") / (_norm("pa") * _norm("pb")), 6),
+            "cosine", F.round(_cosine("pa.v", "pb.v", "pa.n", "pb.n"), 6)
         )
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
@@ -542,10 +529,10 @@ def passage_grams(docs: DataFrame) -> DataFrame:
 
     Output: (doc_id, pos, gh) where pos is the 1-based token index of the
     window start and gh the 60-bit md5 hash of the k tokens joined by a
-    single space (tokens = ``split(lower(text), '\\s+')`` — the same
-    tokenizer as :func:`with_shingles`). Docs shorter than ``k`` tokens
-    emit nothing. Every start position is a window (stride 1), so the
-    exploded row count is |tokens|.
+    single space (the ``WORDS_LOWER`` tokens, like
+    :func:`with_shingles`). Docs shorter than ``k`` tokens emit nothing.
+    Every start position is a window (stride 1), so the exploded row
+    count is |tokens| - k + 1.
 
     Unlike :func:`minhash_signatures` (whole-doc similarity), positions
     are KEPT — this is the primitive for substring-level dedup (the
@@ -556,27 +543,11 @@ def passage_grams(docs: DataFrame) -> DataFrame:
     checker (misc_tools.py:35-43) plays at line granularity, lifted to
     arbitrary cross-document passages.
     """
-    # Materialize the token array first: slice(split(...), i, k) with
-    # the split inlined inside the transform lambda re-tokenizes the
-    # whole document once per window position (O(tokens²) per row —
-    # the inlined-producer-in-lambda trap; see textstats.fingerprint).
-    k = PASSAGE_K
-    toked = docs.select(
-        F.col("doc_id"), F.split(F.lower(F.col("text")), "\\s+").alias("_w")
-    )
-    expr = (
-        f"CASE WHEN size(_w) < {k} THEN array() "
-        f"ELSE transform(sequence(1, size(_w) - {k} + 1, 1), "
-        f"i -> struct(i AS pos, conv(substring(md5("
-        f"array_join(slice(_w, i, {k}), ' ')), 1, 15), 16, 10) AS ghs)) END"
-    )
-    return (
-        toked.select(F.col("doc_id"), F.explode(F.expr(expr)).alias("g"))
-        .select(
-            "doc_id",
-            F.col("g.pos").cast("long").alias("pos"),
-            F.col("g.ghs").cast("long").alias("gh"),
-        )
+    toked = docs.selectExpr("doc_id", f"{WORDS_LOWER} AS _w")
+    return toked.selectExpr(
+        "doc_id", f"posexplode({ngrams_sql('_w', PASSAGE_K)}) AS (_p, _g)"
+    ).selectExpr(
+        "doc_id", "CAST(_p + 1 AS BIGINT) AS pos", f"{hash60_sql('_g')} AS gh"
     )
 
 

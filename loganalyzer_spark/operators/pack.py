@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from loganalyzer_spark.operators.dedup import _hash60
+from loganalyzer_spark.operators import hash60_sql
 
 
 def pack_sequences(
@@ -52,7 +52,7 @@ def pack_sequences(
     pack_first where the doc begins. Deterministic: shard is a pure
     hash of the key, order within a shard is the key's natural order.
     """
-    shard = F.pmod(_hash60(F.col("doc_id").cast("string")), F.lit(shards))
+    shard = F.pmod(F.expr(hash60_sql("CAST(doc_id AS STRING)")), F.lit(shards))
     w = (
         Window.partitionBy("shard")
         .orderBy("doc_id")

@@ -17,9 +17,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dot(a: str, b: str) -> F.Column:
+def _dot(a, b) -> F.Column:
+    """Dot product, in double, of two array columns (names or Columns)."""
     return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x.cast("double") * y),
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
@@ -33,31 +34,18 @@ def _norm(a: str) -> F.Column:
     )
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """Brute-force cosine top-k of ``embedding`` per ``vec_id``:
-    broadcast queries × corpus scan.
+def _cosine(u: str, v: str, nu: str, nv: str) -> F.Column:
+    """Cosine of vector columns ``u`` and ``v`` over their norm columns
+    ``nu`` and ``nv``. Take each norm with :func:`_norm` once per input
+    row, before any join: inlined in a per-pair cosine, the O(dim)
+    ``aggregate`` re-runs for every pair a row is in."""
+    return _dot(u, v) / (F.col(nu) * F.col(nv))
 
-    Output: (query_id, neighbor_id, cosine, rank). Ties broken by
-    neighbor id for determinism.
-    """
-    # Norms are precomputed per input row BEFORE the join: inlined in
-    # the per-pair cosine they would re-run the O(dim) aggregate() HOF
-    # N×Q times per side instead of once per row (the expensive-
-    # producer-in-single-consumer-column rule applied across a join).
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    ).withColumn("qn", _norm("qvec"))
-    c = corpus.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
-    ).withColumn("cn", _norm("cvec"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot("qvec", "cvec") / (F.col("qn") * F.col("cn")),
-        )
-    )
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best-scored neighbors per ``query_id``, ranked by
+    cosine descending then ``neighbor_id``; the cosine is rounded to
+    6 dp only after ranking."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )
@@ -71,16 +59,32 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame
     )
 
 
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Brute-force cosine top-k of ``embedding`` per ``vec_id``:
+    broadcast queries × corpus scan.
+
+    Output: (query_id, neighbor_id, cosine, rank). Ties broken by
+    neighbor id for determinism.
+    """
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    ).withColumn("qn", _norm("qvec"))
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
+    ).withColumn("cn", _norm("cvec"))
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cosine", _cosine("qvec", "cvec", "qn", "cn"))
+    )
+    return _top_k(scored, k)
+
+
 def hyperplane_sign_bits(vec: str, planes: list[list[float]]) -> F.Column:
     """LSH signature: bit j = sign of <v, plane_j> (deterministic planes)."""
     bits = None
     for j, p in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in p])
-        d = F.aggregate(
-            F.zip_with(F.col(vec), arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        d = _dot(vec, F.array(*[F.lit(float(x)) for x in p]))
         term = F.when(d >= 0, F.lit(1 << j).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -211,25 +215,11 @@ def cosine_topk_ivf(
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot("qvec", "cvec") / (F.col("qn") * F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
+        .withColumn("cosine", _cosine("qvec", "cvec", "qn", "cn"))
     )
     # No dedup needed before ranking: a corpus row lives in exactly ONE
     # cell (element_at(assign1, 1)) and a query's nprobe probed cells
     # are distinct argsort indices, so the equi-join emits each
     # (query_id, neighbor_id) pair at most once — a dropDuplicates here
     # was a pure extra hash exchange over every scored pair.
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _top_k(scored, k)

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from loganalyzer_spark.operators import WORDS_LOWER, free_col, hash60_sql, ngrams_sql
+
 # Tiny per-language stopword sets for the n-gram/stopword-ratio
 # language heuristic. Deliberately small and deterministic.
 STOPWORDS = {
@@ -22,7 +24,7 @@ STOPWORDS = {
 
 
 def _tokens() -> F.Column:
-    return F.split(F.lower(F.col("text")), "\\s+")
+    return F.expr(WORDS_LOWER)
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -121,22 +123,16 @@ def fingerprint(docs: DataFrame, k: int = 4) -> DataFrame:
     non-cheap uses of ``_norm`` also stop CollapseProject from
     re-inlining it.
     """
-    from loganalyzer_spark.operators import free_col
-
     nc = free_col(docs, "_norm")
     normed = docs.withColumn(
         nc, F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", "")
     )
-    grams = F.expr(
+    grams = (
         f"CASE WHEN length(`{nc}`) < {k} THEN array(`{nc}`) "
         f"ELSE transform(sequence(1, length(`{nc}`) - {k} + 1), "
         f"i -> substring(`{nc}`, i, {k})) END"
     )
-    fp = F.array_min(
-        F.transform(
-            grams, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-        )
-    )
+    fp = F.expr(f"array_min(transform({grams}, g -> {hash60_sql('g')}))")
     return (
         normed.withColumn("norm_len", F.length(nc))
         .withColumn("fingerprint", fp)
@@ -160,14 +156,8 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
       repeats (1 - distinct/total), the Gopher duplicate-n-gram filter.
 
     Scale: embarrassingly parallel scan; cost is O(tokens log tokens)
-    per row for the sort, no exchange anywhere. Tokens are materialized
-    as a column first — ``element_at(toks, i)`` with the split inlined
-    inside the bigram lambda re-tokenized the whole document TWICE per
-    bigram position (O(tokens²) per row; the dominant cost of the r4
-    quality_filter wall).
+    per row for the sort, no exchange anywhere.
     """
-    from loganalyzer_spark.operators import free_col
-
     tc = free_col(docs, "_toks")
     toked = docs.withColumn(tc, _tokens())
     toks = F.col(tc)
@@ -198,15 +188,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
         F.lit(0.0)
     )
 
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = F.expr(ngrams_sql(tc, 2))
     n_bi = F.size(bigrams)
     dup_bigram_frac = F.when(
         n_bi > 0,

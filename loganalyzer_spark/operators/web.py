@@ -29,6 +29,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from loganalyzer_spark.operators import WORDS_SPACE, free_col, hash60_sql, ngrams_sql
+
 # Ordered (pattern, replacement) chain. Order is semantic: dotted
 # quads go first so an IP inside a larger token is already collapsed
 # before the later patterns run; the chain is applied identically by
@@ -118,25 +120,11 @@ def word_ngrams(df: DataFrame, n: int) -> DataFrame:
     """Adds ``grams``: the DISTINCT word n-grams of ``text`` as an array
     column. Pure transform/slice projection — no explode, no shuffle;
     the consumer decides whether to explode. Rows with fewer than ``n``
-    words get an empty array.
-
-    Tokens are materialized as a column first — slice(split(...))
-    inlined in the transform lambda re-tokenizes the whole document per
-    window position (see textstats.fingerprint)."""
-    from loganalyzer_spark.operators import free_col
-
+    words get an empty array. Words are the ``WORDS_SPACE`` tokens."""
     wc = free_col(df, "_w")
-    toked = df.withColumn(wc, F.split(F.col("text"), " "))
-    w = F.col(wc)
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(w) - n),
-            lambda i: F.array_join(F.slice(w, i + F.lit(1), F.lit(n)), " "),
-        )
-    )
-    empty = F.array().cast("array<string>")
+    toked = df.withColumn(wc, F.expr(WORDS_SPACE))
     return toked.withColumn(
-        "grams", F.when(F.size(w) >= n, grams).otherwise(empty)
+        "grams", F.expr(f"array_distinct({ngrams_sql(wc, n)})")
     ).drop(wc)
 
 
@@ -245,23 +233,18 @@ def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
     quality; the LM itself is the public CCNet recipe, not a reference
     port.
     """
-    w = F.split(F.col("text"), " ")
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(w) - 2),
-            lambda i: F.struct(
-                F.get(w, i).alias("g1"), F.get(w, i + 1).alias("g2")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<g1:string,g2:string>>"))
+    def bigrams(docs: DataFrame, *keep: str) -> DataFrame:
+        toked = docs.selectExpr(*keep, f"{WORDS_SPACE} AS _w")
+        return toked.selectExpr(
+            *keep, f"explode({ngrams_sql('_w', 2)}) AS bigram"
+        ).withColumn("g1", F.substring_index("bigram", " ", 1))
 
-    ref_big = reference.select(F.explode(bigrams).alias("b")).select(
-        "b.g1", "b.g2"
-    )
-    c12 = ref_big.groupBy("g1", "g2").agg(F.count(F.lit(1)).alias("c12"))
+    # A bigram's first word is the text before its one space: the
+    # WORDS_SPACE tokens never contain a space.
+    ref_big = bigrams(reference)
+    c12 = ref_big.groupBy("bigram").agg(F.count(F.lit(1)).alias("c12"))
     c1 = ref_big.groupBy("g1").agg(F.count(F.lit(1)).alias("c1"))
-    vocab = reference.select(F.explode(w).alias("t")).agg(
+    vocab = reference.selectExpr(f"explode({WORDS_SPACE}) AS t").agg(
         F.count_distinct("t").alias("v")
     )
 
@@ -274,11 +257,9 @@ def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
     )
 
     def _scored(docs: DataFrame) -> DataFrame:
-        exploded = docs.select(
-            "doc_id", F.explode(bigrams).alias("b")
-        ).select("doc_id", "b.g1", "b.g2")
         sc = (
-            exploded.join(F.broadcast(c12), ["g1", "g2"], "left")
+            bigrams(docs, "doc_id")
+            .join(F.broadcast(c12), ["bigram"], "left")
             .join(F.broadcast(c1), ["g1"], "left")
             .crossJoin(F.broadcast(vocab))
             .select("doc_id", lp.alias("lp"))
@@ -358,50 +339,34 @@ def dsir_weights(
     could never hash-equal Spark's LONG. The oracle casts it back to
     BIGINT, and ``tools/check_oracle.py`` fails any HUGEINT oracle column.
     """
-    from loganalyzer_spark.operators.dedup import _hash60
-
-    # Tokenize into a materialized column FIRST: a split() inlined into
-    # the transform lambda re-tokenizes the whole document once per
-    # bigram position (the inlined-producer-in-lambda trap; see
-    # textstats.fingerprint).
-    toked = docs.select(
-        "doc_id",
-        F.col("is_target").alias("_tgt"),
-        F.split(F.col("text"), " ").alias("_w"),
+    toked = docs.selectExpr(
+        "doc_id", "is_target AS _tgt", f"{WORDS_SPACE} AS _w"
     )
-    w = F.col("_w")
-    bi = F.when(
-        F.size(w) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - 1),
-            lambda i: F.array_join(F.slice(w, i, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = toked.select(
-        "doc_id",
-        "_tgt",
-        F.explode(F.concat(w, bi)).alias("gram"),
+    grams = toked.selectExpr(
+        "doc_id", "_tgt", f"explode(concat(_w, {ngrams_sql('_w', 2)})) AS gram"
     ).select(
         "doc_id",
         "_tgt",
-        F.pmod(_hash60(F.col("gram")), F.lit(buckets)).alias("bucket"),
+        F.pmod(F.expr(hash60_sql("gram")), F.lit(buckets)).alias("bucket"),
     )
 
+    # The corpus totals are window sums over the ≤ ``buckets``-row dim:
+    # a separate aggregate of ``dim`` would re-plan the whole dim pass
+    # and scan the corpus once more.
     dim = grams.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("raw_cnt"),
         F.sum(F.when(F.col("_tgt"), 1).otherwise(0)).alias("tgt_cnt"),
     )
-    tot = dim.agg(
-        F.sum("raw_cnt").alias("raw_tot"), F.sum("tgt_cnt").alias("tgt_tot")
-    )
-    b = float(buckets)
-    ratio = dim.crossJoin(F.broadcast(tot)).select(
+    all_rows, b = Window.partitionBy(), float(buckets)
+
+    def share(cnt: str) -> F.Column:
+        return (F.col(cnt) + F.lit(1.0)) / (F.sum(cnt).over(all_rows) + F.lit(b))
+
+    ratio = dim.select(
         "bucket",
-        F.round(
-            F.log((F.col("tgt_cnt") + F.lit(1.0)) / (F.col("tgt_tot") + F.lit(b)))
-            - F.log((F.col("raw_cnt") + F.lit(1.0)) / (F.col("raw_tot") + F.lit(b))),
-            4,
-        ).alias("log_ratio"),
+        F.round(F.log(share("tgt_cnt")) - F.log(share("raw_cnt")), 4).alias(
+            "log_ratio"
+        ),
     )
 
     scored = (
@@ -506,8 +471,6 @@ def c4_clean(lines: DataFrame, min_kept_lines: int = 5) -> DataFrame:
     old join-heavy plan scaled at 0.32 efficiency; this shape removes
     the two corpus-sized sort-merge joins that caused it.)
     """
-    from loganalyzer_spark.operators.dedup import _hash60
-
     l = F.col("line")
     words = F.size(F.split(F.trim(l), r"\s+"))
     keep_line = (
@@ -538,7 +501,7 @@ def c4_clean(lines: DataFrame, min_kept_lines: int = 5) -> DataFrame:
         per_doc.filter(F.col("keep_page"))
         .select("doc_id", F.explode("_kept").alias("_kl"))
         .select("doc_id", "_kl.line_no", "_kl.line")
-        .withColumn("_lh", _hash60(l))
+        .withColumn("_lh", F.expr(hash60_sql("line")))
     )
     surv = (
         kept.groupBy("_lh")

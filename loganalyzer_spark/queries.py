@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from loganalyzer_spark import datagen, pipeline
+from loganalyzer_spark.operators import WORDS_LOWER
 from loganalyzer_spark.operators import aggregate as A
 from loganalyzer_spark.operators import match as M
 from loganalyzer_spark.operators import parse as P
@@ -3093,7 +3094,7 @@ def bucketed_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(_t(sf_dir, "documents"))
     fa = docs.select(
         "doc_id",
-        F.size(F.split(F.lower("text"), r"\s+")).cast("long").alias("n_tokens"),
+        F.size(F.expr(WORDS_LOWER)).cast("long").alias("n_tokens"),
     )
     fb = docs.select("doc_id", F.col("n_chars").cast("long").alias("n_chars"), "lang")
     write_bucketed(fa, "bfj_a", ["doc_id"], n_buckets=16, sort_cols=["doc_id"])

@@ -951,6 +951,57 @@ def test_lm_perplexity_smoothed_bigram(spark):
     assert {d: r["lm_bucket"] for d, r in out.items()} == {0: "head", 1: "tail"}
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` call in a plan string, with its
+    balanced arguments (nested lambdas are listed again on their own)."""
+    out, at = [], plan.find("lambdafunction(")
+    while at >= 0:
+        depth = 0
+        for end in range(at + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        out.append(plan[at : end + 1])
+        at = plan.find("lambdafunction(", at + 1)
+    return out
+
+
+_NGRAM_OPS = {
+    "minhash_signatures": lambda D, W, TS, d: D.minhash_signatures(d),  # with_shingles
+    "passage_grams": lambda D, W, TS, d: D.passage_grams(d),
+    "word_ngrams": lambda D, W, TS, d: W.word_ngrams(d, 3),
+    # the reference (counts and cutoffs) and the corpus are tokenized
+    # apart; both halves are in the one plan
+    "lm_perplexity": lambda D, W, TS, d: W.lm_perplexity(
+        d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1")
+    ),
+    "dsir_weights": lambda D, W, TS, d: W.dsir_weights(d, buckets=16),
+    "repetition_stats": lambda D, W, TS, d: TS.repetition_stats(d),
+}
+
+
+@pytest.mark.parametrize("name", list(_NGRAM_OPS))
+def test_ngram_lambdas_split_nothing(spark, name):
+    """No n-gram operator evaluates a tokenizer inside a lambda: the
+    lambda body runs once per window, so a ``split`` there re-tokenizes
+    the whole document per gram (O(tokens²) per row). Catalyst may
+    inline a single-use producer column back into the lambda, so the
+    optimized plan is what is checked, not the operator's source."""
+    from loganalyzer_spark.operators import dedup as D
+    from loganalyzer_spark.operators import textstats as TS
+    from loganalyzer_spark.operators import web as W
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{i * j % 7}" for j in range(12)), i % 3 == 0) for i in range(8)],
+        "doc_id long, text string, is_target boolean",
+    )
+    out = _NGRAM_OPS[name](D, W, TS, docs)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    bodies = _lambda_bodies(plan)
+    assert bodies, plan
+    assert not [b for b in bodies if "split(" in b], plan
+
+
 # The sf0.1 docs whose exact score sits on a rounding half-way point,
 # where float blends/means split the engines (Spark vs DuckDB).
 _HALFWAY_QUALITY = [

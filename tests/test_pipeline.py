@@ -599,6 +599,58 @@ def test_flagship_runs_each_mask_pass_once(spark):
     assert plan.count("^" + P.PTN_RSP_STAT[0][0].pattern) == 1, plan
 
 
+@pytest.fixture(scope="module")
+def flagship_nodes(spark, tmp_path_factory):
+    """(class name, under a BroadcastExchange) of every node in the
+    flagship's executed plan after its action, walked through AQE's
+    final plan and into every query stage and reused exchange. The
+    pages are read from parquet, as the jobs read them: the generated
+    ``web_pages`` frame regroups raw lines with a shuffle of its own."""
+    from loganalyzer_spark import datagen, pipeline
+
+    pages_dir = str(tmp_path_factory.mktemp("flagship") / "pages")
+    datagen.web_pages(spark, SF_SMALL).write.parquet(pages_dir)
+    pages = spark.read.parquet(pages_dir)
+    flagship = pipeline.sink_aggregates(pipeline.routed_from_pages(spark, pages))
+    flagship.collect()
+    out, stack = [], [(flagship._jdf.queryExecution().executedPlan(), False)]
+    while stack:
+        node, under = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append((node.executedPlan(), under))
+        elif name.endswith("QueryStageExec"):
+            stack.append((node.plan(), under))
+        elif name == "ReusedExchangeExec":
+            stack.append((node.child(), under))
+        else:
+            out.append((name, under))
+            under = under or name == "BroadcastExchangeExec"
+            kids = node.children()
+            stack.extend((kids.apply(i), under) for i in range(kids.size()))
+    return out
+
+
+def test_flagship_shuffles_once(flagship_nodes):
+    """Exactly one shuffle Exchange moves the fact rows: the final
+    aggregate's. The dims' own exchanges sit under their broadcasts."""
+    fact = [n for n, under in flagship_nodes if not under and n == "ShuffleExchangeExec"]
+    assert len(fact) == 1, flagship_nodes
+
+
+def test_flagship_joins_broadcast(flagship_nodes):
+    """Every join in the flagship is a BroadcastHashJoin; none is a
+    sort-merge, shuffled-hash, nested-loop or cartesian join."""
+    names = [n for n, _ in flagship_nodes]
+    joins = [n for n in names if n.endswith("JoinExec")]
+    assert joins and set(joins) == {"BroadcastHashJoinExec"}, names
+    banned = {
+        "SortMergeJoinExec", "ShuffledHashJoinExec",
+        "BroadcastNestedLoopJoinExec", "CartesianProductExec",
+    }
+    assert not banned & set(names), names
+
+
 def test_flagship_build_jvm_round_trips(spark, monkeypatch):
     """Building the flagship plan, without an action, takes at most 400
     py4j round trips: each layer is a few SQL-text calls, not one call
