@@ -39,6 +39,20 @@ def with_sql(df: DataFrame, exprs: dict[str, str], drop=()) -> DataFrame:
     return df.selectExpr(*out)
 
 
+def one_row_generate(df: DataFrame, name: str, sql: str) -> DataFrame:
+    """Append ``sql AS name`` as the output of a one-row Generate.
+
+    A barrier for the optimizer: Catalyst pushes a filter below the
+    Projects that define the columns it reads and copies their
+    definitions into the condition, and Spark has no cross-operator
+    CSE, so a filter over a regex-derived column runs that regex again.
+    Neither predicate pushdown nor CollapseProject sees through a
+    Generate's output, so the expression runs once, in the Generate,
+    and filters read the column.
+    """
+    return df.selectExpr("*", f"inline(array(named_struct({sql_str(name)}, {sql})))")
+
+
 def free_col(df: DataFrame, base: str) -> str:
     """A column name not present in ``df``, for internal temp columns.
 

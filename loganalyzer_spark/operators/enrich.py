@@ -1,12 +1,12 @@
 """Enrichment + routing (SURVEY.md §2.5, §3 / north rule "route").
 
-All reference lookups are dict/list lookups; here they are broadcast
-hash joins against small dimensions:
+All reference lookups are dict/list lookups; here a bounded fixed dim
+is a SQL map literal looked up inside the fused stage (no join, no
+broadcast):
 
   J2 knowledge base  → (event_id → severity/descpt), default 'info'
                        (extensions/ftp/knowledgebase.py:44-52 — events
                        absent from the KB carry no recommendation).
-  J4 lang dim        → optional broadcast join on lang.
   routing            → sink_class from severity + the 'abn: ' label,
                        mirroring the per-class report fan-out
                        (loglab.py:747-800, oldschool.py:137-157).
@@ -14,10 +14,12 @@ hash joins against small dimensions:
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from loganalyzer_spark.operators import with_sql
+from loganalyzer_spark.operators import sql_str, with_sql
 
 SINK_CASE = (
     "CASE WHEN is_abn = 1 THEN 'c001' "
@@ -28,10 +30,37 @@ SINK_CASE = (
 )
 
 
+def _str_sql(v: str | None) -> str:
+    return "CAST(NULL AS STRING)" if v is None else sql_str(v)
+
+
 def enrich_kb(lines: DataFrame, kb: DataFrame) -> DataFrame:
-    return with_sql(
-        lines.join(F.broadcast(kb), "event_id", "left"),
-        {"severity": "coalesce(severity, 'info')"},
+    """Add ``severity`` (default 'info') and ``descpt`` from the KB, with
+    the columns of a left join on ``event_id``: ``event_id`` first, then
+    the other line columns, then the two KB columns. The KB is collected
+    (a ``local_df`` collect runs no job) into a map literal
+    event_id → struct(severity, descpt). A NULL event_id is skipped (it
+    joins no line); a repeated one is an error, since a lookup cannot
+    fan a line out to several KB rows as the join did."""
+    rows = [
+        r for r in kb.select("event_id", "severity", "descpt").collect()
+        if r["event_id"] is not None
+    ]
+    dups = sorted(e for e, n in Counter(r["event_id"] for r in rows).items() if n > 1)
+    if dups:
+        raise ValueError(f"enrich_kb: the KB repeats event_id {dups}")
+    entries = [
+        f"{sql_str(r['event_id'])}, named_struct('severity', {_str_sql(r['severity'])},"
+        f" 'descpt', {_str_sql(r['descpt'])})"
+        for r in rows
+    ]
+    if entries:
+        kb_hit = f"map({', '.join(entries)})[event_id]"
+        severity, descpt = f"coalesce({kb_hit}.severity, 'info')", f"{kb_hit}.descpt"
+    else:
+        severity, descpt = "'info'", "CAST(NULL AS STRING)"
+    return lines.selectExpr(
+        "event_id", "* EXCEPT (event_id)", f"{severity} AS severity", f"{descpt} AS descpt"
     )
 
 

@@ -1,18 +1,21 @@
-"""Template matching — Drain's tree search + similarity re-expressed as a
-broadcast join (SURVEY.md §2.4).
+"""Template matching — Drain's tree search + similarity re-expressed as
+map lookups inside the fused stage (SURVEY.md §2.4).
 
 The reference routes each masked line through a 3-layer parse tree
 (length → first/last token → similarity, ``drain.py:182-291``) and picks
 the most similar cluster (``fast_match`` ``drain.py:474-505``). Here:
 
-  D1 tree search    → broadcast hash join on (token_count, first_token),
-                      plus a wildcard bucket for templates whose first
+  D1 tree search    → a lookup in a SQL map literal keyed on
+                      (token_count, first_token), plus a wildcard map
+                      keyed on token_count for templates whose first
                       token is '<*>' (token_tree_search's fallback,
-                      drain.py:268-284).
-  D2 similarity     → candidate templates are pre-grouped per join key
-                      into an array on the (tiny) dimension side, so
-                      match resolution is a per-row array filter —
-                      **zero shuffle**, no per-line groupBy/window.
+                      drain.py:268-284). The library is a bounded dim:
+                      it is collected on the driver and grouped there,
+                      so the plan has no join and no broadcast.
+  D2 similarity     → each key maps to its candidate templates in
+                      preference order, so match resolution is a
+                      per-row array filter — **zero shuffle**, no
+                      per-line groupBy/window.
   D8 new template   → unmatched lines become their own template:
                       event_id = md5(masked)[:8] (drain.py:732, 962-966).
 
@@ -24,7 +27,9 @@ token-match of a template with ANY literal token has similarity exactly
 template: seq_dist scores it 0.0 (const_num == 0, drain.py:458-462),
 NOT 1.0 — it must lose to every literal-containing full match despite
 having the most parameters, so it sorts last (the ``all_wild`` leading
-sort key in ``_cands_dim``).
+sort key in ``_cands_map``). A line tries its literal bucket before
+the wildcard bucket, as token_tree_search tries the first-token branch
+before its '<*>' fallback.
 """
 
 from __future__ import annotations
@@ -32,44 +37,52 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from loganalyzer_spark.operators import with_sql
+from loganalyzer_spark.operators import one_row_generate, sql_str, with_sql
 
-# One candidate; field order is the preference order inside a sorted
-# candidate array (neg_para asc == para_count desc). all-wildcard
-# templates score sim 0.0 in the reference's seq_dist (const_num == 0),
-# not the 1.0 of every other full token-match — max-sim-first means
-# they sort LAST, before the para tie-break applies (module docstring).
-_CAND = (
-    "struct(CAST(para_count = token_count AS INT) AS all_wild,"
-    " -para_count AS neg_para, event_id,"
-    " split(event_template, ' ') AS toks, event_template)"
-)
+_LITS = "array<struct<pos:int,tok:string>>"
 
-# The first candidate whose tokens all equal the line's, '<*>' matching
-# any token; NULL when none does.
-_HIT = (
-    "get(filter(concat(coalesce(cands, array()), coalesce(wcands, array())),"
-    " c -> forall(zip_with(c.toks, _toks, (t, a) -> t = '<*>' OR t = a), x -> x)), 0)"
+# The hit of a line no template matches: the line is its own template.
+_NEW = (
+    "named_struct('is_new', 1, 'event_id', substring(md5(masked), 1, 8),"
+    f" 'event_template', masked, 'lits', CAST(NULL AS {_LITS}))"
 )
 
 
-def _cands_dim(templates: DataFrame, wildcard: bool) -> DataFrame:
-    """Group the template dim by join key with a deterministic preference
-    order inside each candidate array (``cands``; ``wcands`` for the
-    wildcard bucket).
-
-    Candidates carry their token array: match confirmation is token-wise
-    equality with '<*>' wildcards — plain string comparisons inside
-    whole-stage codegen, ~10× cheaper than per-row regex compilation.
-    """
-    if wildcard:
-        keys, name, where = ["token_count"], "wcands", "first_token = '<*>'"
-    else:
-        keys, name, where = ["token_count", "first_token"], "cands", "first_token != '<*>'"
+def _cand_sql(event_id: str, template: str) -> str:
+    """One candidate: its id and text, plus the (pos, tok) pairs of its
+    literal tokens after position 0 — the map key already fixes the
+    token count and, in the literal bucket, the first token."""
+    lits = [
+        f"named_struct('pos', {i}, 'tok', {sql_str(t)})"
+        for i, t in enumerate(template.split(" "))
+        if i and t != "<*>"
+    ]
     return (
-        templates.where(where)
-        .groupBy(*keys)
-        .agg(F.expr(f"sort_array(collect_list({_CAND})) AS {name}"))
+        f"named_struct('is_new', 0, 'event_id', {sql_str(event_id)},"
+        f" 'event_template', {sql_str(template)},"
+        f" 'lits', CAST(array({', '.join(lits)}) AS {_LITS}))"
+    )
+
+
+def _cands_map(rows: list, key) -> str | None:
+    """SQL map literal from ``key(row)`` to the row's candidates, sorted
+    (all_wild, para_count desc, event_id); None for no rows."""
+    buckets: dict[str, list] = {}
+    for r in sorted(
+        rows, key=lambda r: (r["para_count"] == r["token_count"], -r["para_count"], r["event_id"])
+    ):
+        buckets.setdefault(key(r), []).append(_cand_sql(r["event_id"], r["event_template"]))
+    if not buckets:
+        return None
+    return "map(" + ", ".join(f"{k}, array({', '.join(c)})" for k, c in buckets.items()) + ")"
+
+
+def _first_hit(cands_map: str, key: str) -> str:
+    """The first candidate under ``key`` whose literal tokens all equal
+    the line's; NULL when none does."""
+    return (
+        f"get(filter({cands_map}[{key}],"
+        " c -> forall(c.lits, l -> get(_toks, l.pos) = l.tok)), 0)"
     )
 
 
@@ -77,26 +90,38 @@ def match_templates(lines: DataFrame, templates: DataFrame) -> DataFrame:
     """Assign event_id/event_template to every ``masked`` line.
 
     Adds: token_count, first_token, event_id, event_template, is_new.
-    The two dimension joins are broadcast; match resolution is an array
-    filter per row — the whole stage is shuffle-free.
+    The library is collected (a ``local_df`` collect runs no job) into
+    two map literals, so the match is a lookup plus an array filter per
+    row inside the fused stage. ``_hit`` (the first matching candidate,
+    else the line itself) is the output of a one-row Generate: without
+    that barrier, a filter on ``is_new`` or ``sink_class`` downstream
+    would copy the match lambda and the md5 into its pushed-down
+    condition.
     """
+    rows = templates.select(
+        "event_id", "event_template", "token_count", "first_token", "para_count"
+    ).collect()
+    lit_map = _cands_map(
+        [r for r in rows if r["first_token"] != "<*>"],
+        lambda r: sql_str(f"{r['token_count']} {r['first_token']}"),
+    )
+    wild_map = _cands_map(
+        [r for r in rows if r["first_token"] == "<*>"], lambda r: str(r["token_count"])
+    )
+    # tokens hold no space, so the literal key is exact
+    hits = [
+        _first_hit(m, k)
+        for m, k in ((lit_map, "concat(token_count, ' ', first_token)"), (wild_map, "token_count"))
+        if m is not None
+    ]
     keyed = with_sql(
         with_sql(lines, {"_toks": "split(masked, ' ')"}),
         {"token_count": "size(_toks)", "first_token": "_toks[0]"},
     )
-    joined = keyed.join(
-        F.broadcast(_cands_dim(templates, wildcard=False)),
-        ["token_count", "first_token"],
-        "left",
-    ).join(F.broadcast(_cands_dim(templates, wildcard=True)), ["token_count"], "left")
     return with_sql(
-        with_sql(joined, {"_hit": _HIT}),
-        {
-            "is_new": "CAST(_hit IS NULL AS INT)",
-            "event_id": "coalesce(_hit.event_id, substring(md5(masked), 1, 8))",
-            "event_template": "coalesce(_hit.event_template, masked)",
-        },
-        drop=("cands", "wcands", "_hit", "_toks"),
+        one_row_generate(keyed, "_hit", f"coalesce({', '.join(hits + [_NEW])})"),
+        {f: f"_hit.{f}" for f in ("is_new", "event_id", "event_template")},
+        drop=("_hit", "_toks"),
     )
 
 

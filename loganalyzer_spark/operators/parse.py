@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from loganalyzer_spark import patterns as P
-from loganalyzer_spark.operators import sql_str, with_sql
+from loganalyzer_spark.operators import one_row_generate, sql_str, with_sql
 
 # Every layer below is SQL text composed from the ``patterns`` constants
 # and handed to the JVM in a few selectExpr/where calls. The same layer
@@ -126,20 +126,6 @@ _CONTENT = _content_sql("_cleaned")
 _LINE_RM = _line_rm_sql("_cleaned")
 
 
-def _one_row_generate(df: DataFrame, name: str, sql: str) -> DataFrame:
-    """Append ``sql AS name`` as the output of a one-row Generate.
-
-    A barrier for the optimizer: Catalyst pushes a filter below the
-    Projects that define the columns it reads and copies their
-    definitions into the condition, and Spark has no cross-operator
-    CSE, so a filter over a regex-derived column runs that regex again.
-    Neither predicate pushdown nor CollapseProject sees through a
-    Generate's output, so the expression runs once, in the Generate,
-    and filters read the column.
-    """
-    return df.selectExpr("*", f"inline(array(named_struct({sql_str(name)}, {sql})))")
-
-
 def pages_to_lines(pages: DataFrame) -> DataFrame:
     """input_hint-shaped web_pages → one row per physical line.
 
@@ -161,7 +147,7 @@ def wash(lines: DataFrame) -> DataFrame:
     matched prefix, ``_pfx``); flags, class label and the stripped
     content all derive from that prefix with cheap string ops. The
     pid/sid clean regex runs once (``_cleaned``). Both are outputs of a
-    one-row Generate (``_one_row_generate``), so the two filters read
+    one-row Generate (``one_row_generate``), so the two filters read
     them instead of re-running their regexes: with plain columns,
     Catalyst copied the definitions into the pushed-down filters and
     the anchor ran 4 times per line, the clean 3 times.
@@ -170,13 +156,13 @@ def wash(lines: DataFrame) -> DataFrame:
     # label markers can only occur inside the matched prefix, so
     # contains() on the prefix is exact.
     stripped = "substring(raw, length(_pfx) + 1)"
-    df = _one_row_generate(lines, "_pfx", f"regexp_extract(raw, {sql_str(_TS_ANCHOR)}, 0)")
+    df = one_row_generate(lines, "_pfx", f"regexp_extract(raw, {sql_str(_TS_ANCHOR)}, 0)")
     # P3 empty purge FIRST, on the stripped line: clean/rsp preserve
     # emptiness both ways (clean needs a 'Word: ' lookahead, rsp needs
     # 'Response: ...'), so testing before them is equivalent to the
     # reference's post-domain-process check.
     df = df.where(f"length(btrim({stripped}, {_BLANKS})) > 0")
-    df = _one_row_generate(df, "_cleaned", f"regexp_replace({stripped}, {sql_str(_CLEAN_CHAR)}, '')")
+    df = one_row_generate(df, "_cleaned", f"regexp_replace({stripped}, {sql_str(_CLEAN_CHAR)}, '')")
     # P4 line removal on _cleaned (reference order: after clean, where
     # pid/sid stripping can expose a removable line). Testing before rsp
     # is equivalent: no rsp source or canonical line matches any

@@ -160,6 +160,10 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     """
     tc = free_col(docs, "_toks")
     toked = docs.withColumn(tc, _tokens())
+    # The bigram array is read three times below and Spark does not
+    # subexpression-eliminate higher-order functions: build it once.
+    bc = free_col(toked, "_bigrams")
+    toked = toked.withColumn(bc, F.expr(ngrams_sql(tc, 2)))
     toks = F.col(tc)
     n = F.size(toks)
     distinct_ratio = F.when(
@@ -188,7 +192,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
         F.lit(0.0)
     )
 
-    bigrams = F.expr(ngrams_sql(tc, 2))
+    bigrams = F.col(bc)
     n_bi = F.size(bigrams)
     dup_bigram_frac = F.when(
         n_bi > 0,
@@ -200,7 +204,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
         .withColumn("distinct_ratio", F.round(distinct_ratio, 6))
         .withColumn("top_tok_frac", F.round(top_tok_frac, 6))
         .withColumn("dup_bigram_frac", F.round(dup_bigram_frac, 6))
-        .drop(tc)
+        .drop(tc, bc)
     )
 
 

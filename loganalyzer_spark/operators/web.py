@@ -235,15 +235,22 @@ def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
     """
     def bigrams(docs: DataFrame, *keep: str) -> DataFrame:
         toked = docs.selectExpr(*keep, f"{WORDS_SPACE} AS _w")
+        # No gram is NULL; declaring so (the coalesce) leaves the join
+        # keys no inferred IsNotNull filter, which would differ between
+        # the two count dims and keep them from sharing one aggregate.
         return toked.selectExpr(
-            *keep, f"explode({ngrams_sql('_w', 2)}) AS bigram"
-        ).withColumn("g1", F.substring_index("bigram", " ", 1))
+            *keep, f"explode({ngrams_sql('_w', 2)}) AS _b"
+        ).selectExpr(*keep, "coalesce(_b, '') AS bigram", "substring_index(_b, ' ', 1) AS g1")
 
     # A bigram's first word is the text before its one space: the
     # WORDS_SPACE tokens never contain a space.
     ref_big = bigrams(reference)
     c12 = ref_big.groupBy("bigram").agg(F.count(F.lit(1)).alias("c12"))
-    c1 = ref_big.groupBy("g1").agg(F.count(F.lit(1)).alias("c1"))
+    # c(w1) is the sum of c(w1, w2) over w2: one reference aggregate,
+    # whose exchange the two count dims share.
+    c1 = c12.groupBy(F.substring_index("bigram", " ", 1).alias("g1")).agg(
+        F.sum("c12").alias("c1")
+    )
     vocab = reference.selectExpr(f"explode({WORDS_SPACE}) AS t").agg(
         F.count_distinct("t").alias("v")
     )

@@ -3,8 +3,9 @@
 The Spark rebuild of the reference's EP2 prediction pipeline
 (scripts/loglab.py:146-205, SURVEY.md §3) over the Common-Crawl-style
 ``web_pages`` input. One declarative plan: Catalyst fuses the wash ops,
-both dimension joins broadcast, the only shuffle before the final
-aggregate is none at all — parse/match/enrich/route are narrow.
+the template library and the KB are map literals looked up in the same
+stage (no join, no broadcast), and the only shuffle is the final
+aggregate's — parse/match/enrich/route are narrow.
 """
 
 from __future__ import annotations

@@ -68,6 +68,101 @@ def test_match_unmatched_gets_md5_id(spark):
     assert out["event_template"] == "Unknown: stuff"
 
 
+def test_match_empty_library_makes_every_line_new(spark):
+    """No templates: no map literal to look up, every line is its own
+    template, and the plan still runs (no empty-map type error)."""
+    import hashlib
+
+    from loganalyzer_spark.operators.match import match_templates
+
+    lines = spark.createDataFrame([("a b",), ("Cmd: x",)], "masked string")
+    out = match_templates(lines, _templates(spark, [])).collect()
+    assert {(r["masked"], r["is_new"], r["event_id"], r["event_template"]) for r in out} == {
+        (m, 1, hashlib.md5(m.encode()).hexdigest()[:8], m) for m in ("a b", "Cmd: x")
+    }
+
+
+def test_match_wildcard_only_library(spark):
+    """A library with no literal-bucket template matches through the
+    wildcard bucket alone; other lengths and literals stay new."""
+    from loganalyzer_spark.datagen import event_id_of
+    from loganalyzer_spark.operators.match import match_templates
+
+    tmpl = _templates(spark, ["<*> sent <*>", "<*> <*>"])
+    lines = spark.createDataFrame(
+        [("12 sent bytes",), ("12 got bytes",), ("a b",), ("a",)], "masked string"
+    )
+    out = {r["masked"]: r for r in match_templates(lines, tmpl).collect()}
+    assert out["12 sent bytes"]["event_id"] == event_id_of("<*> sent <*>")
+    assert out["12 got bytes"]["is_new"] == 1
+    assert out["a b"]["event_id"] == event_id_of("<*> <*>")
+    assert out["a"]["is_new"] == 1
+
+
+def test_match_literal_bucket_beats_all_wildcard(spark):
+    """An all-wildcard template (seq_dist 0.0) loses to a literal-bucket
+    template that matches the same line, and still catches the lines
+    nothing else matches."""
+    from loganalyzer_spark.datagen import event_id_of
+    from loganalyzer_spark.operators.match import match_templates
+
+    tmpl = _templates(spark, ["<*> <*>", "Cmd: <*>"])
+    lines = spark.createDataFrame([("Cmd: x",), ("Foo: x",)], "masked string")
+    out = {r["masked"]: r["event_id"] for r in match_templates(lines, tmpl).collect()}
+    assert out == {"Cmd: x": event_id_of("Cmd: <*>"), "Foo: x": event_id_of("<*> <*>")}
+
+
+def test_match_first_token_only_literal(spark):
+    """A template whose only literal is its first token carries no
+    literal positions to check: the bucket key alone decides."""
+    from loganalyzer_spark.datagen import event_id_of
+    from loganalyzer_spark.operators.match import match_templates
+
+    tmpl = _templates(spark, ["Cmd: <*> <*>"])
+    lines = spark.createDataFrame(
+        [("Cmd: a b",), ("Cmd: a",), ("Other: a b",)], "masked string"
+    )
+    out = {r["masked"]: r for r in match_templates(lines, tmpl).collect()}
+    assert out["Cmd: a b"]["event_id"] == event_id_of("Cmd: <*> <*>")
+    assert out["Cmd: a b"]["is_new"] == 0
+    assert out["Cmd: a"]["is_new"] == 1
+    assert out["Other: a b"]["is_new"] == 1
+
+
+def test_match_null_masked(spark):
+    """A NULL line matches nothing and is new, with NULL id and template."""
+    from loganalyzer_spark.operators.match import match_templates
+
+    tmpl = _templates(spark, ["<*> <*>", "Cmd: <*>"])
+    lines = spark.createDataFrame([(None,)], "masked string")
+    out = match_templates(lines, tmpl).collect()[0]
+    assert (out["is_new"], out["event_id"], out["event_template"]) == (1, None, None)
+
+
+def test_enrich_kb_left_join_shape(spark):
+    """enrich_kb keeps a left join's columns (event_id first, the KB's
+    two columns last), defaults a missing event to 'info', takes an
+    empty KB, skips a NULL KB id and rejects a repeated one."""
+    from loganalyzer_spark.datagen import KB_SCHEMA, local_df
+    from loganalyzer_spark.operators.enrich import enrich_kb
+
+    lines = spark.createDataFrame([(1, "e1"), (2, "zz")], "line_no int, event_id string")
+    kb = local_df(spark, [("e1", "fatal", "it's bad")], KB_SCHEMA)
+    out = enrich_kb(lines, kb)
+    assert out.columns == ["event_id", "line_no", "severity", "descpt"]
+    assert sorted(map(tuple, out.collect())) == [
+        ("e1", 1, "fatal", "it's bad"), ("zz", 2, "info", None)
+    ]
+    empty = enrich_kb(lines, local_df(spark, [], KB_SCHEMA)).collect()
+    assert sorted(map(tuple, empty)) == [("e1", 1, "info", None), ("zz", 2, "info", None)]
+    nulls = local_df(spark, [(None, "fatal", None), ("e1", "fatal", None)], KB_SCHEMA)
+    assert [r["severity"] for r in enrich_kb(lines, nulls).orderBy("line_no").collect()] == [
+        "fatal", "info"
+    ]
+    with pytest.raises(ValueError, match="repeats event_id"):
+        enrich_kb(lines, local_df(spark, [("e1", "fatal", None)] * 2, KB_SCHEMA))
+
+
 def _fold(spark, text):
     from loganalyzer_spark.operators.fold import fold_lines
 
@@ -1000,6 +1095,34 @@ def test_ngram_lambdas_split_nothing(spark, name):
     bodies = _lambda_bodies(plan)
     assert bodies, plan
     assert not [b for b in bodies if "split(" in b], plan
+
+
+def test_repetition_stats_builds_bigrams_once(spark):
+    """The bigram array feeds three expressions; Spark does not
+    subexpression-eliminate higher-order functions, so it must be a
+    column built once, not inlined three times."""
+    from loganalyzer_spark.operators import textstats as TS
+
+    docs = spark.createDataFrame([(1, "a b a b c")], "doc_id long, text string")
+    plan = TS.repetition_stats(docs)._jdf.queryExecution().sparkPlan().toString()
+    assert plan.count("transform(sequence") == 1, plan
+
+
+def test_lm_perplexity_scans_reference_three_times(spark, tmp_path):
+    """c(w1) is summed from the c(w1, w2) aggregate: the reference is
+    scanned for the bigram counts, the vocabulary and the cutoffs only
+    (4 scans with the corpus; a separate c(w1) aggregate made 5)."""
+    from loganalyzer_spark.operators import web as W
+
+    path = str(tmp_path / "docs")
+    spark.createDataFrame([(1, "a b c a b")], "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = W.lm_perplexity(docs, docs)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert plan.count("FileScan parquet") == 4, plan
 
 
 # The sf0.1 docs whose exact score sits on a rounding half-way point,

@@ -600,55 +600,95 @@ def test_flagship_runs_each_mask_pass_once(spark):
 
 
 @pytest.fixture(scope="module")
-def flagship_nodes(spark, tmp_path_factory):
-    """(class name, under a BroadcastExchange) of every node in the
-    flagship's executed plan after its action, walked through AQE's
-    final plan and into every query stage and reused exchange. The
-    pages are read from parquet, as the jobs read them: the generated
-    ``web_pages`` frame regroups raw lines with a shuffle of its own."""
-    from loganalyzer_spark import datagen, pipeline
+def pages_parquet(spark, tmp_path_factory):
+    """sf0.001's pages as parquet, read back as the jobs read them: the
+    generated ``web_pages`` frame regroups raw lines with a shuffle of
+    its own."""
+    from loganalyzer_spark import datagen
 
     pages_dir = str(tmp_path_factory.mktemp("flagship") / "pages")
     datagen.web_pages(spark, SF_SMALL).write.parquet(pages_dir)
-    pages = spark.read.parquet(pages_dir)
+    return pages_dir
+
+
+@pytest.fixture(scope="module")
+def flagship_nodes(spark, pages_parquet):
+    """Class names of every node in the flagship's executed plan after
+    its action, walked through AQE's final plan and into every query
+    stage and reused exchange."""
+    from loganalyzer_spark import pipeline
+
+    pages = spark.read.parquet(pages_parquet)
     flagship = pipeline.sink_aggregates(pipeline.routed_from_pages(spark, pages))
     flagship.collect()
-    out, stack = [], [(flagship._jdf.queryExecution().executedPlan(), False)]
+    out, stack = [], [flagship._jdf.queryExecution().executedPlan()]
     while stack:
-        node, under = stack.pop()
+        node = stack.pop()
         name = node.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
-            stack.append((node.executedPlan(), under))
+            stack.append(node.executedPlan())
         elif name.endswith("QueryStageExec"):
-            stack.append((node.plan(), under))
+            stack.append(node.plan())
         elif name == "ReusedExchangeExec":
-            stack.append((node.child(), under))
+            stack.append(node.child())
         else:
-            out.append((name, under))
-            under = under or name == "BroadcastExchangeExec"
+            out.append(name)
             kids = node.children()
-            stack.extend((kids.apply(i), under) for i in range(kids.size()))
+            stack.extend(kids.apply(i) for i in range(kids.size()))
     return out
 
 
 def test_flagship_shuffles_once(flagship_nodes):
     """Exactly one shuffle Exchange moves the fact rows: the final
-    aggregate's. The dims' own exchanges sit under their broadcasts."""
-    fact = [n for n, under in flagship_nodes if not under and n == "ShuffleExchangeExec"]
-    assert len(fact) == 1, flagship_nodes
+    aggregate's."""
+    assert flagship_nodes.count("ShuffleExchangeExec") == 1, flagship_nodes
 
 
-def test_flagship_joins_broadcast(flagship_nodes):
-    """Every join in the flagship is a BroadcastHashJoin; none is a
-    sort-merge, shuffled-hash, nested-loop or cartesian join."""
-    names = [n for n, _ in flagship_nodes]
-    joins = [n for n in names if n.endswith("JoinExec")]
-    assert joins and set(joins) == {"BroadcastHashJoinExec"}, names
+def test_flagship_joins_nothing(flagship_nodes):
+    """The template library and the KB are map literals looked up inside
+    the fused stage: the flagship has no join and no broadcast, so no
+    sort-merge, shuffled-hash, nested-loop or cartesian join either."""
     banned = {
         "SortMergeJoinExec", "ShuffledHashJoinExec",
         "BroadcastNestedLoopJoinExec", "CartesianProductExec",
+        "BroadcastExchangeExec",
     }
-    assert not banned & set(names), names
+    assert not [n for n in flagship_nodes if n.endswith("JoinExec")], flagship_nodes
+    assert not banned & set(flagship_nodes), flagship_nodes
+
+
+def test_one_doc_flagship_runs_at_most_four_jobs(spark, tmp_path):
+    """Reading, building and running the flagship over one document
+    starts at most 4 Spark jobs: no dim starts a shuffle or broadcast
+    job of its own (the joined dims made it 6)."""
+    from loganalyzer_spark import datagen, pipeline
+
+    pages_dir = str(tmp_path / "pages")
+    datagen.web_pages(spark, SF_SMALL).limit(1).write.parquet(pages_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("one_doc_flagship", "one-doc flagship")
+    try:
+        pages = spark.read.parquet(pages_dir)
+        assert pipeline.sink_aggregates(pipeline.routed_from_pages(spark, pages)).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("one_doc_flagship")
+    assert 0 < len(jobs) <= 4, jobs
+
+
+def test_match_lambda_runs_once_under_filters(spark, pages_parquet):
+    """A filter on a column derived from the match (the sink writer's
+    ``sink_class IN (...)``, ``new_templates``' ``is_new = 1``) reads the
+    Generate's output instead of copying the match lambda into its
+    pushed-down condition."""
+    from loganalyzer_spark import pipeline, queries
+    from loganalyzer_spark.lineage import SINK_CLASSES
+
+    routed = pipeline.routed_from_pages(spark, spark.read.parquet(pages_parquet))
+    sinks = routed.filter(F.col("sink_class").isin(SINK_CLASSES))
+    for df in (sinks, queries.new_templates(spark, SF_SMALL)):
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        assert plan.count("forall(") == 1, plan
 
 
 def test_flagship_build_jvm_round_trips(spark, monkeypatch):

@@ -1,10 +1,10 @@
 """Template-match cost vs library size (the 16 real templates → 2000).
 
 The reference caps its library at 2000 templates (config_default.yaml:23);
-ftp ships 199, cm 983. The D1/D2 match joins each line against
-candidates sharing (token_count, first_token) — cost grows with the
-candidate-bucket size, not the library size, so a 150x bigger library
-should NOT cost 150x. This bench measures it.
+ftp ships 199, cm 983. The D1/D2 match looks each line up among
+the candidates sharing its (token_count, first_token) — cost grows with
+the candidate-bucket size, not the library size, so a 150x bigger
+library should NOT cost 150x. This bench measures it.
 
 Synthetic library: the real datagen templates plus enough generated
 ones to reach each size (2-10 tokens, Zipfian first-token reuse so
